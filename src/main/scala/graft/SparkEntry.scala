@@ -7411,10 +7411,16 @@ object SparkEntry {
     * GENERATED (8 unrolled rounds over the within-batch pair frame e0):
     * round k accepts every node with no smaller undecided neighbor (a-side
     * nodes absent from the b side), rejects their larger neighbors, and
-    * keeps only edges between still-undecided nodes — exactly
-    * Curation.greedyDominated's loop. 8 rounds covers dependency chains of
-    * 9+ docs; the gate corpora measure depth ≤ 1, and a deeper graph would
-    * fail the compare loudly (extra rows), never pass silently.
+    * keeps only edges between still-undecided nodes. This frontier
+    * formulation reaches the same greedy minimum-rank result that
+    * Curation.greedyDominated computes in one ordered scan, so the oracle
+    * stays independent of the engine's algorithm. The pair frame holds
+    * only docs that survived the corpus check, while the engine resolves
+    * all batch pairs with the corpus-matched docs pre-rejected; both give
+    * the same accepted set because rejected docs never block. 8 rounds
+    * covers dependency chains of 9+ docs; the gate corpora measure depth
+    * ≤ 1, and a deeper graph would fail the compare loudly (extra rows),
+    * never pass silently.
     */
   /** Parameterized form of the tick chain — `sfx` suffixes every CTE name
     * so two ticks chain in one statement (q264's takedown oracle runs a

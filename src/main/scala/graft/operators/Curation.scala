@@ -39,72 +39,71 @@ import graft.functions.TextFunctions
   * digest anti-join (32 B/row against the corpus, never payloads); stage 4
   * is the cost-based similarity machinery (bucketed candidates, never
   * all-pairs) and [[greedyDominated]]'s resolution runs on the PAIR frame
-  * only — edge-linear rounds bounded by the pair graph's dependency depth,
-  * the same localCheckpoint-per-round loop as Dedup.connectedComponents.
-  * Nothing re-reads the standing corpus except the digest projection and
-  * the similarity join's own prepared side.
+  * only — one ordered scan in a single task whose memory is the
+  * rejected-id set (within-batch pairs are batch-proportional, never
+  * corpus-proportional). Nothing re-reads the standing corpus except the
+  * digest projection and the similarity join's own prepared side.
   */
 object Curation {
 
   /** Greedy minimum-rank acceptance over an undirected conflict-pair
-    * graph: process nodes in ascending rank; accept a node iff no ACCEPTED
-    * smaller-rank neighbor exists. Returns the REJECTED node ids (column
-    * `id`) — callers anti-join survivors against it; nodes with no pairs
-    * are accepted by construction and never appear.
+    * graph: process nodes in ascending rank; accept a node iff it is not
+    * pre-rejected and no ACCEPTED smaller-rank neighbor exists. Returns the
+    * REJECTED node ids (column `id`, each once) — callers anti-join
+    * survivors against it; nodes with no pairs are accepted by construction
+    * and never appear, unless pre-rejected.
     *
-    * `pairs` carries one row per conflict with rank(`aCol`) < rank(`bCol`).
-    * Resolution is iterative on the pair frame alone: each round accepts
-    * every node with no smaller UNDECIDED neighbor (the rank-minimal
-    * frontier), rejects their larger neighbors, and drops decided edges;
-    * rounds = the graph's dependency-chain depth (1 for clique-shaped
-    * near-dup clusters, k−2 for a k-chain of pairwise-only overlaps).
-    * Convergence is structural — every round decides at least the current
-    * frontier — but a `maxIters` guard fails loud rather than loop on a
-    * pathological input.
+    * `pairs` carries one row per conflict in either orientation
+    * (duplicates and self-pairs are harmless); a node's rank is its id,
+    * cast to long. `preRejected` (column `id`) lists ids that are
+    * rejected whatever their neighbors — e.g. batch docs already
+    * matched against the standing corpus; they appear in the output and,
+    * being rejected, never block anyone.
+    *
+    * Resolution is ONE ordered scan: pairs are normalized to (least,
+    * greatest), each pre-rejected id adds one marker row (null, id), and a
+    * single task walks the rows sorted by (b, a nulls first). When the walk
+    * reaches b, every smaller node's fate is already decided, so b is
+    * rejected iff a marker row or an accepted a precedes it in its group.
+    * Nothing is collected to the driver and no job runs until the result
+    * is read. Memory bound: the one task holds the rejected-id set (a hash
+    * set of boxed longs, tens of bytes per rejected node); the pairs stream
+    * through Spark's external sort, which spills.
     */
   def greedyDominated(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIters: Int = 64): DataFrame = {
+      preRejected: Option[DataFrame] = None): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    var edges = pairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    // the accumulator stays LAZY (r15): it is only read after the loop, and
-    // each unioned leg is itself checkpointed below — the former per-round
-    // eager checkpoint added one driver-sequenced job per round for a frame
-    // nothing reads mid-loop (plan depth is bounded by maxIters)
-    var rejected = spark.emptyDataset[Long].toDF("id")
-    var iter = 0
-    while (!edges.isEmpty) {
-      require(iter < maxIters,
-        s"greedyDominated did not converge in $maxIters rounds; raise maxIters")
-      // frontier: nodes with NO smaller undecided neighbor = a-side nodes
-      // absent from the b side (b-side nodes are blocked this round)
-      val blocked = edges.select(col("b")).distinct()
-      val accepted = edges.select(col("a")).distinct()
-        .join(blocked.withColumnRenamed("b", "a"), Seq("a"), "left_anti")
-      val rejectedRound = edges
-        .join(accepted, Seq("a"))
-        .select(col("b").as("id"))
-        .distinct()
-        .localCheckpoint()
-      rejected = rejected.unionAll(rejectedRound)
-      // keep only edges between still-undecided nodes: a must still be
-      // blocked (undecided) and neither endpoint rejected this round
-      edges = edges
-        .join(blocked.withColumnRenamed("b", "a"), Seq("a"), "left_semi")
-        .join(rejectedRound.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
-        .join(rejectedRound.withColumnRenamed("id", "b"), Seq("b"), "left_anti")
-        .select(col("a"), col("b"))
-        .localCheckpoint()
-      iter += 1
+    val edges = pairs
+      .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
+      .filter(col("x") =!= col("y"))
+      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
+    val markers = preRejected.toSeq.map(_
+      .select(lit(null).cast("long").as("a"), col("id").cast("long").as("b"))
+      .filter(col("b").isNotNull))
+    markers.foldLeft(edges)(_ unionAll _)
+      .repartition(1)
+      .sortWithinPartitions(col("b"), col("a").asc_nulls_first)
+      .mapPartitions(greedyWalk)
+      .toDF("id")
+  }
+
+  /** The walk behind [[greedyDominated]] over rows (a, b) sorted by
+    * (b, a nulls first): emits each rejected b once, at its first
+    * rejecting row (a marker, or an a that was not rejected).
+    */
+  private def greedyWalk(rows: Iterator[org.apache.spark.sql.Row]): Iterator[Long] = {
+    val rejected = scala.collection.mutable.HashSet.empty[Long]
+    rows.flatMap { r =>
+      val b = r.getLong(1)
+      if (!rejected.contains(b) && (r.isNullAt(0) || !rejected.contains(r.getLong(0)))) {
+        rejected += b
+        Iterator.single(b)
+      } else Iterator.empty
     }
-    rejected.distinct()
   }
 
   /** The per-doc curation SIGNATURE projection — everything a tick ever
@@ -977,11 +976,15 @@ object Curation {
     * candidate still passes the exact Jaccard verify.
     *
     * `stageHook` — observation seam for profilers (tools/ProfileTick): each
-    * stage's frame passes through it (post-pin) under a stable name
-    * ("s3", "batch_signatures", "corpus_matched", "free", "self_pairs",
-    * "dominated", "accepted") and the RETURNED frame flows on, so a hook
-    * that counts/times sees the real pipeline rather than a copy that can
-    * drift. Identity by default.
+    * stage's frame passes through it (after its pin, for the pinned "s3"
+    * and "batch_signatures"; the later frames are lazy) under a stable name
+    * ("s3", "batch_signatures", "corpus_matched", "self_pairs",
+    * "dominated" — every near-dup rejection, corpus-matched docs included —
+    * and "accepted") and the RETURNED frame flows on, so a hook that
+    * counts/times sees the real pipeline rather than a copy that can
+    * drift. "corpus_matched" and "self_pairs" are built concurrently but
+    * handed to the hook afterwards, in that order, on the calling thread.
+    * Identity by default.
     */
   def tickIndexed(
       index: DataFrame,
@@ -1053,34 +1056,37 @@ object Curation {
     // ...reject any batch doc matching the standing corpus (corpus docs
     // outrank every batch doc — cost-based cross-frame join, lang-blocked,
     // corpus side straight from the index, postings straight from the
-    // stored half when the caller carries one)...
+    // stored half when the caller carries one), and enumerate the
+    // within-batch pair graph over the same batchSh. Both stages read only
+    // the pinned batchSh and the standing state, so their construction-time
+    // jobs (Auto cost probes, internal pins) run overlapped (par2).
     // `indexPinned` (a stored/checkpointed index) and the just-pinned
-    // batchSh/free sides skip the join's internal re-pin — the prep
-    // projections stay lazy over the existing materializations instead of
-    // writing full-width copies (at sf1 the corpus signature copy alone is
-    // GBs per tick). The id-only match frame is pinned here: it is read by
-    // both the `free` anti-join and the final acceptance anti-join, and
-    // unpinned each read would re-run the verify join.
-    val corpusMatched = stageHook("corpus_matched", pin(SimilarityJoin
-      .jaccardJoin(
-        index.select(col(idCol).as("_cid"), col(langCol), col("_h")), "_cid",
-        batchSh, idCol, "_h", tau, pin = pin, blockCols = Seq(langCol),
-        strategy = strategy,
-        leftPinned = indexPinned, rightPinned = true,
-        leftIndex = corpusPostings.map { case (f, p) =>
-          (f, p.withColumnRenamed(idCol, "_cid")) })
-      .select(col(idCol)).distinct()))
-    val free = stageHook("free",
-      pin(batchSh.join(broadcast(corpusMatched), Seq(idCol), "left_anti")))
-    // ...then greedily resolve the within-batch pair graph over the docs
-    // that survived the corpus check (corpus-rejected docs never block —
-    // that is what makes ticks compose)
-    val selfPairs = stageHook("self_pairs", SimilarityJoin
-      .jaccardSelfJoin(free, idCol, "_h", tau, blockCols = Seq(langCol), pin = pin,
-        strategy = strategy, inputPinned = true))
-    val dominated = stageHook("dominated",
-      greedyDominated(selfPairs, "id_a", "id_b").withColumnRenamed("id", idCol))
-    stageHook("accepted",
-      s3.join(broadcast(corpusMatched.unionByName(dominated)), Seq(idCol), "left_anti"))
+    // batchSh skip the joins' internal re-pins — the prep projections stay
+    // lazy over the existing materializations instead of writing full-width
+    // copies (at sf1 the corpus signature copy alone is GBs per tick).
+    val (matched, pairs) = SimilarityJoin.par2(
+      SimilarityJoin
+        .jaccardJoin(
+          index.select(col(idCol).as("_cid"), col(langCol), col("_h")), "_cid",
+          batchSh, idCol, "_h", tau, pin = pin, blockCols = Seq(langCol),
+          strategy = strategy,
+          leftPinned = indexPinned, rightPinned = true,
+          leftIndex = corpusPostings.map { case (f, p) =>
+            (f, p.withColumnRenamed(idCol, "_cid")) })
+        .select(col(idCol)),
+      SimilarityJoin.jaccardSelfJoin(batchSh, idCol, "_h", tau, blockCols = Seq(langCol),
+        pin = pin, strategy = strategy, inputPinned = true))
+    val corpusMatched = stageHook("corpus_matched", matched)
+    val selfPairs = stageHook("self_pairs", pairs)
+    // ...then greedily resolve the within-batch pair graph with the
+    // corpus-matched docs pre-rejected. Rejected docs never block (that is
+    // what makes ticks compose), so edges touching a corpus-matched doc
+    // change no decision: the result equals resolving only the docs that
+    // survived the corpus check. Both frames are read once, by this scan.
+    val rejected = stageHook("dominated",
+      greedyDominated(selfPairs, "id_a", "id_b",
+        preRejected = Some(corpusMatched.withColumnRenamed(idCol, "id")))
+        .withColumnRenamed("id", idCol))
+    stageHook("accepted", s3.join(broadcast(rejected), Seq(idCol), "left_anti"))
   }
 }

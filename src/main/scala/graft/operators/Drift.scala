@@ -527,6 +527,12 @@ object Drift {
       0, periodCol, keyCols, cadence, refK, pin)
   }
 
+  /** The most closed periods one [[monitorTick]] batch may carry: its period
+    * spine is read to the driver, so this bounds the driver memory of a
+    * tick (a day-period stream would need 27 years of backlog in one batch).
+    */
+  val MaxBatchPeriods = 10000
+
   /** One drift-service micro-batch: score each NEWLY CLOSED period in
     * `newCells` (both statistics, keyed by the state's `keyCols`) against
     * the reference IN FORCE when that period closes, folding the rotation
@@ -540,9 +546,10 @@ object Drift {
     * Returns the batch's scored rows: (periodCol, keyCols…, psi, ks,
     * n_period, n_ref). Cost per tick: O(new cells + bounded grids) — the
     * period spine read is periods-per-batch ints (the q264 1-row-bind
-    * class), and each period's scoring grid is bounded by declaration
-    * (periods × keys × bins). The accumulated cell table grows one bounded
-    * period slice per close and is re-read only at rotation.
+    * class; more than [[MaxBatchPeriods]] fails loud), and each period's
+    * scoring grid is bounded by declaration (periods × keys × bins). The
+    * accumulated cell table grows one bounded period slice per close and
+    * is re-read only at rotation.
     */
   def monitorTick(state: MonitorState, newCells: DataFrame): DataFrame = {
     val pCol = col(state.periodCol)
@@ -561,9 +568,15 @@ object Drift {
             keyCols = state.keyCols)
           .join(ksByPeriod(periodCells, state.periodCol, state.refCells,
             keyCols = state.keyCols), joinKeys)
-    // bounded driver read: this batch's newly closed period spine, in order
-    val periods = newCells.select(pCol).distinct().orderBy(pCol)
-      .collect().map(_.get(0))
+    // bounded driver read: this batch's newly closed period spine, in order,
+    // at most MaxBatchPeriods of it — a batch closing more periods than that
+    // is a mis-declared period column, not a micro-batch, and fails loud
+    val spine = newCells.select(pCol).distinct()
+    val periods = spine.orderBy(pCol).take(MaxBatchPeriods + 1).map(_.get(0))
+    require(periods.length <= MaxBatchPeriods,
+      s"monitorTick: the batch closes ${spine.count()} periods in '${state.periodCol}', " +
+        s"more than the $MaxBatchPeriods one micro-batch may close — check the " +
+        "period column (a raw timestamp instead of a window start?) or split the batch")
     if (periods.isEmpty) return score(newCells) // empty, schema-correct
     // Periods sharing a reference-in-force score in ONE multi-period
     // psi/ks call: the spine is chunked at the rotation boundaries

@@ -705,13 +705,24 @@ object SimilarityJoin {
     * calls them sequentially). `fb` runs on a pool thread while `fa` runs
     * on the caller's; results are identical to the sequential form, only
     * the wall time changes. Used for the cost-model probe pairs, which are
-    * bounded 1-row aggregates with no ordering dependency.
+    * bounded 1-row aggregates with no ordering dependency, and for the
+    * curation tick's two similarity stages.
+    *
+    * `fb` runs under a copy of the caller's Spark local properties (job
+    * group, description, scheduler pool, …): a pool thread otherwise keeps
+    * the properties it inherited when it was created, so its jobs would
+    * carry a stale group that `cancelJobGroup` misses. A copy, not the
+    * caller's object, because each thread's SQL execution sets its own
+    * execution id there.
     */
-  private def par2[A, B](fa: => A, fb: => B): (A, B) = {
+  private[operators] def par2[A, B](fa: => A, fb: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val f = Future(fb)
+    import org.apache.spark.graftbridge.LocalProperties
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val props = LocalProperties.capture(sc)
+    val f = Future(LocalProperties.withProperties(sc, props)(fb))
     val a = fa
     (a, Await.result(f, Duration.Inf))
   }

@@ -15,7 +15,11 @@ import graft.operators.{Curation, Pin}
   * time — so this tool timestamps the stageHook seam (construction
   * checkpoints, in execution order) and wraps the tick's `pin` with a
   * timer, attributing the wall between consecutive stage marks and inside
-  * every pin call. Diagnostic only — never part of a bench or oracle gate.
+  * every pin call. The tick builds its two similarity stages concurrently
+  * and hands them to the hook afterwards, so the phase ending at
+  * "corpus_matched" covers both stages' overlapped construction and the
+  * next phase (to "self_pairs") is empty; pins from the two stages
+  * interleave. Diagnostic only — never part of a bench or oracle gate.
   *
   * Usage: runMain graft.tools.TickCost [sfDir] [reps]
   */

@@ -9,8 +9,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4 made `Column.expr` / `new Column(expr)` internal
   * (`org.apache.spark.sql.classic.ExpressionUtils`); libraries registering
   * custom Catalyst expressions conventionally expose them through a shim in
-  * the `org.apache.spark.sql` namespace. This is the only place the engine
-  * reaches into Spark internals.
+  * the `org.apache.spark.sql` namespace. This and
+  * `org.apache.spark.graftbridge.LocalProperties` are the only places the
+  * engine reaches into Spark internals.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

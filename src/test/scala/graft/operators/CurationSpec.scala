@@ -46,6 +46,75 @@ class CurationSpec extends AnyFunSuite {
     assert(Curation.greedyDominated(pairs, "id_a", "id_b").count() == 0)
   }
 
+  /** Sequential greedy over a pair graph: nodes in ascending id, each
+    * rejected iff pre-rejected or adjacent to an accepted smaller node.
+    */
+  private def greedyReference(pairs: Seq[(Long, Long)], seeds: Set[Long]): Set[Long] = {
+    val nbrs = pairs.filter { case (x, y) => x != y }
+      .flatMap { case (x, y) => Seq(x -> y, y -> x) }
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
+    val accepted = scala.collection.mutable.Set.empty[Long]
+    (nbrs.keySet ++ seeds).toSeq.sorted.foreach { n =>
+      if (!seeds(n) && !nbrs.getOrElse(n, Set.empty).exists(m => m < n && accepted(m)))
+        accepted += n
+    }
+    (nbrs.keySet ++ seeds) -- accepted
+  }
+
+  /** Seeded conflict graph of one shape, with duplicate and
+    * reversed-orientation rows, plus pre-rejected seeds: some isolated,
+    * some only ever the smaller endpoint, some anywhere in the graph.
+    */
+  private def randomGraph(seed: Int, shape: String): (Seq[(Long, Long)], Set[Long]) = {
+    val rnd = new scala.util.Random(seed)
+    val base = 1000L * (1 + rnd.nextInt(50))
+    def ids(n: Int) = rnd.shuffle((0 until 4 * n).map(base + _)).take(n)
+    def chain(n: Int) = { val v = ids(n).sorted; v.zip(v.tail) }
+    def clique(n: Int) = { val v = ids(n); for (x <- v; y <- v if x < y) yield (x, y) }
+    def star(n: Int) = { val v = ids(n); v.tail.map(v.head -> _) }
+    def random(n: Int) = { val v = ids(n); Seq.fill(2 * n)((v(rnd.nextInt(n)), v(rnd.nextInt(n)))) }
+    val edges = shape match {
+      case "chain" => chain(3 + rnd.nextInt(12))
+      case "clique" => clique(2 + rnd.nextInt(6))
+      case "star" => star(3 + rnd.nextInt(10))
+      case "mixed" => chain(6) ++ clique(4) ++ star(5) ++ random(10)
+    }
+    val rows = edges.flatMap { e =>
+      val once = if (rnd.nextBoolean()) e else e.swap
+      if (rnd.nextInt(4) == 0) Seq(once, e.swap) else Seq(once)
+    }
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val onlySmaller = nodes.filter(n => edges.forall { case (x, y) => math.max(x, y) != n })
+    val seeds = Set(base - 1 - rnd.nextInt(100)) ++ // isolated, below every node
+      onlySmaller.take(1) ++ nodes.filter(_ => rnd.nextInt(5) == 0)
+    (rnd.shuffle(rows), seeds)
+  }
+
+  test("greedyDominated equals the sequential greedy on random graphs with pre-rejected seeds") {
+    val cases = for ((shape, k) <- Seq("chain", "clique", "star", "mixed").zipWithIndex;
+                     seed <- 0 until 5)
+      yield (shape, seed) -> randomGraph(10 * seed + k, shape)
+    assert(cases.exists(_._2._2.size > 1))
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    try {
+      for (partitions <- Seq("1", "8"); repartition <- Seq(false, true)) {
+        spark.conf.set(key, partitions)
+        cases.foreach { case ((shape, seed), (pairs, seeds)) =>
+          def frame(df: org.apache.spark.sql.DataFrame) =
+            if (repartition) df.repartition(5) else df
+          val got = Curation.greedyDominated(
+              frame(pairs.toDF("id_a", "id_b")), "id_a", "id_b",
+              preRejected = Some(frame(seeds.toSeq.toDF("id"))))
+            .as[Long].collect().toSeq
+          assert(got.distinct.size == got.size, s"$shape/$seed: an id was emitted twice")
+          assert(got.toSet == greedyReference(pairs, seeds),
+            s"$shape/$seed at $partitions partitions (repartitioned=$repartition)")
+        }
+      }
+    } finally spark.conf.set(key, before)
+  }
+
   // ---- tick vs a sequential reference ------------------------------------
 
   private def shingles(text: String): Set[String] = {
@@ -600,6 +669,68 @@ class CurationSpec extends AnyFunSuite {
     assert(acc1.isEmpty)
     val acc2 = runTick(corpus, Seq(d), tau = 0.5)
     assert(acc2 == Seq(11L))
+  }
+
+  /** The chain-through-corpus fixture as a service: d1 (id 10) matches the
+    * corpus, d2 (id 11) is a near-dup of d1 only, plus two fresh docs.
+    */
+  private def corpusChainFixture(): (Seq[(Long, String, String)], Seq[(Long, String, String)]) = {
+    val rnd = new scala.util.Random(83)
+    def randStr(n: Int) = Seq.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
+    val base = randStr(100)
+    val sufA = randStr(60)
+    val corpus = Seq((1L, "l0", base + sufA + randStr(60)), (2L, "l0", randStr(150)))
+    val batch = Seq((9L, "l0", randStr(140)), (10L, "l0", base + sufA),
+      (11L, "l0", base), (12L, "l0", randStr(140)))
+    (corpus, batch)
+  }
+
+  test("serviceTick: a doc near only a corpus-matched doc is accepted, in one tick or two") {
+    val (corpus, batch) = corpusChainFixture()
+    assert(jac(shingles(batch(1)._3), shingles(corpus.head._3)) >= 0.5)
+    assert(jac(shingles(batch(2)._3), shingles(batch(1)._3)) >= 0.5)
+    assert(jac(shingles(batch(2)._3), shingles(corpus.head._3)) < 0.5)
+    val bench = spark.emptyDataset[(Long, String, String)].toDF("doc_id", "lang", "text")
+    def state() = Curation.serviceState(
+      corpus.toDF("doc_id", "lang", "text"), bench, "doc_id", "text", "lang")
+    def tick(st: Curation.ServiceState, docs: Seq[(Long, String, String)]) =
+      Curation.serviceTick(st, docs.toDF("doc_id", "lang", "text"),
+        "doc_id", "text", "lang", quality = lit(1.0), minQuality = 0.0)
+        .select("doc_id").as[Long].collect().toSeq
+    val combined = tick(state(), batch).sorted
+    assert(combined == Seq(9L, 11L, 12L), s"d1 rejected by the corpus must not block d2: $combined")
+    assert(combined == reference(corpus, batch, tau = 0.5).sorted)
+    val st = state()
+    val (b1, b2) = batch.partition(_._1 <= 10L)
+    assert((tick(st, b1) ++ tick(st, b2)).sorted == combined)
+  }
+
+  test("serviceTick runs a fixed number of SQL executions on a fixed fixture") {
+    // counts are exact: a change that lengthens the tick's driver job chain
+    // must update this number on purpose
+    val (corpus, batch) = mutationCorpus(239)
+    val bench = Seq((9000L, "lx", "winter spring summer autumn morning evening night"))
+      .toDF("doc_id", "lang", "text")
+    val state = Curation.serviceState(
+      corpus.toDF("doc_id", "lang", "text"), bench, "doc_id", "text", "lang")
+    val batchDf = batch.toDF("doc_id", "lang", "text")
+    val sc = spark.sparkContext
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          executions.incrementAndGet()
+        case _ =>
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Curation.serviceTick(state, batchDf, "doc_id", "text", "lang",
+        quality = lit(1.0), minQuality = 0.0)
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(executions.get == 10, s"SQL executions during one serviceTick: ${executions.get}")
   }
 
   private def auditMap(df: org.apache.spark.sql.DataFrame): Map[String, (Long, Boolean)] =

@@ -481,6 +481,23 @@ class DriftSpec extends AnyFunSuite {
     assert(state.sinceRotation == 0)
   }
 
+  test("monitorTick fails loud, with the batch's period count, past MaxBatchPeriods") {
+    val seed = Seq((0L, 0L, 5L), (0L, 1L, 5L)).toDF("p", "bin", "cnt")
+    def periods(n: Long) = spark.range(1, n + 1)
+      .select(col("id").as("p"), (col("id") % 2).as("bin"), lit(3L).as("cnt"))
+    val state = Drift.monitorState(seed, "p", cadence = 3, refK = 1)
+    val e = intercept[IllegalArgumentException] {
+      Drift.monitorTick(state, periods(Drift.MaxBatchPeriods + 5L))
+    }
+    assert(e.getMessage.contains(s"closes ${Drift.MaxBatchPeriods + 5} periods in 'p'"),
+      e.getMessage)
+    // the failed batch left the state alone, and a batch at the cap scores
+    assert(state.sinceRotation == 0)
+    val small = Drift.monitorState(seed, "p", cadence = Drift.MaxBatchPeriods, refK = 1)
+    assert(Drift.monitorTick(small, periods(Drift.MaxBatchPeriods.toLong))
+      .select("p").distinct().count() == Drift.MaxBatchPeriods)
+  }
+
   test("persist/restore monitor: restart mid-rotation-cycle is score-transparent; partial gens skipped") {
     val rnd = new scala.util.Random(43)
     def dayCells(d: Int) = (0L to 3L).map(b => (f"d$d%02d", b, (rnd.nextInt(80) + 1).toLong))

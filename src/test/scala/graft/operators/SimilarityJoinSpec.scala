@@ -217,6 +217,36 @@ class SimilarityJoinSpec extends AnyFunSuite {
     assert(sp < sb, s"sparse corpus should favor prefix filter: prefix=$sp blocks=$sb")
   }
 
+  test("cost probes overlapped on a pool thread carry the caller's job group") {
+    val sc = spark.sparkContext
+    val sets = randomSets(41, 60).toDF("id", "s")
+    // the first calls leave idle pool threads behind, created under the
+    // properties of that moment (no job group)
+    (1 to 3).foreach(_ => SimilarityJoin.selfJoinVolumes(sets, "id", "s", 0.5))
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      (1 to 3).foreach { i =>
+        sc.setJobGroup(s"probe-group-$i", s"probe pair $i")
+        try SimilarityJoin.selfJoinVolumes(sets, "id", "s", 0.5)
+        finally sc.clearJobGroup()
+        org.apache.spark.ListenerBusDrain(sc)
+        val seen = jobs.asScala.toSeq
+        jobs.clear()
+        assert(seen.size >= 2, s"expected both probes' jobs, saw $seen")
+        assert(seen.forall(_ == ((s"probe-group-$i", s"probe pair $i"))),
+          s"a probe job ran outside the caller's job group: $seen")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("per-block routing: a mixed dense+sparse corpus routes each block to its engine, output identical") {
     // block "d": 12 originals x 8 near-replicas — prefix candidates blow
     // past the block volume (scraper-echo language). block "s": 150
