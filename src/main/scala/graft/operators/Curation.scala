@@ -1059,7 +1059,9 @@ object Curation {
     // stored half when the caller carries one), and enumerate the
     // within-batch pair graph over the same batchSh. Both stages read only
     // the pinned batchSh and the standing state, so their construction-time
-    // jobs (Auto cost probes, internal pins) run overlapped (par2).
+    // jobs run overlapped (par2): each Auto's size check, then — only where
+    // that check does not settle on all-pairs — its postings pins and cost
+    // probes.
     // `indexPinned` (a stored/checkpointed index) and the just-pinned
     // batchSh skip the joins' internal re-pins — the prep projections stay
     // lazy over the existing materializations instead of writing full-width

@@ -13,8 +13,10 @@ import graft.expressions.VectorExpressions
 sealed trait SimilarityStrategy
 object SimilarityStrategy {
 
-  /** Measure both candidate volumes on the prepared inputs and run the
-    * cheaper plan — two tiny aggregation jobs buy the decision.
+  /** Run all-pairs outright when one size aggregate per input proves it
+    * cheaper than building the prefix postings; otherwise measure both
+    * candidate volumes on the prepared inputs and run the cheaper plan —
+    * two tiny aggregation jobs buy the decision.
     */
   case object Auto extends SimilarityStrategy
 
@@ -244,15 +246,21 @@ object SimilarityJoin {
     * postings join), independent of how the left corpus grew. Both frames
     * are treated as caller-materialized (a stored index re-reads for free —
     * the leftPinned discipline). The cost-based Auto still routes per
-    * block; only the postings BUILD is skipped.
+    * block; only the left postings BUILD is skipped.
     *
     * `strategy` picks the candidate engine ([[jaccardSelfJoin]] discusses
     * the cost model; the same degeneracy applies cross-frame — on a
     * replica-dense corpus the prefix postings regenerate every true pair
     * once per shared prefix element, and the salted FULL CROSS at
-    * |L|·|R| cheap pairs wins). Auto measures Σ_h n_L(h)·n_R(h) against
-    * Σ_b |L_b|·|R_b| on the prepared inputs and runs the cheaper exact
-    * plan.
+    * |L|·|R| cheap pairs wins). Auto first runs the size check of
+    * [[allPairsBounded]] with the work bound
+    * W = Σ_b (|L_b|·E^R_b + |R_b|·E^L_b) (E = set elements; one verified
+    * pair scans at most |a| + |b| of them) against the elements the prefix
+    * path would post — both sides, or only the right one under
+    * `leftIndex` — and runs the salted cross directly when W is within
+    * [[PostCostSteps]] of them. Otherwise it builds the postings, measures
+    * Σ_h n_L(h)·n_R(h) against Σ_b |L_b|·|R_b| and runs the cheaper exact
+    * plan, per block when blocked.
     *
     * `blockCols` (present in BOTH frames) restricts pairs to rows agreeing
     * on every block column, exactly as on [[jaccardSelfJoin]]: block keys
@@ -394,6 +402,13 @@ object SimilarityJoin {
       case SimilarityStrategy.PrefixFilter => prefixPath(buildPosts(pinPosts = false))
       case SimilarityStrategy.AllPairs => crossPath(l, r)
       case SimilarityStrategy.MinHashLsh(b, rr) => minHashPath(b, rr)
+      // the size check runs first — one action, before any postings exist
+      case SimilarityStrategy.Auto if allPairsBounded(
+          sizeRows(l, 0, "_as", blockCols).unionAll(sizeRows(r, 1, "_bs", blockCols)),
+          blockCols,
+          work = col("_m0") * col("_e1") + col("_m1") * col("_e0"),
+          posted = if (leftIndex.isEmpty) col("_e0") + col("_e1") else col("_e1")) =>
+        crossPath(l, r)
       case SimilarityStrategy.Auto if blockCols.isEmpty =>
         // one block — one regime: global volume comparison. Σ_h nL·nR is
         // computed as Σ over LEFT POSTING ROWS of nR(h) (exact integer
@@ -475,6 +490,55 @@ object SimilarityJoin {
       .select(blockCols.map(col) :+ coalesce(col("_cp"), lit(0.0)).as("_cp") :+ col("_cb"): _*)
   }
 
+  /** γ — the cost of posting one set element (explode, frequency join,
+    * per-set sort, pin) in verify merge steps, the unit of the all-pairs
+    * work bound. Measured warm on the sf0.1 documents' signatures
+    * (lang-blocked, t = 0.5, 4 cores): 0.95 µs per posted element against
+    * 0.37 µs per verified pair of ~204-element sets (at most 409 merge
+    * steps), i.e. γ ≈ 1060; ≈ 890 at half the corpus. Set at about half of
+    * that, so the size check only skips the probe where all-pairs is
+    * clearly cheaper.
+    */
+  private val PostCostSteps = 500.0
+
+  /** One row per input row for [[allPairsBounded]]: the input's `_side`
+    * (0 = left or the self-join frame, 1 = right), its block columns, and
+    * `_e`, the set's element count — legacy `size(null) = −1` (and a NULL
+    * size under the non-legacy setting) counts as 0.
+    */
+  private def sizeRows(
+      df: DataFrame, side: Int, setCol: String, blockCols: Seq[String]): DataFrame =
+    df.select((lit(side).as("_side") +: blockCols.map(col)) :+
+      greatest(size(col(setCol)), lit(0)).cast("double").as("_e"): _*)
+
+  /** Auto's size check, run BEFORE any postings are built: true when the
+    * all-pairs work bound W = Σ_b `work` is at most [[PostCostSteps]] times
+    * E_post = Σ_b `posted`, the elements the prefix path would post — then
+    * all-pairs costs less than the postings build alone, and the caller
+    * skips the build, its pins and the volume probe. `work` and `posted`
+    * are over the per-block aggregates `_m0`/`_e0` (rows and elements of
+    * side 0) and `_m1`/`_e1` (side 1) of `sized` ([[sizeRows]]). Blocks
+    * with a NULL block value pair with nothing, so they add to E_post but
+    * not to W. One action: both sides' aggregates and the reduction to one
+    * row are a single plan of 2 jobs (the per-block exchange, then the
+    * result), and nothing per block reaches the driver.
+    */
+  private def allPairsBounded(
+      sized: DataFrame, blockCols: Seq[String], work: Column, posted: Column): Boolean = {
+    def onSide(side: Int, v: Column) = sum(when(col("_side") === side, v).otherwise(0.0))
+    val paired = blockCols.map(col(_).isNotNull).foldLeft(lit(true))(_ && _)
+    val row = sized
+      .groupBy(blockCols.map(col): _*)
+      .agg(onSide(0, lit(1.0)).as("_m0"), onSide(0, col("_e")).as("_e0"),
+        onSide(1, lit(1.0)).as("_m1"), onSide(1, col("_e")).as("_e1"))
+      // one row per block: a single partition lets the reduction to one row
+      // run in the block aggregate's own stage, without a second exchange
+      .coalesce(1)
+      .agg(coalesce(sum(when(paired, work)), lit(0.0)), coalesce(sum(posted), lit(0.0)))
+      .head()
+    row.getDouble(0) <= PostCostSteps * row.getDouble(1)
+  }
+
   /** All WITHIN-corpus pairs with exact Jaccard ≥ `threshold` — the dedup
     * self-join shape (the single most common near-dup call). Returns
     * (id_a, id_b, jac) with id_a < id_b, each qualifying unordered pair
@@ -499,12 +563,19 @@ object SimilarityJoin {
     *    (length-prune + early-exit), quadratic in block size but immune to
     *    duplicate clustering.
     *
-    * Auto measures both volumes on the prepared inputs (two 1-row
-    * aggregation jobs — see [[selfJoinVolumes]]) and runs the cheaper plan;
-    * the measured per-unit costs of the two engines agree within ~10%
-    * (sf1 calibration: 250 M block-pairs ≈ 49 s, 2.28 G candidates ≈ 500 s),
-    * so the volumes compare directly. Both engines produce identical
-    * output (spec-proved), so the choice is invisible to callers.
+    * Auto first runs a size check before building any postings (one
+    * aggregate over the frame — see [[allPairsBounded]]): the all-pairs
+    * work bound W = Σ_b (m_b − 1)·E_b (E_b = the block's set elements; one
+    * verified pair scans at most |a| + |b| of them) against [[PostCostSteps]]
+    * times the elements the postings build would process. When W is
+    * within that, all-pairs costs less than the build alone and runs
+    * directly — the small-batch shape of the curation tick. Otherwise Auto
+    * builds the postings, measures both volumes (two 1-row aggregation jobs
+    * — see [[selfJoinVolumes]]) and runs the cheaper plan; the measured
+    * per-unit costs of the two engines agree within ~10% (sf1 calibration:
+    * 250 M block-pairs ≈ 49 s, 2.28 G candidates ≈ 500 s), so the volumes
+    * compare directly. Both engines produce identical output
+    * (spec-proved), so the choice is invisible to callers.
     *
     * `blockCols` optionally restricts pairs to rows agreeing on every
     * block column (e.g. same language) — block keys join the posting /
@@ -618,6 +689,11 @@ object SimilarityJoin {
       case SimilarityStrategy.PrefixFilter => prefixPath(buildPost())
       case SimilarityStrategy.AllPairs => allPairsPath(base)
       case SimilarityStrategy.MinHashLsh(b, r) => minHashPath(b, r)
+      // the size check runs first — one action, before any postings exist
+      case SimilarityStrategy.Auto if allPairsBounded(
+          sizeRows(base, 0, "_set", blockCols), blockCols,
+          work = (col("_m0") - 1) * col("_e0"), posted = col("_e0")) =>
+        allPairsPath(base)
       case SimilarityStrategy.Auto if blockCols.isEmpty =>
         // one block — one regime: the global comparison IS the per-block one
         val post = buildPost()
@@ -770,9 +846,11 @@ object SimilarityJoin {
       .head().getDouble(0)
 
   /** Planning probe for [[jaccardSelfJoin]]: (prefix-filter candidate
-    * volume, blocked all-pairs volume) on this corpus. Auto runs whichever
-    * is smaller; exposed so capacity planning (and the spec) can see the
-    * regime a corpus is in without running either join.
+    * volume, blocked all-pairs volume) on this corpus. When Auto's size
+    * check does not already settle on all-pairs, Auto runs whichever is
+    * smaller; exposed so capacity planning (and the spec) can see the
+    * regime a corpus is in without running either join. The probe itself
+    * skips the size check: it always builds the postings.
     */
   def selfJoinVolumes(
       df: DataFrame,
@@ -789,9 +867,11 @@ object SimilarityJoin {
     * the prefix-filter candidate volume (`prefix_volume`), the blocked
     * all-pairs volume (`allpairs_volume`), and the engine Auto routes that
     * block to (`engine`: "prefix" | "allpairs"). [[jaccardSelfJoin]]'s Auto
-    * runs exactly this comparison per block — exposed so capacity planning
-    * (and the routing spec) can see each block's regime without running the
-    * join.
+    * runs this comparison per block after its size check, and only when
+    * that check has not already sent the whole frame to all-pairs — so
+    * `engine` is Auto's routing above the check, not below it. Exposed so
+    * capacity planning (and the routing spec) can see each block's regime
+    * without running the join.
     */
   def selfJoinBlockVolumes(
       df: DataFrame,
@@ -938,7 +1018,8 @@ object SimilarityJoin {
     * distinct `blockCols` value present in BOTH frames, with the prefix
     * postings join volume (`prefix_volume`), the salted full-cross volume
     * (`cross_volume`), and the engine [[jaccardJoin]]'s Auto routes that
-    * block to (`engine`: "prefix" | "cross").
+    * block to (`engine`: "prefix" | "cross") once its size check has not
+    * already sent every block to the salted cross.
     */
   def joinBlockVolumes(
       left: DataFrame,

@@ -19,7 +19,11 @@ import graft.operators.{Curation, Pin}
   * and hands them to the hook afterwards, so the phase ending at
   * "corpus_matched" covers both stages' overlapped construction and the
   * next phase (to "self_pairs") is empty; pins from the two stages
-  * interleave. Diagnostic only — never part of a bench or oracle gate.
+  * interleave. Each stage's Auto opens with its size check (one action,
+  * no pin); a stage whose check settles on all-pairs takes no postings
+  * pin and runs no cost probe, so on a small batch that phase holds just
+  * the two size checks and no timed pin. Diagnostic only — never part of
+  * a bench or oracle gate.
   *
   * Usage: runMain graft.tools.TickCost [sfDir] [reps]
   */

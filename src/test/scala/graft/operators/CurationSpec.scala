@@ -730,7 +730,7 @@ class CurationSpec extends AnyFunSuite {
         quality = lit(1.0), minQuality = 0.0)
       org.apache.spark.ListenerBusDrain(sc)
     } finally sc.removeSparkListener(listener)
-    assert(executions.get == 10, s"SQL executions during one serviceTick: ${executions.get}")
+    assert(executions.get == 8, s"SQL executions during one serviceTick: ${executions.get}")
   }
 
   private def auditMap(df: org.apache.spark.sql.DataFrame): Map[String, (Long, Boolean)] =

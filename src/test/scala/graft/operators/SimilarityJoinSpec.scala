@@ -626,4 +626,193 @@ class SimilarityJoinSpec extends AnyFunSuite {
       assert(got == want, s"pin=$p")
     }
   }
+
+  /** SQL executions that `f` starts — the construction-time actions of a
+    * join call (its size check, postings pins and cost probes). */
+  private def executionsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          n.incrementAndGet()
+        case _ =>
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `n` rows (id, block, set) of 4-8 element sets over a 3n-element
+    * universe: every 9th row a near-copy of the row before it (one element
+    * added, so true pairs exist), every 13th set NULL, every 17th block
+    * NULL, the rest in blocks "x" and "y" alternating every 9 rows (so a
+    * near-copy shares its original's block). */
+  private def sizeCheckRows(
+      seed: Int, n: Int, firstId: Long): Seq[(Long, Option[String], Seq[Long])] = {
+    val rnd = new scala.util.Random(seed)
+    var prev = Seq(0L)
+    (0 until n).map { i =>
+      val fresh = Seq.fill(rnd.nextInt(5) + 4)(rnd.nextInt(3 * n).toLong).distinct.sorted
+      val set = if (i % 9 == 8) (prev :+ (10L * n + i)).distinct.sorted else fresh
+      prev = set
+      (firstId + i, if (i % 17 == 5) None else Some(if (i / 9 % 2 == 0) "x" else "y"),
+        if (i % 13 == 7) null else set)
+    }
+  }
+
+  /** Brute-force pairs (ids from `a` × ids from `b`, `self` keeping a < b
+    * only) with J ≥ t; NULL sets, and NULL blocks when `blocked`, pair
+    * with nothing. */
+  private def bruteForceSized(
+      a: Seq[(Long, Option[String], Seq[Long])],
+      b: Seq[(Long, Option[String], Seq[Long])],
+      t: Double, blocked: Boolean, self: Boolean): Set[(Long, Long)] = {
+    def prep(rows: Seq[(Long, Option[String], Seq[Long])]) =
+      rows.collect { case (i, g, s) if s != null && (!blocked || g.isDefined) =>
+        (i, if (blocked) g else None, s.toSet) }
+    val (pa, pb) = (prep(a), prep(b))
+    (for {
+      (ai, ag, as) <- pa
+      (bi, bg, bs) <- pb
+      if (!self || ai < bi) && ag == bg
+      union = (as | bs).size
+      if union > 0 && (as & bs).size.toDouble / union >= t
+    } yield (ai, bi)).toSet
+  }
+
+  test("Auto's size check: below the rule no postings build or cost probe runs; " +
+    "above it the probe still runs; outputs equal both forced engines and brute force") {
+    val t = 0.5
+    // 80 rows: W/E_post ≈ 40-80, far below the rule's 500. 1300 rows: two
+    // blocks of ~610 (W/E_post ≈ 575 blocked, ≈ 1150 unblocked) — above it
+    for ((n, below) <- Seq((80, true), (1300, false))) {
+      val rowsA = sizeCheckRows(51, n, 1L)
+      // right frame: near-copies of every 3rd left set (one element
+      // added), fresh sets elsewhere, under its own id range
+      val rowsB = sizeCheckRows(53, n, 100000L).zip(rowsA).map {
+        case ((i, g, s), (_, _, la)) =>
+          (i, g, if (i % 3 == 0 && la != null) (la :+ (20L * n + i)).distinct.sorted else s)
+      }
+      val dfA = rowsA.toDF("lid", "g", "s")
+      val dfB = rowsB.toDF("rid", "g", "s")
+      def blocks(blocked: Boolean) = if (blocked) Seq("g") else Nil
+      def check(label: String, want: Set[(Long, Long)],
+          run: SimilarityStrategy => org.apache.spark.sql.DataFrame): Unit = {
+        assert(want.nonEmpty, s"$label: the fixture has no true pairs")
+        val (auto, executions) = executionsDuring(run(SimilarityStrategy.Auto))
+        if (below) assert(executions == 1,
+          s"$label: below the rule only the size check may run, saw $executions SQL executions")
+        else assert(executions > 1,
+          s"$label: above the rule the postings pin / cost probe must run, saw $executions")
+        val got = auto.collect().map(r => (r.getLong(0), r.getLong(1)))
+        assert(got.length == got.toSet.size, s"$label: duplicate pairs")
+        assert(got.toSet == want, s"$label Auto: missing=${want -- got.toSet} " +
+          s"extra=${got.toSet -- want}")
+        Seq(SimilarityStrategy.PrefixFilter, SimilarityStrategy.AllPairs).foreach { st =>
+          val forced = run(st).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          assert(forced == want, s"$label $st")
+        }
+      }
+      for (blocked <- Seq(false, true)) {
+        val tag = s"n=$n blocked=$blocked"
+        check(s"self $tag", bruteForceSized(rowsA, rowsA, t, blocked, self = true),
+          st => SimilarityJoin.jaccardSelfJoin(dfA, "lid", "s", t, blockCols = blocks(blocked),
+            strategy = st, inputPinned = true))
+        check(s"cross $tag", bruteForceSized(rowsA, rowsB, t, blocked, self = false),
+          st => SimilarityJoin.jaccardJoin(dfA, "lid", dfB, "rid", "s", t, strategy = st,
+            blockCols = blocks(blocked), leftPinned = true, rightPinned = true))
+        val idx = SimilarityJoin.prefixIndex(dfA, "lid", "s", t, blocks(blocked))
+        check(s"cross leftIndex $tag", bruteForceSized(rowsA, rowsB, t, blocked, self = false),
+          st => SimilarityJoin.jaccardJoin(dfA, "lid", dfB, "rid", "s", t, strategy = st,
+            blockCols = blocks(blocked), leftPinned = true, rightPinned = true,
+            leftIndex = Some(idx)))
+      }
+    }
+  }
+
+  private def unions(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }.size
+
+  test("per-block routing above the size check: a large sparse block beside a dense one " +
+    "takes the mixed (union) plan, output identical") {
+    // the routing fixture above now falls below the size check (its blocks
+    // are too small for the postings to pay); here the sparse block holds
+    // 1000 docs, which lifts W/E_post to ≈ 690
+    val rnd = new scala.util.Random(59)
+    val dense = (0 until 6).flatMap { o =>
+      val base = Seq.fill(60)(rnd.nextInt(100000).toLong).distinct.sorted
+      (0 until 8).map(r => (o * 8L + r, "d", (base :+ (1000000L + o * 8 + r)).distinct.sorted))
+    }
+    val sparseBase = (0 until 1000).map(i => Seq.fill(6)(rnd.nextLong()).distinct.sorted)
+    // every 50th sparse doc a near-copy of its predecessor: true pairs exist
+    val sparse = sparseBase.indices.map { i =>
+      (10000L + i, "s",
+        if (i % 50 == 49) (sparseBase(i - 1) :+ (2000000L + i)).distinct.sorted
+        else sparseBase(i))
+    }
+    val df = (dense ++ sparse).toDF("id", "g", "s")
+    val t = 0.5
+    val engines = SimilarityJoin.selfJoinBlockVolumes(df, "id", "s", t, Seq("g"))
+      .select("g", "engine").as[(String, String)].collect().toMap
+    assert(engines == Map("d" -> "allpairs", "s" -> "prefix"), s"$engines")
+    val rows = (dense ++ sparse).map { case (i, _, s) => (i, s) }
+    val want = bruteForceSelf(rows, t, id => id < 10000L)
+    assert(want.nonEmpty)
+    Seq(SimilarityStrategy.Auto, SimilarityStrategy.PrefixFilter, SimilarityStrategy.AllPairs)
+      .foreach { st =>
+        val out = SimilarityJoin.jaccardSelfJoin(df, "id", "s", t, blockCols = Seq("g"),
+          strategy = st)
+        assert(unions(out) == (if (st == SimilarityStrategy.Auto) 1 else 0),
+          s"strategy=$st: ${unions(out)} unions in the returned plan")
+        assert(out.select("id_a", "id_b").as[(Long, Long)].collect().toSet == want,
+          s"strategy=$st")
+      }
+  }
+
+  test("cross-frame per-block routing above the size check takes the mixed (union) plan, " +
+    "output identical") {
+    // as above for the two-frame join: 800 × 800 sparse docs lift W/E_post
+    // to ≈ 590; the dense block (near-replicas across the frames) routes
+    // to the salted cross
+    val rnd = new scala.util.Random(61)
+    val denseBases = (0 until 10).map(_ => Seq.fill(30)(rnd.nextInt(100000).toLong).distinct.sorted)
+    def dense(tag: Long) = denseBases.zipWithIndex.flatMap { case (base, o) =>
+      (0 until 6).map(c => (o * 6L + c, "d", (base :+ (tag + o * 6 + c)).distinct.sorted))
+    }
+    val sparseL = (0 until 800).map(i => (1000L + i, "s", Seq.fill(6)(rnd.nextLong()).distinct.sorted))
+    // every 40th right doc a near-copy of a left doc
+    val sparseR = sparseL.map { case (i, g, s) =>
+      (i, g, if (i % 40 == 0) (s :+ (3000000L + i)).distinct.sorted
+        else Seq.fill(6)(rnd.nextLong()).distinct.sorted)
+    }
+    val lRows = dense(900000L) ++ sparseL
+    val rRows = dense(950000L) ++ sparseR
+    val l = lRows.toDF("lid", "g", "s")
+    val r = rRows.toDF("rid", "g", "s")
+    val t = 0.5
+    val engines = SimilarityJoin.joinBlockVolumes(l, "lid", r, "rid", "s", t, Seq("g"))
+      .select("g", "engine").as[(String, String)].collect().toMap
+    assert(engines == Map("d" -> "cross", "s" -> "prefix"), s"$engines")
+    val want = bruteForceSized(
+      lRows.map { case (i, g, s) => (i, Some(g), s) },
+      rRows.map { case (i, g, s) => (i, Some(g), s) }, t, blocked = true, self = false)
+    assert(want.nonEmpty)
+    Seq(SimilarityStrategy.Auto, SimilarityStrategy.PrefixFilter, SimilarityStrategy.AllPairs)
+      .foreach { st =>
+        val out = SimilarityJoin.jaccardJoin(l, "lid", r, "rid", "s", t, strategy = st,
+          blockCols = Seq("g"))
+        assert(unions(out) == (if (st == SimilarityStrategy.Auto) 1 else 0),
+          s"strategy=$st: ${unions(out)} unions in the returned plan")
+        assert(out.select("lid", "rid").as[(Long, Long)].collect().toSet == want,
+          s"strategy=$st")
+      }
+  }
 }
