@@ -23,8 +23,9 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Engine.table(Engine.tune(spark), dir, name)
 
-  /** Stopword list shared by the text-quality operators and their oracles. */
-  private val Stopwords =
+  /** Stopword list shared by the text-quality operators and their oracles
+    * (and the diagnostic mains under `tools/`). */
+  private[graft] val Stopwords =
     Seq("the", "a", "and", "of", "to", "in", "is", "for", "on", "with")
 
   /** Oracle-stable rounding: money-style inputs make aggregate averages land

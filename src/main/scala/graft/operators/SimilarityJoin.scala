@@ -14,9 +14,11 @@ sealed trait SimilarityStrategy
 object SimilarityStrategy {
 
   /** Run all-pairs outright when one size aggregate per input proves it
-    * cheaper than building the prefix postings; otherwise measure both
-    * candidate volumes on the prepared inputs and run the cheaper plan —
-    * two tiny aggregation jobs buy the decision.
+    * cheaper than building the prefix postings — or, on the self-join, when
+    * a lower bound on each block's prefix candidate volume (from its
+    * distinct element count) already exceeds the block's all-pairs volume;
+    * otherwise measure both candidate volumes on the prepared inputs and
+    * run the cheaper plan — two tiny aggregation jobs buy the decision.
     */
   case object Auto extends SimilarityStrategy
 
@@ -104,7 +106,6 @@ object SimilarityJoin {
       freq: DataFrame,
       threshold: Double): DataFrame = {
     val s = size(col("_byRank"))
-    val plen = (s - ceil(s.cast("double") * threshold - lit(1e-9)) + 1).cast("int")
     // LEFT join: when `freq` is a FROZEN build-time order (the indexed-join
     // path), probe elements the index never saw take df 0 — they sort first
     // (rarest), which is maximally selective and, being absent from every
@@ -117,7 +118,7 @@ object SimilarityJoin {
       .agg(array_sort(collect_list(
         struct(coalesce(col("_df"), lit(0L)).as("_df"), col("h")))).as("_byRank"))
       .select(keyCols.map(col) :+ s.as("_sz") :+ posexplode(
-        transform(slice(col("_byRank"), lit(1), plen), e => e.getField("h")))
+        transform(slice(col("_byRank"), lit(1), probeLen(s, threshold)), e => e.getField("h")))
         .as(Seq("_pos0", "h")): _*)
       .select(keyCols.map(col) :+ col("_sz") :+ (col("_pos0") + 1).as("_pos") :+ col("h"): _*)
   }
@@ -152,8 +153,19 @@ object SimilarityJoin {
     * the prefix LONGER, never dropping a boundary pair.
     */
   private def indexKeep(sz: Column, pos: Column, threshold: Double): Column =
-    pos <= (sz - ceil(
-      sz.cast("double") * (2 * threshold / (1 + threshold)) - lit(1e-9)) + 1).cast("int")
+    pos <= indexLen(sz, threshold)
+
+  /** Probe-prefix length s − ⌈t·s⌉ + 1 of a set of size `s` — the postings
+    * [[prefixPostings]] emits per row (at most `s` of them).
+    */
+  private def probeLen(s: Column, threshold: Double): Column =
+    (s - ceil(s.cast("double") * threshold - lit(1e-9)) + 1).cast("int")
+
+  /** Index-prefix length s − ⌈2t/(1+t)·s⌉ + 1 of a set of size `s` — the
+    * positions [[indexKeep]] keeps.
+    */
+  private def indexLen(s: Column, threshold: Double): Column =
+    (s - ceil(s.cast("double") * (2 * threshold / (1 + threshold)) - lit(1e-9)) + 1).cast("int")
 
   /** Exact verify on candidate id pairs: join the set arrays back, apply the
     * exact size prune (J ≤ min/max of the DISTINCT-set sizes; −0.5 slack
@@ -539,6 +551,75 @@ object SimilarityJoin {
     row.getDouble(0) <= PostCostSteps * row.getDouble(1)
   }
 
+  /** Per-(block, element) document frequencies (blockCols…, h, _df) of the
+    * self-join frame: the block's distinct element count D_b for
+    * [[prefixBounds]], and, summed over blocks ([[overBlocks]]), the global
+    * rarest-first order of the postings build. With no block columns it is
+    * that global order itself.
+    */
+  private def blockDocFreq(base: DataFrame, blockCols: Seq[String]): DataFrame =
+    base.select(blockCols.map(col) :+ explode(col("_set")).as("h"): _*)
+      .groupBy((blockCols :+ "h").map(col): _*).agg(count(lit(1)).as("_df"))
+
+  /** The global (h, _df) order: a [[blockDocFreq]] frame summed over blocks
+    * (with no block columns, the frame itself).
+    */
+  private def overBlocks(freq: DataFrame, blockCols: Seq[String]): DataFrame =
+    if (blockCols.isEmpty) freq
+    else freq.groupBy(col("h")).agg(sum(col("_df")).as("_df"))
+
+  /** A lower bound on each block's prefix candidate volume, computed before
+    * any postings exist. Index postings are a subset of probe postings, so
+    * per element n_i(h) ≤ n_p(h), and by Cauchy–Schwarz over the block's
+    * D_b distinct elements
+    * cp_b = Σ_h n_i·n_p/2 ≥ Σ_h n_i²/2 ≥ P_b²/(2·D_b),
+    * where P_b = Σ_h n_i(h), the block's index-prefix postings, has a closed
+    * form per row: min(indexLen(s), probeLen(s), s) for s > 0.
+    *
+    * One row per block value: `_m` (rows), `_lb` (the bound, a double for
+    * reporting) and `_lbAllPairs`, true when the bound alone exceeds the
+    * block's all-pairs volume m_b(m_b − 1)/2, i.e. the volume probe would
+    * route the block to all-pairs. That test is P_b² > D_b·m_b(m_b − 1) in
+    * exact decimal arithmetic, so no float rounding can flip a block (the
+    * probe's volumes are sums of integer halves, exact in double up to
+    * 2^52 ≈ 4.5·10^15 candidate pairs a block).
+    * Blocks the probe's equi-joins see only in part read `_lb` = 0 and
+    * never fire: a NULL block value (its postings join nothing, and the
+    * probe routes it to prefix) and a NULL element (its postings drop out
+    * of cp_b). One aggregate over the frame's rows and `blockFreq`'s.
+    */
+  private def prefixBounds(
+      base: DataFrame, blockFreq: DataFrame, blockCols: Seq[String],
+      threshold: Double): DataFrame = {
+    val keys = blockCols.map(col)
+    val s = size(col("_set"))
+    def counts(m: Column, p: Column, d: Column, nullH: Column) = keys ++ Seq(
+      m.cast("long").as("_m"), p.cast("long").as("_p"),
+      d.cast("long").as("_d"), nullH.cast("long").as("_nh"))
+    def dec(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(20, 0))
+    val covered = keys.map(_.isNotNull).foldLeft(col("_nh") === 0)(_ && _)
+    base.select(counts(lit(1), when(s > 0,
+        least(indexLen(s, threshold), probeLen(s, threshold), s)).otherwise(0),
+        lit(0), lit(0)): _*)
+      .unionAll(blockFreq.select(counts(lit(0), lit(0), lit(1), col("h").isNull): _*))
+      .groupBy(keys: _*)
+      .agg(sum(col("_m")).as("_m"), sum(col("_p")).as("_p"),
+        sum(col("_d")).as("_d"), sum(col("_nh")).as("_nh"))
+      .select(keys ++ Seq(col("_m"),
+        when(covered && col("_d") > 0,
+          col("_p").cast("double") * col("_p") / (col("_d") * 2)).otherwise(0.0).as("_lb"),
+        coalesce(covered && dec(col("_p")) * dec(col("_p")) >
+          dec(col("_d")) * dec(col("_m")) * dec(col("_m") - 1), lit(false)).as("_lbAllPairs")): _*)
+  }
+
+  /** True when every block of a [[prefixBounds]] frame routes to all-pairs
+    * on the bound alone — one action, reduced to one row in the block
+    * aggregate's own stage.
+    */
+  private def boundRoutesAllPairs(bounds: DataFrame): Boolean =
+    bounds.coalesce(1)
+      .agg(coalesce(min(col("_lbAllPairs").cast("int")), lit(0))).head().getInt(0) == 1
+
   /** All WITHIN-corpus pairs with exact Jaccard ≥ `threshold` — the dedup
     * self-join shape (the single most common near-dup call). Returns
     * (id_a, id_b, jac) with id_a < id_b, each qualifying unordered pair
@@ -570,12 +651,23 @@ object SimilarityJoin {
     * times the elements the postings build would process. When W is
     * within that, all-pairs costs less than the build alone and runs
     * directly — the small-batch shape of the curation tick. Otherwise Auto
-    * builds the postings, measures both volumes (two 1-row aggregation jobs
-    * — see [[selfJoinVolumes]]) and runs the cheaper plan; the measured
-    * per-unit costs of the two engines agree within ~10% (sf1 calibration:
-    * 250 M block-pairs ≈ 49 s, 2.28 G candidates ≈ 500 s), so the volumes
-    * compare directly. Both engines produce identical output
-    * (spec-proved), so the choice is invisible to callers.
+    * pins the per-(block, element) document frequencies and runs one more
+    * action, still before any postings exist: the lower bound
+    * P_b²/(2·D_b) on each block's prefix candidate volume (P_b = index-
+    * prefix postings, closed-form per row; D_b = distinct elements — see
+    * [[prefixBounds]]). When it exceeds the all-pairs volume
+    * m_b(m_b − 1)/2 in every block (and no row has a NULL block value), the
+    * probe below would send every block to all-pairs, so all-pairs runs
+    * directly — the low-diversity shape of a corpus whose blocks share a
+    * few thousand distinct shingles. Otherwise Auto builds the postings
+    * under the global order summed from the same frequencies, measures both
+    * volumes (two 1-row aggregation jobs — see [[selfJoinVolumes]]) and
+    * runs the cheaper plan; the routing is the same as without the bound
+    * in every case. The measured per-unit costs of the two engines agree
+    * within ~10% (sf1 calibration: 250 M block-pairs ≈ 49 s, 2.28 G
+    * candidates ≈ 500 s), so the volumes compare directly. Both engines
+    * produce identical output (spec-proved), so the choice is invisible to
+    * callers.
     *
     * `blockCols` optionally restricts pairs to rows agreeing on every
     * block column (e.g. same language) — block keys join the posting /
@@ -610,7 +702,7 @@ object SimilarityJoin {
     // the postings table is BOTH sides of the candidate join (and the Auto
     // cost probe) — pin it so the freq-join + per-doc sort run once; built
     // lazily so a forced AllPairs run never pays the prefix prep
-    def buildPost(): DataFrame = selfPost(base, blockCols, threshold, pin)
+    def buildPost(freq: DataFrame): DataFrame = selfPost(base, blockCols, freq, threshold, pin)
 
     def prefixPath(post: DataFrame): DataFrame = {
       // asymmetric candidate join (see indexKeep): the pair's smaller set
@@ -685,8 +777,12 @@ object SimilarityJoin {
         .select(col("_aid").as("id_a"), col("_bid").as("id_b"), col("_j").as("jac"))
     }
 
+    // the volume bound's frequencies: built only once Auto's size check has
+    // not fired, and reused as the postings build's global order
+    lazy val blockFreq = pin(blockDocFreq(base, blockCols))
+
     strategy match {
-      case SimilarityStrategy.PrefixFilter => prefixPath(buildPost())
+      case SimilarityStrategy.PrefixFilter => prefixPath(buildPost(blockDocFreq(base, Nil)))
       case SimilarityStrategy.AllPairs => allPairsPath(base)
       case SimilarityStrategy.MinHashLsh(b, r) => minHashPath(b, r)
       // the size check runs first — one action, before any postings exist
@@ -694,9 +790,13 @@ object SimilarityJoin {
           sizeRows(base, 0, "_set", blockCols), blockCols,
           work = (col("_m0") - 1) * col("_e0"), posted = col("_e0")) =>
         allPairsPath(base)
+      // then the volume bound — one action, still before any postings exist
+      case SimilarityStrategy.Auto if boundRoutesAllPairs(
+          prefixBounds(base, blockFreq, blockCols, threshold)) =>
+        allPairsPath(base)
       case SimilarityStrategy.Auto if blockCols.isEmpty =>
         // one block — one regime: the global comparison IS the per-block one
-        val post = buildPost()
+        val post = buildPost(overBlocks(blockFreq, blockCols))
         val (cPrefix, cBlocks) = selfVolumes(base, post, blockCols, threshold)
         if (cPrefix <= cBlocks) prefixPath(post) else allPairsPath(base)
       case SimilarityStrategy.Auto =>
@@ -707,7 +807,7 @@ object SimilarityJoin {
         // already per-block aggregations; route each block to its cheaper
         // exact engine and union the outputs (identical pairs either way,
         // so routing is invisible in the result).
-        val post = buildPost()
+        val post = buildPost(overBlocks(blockFreq, blockCols))
         val regimes = blockVolumes(base, post, blockCols, threshold)
           .select(blockCols.map(col) :+ (col("_cp") <= col("_cb")).as("_pr"): _*)
         // one tiny agg decides degenerate corpora: all-one-regime runs the
@@ -747,15 +847,14 @@ object SimilarityJoin {
     pin(df.select(
       (col(idCol).cast("long").as("_id") +: blockCols.map(col)) :+ col(setCol).as("_set"): _*))
 
-  /** Shared self-join prep: prefix postings over `base` (freq feeds exactly
-    * one prefixPostings call here — no pin needed on it).
+  /** Shared self-join prep: prefix postings over `base` under the global
+    * (h, _df) order `freq` (it feeds exactly one prefixPostings call here —
+    * no pin needed on it).
     */
   private def selfPost(
-      base: DataFrame, blockCols: Seq[String], threshold: Double, pin: Pin): DataFrame = {
-    val freq = base.select(explode(col("_set")).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("_df"))
+      base: DataFrame, blockCols: Seq[String], freq: DataFrame, threshold: Double,
+      pin: Pin): DataFrame =
     pin(prefixPostings(base, "_id" +: blockCols, freq, threshold))
-  }
 
   /** Per-(h, block) posting counts for the prefix-engine volume estimate:
     * `_np` probe postings and `_ni` index-prefix postings (inner join — an
@@ -846,11 +945,12 @@ object SimilarityJoin {
       .head().getDouble(0)
 
   /** Planning probe for [[jaccardSelfJoin]]: (prefix-filter candidate
-    * volume, blocked all-pairs volume) on this corpus. When Auto's size
-    * check does not already settle on all-pairs, Auto runs whichever is
-    * smaller; exposed so capacity planning (and the spec) can see the
-    * regime a corpus is in without running either join. The probe itself
-    * skips the size check: it always builds the postings.
+    * volume, blocked all-pairs volume) on this corpus. When neither Auto's
+    * size check nor its volume bound already settles on all-pairs, Auto
+    * runs whichever is smaller; exposed so capacity planning (and the spec)
+    * can see the regime a corpus is in without running either join. The
+    * probe itself skips the size check and the bound: it always builds the
+    * postings.
     */
   def selfJoinVolumes(
       df: DataFrame,
@@ -859,19 +959,23 @@ object SimilarityJoin {
       threshold: Double,
       blockCols: Seq[String] = Nil): (Double, Double) = {
     val base = selfBase(df, idCol, setCol, blockCols, Pin.Off)
-    val post = selfPost(base, blockCols, threshold, Pin.Off)
+    val post = selfPost(base, blockCols, blockDocFreq(base, Nil), threshold, Pin.Off)
     selfVolumes(base, post, blockCols, threshold)
   }
 
   /** Per-block planning probe: one row per distinct `blockCols` value with
-    * the prefix-filter candidate volume (`prefix_volume`), the blocked
-    * all-pairs volume (`allpairs_volume`), and the engine Auto routes that
-    * block to (`engine`: "prefix" | "allpairs"). [[jaccardSelfJoin]]'s Auto
-    * runs this comparison per block after its size check, and only when
-    * that check has not already sent the whole frame to all-pairs — so
-    * `engine` is Auto's routing above the check, not below it. Exposed so
-    * capacity planning (and the routing spec) can see each block's regime
-    * without running the join.
+    * the prefix-filter candidate volume (`prefix_volume`), Auto's lower
+    * bound on it (`prefix_volume_lb`, from [[prefixBounds]]: 0 for a NULL
+    * block value or a block holding a NULL element), the blocked all-pairs
+    * volume (`allpairs_volume`), and the engine Auto routes that block to
+    * (`engine`: "prefix" | "allpairs"). [[jaccardSelfJoin]]'s Auto runs
+    * this comparison per block only when its size check has not already
+    * sent the whole frame to all-pairs and `prefix_volume_lb` does not
+    * exceed `allpairs_volume` in every block — so `engine` is Auto's routing
+    * above the size check (where the bound, when it fires, agrees with it:
+    * every block then reads "allpairs"). Exposed so capacity planning (and
+    * the routing spec) can see each block's regime without running the
+    * join.
     */
   def selfJoinBlockVolumes(
       df: DataFrame,
@@ -882,10 +986,18 @@ object SimilarityJoin {
     require(blockCols.nonEmpty,
       "selfJoinBlockVolumes needs block columns — use selfJoinVolumes for the unblocked corpus")
     val base = selfBase(df, idCol, setCol, blockCols, Pin.Off)
-    val post = selfPost(base, blockCols, threshold, Pin.Off)
+    val blockFreq = blockDocFreq(base, blockCols)
+    val post = selfPost(base, blockCols, overBlocks(blockFreq, blockCols), threshold, Pin.Off)
+    // the bound's block keys renamed, so the NULL-safe join on them stays
+    // unambiguous (both sides derive from `base`)
+    val keys = blockCols.indices.map(i => s"_k$i")
+    val bounds = prefixBounds(base, blockFreq, blockCols, threshold)
+      .select(blockCols.zip(keys).map { case (c, k) => col(c).as(k) } :+ col("_lb"): _*)
     blockVolumes(base, post, blockCols, threshold)
+      .join(bounds, blockCols.zip(keys).map { case (c, k) => col(c) <=> col(k) }.reduce(_ && _))
       .select(blockCols.map(col)
         :+ col("_cp").as("prefix_volume")
+        :+ col("_lb").as("prefix_volume_lb")
         :+ col("_cb").as("allpairs_volume")
         :+ when(col("_cp") <= col("_cb"), lit("prefix")).otherwise(lit("allpairs")).as("engine"): _*)
   }

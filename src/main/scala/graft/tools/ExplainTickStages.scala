@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
 import graft.Engine
+import graft.SparkEntry.Stopwords
 import graft.functions.TextFunctions
 
 /** Dump `.explain("formatted")` for the curation tick's PRE-CHECKPOINT
@@ -20,9 +21,6 @@ import graft.functions.TextFunctions
   * Usage: runMain graft.tools.ExplainTickStages <outDir> <suffix> [sfDir]
   */
 object ExplainTickStages {
-
-  private val Stopwords =
-    Seq("the", "a", "and", "of", "to", "in", "is", "for", "on", "with")
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ExplainTickStages <outDir> <suffix> [sfDir]")

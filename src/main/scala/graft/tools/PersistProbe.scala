@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Engine
+import graft.SparkEntry.Stopwords
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Pin}
 
@@ -19,10 +20,6 @@ import graft.operators.{Curation, Pin}
   * Usage: runMain graft.tools.PersistProbe [sfDir] [persistDir]
   */
 object PersistProbe {
-
-  // mirrors SparkEntry's shared stopword list (private there)
-  private val Stopwords =
-    Seq("the", "a", "and", "of", "to", "in", "is", "for", "on", "with")
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/tmp/sf1")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Engine
+import graft.SparkEntry.Stopwords
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Pin}
 
@@ -35,10 +36,6 @@ import graft.operators.{Curation, Pin}
   * win for the stored cells, VERDICT r12 item 6).
   */
 object ProfileTick {
-
-  // mirrors SparkEntry's shared stopword list (private there)
-  private val Stopwords =
-    Seq("the", "a", "and", "of", "to", "in", "is", "for", "on", "with")
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/tmp/sf1")

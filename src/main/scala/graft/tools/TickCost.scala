@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Engine
+import graft.SparkEntry.Stopwords
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Pin}
 
@@ -28,9 +29,6 @@ import graft.operators.{Curation, Pin}
   * Usage: runMain graft.tools.TickCost [sfDir] [reps]
   */
 object TickCost {
-
-  private val Stopwords =
-    Seq("the", "a", "and", "of", "to", "in", "is", "for", "on", "with")
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -630,12 +630,18 @@ class SimilarityJoinSpec extends AnyFunSuite {
   /** SQL executions that `f` starts — the construction-time actions of a
     * join call (its size check, postings pins and cost probes). */
   private def executionsDuring[T](f: => T): (T, Int) = {
+    val (out, plans) = executionPlansDuring(f)
+    (out, plans.size)
+  }
+
+  /** The physical plan of each SQL execution that `f` starts, in order. */
+  private def executionPlansDuring[T](f: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          n.incrementAndGet()
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
         case _ =>
       }
     }
@@ -644,7 +650,8 @@ class SimilarityJoinSpec extends AnyFunSuite {
     try {
       val out = f
       org.apache.spark.ListenerBusDrain(sc)
-      (out, n.get)
+      import scala.jdk.CollectionConverters._
+      (out, plans.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -814,5 +821,166 @@ class SimilarityJoinSpec extends AnyFunSuite {
         assert(out.select("lid", "rid").as[(Long, Long)].collect().toSet == want,
           s"strategy=$st")
       }
+  }
+
+  /** Brute-force self pairs over sorted sets (merge intersection): ids
+    * a < b sharing a block, J ≥ t; NULL blocks and NULL sets pair with
+    * nothing. */
+  private def bruteForceBlocked(
+      rows: Seq[(Long, Option[String], Array[Long])], t: Double): Set[(Long, Long)] = {
+    def inter(a: Array[Long], b: Array[Long]): Int = {
+      var (x, y, n) = (0, 0, 0)
+      while (x < a.length && y < b.length) {
+        if (a(x) == b(y)) { n += 1; x += 1; y += 1 }
+        else if (a(x) < b(y)) x += 1
+        else y += 1
+      }
+      n
+    }
+    rows.filter(r => r._2.isDefined && r._3 != null).groupBy(_._2).values.flatMap { rs =>
+      val v = rs.toIndexedSeq
+      for {
+        i <- v.indices
+        j <- v.indices
+        (ai, _, as) = v(i)
+        (bi, _, bs) = v(j)
+        if ai < bi
+        n = inter(as, bs)
+        if as.length + bs.length - n > 0 && n.toDouble / (as.length + bs.length - n) >= t
+      } yield (ai, bi)
+    }.toSet
+  }
+
+  private val LowDiversityAlphabet = 800L
+
+  /** `perBlock` rows in each of blocks "x" and "y" (ids 10000·b + i): sets
+    * of 90 elements drawn from one shared 800-element alphabet, every 10th
+    * a near-copy of the row before it (2 elements swapped for fresh ones),
+    * so true pairs exist. At t = 0.5 each row posts 31 index-prefix
+    * elements, so P_b²/(2·D_b) ≈ 1.2 × m_b(m_b − 1)/2 for 550-row blocks,
+    * and likewise over the unblocked frame. */
+  private def lowDiversityRows(
+      seed: Int, perBlock: Int): Seq[(Long, Option[String], Array[Long])] = {
+    val rnd = new scala.util.Random(seed)
+    def draw() = rnd.shuffle((0L until LowDiversityAlphabet).toVector).take(90).sorted.toArray
+    Seq("x", "y").zipWithIndex.flatMap { case (g, b) =>
+      var prev = draw()
+      (0 until perBlock).map { i =>
+        val set =
+          if (i % 10 == 9) {
+            val fresh = rnd.shuffle((0L until LowDiversityAlphabet).filterNot(prev.contains).toVector)
+            (prev.drop(2) ++ fresh.take(2)).sorted
+          } else draw()
+        prev = set
+        (10000L * b + i, Option(g), set)
+      }
+    }
+  }
+
+  private def lowDiversityFrame(rows: Seq[(Long, Option[String], Array[Long])]) =
+    rows.map { case (i, g, s) => (i, g, s.toSeq) }.toDF("id", "g", "s")
+
+  /** (prefix_volume, prefix_volume_lb, allpairs_volume, engine) per block value. */
+  private def blockReport(df: org.apache.spark.sql.DataFrame, t: Double) =
+    SimilarityJoin.selfJoinBlockVolumes(df, "id", "s", t, Seq("g"))
+      .select("g", "prefix_volume", "prefix_volume_lb", "allpairs_volume", "engine")
+      .collect().map(r => Option(r.getString(0)) ->
+        (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getString(4))).toMap
+
+  private def checkStrategies(
+      label: String, want: Set[(Long, Long)], auto: org.apache.spark.sql.DataFrame,
+      run: SimilarityStrategy => org.apache.spark.sql.DataFrame): Unit = {
+    assert(want.nonEmpty, s"$label: the fixture has no true pairs")
+    val got = auto.select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(got.length == got.toSet.size, s"$label: duplicate pairs")
+    assert(got.toSet == want, s"$label Auto: missing=${want -- got.toSet} extra=${got.toSet -- want}")
+    Seq(SimilarityStrategy.PrefixFilter, SimilarityStrategy.AllPairs).foreach { st =>
+      assert(run(st).select("id_a", "id_b").as[(Long, Long)].collect().toSet == want, s"$label $st")
+    }
+  }
+
+  test("Auto's volume bound: a low-diversity frame above the size check runs all-pairs with " +
+    "no postings build or cost probe; outputs equal both forced engines and brute force") {
+    val t = 0.5
+    val rows = lowDiversityRows(71, 550)
+    val df = lowDiversityFrame(rows)
+    for (blocked <- Seq(true, false)) {
+      val blockCols = if (blocked) Seq("g") else Nil
+      def run(st: SimilarityStrategy) = SimilarityJoin.jaccardSelfJoin(
+        df, "id", "s", t, blockCols = blockCols, strategy = st, inputPinned = true)
+      val (auto, plans) = executionPlansDuring(run(SimilarityStrategy.Auto))
+      // the size check, the frequency pin and the bound; the postings
+      // (the only posexplode) are never planned into an action
+      assert(plans.size == 3,
+        s"blocked=$blocked: expected the size check, pin and bound only, saw ${plans.size}")
+      assert(!plans.exists(_.contains("posexplode")),
+        s"blocked=$blocked: a postings build ran during construction")
+      val keyed = if (blocked) rows else rows.map { case (i, _, s) => (i, Option("all"), s) }
+      checkStrategies(s"blocked=$blocked", bruteForceBlocked(keyed, t), auto, run)
+    }
+    // the report agrees: every block's bound exceeds its all-pairs volume
+    val report = blockReport(df, t)
+    assert(report.keySet == Set(Some("x"), Some("y")))
+    report.foreach { case (g, (cp, lb, cb, engine)) =>
+      assert(cb < lb && lb <= cp && engine == "allpairs", s"block $g: ${(cp, lb, cb, engine)}")
+    }
+  }
+
+  test("Auto's volume bound does not fire when a row has a NULL block value") {
+    val t = 0.5
+    val rnd = new scala.util.Random(73)
+    val rows = lowDiversityRows(71, 550) ++ (0 until 5).map(i => (50000L + i, Option.empty[String],
+      rnd.shuffle((0L until LowDiversityAlphabet).toVector).take(90).sorted.toArray))
+    val df = lowDiversityFrame(rows)
+    val report = blockReport(df, t)
+    assert(report(None)._2 == 0.0 && report(None)._4 == "prefix", s"NULL block: ${report(None)}")
+    Seq(Some("x"), Some("y")).foreach { g =>
+      assert(report(g)._2 > report(g)._3, s"dense block $g should clear the bound: ${report(g)}")
+    }
+    def run(st: SimilarityStrategy) = SimilarityJoin.jaccardSelfJoin(
+      df, "id", "s", t, blockCols = Seq("g"), strategy = st, inputPinned = true)
+    val (auto, plans) = executionPlansDuring(run(SimilarityStrategy.Auto))
+    assert(plans.exists(_.contains("posexplode")),
+      "with a NULL block value the postings must be built and probed")
+    checkStrategies("NULL block", bruteForceBlocked(rows, t), auto, run)
+  }
+
+  test("the volume bound is at most each block's prefix volume, and where it exceeds every " +
+    "block's all-pairs volume every block routes to all-pairs (24 seeded fixtures)") {
+    var (fired, held) = (0, 0)
+    (0 until 24).foreach { k =>
+      val rnd = new scala.util.Random(1000 + k)
+      val alphabet = Seq(4, 12, 40, 200, 5000)(k % 5)
+      val t = Seq(0.3, 0.5, 0.8)(k % 3)
+      val rows = (0 until 1 + k % 4).flatMap { b =>
+        // every even fixture opens with a single-row block
+        val m = if (b == 0 && k % 2 == 0) 1 else 2 + rnd.nextInt(40)
+        (0 until m).map { i =>
+          val set: Seq[Long] = rnd.nextInt(10) match {
+            case 0 => null
+            case 1 => Nil
+            case _ => Seq.fill(1 + rnd.nextInt(math.min(alphabet, 20)))(
+              rnd.nextInt(alphabet).toLong).distinct.sorted
+          }
+          (1000L * b + i, Option(s"b$b"), set)
+        }
+      } ++ (if (k % 6 == 5) Seq((99999L, Option.empty[String], Seq(1L, 2L, 3L))) else Nil)
+      val df = rows.toDF("id", "g", "s")
+      // a NULL element in the first row of some fixtures
+      val withNullElement =
+        if (k % 8 == 3) df.withColumn("s", when(col("id") === 0,
+          concat(col("s"), array(lit(null).cast("long")))).otherwise(col("s")))
+        else df
+      val report = blockReport(withNullElement, t)
+      report.foreach { case (g, (cp, lb, _, _)) =>
+        assert(lb <= cp * (1 + 1e-12), s"fixture $k block $g: bound $lb above prefix volume $cp")
+      }
+      if (report.values.forall { case (_, lb, cb, _) => lb > cb }) {
+        fired += 1
+        assert(report.values.forall(_._4 == "allpairs"),
+          s"fixture $k: the bound fires but a block routes to prefix: $report")
+      } else held += 1
+    }
+    assert(fired > 0 && held > 0, s"fixtures fired $fired, held $held")
   }
 }
