@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each query is forced end-to-end with a noop-format
   * write (computes every column — `count()` would let Catalyst prune the
@@ -253,20 +251,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // single-spill-file shuffle writer (see Engine.BypassMergeThreshold)
-      .config("spark.shuffle.sort.bypassMergeThreshold", Engine.BypassMergeThreshold)
-      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheMaxEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
+    val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // SPARK_GRAFT_BENCH_EXCLUDE: comma-separated exact query names to skip —
     // for scale-validation sweeps that should not pay a strategy-PINNED

@@ -9,47 +9,71 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Design notes (SURVEY.md §7.1): everything in this library is expressed on
   * `SparkSession`/`DataFrame`/`Column`/`spark.ml` — no bespoke execution
   * engine. This object pins the session configuration the whole engine
-  * assumes:
+  * assumes (`confs`, in builder order):
   *
+  *   - `spark.sql.shuffle.partitions` sized to the local core count, not the
+  *     200 default; on a real cluster this would be tuned to ~2-3× total
+  *     cores and AQE coalesces the rest.
+  *   - `spark.sql.adaptive.enabled=true` — runtime shuffle coalescing +
+  *     skew-join splitting, which is the scale story for the 100-TB target
+  *     (skewed keys get split without manual salting in the common case).
   *   - `spark.sql.ansi.enabled=false` — pandas-style coercion semantics
   *     (invalid casts → null, div-by-zero → null) per SURVEY.md §2.2 P11.
   *   - `spark.sql.session.timeZone=UTC` — oracle (DuckDB) parity for all
   *     date/timestamp arithmetic.
-  *   - `spark.sql.shuffle.partitions` sized to the local core count, not the
-  *     200 default; on a real cluster this would be tuned to ~2-3× total
-  *     cores and AQE coalesces the rest.
-  *   - AQE on — runtime shuffle coalescing + skew-join splitting, which is
-  *     the scale story for the 100-TB target (skewed keys get split without
-  *     manual salting in the common case).
+  *   - `spark.sql.legacy.parquet.nanosAsLong=true` — TESTDATA `events.ts`
+  *     has shipped as parquet TIMESTAMP(NANOS), which Spark's reader rejects;
+  *     read as a Long of nanoseconds, `table` converts it to µs.
+  *   - `spark.sql.parquet.inferTimestampNTZ.enabled=false` — TESTDATA has
+  *     also shipped naive TIMESTAMP(MICROS) (isAdjustedToUTC=false), which
+  *     Spark 4 reads as TIMESTAMP_NTZ by default, and watermarks and unix_*
+  *     reject NTZ. Without the inference naive micros read as plain
+  *     TIMESTAMP — with the UTC session zone the values are verbatim,
+  *     exactly DuckDB's read.
+  *   - `spark.sql.legacy.javaCharsets=true` — Spark 4 limits `encoding`
+  *     options and encode/decode to a fixed charset list; the reference's
+  *     GBK CSVs (`Sources.csv`) need the JVM's full charset set.
+  *   - `spark.ui.enabled=false` — a batch engine serves no web UI, and
+  *     concurrent JVMs would race for its port.
+  *   - `spark.shuffle.sort.bypassMergeThreshold` and
+  *     `spark.sql.codegen.cache.maxEntries` — see `BypassMergeThreshold`
+  *     and `CodegenCacheMaxEntries`.
   */
 object Engine {
 
-  /** Standard engine session. `cores` becomes both the local parallelism and
-    * the shuffle partition count (local mode: one JVM, N threads).
+  /** The engine's session confs for `cores` local cores. */
+  def confs(cores: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.sql.legacy.javaCharsets" -> "true",
+    "spark.ui.enabled" -> "false",
+    "spark.shuffle.sort.bypassMergeThreshold" -> BypassMergeThreshold,
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheMaxEntries)
+
+  /** Standard engine session — the one place a session is built, so every
+    * entry point runs with the same `confs`. `cores` becomes both the local
+    * parallelism and the shuffle partition count (local mode: one JVM, N
+    * threads). The confs are set at build time, so they land in the
+    * SparkContext's conf and every `newSession()` child starts with them;
+    * the object doc says why each one is set.
     */
   def session(appName: String = "graft", cores: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.javaCharsets", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", BypassMergeThreshold)
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)
+    val spark = confs(cores)
+      .foldLeft(SparkSession.builder().master(s"local[$cores]").appName(appName)) {
+        case (b, (k, v)) => b.config(k, v)
+      }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Shuffle-writer selection (core conf — must be set at context build;
-    * `tune` can't apply it): the default 200 routes every ≤200-partition
-    * shuffle through the bypass-merge writer, which opens one file PER
+  /** Shuffle-writer selection (core conf — read only at context build):
+    * the default 200 routes every ≤200-partition shuffle through the
+    * bypass-merge writer, which opens one file PER
     * REDUCE PARTITION per map task — at the engine's right-sized partition
     * counts (32 local, a few hundred per stage after AQE coalescing at any
     * scale) that is R file creates/closes per task, and thread-dump
@@ -76,24 +100,6 @@ object Engine {
     * value carries to any cluster size unchanged.
     */
   val CodegenCacheMaxEntries = "1024"
-
-  /** Apply the engine's required runtime confs to an externally built
-    * session (Verify/Bench build their own per the driver contract).
-    */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // TESTDATA timestamps have shipped both as TIMESTAMP(NANOS) and as
-    // TIMESTAMP(MICROS) with isAdjustedToUTC=false; Spark 4's default reads
-    // the latter as TIMESTAMP_NTZ, which watermarks and unix_* reject.
-    // Disable the inference so naive micros read as plain TIMESTAMP — with
-    // the UTC session zone the values are verbatim, exactly DuckDB's read.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.legacy.javaCharsets", "true")
-    spark
-  }
 
   /** Load one TESTDATA table: `table(spark, dir, "lineitem")` reads
     * `dir/lineitem.parquet`. Plain parquet scan — filters/projections placed

@@ -21,7 +21,7 @@ import graft.text.Stylometry
 object SparkEntry {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Engine.table(Engine.tune(spark), dir, name)
+    Engine.table(spark, dir, name)
 
   /** Stopword list shared by the text-quality operators and their oracles
     * (and the diagnostic mains under `tools/`). */
@@ -576,7 +576,6 @@ object SparkEntry {
       dir: String,
       mode: String)(build: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.types._
-    Engine.tune(s)
     // isolated child session (shared SparkContext, own conf/catalog): the
     // replay's stateful operators pay per-state-store-partition overhead
     // (HDFS-backed checkpoint files per partition per batch), which at this
@@ -584,9 +583,9 @@ object SparkEntry {
     // On a real cluster the replay wouldn't exist (the stream is the input);
     // state-store partition sizing is a per-query knob either way.
     // newSession inherits only BUILDER-time conf (SparkConf), not runtime
-    // spark.conf.set calls — re-tune explicitly (UTC, nanosAsLong, ANSI off)
-    // so replay semantics don't depend on which entry point built the parent
-    val ss = Engine.tune(s.newSession())
+    // spark.conf.set calls — the engine's confs (UTC, nanosAsLong, ANSI
+    // off) are all builder-time in Engine.session, so the child has them
+    val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "8")
     // schema from a static footer read, not hardcoded: TESTDATA `events.ts`
     // has shipped both as TIMESTAMP(NANOS) (Long under nanosAsLong) and as
@@ -670,7 +669,7 @@ object SparkEntry {
       s: SparkSession,
       frame: DataFrame,
       mode: String)(build: (SparkSession, DataFrame) => DataFrame): DataFrame = {
-    val ss = Engine.tune(s.newSession())
+    val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "8")
     val dirTmp = java.nio.file.Files.createTempDirectory("graft-frame-stream")
     try {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
@@ -27,19 +26,7 @@ object ExplainTickStages {
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = args(1)
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", Engine.BypassMergeThreshold)
-      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheMaxEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
+    val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     java.nio.file.Files.createDirectories(outDir)
 
     val docs = Engine.table(spark, dir, "documents")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import graft.{Engine, SparkEntry}
 
@@ -11,44 +10,25 @@ import graft.{Engine, SparkEntry}
   * "a few big jobs" (compute-bound — optimize the plan) from "many small
   * jobs" (driver-loop/pin-bound — cut the job count). Diagnostic only.
   *
-  * Usage: runMain graft.tools.JobProfile <queryName> [sfDir] [runs]
+  * Usage: runMain graft.tools.JobProfile <queryName> [sfDir] [runs] [overrides]
+  *
+  * `overrides` is a comma-separated list of conf settings, e.g.
+  * "spark.sql.adaptive.enabled=false,spark.sql.shuffle.partitions=8", set on
+  * the engine session after it is built — so only runtime confs can be
+  * overridden; `spark.conf.set` rejects a static or core conf. The child
+  * sessions of the streaming replays start from the builder confs, so they
+  * do not see the overrides.
   */
 object JobProfile {
 
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(
-      sys.error("usage: JobProfile <queryName> [sfDir] [runs]"))
+      sys.error("usage: JobProfile <queryName> [sfDir] [runs] [overrides]"))
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // core conf (context-build only): mirror the engine/bench session's
-      // shuffle-writer selection, or the profile samples a writer the bench
-      // never runs (r15: the q261 profile showed bypass-merge stacks that
-      // Bench's threshold=2 session cannot produce)
-      .config("spark.shuffle.sort.bypassMergeThreshold", Engine.BypassMergeThreshold)
-      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheMaxEntries)
-    // arg 4: extra comma-separated conf overrides, e.g. "spark.x=1,spark.y=2"
+    val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     args.lift(3).foreach(_.split(',').filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b.config(k, v)
-    })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
-    // re-apply arg-4 overrides AFTER tune: Engine.tune unconditionally sets
-    // runtime confs (e.g. adaptive.enabled) and would silently undo an
-    // experiment's override otherwise. Static confs only apply at the
-    // builder (above) — tolerate the runtime-set rejection here.
-    args.lift(3).foreach(_.split(',').filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      try spark.conf.set(k, v)
-      catch { case _: org.apache.spark.sql.AnalysisException => }
+      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
     })
 
     val fn = SparkEntry.queries.getOrElse(name,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Engine
@@ -39,21 +39,7 @@ object ProfileTick {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/tmp/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // core conf: mirror the engine/bench shuffle-writer selection so the
-      // profile measures the writer the bench actually runs
-      .config("spark.shuffle.sort.bypassMergeThreshold", Engine.BypassMergeThreshold)
-      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheMaxEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
+    val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def tm[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Engine
 
 /** Scale-validation data builder: replicates an existing testdata scale
   * factor N× with shifted entity keys so the result has N× the rows AND N×
@@ -54,14 +56,9 @@ object ScaleUp {
     val factor = factorS.toInt
     val novelPct = args.lift(3).map(_.toInt).getOrElse(0)
     require(novelPct >= 0 && novelPct <= 100, s"novelPct must be 0-100: $novelPct")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // copy naive timestamps (events.ts, l_shipdate, o_orderdate) as NTZ, not INT96
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
 
     def src(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

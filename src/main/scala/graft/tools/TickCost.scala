@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Engine
@@ -33,19 +33,7 @@ object TickCost {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", Engine.BypassMergeThreshold)
-      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheMaxEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
+    val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val docs = Engine.table(spark, dir, "documents")
     val mx = docs.agg(max(col("doc_id"))).head().getLong(0)

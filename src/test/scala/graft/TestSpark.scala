@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run. */
 object TestSpark {
-  lazy val spark: SparkSession = Engine.session("graft-test", 8)
+  val Cores = 8
+  lazy val spark: SparkSession = Engine.session("graft-test", Cores)
   val Sf = "/root/testdata/sf0.001"
 }
