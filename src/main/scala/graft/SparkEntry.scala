@@ -5537,7 +5537,10 @@ object SparkEntry {
     // corpus and runs the cheaper exact plan — prefix postings on the
     // realistic big-block/low-density corpus, salted all-pairs when
     // replica-dense clusters make prefixes degenerate (the sf1 stress
-    // corpus: 2.28 G candidate occurrences vs 0.25 G block pairs)
+    // corpus: 2.28 G candidate occurrences vs 0.25 G block pairs). Past
+    // Auto's size check (this corpus at sf0.1) the join returns its
+    // verified pairs pinned, so the stage-4 count below and any later read
+    // of s4 scan the pairs instead of re-running the all-pairs verify
     val dominated = graft.operators.SimilarityJoin
       .jaccardSelfJoin(sh, "doc_id", "h", threshold = 0.5, blockCols = Seq("lang"))
       .select(col("id_b").as("doc_id")).distinct()

@@ -5,11 +5,21 @@ import org.apache.spark.storage.StorageLevel
 
 /** How a library operator pins a multiply-read intermediate frame.
   *
-  * Several operators here (SimilarityJoin, Contrastive) re-read an expensive
-  * intermediate 2-3×; by default they cut its lineage with a LOCAL
-  * checkpoint, which is the fastest pin but stores blocks on executors with
-  * TRUNCATED lineage — on executor loss or dynamic-allocation decommission
-  * the job fails unrecoverably instead of recomputing. That trade is right
+  * What gets pinned, and when:
+  *  - [[SimilarityJoin]]'s two joins pin their projected inputs (unless the
+  *    caller declares them already materialized), and under Auto the
+  *    frequencies and postings the cost probes read; past Auto's size
+  *    check they also pin their OUTPUT, the verified pairs, so a caller
+  *    that reads the result twice runs the verify once.
+  *  - [[Curation]]'s tick verbs pin the stage frames more than one later
+  *    stage reads, and the service state's index frames.
+  *  - [[Decontaminate]]'s benchmark index pins its grams and Bloom cells;
+  *    Contrastive pins its near-dup pair frame.
+  *
+  * By default they cut the lineage with a LOCAL checkpoint, which is the
+  * fastest pin but stores blocks on executors with TRUNCATED lineage — on
+  * executor loss or dynamic-allocation decommission the job fails
+  * unrecoverably instead of recomputing. That trade is right
   * for a benchmark harness or a static cluster; a long-lived elastic job
   * should pass [[Pin.Persist]] (recomputable from lineage, spills to disk)
   * or [[Pin.Off]] (recompute per read — correct, just slower).
@@ -21,7 +31,9 @@ sealed abstract class Pin {
 object Pin {
 
   /** `localCheckpoint` (lazy): truncates lineage, blocks live on executors.
-    * Fastest; NOT fault-tolerant to executor loss. The default.
+    * Fastest; NOT fault-tolerant to executor loss. The default. Lazy only
+    * in its last stage: under AQE the call is an action that runs the
+    * plan's shuffle map stages; the first read runs the rest and stores it.
     */
   case object LocalCheckpoint extends Pin {
     def apply(df: DataFrame): DataFrame = df.localCheckpoint(false)

@@ -19,6 +19,10 @@ object SimilarityStrategy {
     * distinct element count) already exceeds the block's all-pairs volume;
     * otherwise measure both candidate volumes on the prepared inputs and
     * run the cheaper plan — two tiny aggregation jobs buy the decision.
+    * Past the size check the verify is the join's dominant cost, so Auto
+    * returns its verified pairs pinned through the call's `pin`: a caller
+    * that reads the output twice (a stage count and a later filter) runs
+    * the verify once. Below the size check the output stays a lazy plan.
     */
   case object Auto extends SimilarityStrategy
 
@@ -272,7 +276,11 @@ object SimilarityJoin {
     * `leftIndex` — and runs the salted cross directly when W is within
     * [[PostCostSteps]] of them. Otherwise it builds the postings, measures
     * Σ_h n_L(h)·n_R(h) against Σ_b |L_b|·|R_b| and runs the cheaper exact
-    * plan, per block when blocked.
+    * plan, per block when blocked. That plan's output — the verified
+    * (id_l, id_r, jac) rows only — is pinned through `pin`, so later reads
+    * scan the pairs instead of re-running the verify; the pin's action runs
+    * the plan's map stages during the call. Below the size check, with a
+    * forced strategy, or under [[Pin.Off]] the output is a lazy plan.
     *
     * `blockCols` (present in BOTH frames) restricts pairs to rows agreeing
     * on every block column, exactly as on [[jaccardSelfJoin]]: block keys
@@ -410,17 +418,23 @@ object SimilarityJoin {
       verify(candidates, l.drop(blockCols: _*), r.drop(blockCols: _*), threshold)
     }
 
-    val out = strategy match {
-      case SimilarityStrategy.PrefixFilter => prefixPath(buildPosts(pinPosts = false))
-      case SimilarityStrategy.AllPairs => crossPath(l, r)
-      case SimilarityStrategy.MinHashLsh(b, rr) => minHashPath(b, rr)
+    def named(df: DataFrame): DataFrame =
+      df.select(col("_aid").as(leftId), col("_bid").as(rightId), col("_j").as("jac"))
+
+    strategy match {
+      case SimilarityStrategy.PrefixFilter => named(prefixPath(buildPosts(pinPosts = false)))
+      case SimilarityStrategy.AllPairs => named(crossPath(l, r))
+      case SimilarityStrategy.MinHashLsh(b, rr) => named(minHashPath(b, rr))
       // the size check runs first — one action, before any postings exist
       case SimilarityStrategy.Auto if allPairsBounded(
           sizeRows(l, 0, "_as", blockCols).unionAll(sizeRows(r, 1, "_bs", blockCols)),
           blockCols,
           work = col("_m0") * col("_e1") + col("_m1") * col("_e0"),
           posted = if (leftIndex.isEmpty) col("_e0") + col("_e1") else col("_e1")) =>
-        crossPath(l, r)
+        named(crossPath(l, r))
+      // above the size check the verify dominates the join, so every route
+      // from here pins its verified pairs: later reads scan them instead of
+      // re-running the verify
       case SimilarityStrategy.Auto if blockCols.isEmpty =>
         // one block — one regime: global volume comparison. Σ_h nL·nR is
         // computed as Σ over LEFT POSTING ROWS of nR(h) (exact integer
@@ -438,7 +452,7 @@ object SimilarityJoin {
             .head().getDouble(0),
           { val (cl, cr) = SimilarityJoin.par2(l.count(), r.count())
             cl.toDouble * cr.toDouble })
-        if (cPrefix <= cCross) prefixPath(posts) else crossPath(l, r)
+        pin(named(if (cPrefix <= cCross) prefixPath(posts) else crossPath(l, r)))
       case SimilarityStrategy.Auto =>
         // PER-BLOCK routing, mirroring [[jaccardSelfJoin]]: the regime is a
         // property of each block — route each to its cheaper exact engine
@@ -449,7 +463,7 @@ object SimilarityJoin {
         val Seq(nPrefix, nBlocks) = regimes
           .agg(sum(col("_pr").cast("long")), count(lit(1)))
           .head().toSeq.map(v => if (v == null) 0L else v.asInstanceOf[Long])
-        if (nPrefix == nBlocks) prefixPath(posts)
+        pin(named(if (nPrefix == nBlocks) prefixPath(posts)
         else if (nPrefix == 0L) crossPath(l, r)
         else {
           // mixed: split by the regime flag. Postings restricted to
@@ -465,9 +479,8 @@ object SimilarityJoin {
             .unionAll(
               crossPath(l.join(cr, blockCols.toSeq), r.join(cr, blockCols.toSeq))
                 .select(keep: _*))
-        }
+        }))
     }
-    out.select(col("_aid").as(leftId), col("_bid").as(rightId), col("_j").as("jac"))
   }
 
   /** Per-block cross-frame candidate volumes: `_cp` (prefix postings join
@@ -667,7 +680,14 @@ object SimilarityJoin {
     * within ~10% (sf1 calibration: 250 M block-pairs ≈ 49 s, 2.28 G
     * candidates ≈ 500 s), so the volumes compare directly. Both engines
     * produce identical output (spec-proved), so the choice is invisible to
-    * callers.
+    * callers. Every route past the size check (the bound's all-pairs, the
+    * probe's choice, the mixed per-block union) returns its verified pairs
+    * pinned through `pin`: the verify is then the join's dominant cost, and
+    * a caller reading the output twice would run it twice (q230 reads it
+    * for its stage report and again for the survivors). The pin's action
+    * runs the plan's map stages during the call. Below the size check —
+    * the small-batch curation tick — with a forced strategy, or under
+    * [[Pin.Off]], the output is a lazy plan.
     *
     * `blockCols` optionally restricts pairs to rows agreeing on every
     * block column (e.g. same language) — block keys join the posting /
@@ -790,15 +810,18 @@ object SimilarityJoin {
           sizeRows(base, 0, "_set", blockCols), blockCols,
           work = (col("_m0") - 1) * col("_e0"), posted = col("_e0")) =>
         allPairsPath(base)
-      // then the volume bound — one action, still before any postings exist
+      // above the size check the verify dominates the join, so every route
+      // from here pins its verified pairs: later reads scan them instead of
+      // re-running the verify. Then the volume bound — one action, still
+      // before any postings exist
       case SimilarityStrategy.Auto if boundRoutesAllPairs(
           prefixBounds(base, blockFreq, blockCols, threshold)) =>
-        allPairsPath(base)
+        pin(allPairsPath(base))
       case SimilarityStrategy.Auto if blockCols.isEmpty =>
         // one block — one regime: the global comparison IS the per-block one
         val post = buildPost(overBlocks(blockFreq, blockCols))
         val (cPrefix, cBlocks) = selfVolumes(base, post, blockCols, threshold)
-        if (cPrefix <= cBlocks) prefixPath(post) else allPairsPath(base)
+        pin(if (cPrefix <= cBlocks) prefixPath(post) else allPairsPath(base))
       case SimilarityStrategy.Auto =>
         // PER-BLOCK routing: the regime is a property of each block, not of
         // the corpus — a realistic mixed corpus (one replica-dense language
@@ -815,7 +838,7 @@ object SimilarityJoin {
         val Seq(nPrefix, nBlocks) = regimes
           .agg(sum(col("_pr").cast("long")), count(lit(1)))
           .head().toSeq.map(v => if (v == null) 0L else v.asInstanceOf[Long])
-        if (nPrefix == nBlocks) prefixPath(post)
+        pin(if (nPrefix == nBlocks) prefixPath(post)
         else if (nPrefix == 0L) allPairsPath(base)
         else {
           // mixed: split by the regime flag. The postings were built over
@@ -836,7 +859,7 @@ object SimilarityJoin {
             .join(regimes.filter(!col("_pr")).drop("_pr"), blockCols.toSeq)
             .select(("_id" +: blockCols).map(col) :+ col("_set"): _*)
           prefixPath(prefixPost).unionAll(allPairsPath(denseBase))
-        }
+        })
     }
   }
 

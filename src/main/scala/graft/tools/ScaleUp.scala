@@ -1,7 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.Engine
 
@@ -42,6 +46,14 @@ import graft.Engine
   * novel share per batch, selected by a doc-id hash so every run and
   * every split sees the same novel set.
   *
+  * After each table is written, its content digest ([[Digest]]: row count
+  * and the order-independent sum of row hashes) is printed and written
+  * next to it as `<outDir>/<table>.digest`. Compare scaled corpora by
+  * these digests, not by bytes or file checksums: the parquet writer lists
+  * each column chunk's encodings in an order that varies from run to run,
+  * so two runs over the same input share almost no part file byte for
+  * byte even though every row, row order and schema agree.
+  *
   * Usage: runMain graft.tools.ScaleUp <srcDir> <outDir> <factor> [novelPct]
   * Output is benchmark input only — it is never an oracle corpus.
   */
@@ -51,12 +63,38 @@ object ScaleUp {
     * far above any key range at the factors this tool is used for. */
   val Offset = 100000000L
 
+  /** A table's content: its row count and the sum of its rows' `xxhash64`
+    * as an exact decimal (no overflow below 10^19 rows). Independent of
+    * row order, file split and parquet encoding details.
+    */
+  final case class Digest(rows: Long, hashSum: java.math.BigDecimal) {
+    override def toString: String = s"rows=$rows hash_sum=${hashSum.toPlainString}"
+  }
+
+  private def digest(df: DataFrame): Digest = {
+    val dec = DecimalType(38, 0)
+    val r = df.agg(count(lit(1)),
+      coalesce(sum(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast(dec)), lit(0).cast(dec)))
+      .head()
+    Digest(r.getLong(0), r.getDecimal(1))
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args.take(3)
-    val factor = factorS.toInt
     val novelPct = args.lift(3).map(_.toInt).getOrElse(0)
-    require(novelPct >= 0 && novelPct <= 100, s"novelPct must be 0-100: $novelPct")
     val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    run(spark, srcDir, outDir, factorS.toInt, novelPct)
+    println(s"scaled $srcDir x$factorS -> $outDir")
+    spark.stop()
+  }
+
+  /** Writes the scaled copy of `srcDir` to `outDir` and returns each
+    * table's [[Digest]], in write order. Sets a runtime conf on `spark`.
+    */
+  def run(
+      spark: SparkSession, srcDir: String, outDir: String, factor: Int,
+      novelPct: Int): Seq[(String, Digest)] = {
+    require(novelPct >= 0 && novelPct <= 100, s"novelPct must be 0-100: $novelPct")
     // copy naive timestamps (events.ts, l_shipdate, o_orderdate) as NTZ, not INT96
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
 
@@ -71,9 +109,15 @@ object ScaleUp {
       keys.foldLeft(rep)((d, k) => d.withColumn(k, col(k) + shift))
     }
 
-    def write(df: DataFrame, name: String, files: Int): Unit =
+    val digests = Seq.newBuilder[(String, Digest)]
+    def write(df: DataFrame, name: String, files: Int): Unit = {
       df.repartition(files)
         .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+      val d = digest(spark.read.parquet(s"$outDir/$name.parquet"))
+      Files.write(Paths.get(s"$outDir/$name.digest"), s"$d\n".getBytes(StandardCharsets.UTF_8))
+      println(s"digest $name $d")
+      digests += name -> d
+    }
 
     write(src("region"), "region", 1)
     write(src("nation"), "nation", 1)
@@ -116,8 +160,6 @@ object ScaleUp {
     write(docs, "documents", 8)
     write(replicate(src("embeddings"), Seq("vec_id")).drop("_r"),
       "embeddings", 4)
-
-    println(s"scaled $srcDir x$factor -> $outDir")
-    spark.stop()
+    digests.result()
   }
 }

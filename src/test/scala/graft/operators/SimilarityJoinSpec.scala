@@ -748,11 +748,17 @@ class SimilarityJoinSpec extends AnyFunSuite {
       case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
     }.size
 
-  test("per-block routing above the size check: a large sparse block beside a dense one " +
-    "takes the mixed (union) plan, output identical") {
-    // the routing fixture above now falls below the size check (its blocks
-    // are too small for the postings to pay); here the sparse block holds
-    // 1000 docs, which lifts W/E_post to ≈ 690
+  /** Union nodes in a physical plan description (the formatted explain
+    * lists each plan node once in its details section). */
+  private def planUnions(plan: String): Int = "(?m)^\\(\\d+\\) Union\\b".r.findAllIn(plan).size
+
+  /** The self-join routing fixture above the size check: a dense block "d"
+    * (near-replicas, routes to all-pairs) beside a sparse block "s" of 1000
+    * docs (routes to prefix), with its brute-force pairs. */
+  private def mixedSelfFixture(): (org.apache.spark.sql.DataFrame, Set[(Long, Long)]) = {
+    // the routing fixture above falls below the size check (its blocks are
+    // too small for the postings to pay); here the sparse block holds 1000
+    // docs, which lifts W/E_post to ≈ 690
     val rnd = new scala.util.Random(59)
     val dense = (0 until 6).flatMap { o =>
       val base = Seq.fill(60)(rnd.nextInt(100000).toLong).distinct.sorted
@@ -765,30 +771,16 @@ class SimilarityJoinSpec extends AnyFunSuite {
         if (i % 50 == 49) (sparseBase(i - 1) :+ (2000000L + i)).distinct.sorted
         else sparseBase(i))
     }
-    val df = (dense ++ sparse).toDF("id", "g", "s")
-    val t = 0.5
-    val engines = SimilarityJoin.selfJoinBlockVolumes(df, "id", "s", t, Seq("g"))
-      .select("g", "engine").as[(String, String)].collect().toMap
-    assert(engines == Map("d" -> "allpairs", "s" -> "prefix"), s"$engines")
     val rows = (dense ++ sparse).map { case (i, _, s) => (i, s) }
-    val want = bruteForceSelf(rows, t, id => id < 10000L)
-    assert(want.nonEmpty)
-    Seq(SimilarityStrategy.Auto, SimilarityStrategy.PrefixFilter, SimilarityStrategy.AllPairs)
-      .foreach { st =>
-        val out = SimilarityJoin.jaccardSelfJoin(df, "id", "s", t, blockCols = Seq("g"),
-          strategy = st)
-        assert(unions(out) == (if (st == SimilarityStrategy.Auto) 1 else 0),
-          s"strategy=$st: ${unions(out)} unions in the returned plan")
-        assert(out.select("id_a", "id_b").as[(Long, Long)].collect().toSet == want,
-          s"strategy=$st")
-      }
+    ((dense ++ sparse).toDF("id", "g", "s"), bruteForceSelf(rows, 0.5, id => id < 10000L))
   }
 
-  test("cross-frame per-block routing above the size check takes the mixed (union) plan, " +
-    "output identical") {
-    // as above for the two-frame join: 800 × 800 sparse docs lift W/E_post
-    // to ≈ 590; the dense block (near-replicas across the frames) routes
-    // to the salted cross
+  /** The cross-frame routing fixture above the size check: 800 × 800
+    * sparse docs (W/E_post ≈ 590, route to prefix) beside a dense block of
+    * near-replicas across the frames (routes to the salted cross), with its
+    * brute-force pairs. */
+  private def mixedCrossFixture()
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Set[(Long, Long)]) = {
     val rnd = new scala.util.Random(61)
     val denseBases = (0 until 10).map(_ => Seq.fill(30)(rnd.nextInt(100000).toLong).distinct.sorted)
     def dense(tag: Long) = denseBases.zipWithIndex.flatMap { case (base, o) =>
@@ -802,22 +794,47 @@ class SimilarityJoinSpec extends AnyFunSuite {
     }
     val lRows = dense(900000L) ++ sparseL
     val rRows = dense(950000L) ++ sparseR
-    val l = lRows.toDF("lid", "g", "s")
-    val r = rRows.toDF("rid", "g", "s")
+    (lRows.toDF("lid", "g", "s"), rRows.toDF("rid", "g", "s"), bruteForceSized(
+      lRows.map { case (i, g, s) => (i, Some(g), s) },
+      rRows.map { case (i, g, s) => (i, Some(g), s) }, 0.5, blocked = true, self = false))
+  }
+
+  test("per-block routing above the size check: a large sparse block beside a dense one " +
+    "takes the mixed (union) plan, output identical") {
+    val (df, want) = mixedSelfFixture()
+    val t = 0.5
+    val engines = SimilarityJoin.selfJoinBlockVolumes(df, "id", "s", t, Seq("g"))
+      .select("g", "engine").as[(String, String)].collect().toMap
+    assert(engines == Map("d" -> "allpairs", "s" -> "prefix"), s"$engines")
+    assert(want.nonEmpty)
+    Seq(SimilarityStrategy.Auto, SimilarityStrategy.PrefixFilter, SimilarityStrategy.AllPairs)
+      .foreach { st =>
+        val (out, plans) = executionPlansDuring(SimilarityJoin.jaccardSelfJoin(
+          df, "id", "s", t, blockCols = Seq("g"), strategy = st))
+        // Auto pins its output, so the union is in the plan of the pin's
+        // execution (the last during construction); the forced engines
+        // return it lazily
+        val n = if (st == SimilarityStrategy.Auto) planUnions(plans.last) else unions(out)
+        assert(n == (if (st == SimilarityStrategy.Auto) 1 else 0), s"strategy=$st: $n unions")
+        assert(out.select("id_a", "id_b").as[(Long, Long)].collect().toSet == want,
+          s"strategy=$st")
+      }
+  }
+
+  test("cross-frame per-block routing above the size check takes the mixed (union) plan, " +
+    "output identical") {
+    val (l, r, want) = mixedCrossFixture()
     val t = 0.5
     val engines = SimilarityJoin.joinBlockVolumes(l, "lid", r, "rid", "s", t, Seq("g"))
       .select("g", "engine").as[(String, String)].collect().toMap
     assert(engines == Map("d" -> "cross", "s" -> "prefix"), s"$engines")
-    val want = bruteForceSized(
-      lRows.map { case (i, g, s) => (i, Some(g), s) },
-      rRows.map { case (i, g, s) => (i, Some(g), s) }, t, blocked = true, self = false)
     assert(want.nonEmpty)
     Seq(SimilarityStrategy.Auto, SimilarityStrategy.PrefixFilter, SimilarityStrategy.AllPairs)
       .foreach { st =>
-        val out = SimilarityJoin.jaccardJoin(l, "lid", r, "rid", "s", t, strategy = st,
-          blockCols = Seq("g"))
-        assert(unions(out) == (if (st == SimilarityStrategy.Auto) 1 else 0),
-          s"strategy=$st: ${unions(out)} unions in the returned plan")
+        val (out, plans) = executionPlansDuring(SimilarityJoin.jaccardJoin(
+          l, "lid", r, "rid", "s", t, strategy = st, blockCols = Seq("g")))
+        val n = if (st == SimilarityStrategy.Auto) planUnions(plans.last) else unions(out)
+        assert(n == (if (st == SimilarityStrategy.Auto) 1 else 0), s"strategy=$st: $n unions")
         assert(out.select("lid", "rid").as[(Long, Long)].collect().toSet == want,
           s"strategy=$st")
       }
@@ -909,10 +926,11 @@ class SimilarityJoinSpec extends AnyFunSuite {
       def run(st: SimilarityStrategy) = SimilarityJoin.jaccardSelfJoin(
         df, "id", "s", t, blockCols = blockCols, strategy = st, inputPinned = true)
       val (auto, plans) = executionPlansDuring(run(SimilarityStrategy.Auto))
-      // the size check, the frequency pin and the bound; the postings
-      // (the only posexplode) are never planned into an action
-      assert(plans.size == 3,
-        s"blocked=$blocked: expected the size check, pin and bound only, saw ${plans.size}")
+      // the size check, the frequency pin, the bound and the output pin;
+      // the postings (the only posexplode) are never planned into an action
+      assert(plans.size == 4,
+        s"blocked=$blocked: expected the size check, pin, bound and output pin only, " +
+          s"saw ${plans.size}")
       assert(!plans.exists(_.contains("posexplode")),
         s"blocked=$blocked: a postings build ran during construction")
       val keyed = if (blocked) rows else rows.map { case (i, _, s) => (i, Option("all"), s) }
@@ -982,5 +1000,71 @@ class SimilarityJoinSpec extends AnyFunSuite {
       } else held += 1
     }
     assert(fired > 0 && held > 0, s"fixtures fired $fired, held $held")
+  }
+
+  /** True when a plan (a returned frame's, or an executed one's) holds the
+    * join: its verify kernel or the sort-merge join that feeds it. */
+  private def holdsJoin(plan: String): Boolean =
+    plan.contains("jaccard_sorted_min") || plan.contains("SortMergeJoin")
+
+  private def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("above the size check Auto pins its verified pairs: a second action runs no verify; " +
+    "with Pin.Off, and below the check, the returned plan still holds the join") {
+    val t = 0.5
+    val low = lowDiversityRows(71, 550)
+    val lowDf = lowDiversityFrame(low)
+    // one sparse block of 1000 docs (W/E_post ≈ 1000, thousands of distinct
+    // elements): the probe routes it to prefix
+    val (mixed, mixedWant) = mixedSelfFixture()
+    val sparse = mixed.filter(col("g") === "s").drop("g")
+    val sparseWant = mixedWant.filter(_._1 >= 10000L)
+    assert(SimilarityJoin.selfJoinVolumes(sparse, "id", "s", t) match { case (p, b) => p < b },
+      "the sparse fixture should route to prefix")
+    val (l, r, crossWant) = mixedCrossFixture()
+    type Run = (SimilarityStrategy, Pin) => org.apache.spark.sql.DataFrame
+    def self(df: org.apache.spark.sql.DataFrame, blockCols: Seq[String]): Run = (st, p) =>
+      SimilarityJoin.jaccardSelfJoin(df, "id", "s", t, blockCols = blockCols, strategy = st, pin = p)
+    val cases: Seq[(String, Set[(Long, Long)], Run)] = Seq(
+      ("volume bound, blocked", bruteForceBlocked(low, t), self(lowDf, Seq("g"))),
+      ("volume bound, unblocked",
+        bruteForceBlocked(low.map { case (i, _, s) => (i, Option("all"), s) }, t),
+        self(lowDf.drop("g"), Nil)),
+      ("probe-routed prefix", sparseWant, self(sparse, Nil)),
+      ("mixed per-block self-join", mixedWant, self(mixed, Seq("g"))),
+      ("cross-frame mixed", crossWant, (st, p) =>
+        SimilarityJoin.jaccardJoin(l, "lid", r, "rid", "s", t, pin = p, strategy = st,
+          blockCols = Seq("g"))))
+    cases.foreach { case (label, want, run) =>
+      assert(want.nonEmpty, s"$label: the fixture has no true pairs")
+      val auto = run(SimilarityStrategy.Auto, Pin.LocalCheckpoint)
+      assert(!holdsJoin(auto.queryExecution.executedPlan.toString),
+        s"$label: the returned plan still holds the join")
+      val first = pairsOf(auto)
+      val (second, plans) = executionPlansDuring(pairsOf(auto))
+      assert(plans.nonEmpty && !plans.exists(holdsJoin),
+        s"$label: the second action re-ran the verify:\n${plans.mkString("\n")}")
+      assert(first == want && second == want,
+        s"$label Auto: missing=${want -- first} extra=${first -- want}")
+      Seq(SimilarityStrategy.PrefixFilter, SimilarityStrategy.AllPairs).foreach { st =>
+        assert(pairsOf(run(st, Pin.LocalCheckpoint)) == want, s"$label $st")
+      }
+      val off = run(SimilarityStrategy.Auto, Pin.Off)
+      assert(holdsJoin(off.queryExecution.executedPlan.toString),
+        s"$label: with Pin.Off the returned plan must hold the join")
+      assert(pairsOf(off) == want, s"$label Pin.Off")
+    }
+    // below the size check (W/E_post ≈ 40-80) Auto returns the lazy join
+    val rows = sizeCheckRows(51, 80, 1L)
+    val df = rows.toDF("lid", "g", "s")
+    val right = rows.map { case (i, g, s) => (i + 100000L, g, s) }.toDF("rid", "g", "s")
+    Seq(
+      "self" -> SimilarityJoin.jaccardSelfJoin(df, "lid", "s", t, blockCols = Seq("g")),
+      "cross" -> SimilarityJoin.jaccardJoin(df, "lid", right, "rid", "s", t, blockCols = Seq("g"))
+    ).foreach { case (label, out) =>
+      assert(holdsJoin(out.queryExecution.executedPlan.toString),
+        s"$label below the size check: the returned plan must hold the join")
+    }
   }
 }
