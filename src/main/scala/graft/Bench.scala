@@ -10,245 +10,6 @@ package graft
   */
 object Bench {
 
-  /** Standing per-query baseline (BASELINE.md §3 = BENCH_r01 at sf0.1):
-    * regression >1.5× on any green query is a round finding. q15's entry is
-    * the post-fix target (its r1 number measured a known defect).
-    */
-  val BaselineSec: Map[String, Double] = Map(
-    "q01_pricing_summary" -> 1.238, "q02_regional_revenue" -> 1.581,
-    "q03_top_orders" -> 1.502, "q04_event_day_features" -> 0.724,
-    "q05_latest_events" -> 1.085, "q06_daily_type_pivot" -> 0.724,
-    "q07_priority_counts" -> 0.344, "q08_lineitem_summary" -> 1.066,
-    "q09_trend_labels" -> 0.980, "q10_trend_pair_support" -> 1.585,
-    "q11_doc_dedup" -> 0.613, "q12_token_stats" -> 0.387,
-    "q13_doc_quality" -> 0.329, "q14_knn_bruteforce" -> 0.592,
-    "q15_doc_signatures" -> 10.000, "q16_neardup_pairs" -> 2.111,
-    "q17_trend_rules" -> 9.343, "q18_knn_classify" -> 3.026,
-    // q19/q20 re-baselined in round 7 at the round-6 value-oracle redesign's
-    // measured times (closed-form centroid scorer / fixed-iteration Lloyd) —
-    // the r1 bars (13.602 / 40.838, fitted LogisticRegression / mllib
-    // KMeans+evaluator) are recorded in BASELINE.md §3 as a historical note;
-    // keeping them here disabled the 1.4× regression gate up to ~24×/47×
-    "q19_scored_classifier" -> 0.560, "q20_cluster_summary" -> 0.870,
-    "q21_rolling_cv" -> 16.878, "q22_customer_order_presence" -> 3.678,
-    "q23_revenue_rollup" -> 6.215, "q24_sessionize" -> 2.062,
-    "q25_props_extract" -> 0.527, "q26_word_frequency" -> 0.351,
-    "q27_stream_daily_counts" -> 1.979, "q28_stream_sessions" -> 1.765,
-    // q29's r1 number (0.528) timed the O(n²) crossJoin the judge asked to
-    // replace; the baseline is the scale-safe LSH plan's own clean r2 floor
-    "q29_embedding_neardups" -> 1.000, "q30_monthly_stats" -> 2.015,
-    "q31_pricing_cube" -> 1.260, "q32_brand_revenue" -> 2.596,
-    "q33_supplier_balance" -> 0.516, "q34_price_quartiles" -> 1.801,
-    // q35+ first measured in round 2 (clean run, BASELINE.md §3a); q29's r1
-    // number predates the scale-safe LSH plan swap — its honest floor is
-    // ~1.0 s (r2), kept at the r1 value so the ratio stays visible.
-    "q35_clean_audit" -> 0.656, "q36_feature_contrast" -> 1.019,
-    "q37_item_support" -> 1.345, "q38_asof_clicks" -> 1.083,
-    "q39_salted_hot_key" -> 0.550, "q40_corpus_curation" -> 1.244,
-    "q41_lang_id" -> 0.507, "q42_chapter_split" -> 0.101,
-    "q43_stream_dedup" -> 3.358, "q44_redaction" -> 1.271,
-    "q45_ann_ivf" -> 3.952, "q46_ngram_jaccard" -> 3.557,
-    "q47_knn_confusion" -> 2.006, "q48_stream_enrich" -> 2.277,
-    "q49_dedup_clusters" -> 4.529, "q50_range_join" -> 1.273,
-    "q51_bm25_search" -> 1.897, "q52_top_per_group" -> 1.352,
-    "q53_rule_metrics" -> 2.961, "q54_forecast_metrics" -> 0.837,
-    "q55_roc_auc" -> 1.041, "q56_stream_join" -> 3.410,
-    "q57_heavy_shingles" -> 1.660, "q58_salted_join" -> 1.364,
-    "q59_quantized_knn" -> 1.808, "q60_funnel" -> 0.894,
-    "q61_retention" -> 0.727, "q62_surprisal" -> 0.868,
-    "q63_decontaminate" -> 1.025, "q64_stream_sliding" -> 0.909,
-    "q65_hash_split" -> 0.399, "q66_embedding_centroids" -> 0.416,
-    "q67_stream_trends" -> 1.382,
-    // q68+ first measured mid-round-2 (clean sf0.1 run, 72-query sweep)
-    "q68_deterministic_sample" -> 0.476, "q69_expectations" -> 0.732,
-    "q70_quality_deciles" -> 0.508, "q71_doc_chunks" -> 0.515,
-    "q72_ewma" -> 0.689, "q73_attribution" -> 1.740,
-    "q74_rolling_corr" -> 0.477, "q75_key_skew" -> 0.895,
-    "q76_scd2" -> 1.615, "q77_cumulative_users" -> 1.336,
-    "q78_snapshot_diff" -> 1.098, "q79_histogram" -> 0.726,
-    "q80_melt" -> 1.135, "q81_stream_dedup_counts" -> 2.217,
-    "q82_group_percentiles" -> 0.617, "q83_vocab_build" -> 0.519,
-    "q84_transitions" -> 0.902, "q85_outlier_fence" -> 0.877,
-    "q86_canonical_selection" -> 3.612, "q87_incremental_rollup" -> 1.044,
-    "q88_zipf_fit" -> 0.670, "q89_json_stats" -> 0.627,
-    "q90_corpus_profile" -> 0.760, "q91_anomaly_days" -> 0.840,
-    "q92_set_ops" -> 1.253, "q93_dedup_burden" -> 3.551,
-    "q94_user_features" -> 0.843, "q95_autocorr" -> 0.759,
-    "q96_session_stats" -> 1.077, "q97_weekday_profile" -> 0.866,
-    "q98_containment_pairs" -> 2.602, "q99_repetition_stats" -> 0.448,
-    "q100_quality_filter" -> 0.592,
-    // q101+ first measured in round 3 (clean sf0.1 run, BASELINE.md §3b)
-    "q101_corr_matrix" -> 0.840, "q102_chi_square" -> 0.690,
-    "q103_ols_trend" -> 0.660, "q104_mad_outliers" -> 0.890,
-    "q105_type_entropy" -> 0.880, "q106_tfidf_terms" -> 1.420,
-    // q108 re-baselined in round 14 to its measured warm floor (was 1.150,
-    // set r3): code untouched since r3, but the catalog-wide ambient floor
-    // crept — r7 adjudicated 1.37x, r13 driver sweep read 1.86 (1.62x);
-    // round-14 quiet-box warm-context min-of-2 reads 1.668
-    // (tmp/BENCH_DETAIL_r14_q108_warm.json, BASELINE §3 round-14 note)
-    "q107_typo_variants" -> 0.800, "q108_langid_kappa" -> 1.668,
-    "q109_grouping_sets" -> 0.890, "q110_event_trigrams" -> 0.590,
-    "q111_moment_stats" -> 0.390, "q112_pagerank" -> 2.590,
-    "q113_seasonal_decomp" -> 0.730, "q114_decile_migration" -> 1.300,
-    "q115_calibration" -> 0.400, "q116_psi_drift" -> 0.660,
-    "q117_bigram_surprisal" -> 1.560, "q118_pareto_frontier" -> 1.080,
-    "q119_ab_test" -> 0.640, "q120_spend_gini" -> 1.070,
-    // q122 re-baselined in round 4: the three RFM quintiles moved from a
-    // single-partition ntile window to GlobalRank's range-partitioned exact
-    // ntile (VERDICT r3 item 1) — three small range exchanges + offset
-    // passes add ~1.1 s of fixed local-mode job latency at sf0.1, and buy a
-    // plan with no input-growing single-partition sort
-    "q121_benford" -> 0.480, "q122_rfm_segments" -> 2.170,
-    "q123_readability" -> 0.420, "q124_overlap_matrix" -> 1.440,
-    "q125_ks_drift" -> 0.860, "q126_holt_forecast" -> 0.860,
-    "q127_cohort_ltv" -> 1.210, "q128_changepoint" -> 0.600,
-    "q129_embedding_norms" -> 0.430, "q130_davies_bouldin" -> 1.450,
-    "q131_gap_percentiles" -> 1.140, "q132_mutual_information" -> 0.730,
-    "q133_hash_uniformity" -> 0.650, "q134_funnel_windowed" -> 1.240,
-    "q135_shingle_novelty" -> 1.420, "q136_token_pmi" -> 1.540,
-    "q137_pit_lookup" -> 1.540, "q138_sliding_distinct" -> 1.250,
-    "q139_share_of_parent" -> 1.570, "q140_asof_nearest" -> 1.470,
-    "q141_local_supplier_volume" -> 1.750, "q142_running_balance" -> 1.560,
-    "q143_winsorized_stats" -> 1.050, "q144_lorenz_curve" -> 0.970,
-    "q145_dedup_savings" -> 4.180, "q146_linear_attribution" -> 1.170,
-    "q147_stickiness" -> 1.870, "q148_sql_authored" -> 0.530,
-    "q149_order_fill_rate" -> 1.380, "q150_pythagorean_means" -> 0.630,
-    "q151_knn_regression" -> 0.920, "q152_densify_ffill" -> 0.870,
-    "q153_mode_per_group" -> 1.040, "q154_bounce_rate" -> 0.940,
-    "q155_target_encoding" -> 0.570, "q156_weighted_median" -> 1.930,
-    "q157_stream_hourly_peak" -> 1.200, "q158_stream_new_users" -> 1.210,
-    "q159_event_paths" -> 0.850, "q160_user_predictability" -> 1.160,
-    "q161_semi_anti_joins" -> 1.010, "q162_activity_streaks" -> 0.910,
-    "q163_brand_hhi" -> 1.150, "q164_activation_latency" -> 1.150,
-    "q165_cross_source_dups" -> 0.950, "q166_ranked_string_agg" -> 2.120,
-    "q167_conversion_curve" -> 1.470, "q168_growth_accounting" -> 1.050,
-    "q169_seasonal_anomaly" -> 0.790, "q170_peak_concurrency" -> 1.660,
-    "q171_revenue_bridge" -> 0.510, "q172_sample_audit" -> 1.350,
-    "q173_triple_itemsets" -> 1.660, "q174_survival_curve" -> 1.160,
-    "q175_type_bitmask" -> 0.950, "q176_odds_ratio" -> 0.450,
-    "q177_power_analysis" -> 0.800, "q178_bytes_per_token" -> 0.420,
-    "q179_vocab_coverage" -> 0.870, "q180_cluster_sizes" -> 3.800,
-    "q181_late_orders" -> 1.930, "q182_dormancy_gaps" -> 0.940,
-    "q183_basket_size_curve" -> 1.330, "q184_max_drawdown" -> 0.610,
-    "q185_acf_table" -> 0.800, "q186_lang_confusion" -> 1.430,
-    "q187_price_dispersion" -> 1.160, "q188_seasonal_strength" -> 0.540,
-    "q189_audience_churn" -> 1.720, "q190_power_user_share" -> 0.880,
-    "q191_term_burstiness" -> 0.780, "q192_order_reconciliation" -> 1.620,
-    "q193_rank_stability" -> 1.650, "q194_mix_shift_days" -> 1.190,
-    "q195_deadstock" -> 1.410, "q196_value_bands" -> 0.810,
-    "q197_hour_dow_heatmap" -> 0.730, "q198_emerging_terms" -> 0.520,
-    "q199_price_band_mix" -> 1.080, "q200_orders_per_customer" -> 0.750,
-    // round-4 additions (r4 sf0.1 measurements, BASELINE.md §3c)
-    "q201_repetition_rules" -> 0.840, "q202_posting_lists" -> 0.470,
-    "q203_mixture_weights" -> 0.620, "q204_decontaminate_corpus" -> 2.130,
-    "q205_theilsen_trend" -> 3.010, "q206_mann_kendall" -> 1.010,
-    "q207_price_elasticity" -> 1.370, "q208_event_transitions" -> 1.110,
-    "q209_knn_triangles" -> 2.380, "q210_transition_entropy" -> 1.180,
-    "q211_stream_transitions" -> 2.340, "q212_skipgram_pairs" -> 0.820,
-    "q213_curriculum_plan" -> 1.370,
-    "q214_bpe_pair_counts" -> 0.950,
-    "q215_clean_corpus" -> 2.130,
-    // round-5 additions (r5 sf0.1 measurements, BASELINE.md §3d)
-    "q216_sequence_packing" -> 0.380, "q217_bpe_merges" -> 2.360,
-    "q218_span_dedup" -> 2.620, "q219_soft_quality_sample" -> 1.440,
-    "q220_shard_plan" -> 1.230,
-    "q221_bpe_segment" -> 2.090,
-    // q222-q224 first declared (and measured) in round 5
-    "q222_lm_perplexity" -> 4.440, "q223_dsir_weights" -> 1.850,
-    "q224_semantic_dedup" -> 1.150, "q225_cms_heavy_hitters" -> 1.310,
-    "q226_stream_cms" -> 2.030, "q227_contrastive_triplets" -> 1.950,
-    "q228_incremental_neardup" -> 8.380, "q229_zorder_layout" -> 0.880,
-    // the capstone funnel runs four full operator pipelines end-to-end
-    "q230_curation_funnel" -> 10.250,
-    // round-6 addition (r6 sf0.1 measurement, BASELINE.md §3e): the
-    // lossless prefix-filter SELF-join on q46's predicate — slower than
-    // allPairs at sf0.1 (multi-pass prep) but sub-quadratic in corpus size
-    "q231_selfjoin_neardup" -> 4.460,
-    // event-time-TTL transition replay (first declared r6; replay harness
-    // cost tracks q211's 2.34 s almost exactly — the TTL adds no stages)
-    "q232_stream_ttl_transitions" -> 2.350,
-    // q228's operator at the production threshold τ=0.5 (first declared r6
-    // at 3.30 s on the pinned prefix engine; cost-based Auto measures
-    // 2.18 s at sf0.1 and 26 s — not 260 s — at sf1)
-    "q233_incremental_neardup_t50" -> 3.300,
-    // declarative HyperLogLog (first declared r6): batch per-lang distinct
-    // profile and the streaming cell-table replay
-    // q235 re-baselined in round 14 to its measured warm floor (was 1.020,
-    // its r6 first-run number): flagged 1.96x in the r12 gate (adjudicated
-    // band 1.25-1.47) and again at 1.54x/1.64x in BOTH round-14 readings
-    // (full-sweep gate + warm q234/q235 group, same tree, code untouched
-    // since r11) - the q262/q108 recurrence class, bar below the query's
-    // own honest in-sweep cost (BASELINE §3 round-14 note)
-    "q234_hll_distinct" -> 0.690, "q235_stream_hll" -> 1.569,
-    // round-7 additions (r7 sf0.1 measurements, BASELINE.md §3f)
-    "q236_stream_ttl_sessions" -> 1.950,
-    // the tick capstone: two cost-based similarity joins (cross + self,
-    // each with Auto's volume probes) + the greedy resolution rounds
-    "q237_curation_tick" -> 11.790,
-    "q238_quantile_sketch" -> 1.897, "q239_stream_hist" -> 1.010,
-    "q240_temperature_mix" -> 1.289, "q241_stream_windowed_hll" -> 2.205,
-    "q242_kmv_users" -> 1.323, "q243_training_mix" -> 4.011,
-    // KMV pairwise set algebra / Efraimidis–Spirakis weighted sample
-    "q244_kmv_overlap" -> 1.915, "q245_weighted_sample" -> 0.558,
-    // streaming KMV replay / bounded-heap per-domain quality caps
-    "q246_stream_kmv" -> 2.172, "q247_domain_caps" -> 0.962,
-    // indexed curation-tick loop: index build + TWO sequential ticks
-    // (~1.7x ONE inline tick — the corpus prep is paid once, not per tick);
-    // re-baselined in round 8 at the persistable postings-index plan
-    // (corpus postings built once, probed per tick — was 17.493 on the
-    // per-tick postings rebuild)
-    "q248_indexed_ticks" -> 15.700,
-    // round-8 additions (r8 sf0.1 measurements, BASELINE.md §3g)
-    "q249_adaptive_quantiles" -> 1.521, "q250_stream_weighted_sample" -> 1.619,
-    // round-9 additions (BASELINE.md §3h quiet-box measurements): the
-    // windowed sketch tier + the two index monitors; q252 runs two
-    // postings builds by design (monitoring cadence, not per tick)
-    "q251_stream_adaptive_hist" -> 1.817, "q252_index_drift" -> 6.365,
-    "q253_bloom_decontaminate" -> 1.765, "q254_stream_psi" -> 2.268,
-    "q255_stream_windowed_cms" -> 2.059, "q256_stream_windowed_kmv" -> 2.417,
-    "q257_stream_windowed_es" -> 3.380,
-    // round-10 additions (r10 sf0.1 measurements, BASELINE.md §3i): q261
-    // is the standing-service capstone — q248's two-tick indexed loop PLUS
-    // the bloom index tier and BOTH lifecycle monitors (the drift report
-    // alone is two postings builds, the q252 cost), so it is the heaviest
-    // query in the catalog by design
-    "q258_bloom_saturation" -> 0.563, "q259_stream_windowed_ahist" -> 1.506,
-    "q260_adaptive_psi" -> 2.357, "q261_curation_service" -> 18.994,
-    // q262 re-baselined in round 14 to its measured warm floor (was 1.440,
-    // its r10 first-run number): three consecutive driver sweeps flagged it
-    // (r11 1.51x, r12 band ~1.5-1.7 s, r13 2.468 s / 1.71x) because the bar
-    // sat below the query's own documented honest in-sweep cost; round-14
-    // quiet-box warm-context min-of-2 reads 1.852
-    // (tmp/BENCH_DETAIL_r14_q262_warm.json, BASELINE §3 round-14 note)
-    "q262_stream_windowed_bloom" -> 1.852,
-    // round-11 additions (r11 sf0.1 quiet-box min-of-2, BASELINE.md §3j):
-    // q264 is the takedown capstone — a two-tick indexed loop (the q248
-    // class) with the single-call takedown folded between the ticks plus
-    // the post-rebuild drift read-off (a q252-class monitor pass)
-    "q263_bloom_rebuild" -> 1.326, "q264_takedown_tick" -> 19.376,
-    // round-11 late additions, first measured on the round-11 quiet box
-    "q265_embedding_drift" -> 1.467, "q266_state_audit" -> 7.604,
-    // 26.040 at first build; re-floored after the review pass removed
-    // serviceState's second benchmark gram scan
-    "q267_stream_service" -> 19.496, "q268_stream_ks" -> 2.603,
-    "q269_stream_embedding_drift" -> 3.048,
-    "q270_stream_rotated_ref" -> 3.707,
-    // round-13 additions (round-start quiet-box min-of-2, BASELINE §3l)
-    "q271_ivf_index_probe" -> 2.890,
-    "q272_mlp_inference" -> 0.490,
-    "q273_ivf_append_probe" -> 3.562,
-    "q274_ivf_health" -> 1.892,
-    "q275_ivf_quantized_probe" -> 4.140,
-    // round-14 additions (round-start quiet-box min-of-2, BASELINE §3m):
-    // q277 is the drift-tier service capstone — 25 sequential monitor
-    // ticks with 8 reference rotations over the replayed stream, the
-    // q261/q264/q267 deliberately-heavy loop class
-    "q276_ivf_delete_probe" -> 4.744,
-    "q277_drift_monitor_loop" -> 21.867,
-    // q278 = the q277 loop at cadence 4 (24 ticks, 6 rotations) + one
-    // persist/restore seam — same service-capstone class
-    "q278_monitor_restart" -> 18.815)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
@@ -261,8 +22,8 @@ object Bench {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
     val selected =
-      (if (args.isEmpty) SparkEntry.queries
-       else SparkEntry.queries.filter { case (n, _) => args.exists(n.startsWith) })
+      (if (args.isEmpty) SparkEntry.catalog
+       else SparkEntry.catalog.filter { case (n, _) => args.exists(n.startsWith) })
         .filter { case (n, _) => !excluded(n) }
 
     def time(fn: => Unit): Double = {
@@ -274,7 +35,7 @@ object Bench {
     // JVM/codegen warmup: run EVERY query once at the smallest sf so the
     // timed sf0.1 numbers measure the plan, not first-touch classloading/JIT
     // (cold-start inflated individual queries 5-10x in testing).
-    selected.values.foreach { fn =>
+    selected.values.map(_.build).foreach { fn =>
       try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
@@ -308,14 +69,14 @@ object Bench {
           s"SPARK_GRAFT_BENCH_HEAVY_RERUN_SEC must be numeric seconds (0 disables): '$v'", e)
       })
       .getOrElse(10.0)
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = selected.toSeq.sortBy(_._1).map { case (name, q) =>
       def once(): Double = {
         // snapshot the persistent-RDD ids BEFORE the query so the sweep
         // only drops RDDs the query itself created — unpersisting a
         // localCheckpoint'd RDD that predates the query (lineage already
         // truncated) would leave any outside reference unrecoverable
         val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-        val dt = time(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        val dt = time(q.build(spark, sfDir).write.format("noop").mode("overwrite").save())
         // (streaming queries' memory-sink views are dropped inside
         // replayStream itself — the result is localCheckpoint-detached)
         spark.catalog.clearCache()
@@ -333,7 +94,7 @@ object Bench {
       }
       if (singleRun) {
         val t1 = once()
-        name -> (if (heavyRerunSec > 0 && t1 >= heavyRerunSec) math.min(t1, once()) else t1)
+        (name, if (heavyRerunSec > 0 && t1 >= heavyRerunSec) math.min(t1, once()) else t1, q.barSec)
       } else {
       val two = Seq(once(), once())
       // ambient host contention occasionally inflates BOTH samples of one
@@ -344,19 +105,18 @@ object Bench {
       // query's own standing baseline, settle and buy two more — min-of-k
       // is the standard contention-robust throughput estimate
       val t =
-        if (BaselineSec.get(name).exists(b => math.max(t0, 1.0) > 1.4 * math.max(b, 1.0))) {
+        if (math.max(t0, 1.0) > 1.4 * math.max(q.barSec, 1.0)) {
           System.gc(); Thread.sleep(500)
           (Seq(t0) ++ Seq(once(), once())).min
         } else t0
-      name -> t
+      (name, t, q.barSec)
       }
     }
     // 1-second noise floor on both sides: sub-second queries are
     // JVM/scheduler-overhead-bound (±0.3 s run-to-run on an idle host),
     // so their raw ratios flap; a genuine sub-second -> multi-second
     // regression still flags because the numerator escapes the floor
-    def ratio(k: String, v: Double): Option[Double] =
-      BaselineSec.get(k).map(b => math.max(v, 1.0) / math.max(b, 1.0))
+    def ratio(v: Double, bar: Double): Double = math.max(v, 1.0) / math.max(bar, 1.0)
 
     // The stdout contract is ONE parseable JSON line, and the harness that
     // reads it keeps only a bounded tail of the run's output: per-query
@@ -366,14 +126,13 @@ object Bench {
     // regressed ratios — empty on a healthy run — and the detail-file
     // pointer); every per-query number lives in BENCH_DETAIL.json.
     val regressions = results
-      .flatMap { case (k, v) =>
-        ratio(k, v).filter(_ > 1.4).map(r => "\"" + k + "\":" + f"$r%.2f")
+      .collect { case (k, v, bar) if ratio(v, bar) > 1.4 =>
+        "\"" + k + "\":" + f"${ratio(v, bar)}%.2f"
       }
       .mkString("{", ",", "}")
     val detail = results
-      .map { case (k, v) =>
-        val r = ratio(k, v).map(r => f",\"vs_baseline\":$r%.2f").getOrElse("")
-        "\"" + k + "\":" + f"""{"sec":$v%.3f$r}"""
+      .map { case (k, v, bar) =>
+        "\"" + k + "\":" + f"""{"sec":$v%.3f,"vs_baseline":${ratio(v, bar)}%.2f}"""
       }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum

@@ -1,6 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+/** Driver-run correctness dump: each catalog query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -18,11 +23,11 @@ object Verify {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val selected =
-      if (prefixes.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => prefixes.exists(n.startsWith) }
-    val futures = selected.toSeq.map { case (name, fn) =>
+      if (prefixes.isEmpty) SparkEntry.catalog
+      else SparkEntry.catalog.filter { case (n, _) => prefixes.exists(n.startsWith) }
+    val futures = selected.toSeq.map { case (name, q) =>
       scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -33,23 +38,10 @@ object Verify {
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // on a prefix-filtered run, dump only the selected queries' SQL so
     // tools/check.py doesn't report the unselected ones as MISSING
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = new ObjectMapper().writeValueAsString(
+      selected.map { case (name, q) => name -> q.oracleSql }.asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

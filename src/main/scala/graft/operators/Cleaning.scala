@@ -82,7 +82,7 @@ object Cleaning {
   def numericSummary(df: DataFrame, round: Int = 4): DataFrame = {
     val numCols = df.schema.fields.collect { case f if f.dataType.isInstanceOf[NumericType] => f.name }
     // +1e-9 before rounding: oracle-stable on exact round-half boundaries
-    // (see SparkEntry.rnd).
+    // (see catalog.Shared.rnd).
     def r(c: Column): Column = org.apache.spark.sql.functions.round(c + lit(1e-9), round)
     val aggs = numCols.flatMap { c =>
       Seq(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
 import graft.Engine
-import graft.SparkEntry.Stopwords
+import graft.catalog.Shared.Stopwords
 import graft.functions.TextFunctions
 
 /** Dump `.explain("formatted")` for the curation tick's PRE-CHECKPOINT

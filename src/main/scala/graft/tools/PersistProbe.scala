@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.Engine
-import graft.SparkEntry.Stopwords
+import graft.catalog.Shared.Stopwords
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Pin}
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Engine
-import graft.SparkEntry.Stopwords
+import graft.catalog.Shared.Stopwords
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Pin}
 
