@@ -7,12 +7,18 @@ package graft
   *
   * Optional args: query-name prefixes to run a subset (iteration aid),
   * e.g. `runMain graft.Bench q15 q16`.
+  *
+  * Each query's `barSec` is a 32-core sf0.1 number (SPARK_GRAFT_CPUS=32).
+  * The `vs_baseline` ratios and the retry check apply it unscaled at any
+  * core count, so a flag from a smaller box reads against 32 cores, not
+  * as a regression by itself. Both output lines carry the run's `cores`.
   */
 object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Engine.session(cores = cores)
 
     // SPARK_GRAFT_BENCH_EXCLUDE: comma-separated exact query names to skip —
     // for scale-validation sweeps that should not pay a strategy-PINNED
@@ -139,12 +145,12 @@ object Bench {
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(detailPath),
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","queries":$detail}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","cores":$cores,"queries":$detail}"""
         .getBytes("UTF-8"))
     // any filtered run is self-describing: excluded names ride in the line
     val excludedJson = excluded.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val summary =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"regressions":$regressions,"excluded":$excludedJson,"detail":"$detailPath","sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"regressions":$regressions,"excluded":$excludedJson,"detail":"$detailPath","sf":"$sfDir","cores":$cores}"""
     // two delivery paths for the same object: the stdout line (unprefixed —
     // build.sbt forks with StdoutOutput so sbt's "[info] " never wraps it)
     // and a fixed-path file the harness can read when its stdout-tail parse

@@ -461,13 +461,13 @@ object DriftQueries extends Family {
     barSec = 2.603)
 
   // q269 — the STANDING embedding-drift deployment (StreamOps
-  // .windowedEmbeddingCells → Drift.psiByPeriod + Drift.ksByPeriod, both
-  // keyed by dim): q265's per-dimension marginal monitor as it actually
-  // runs in production — component marginals drained per CLOSED day from
-  // a watermarked stream (state bounded at open-windows × dims × bins),
-  // then BOTH drift statistics scored per (day, dim) against the
-  // first-week reference from the SAME cells (one sketch, two alarm
-  // semantics — the q254/q268 pattern on the embedding tier). Embeddings
+  // .windowedEmbeddingCells → Drift.psiKsByPeriod keyed by dim): q265's
+  // per-dimension marginal monitor as it actually runs in production —
+  // component marginals drained per CLOSED day from a watermarked stream
+  // (state bounded at open-windows × dims × bins), then BOTH drift
+  // statistics scored per (day, dim) on one grid against the first-week
+  // reference from the SAME cells (one sketch, two alarm semantics — the
+  // q254/q268 pattern on the embedding tier). Embeddings
   // carry no event time, so the replay stamps a deterministic hourly
   // ts = base + (vec_id % 336) hours — 14 days, the last one never
   // closing (the q241 closure predicate the oracle re-derives). Range
@@ -488,14 +488,12 @@ object DriftQueries extends Family {
     val ref = byDay.filter(col("day") <= cutoff)
       .groupBy(col("dim"), col("bin")).agg(sum(col("cnt")).as("cnt"))
     val post = byDay.filter(col("day") > cutoff)
-    val psi = graft.operators.Drift.psiByPeriod(post, "day", ref, keyCols = Seq("dim"))
-    val ks = graft.operators.Drift.ksByPeriod(post, "day", ref, keyCols = Seq("dim"))
     // each total cast to double BEFORE the multiply: a long product of two
     // very large feed totals can overflow to negative (sqrt -> NaN,
     // ks_drifted silently 0) where the double product just loses ulps
     val crit = lit(1.358) * sqrt((col("n_period") + col("n_ref")).cast("double")
       / (col("n_period").cast("double") * col("n_ref").cast("double")))
-    psi.join(ks, Seq("day", "dim"))
+    graft.operators.Drift.psiKsByPeriod(post, "day", ref, keyCols = Seq("dim"))
       .select(col("day"), col("dim"), rnd(col("psi"), 6).as("psi"),
         rnd(col("ks"), 6).as("ks"), rnd(crit, 6).as("crit"),
         when(rnd(col("ks"), 6) > rnd(crit, 6), 1).otherwise(0).cast("int")
@@ -586,7 +584,7 @@ object DriftQueries extends Family {
   // runs — the standing cell table's trailing 3 CLOSED days are scored
   // against a reference rotated from the 4 closed days immediately
   // before them (the same cells, re-aggregated cell-wise; no second pass
-  // over events), with BOTH statistics from the q254/q268 machinery.
+  // over events), with BOTH statistics off one Drift.psiKsByPeriod grid.
   // A fixed first-week reference ages: seasonal mix and legitimate
   // growth read as drift forever — rotation scores each block against
   // the recent past instead. The block boundary is one bounded driver
@@ -607,14 +605,12 @@ object DriftQueries extends Family {
     val post = byDay.filter(col("day") >= lit(cut))
     val ref = graft.operators.Drift.rotateReference(
       byDay.filter(col("day") < lit(cut)), "day", 4)
-    val psi = graft.operators.Drift.psiByPeriod(post, "day", ref)
-    val ks = graft.operators.Drift.ksByPeriod(post, "day", ref)
     // each total cast to double BEFORE the multiply: a long product of two
     // very large feed totals can overflow to negative (sqrt -> NaN,
     // ks_drifted silently 0) where the double product just loses ulps
     val crit = lit(1.358) * sqrt((col("n_period") + col("n_ref")).cast("double")
       / (col("n_period").cast("double") * col("n_ref").cast("double")))
-    psi.join(ks, Seq("day"))
+    graft.operators.Drift.psiKsByPeriod(post, "day", ref)
       .select(col("day"), rnd(col("psi"), 6).as("psi"),
         rnd(col("ks"), 6).as("ks"), rnd(crit, 6).as("crit"),
         when(rnd(col("ks"), 6) > rnd(crit, 6), 1).otherwise(0).cast("int")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distribution-drift read-offs over histogram CELL TABLES — the
@@ -11,44 +12,65 @@ import org.apache.spark.sql.functions._
   * data. Complements the batch two-sample forms (q116's decile PSI,
   * q125's KS) with the STANDING-MONITOR shape: one reference window, a
   * PSI score per period, scheduled over drained streaming cells.
+  *
+  * Every score comes off ONE grid, [[psiKsByPeriod]]; [[psiByPeriod]],
+  * [[ksByPeriod]] and every [[monitorTick]] chunk are projections of it.
+  * Rounding contract: ks, n_period and n_ref are exact (integer totals,
+  * and a max over |a/b − c/d| of exact longs, so any engine re-derives
+  * them bit for bit). psi is a float SUM of per-bin terms whose
+  * accumulation order follows the physical plan and is not fixed, so psi
+  * is declared at round(x + 1e-9, 6), the surface the catalog emits and
+  * the oracle checks; raw psi values may differ in the last ulps.
   */
 object Drift {
 
-  /** Population Stability Index per period from cell tables:
-    * `cells` = (periodCol, bin, cnt), `refCells` = (bin, cnt) — both at
-    * the SAME (lo, hi, bins) declaration (a contract, like every cell
-    * merge). psi(period) = Σ_bins (p − q)·ln(p/q) with
-    * p = max(cnt_period/total_period, eps),
-    * q = max(cnt_ref/total_ref, eps) — the standard empty-bin floor, kept
-    * DETERMINISTIC: p and q are ratios of exact integers and the one ln
-    * per term is the single transcendental (the q245 discipline), so a
-    * batch oracle re-derives every psi bit-for-bit modulo final rounding.
-    * Returns (periodCol, psi).
+  /** Working columns of the scoring grid; an input column of the same name
+    * would be overwritten (or grouped on) silently, so it fails loud. */
+  private val Reserved = Set("_tp", "_cp", "_cr", "_tr", "_one", "_ta", "_d")
+
+  private val EmptyReference =
+    "Drift: reference cells are empty (no rows or all-NULL counts) — the " +
+      "reference is empty, and a drift score against nothing is meaningless"
+
+  private val UncoveredKey =
+    "Drift: a scored key has an empty reference — its reference is empty (no " +
+      "rows or all-NULL counts for that key, or reference cells are empty " +
+      "altogether); the reference must cover every scored key"
+
+  /** Both drift statistics per period from cell tables, on the one scoring
+    * grid: `cells` = (periodCol, keyCols…, bin, cnt), `refCells` =
+    * (keyCols…, bin, cnt), both at the SAME (lo, hi, bins) declaration (a
+    * contract, like every cell merge). Returns (periodCol, keyCols…, psi,
+    * ks, n_period, n_ref).
     *
-    * The conventional alarm levels on this statistic (Karakoulas 2004 /
-    * credit-scoring practice): < 0.1 stable, 0.1–0.2 watch, > 0.2 drifted.
+    * The grid is (period, keys…) × the per-key union bin spine, with the
+    * period and reference counts left-joined on and the per-key totals
+    * n_period / n_ref bound; an unkeyed call rides a constant key. Over it:
+    *  - psi = Σ_bins (p − q)·ln(p/q), p = max(cnt_period/n_period, eps),
+    *    q = max(cnt_ref/n_ref, eps) — the standard empty-bin floor, with p
+    *    and q ratios of exact integers and one ln per term (the q245
+    *    single-transcendental discipline);
+    *  - ks = max over the spine of |CDF_period − CDF_ref|, each CDF a
+    *    running sum of exact integer counts in bin order over its exact
+    *    total — no transcendental at all.
+    * Both aggregate in one groupBy. A caller that projects one statistic
+    * away pays nothing for it: Catalyst's column pruning drops its
+    * aggregate, and for ks the running-sum window too.
     *
-    * Scale shape: the score grid is periods × union-of-bins — both sides
-    * BOUNDED (bins by declaration, periods by the calendar/watermark), so
-    * the broadcast bin spine and the 1-row reference-total bind are
-    * dimension products, never input-cardinality work; nothing here
-    * rescans the data the cells summarized.
+    * Failure contracts: the [[Reserved]] working columns may not name an
+    * input column, period or key; a key observed in `cells` with no
+    * reference mass fails loud in-plan on every scored row (scoring it
+    * against an eps-floored phantom reference is the empty-reference bug
+    * keyed); and an empty or all-NULL reference fails loud even when
+    * `cells` is empty too ([[withRefGuard]]).
     *
-    * An EMPTY reference (no rows, or all-NULL counts) fails loud at
-    * action time (in-plan assert on the 1-row total) instead of silently
-    * flooring every q to eps and scoring garbage PSI against nothing.
-    *
-    * `keyCols` (optional) scores one PSI per (periodCol, keyCols…) on a
-    * KEYED grid — `cells` = (periodCol, keyCols…, bin, cnt), `refCells` =
-    * (keyCols…, bin, cnt) — with reference totals and bin spines PER KEY
-    * (the [[embeddingPsiByPeriod]] substrate: one score per embedding
-    * dimension). The keys are a shared spine contract: a key observed in
-    * `cells` with no reference rows fails loud in-plan (scoring a period's
-    * key against an eps-floored phantom reference is the empty-reference
-    * bug keyed), as does a key whose reference counts are all NULL. Scale
-    * shape unchanged: the grid is periods × keys × bins, all bounded.
+    * Scale shape: the grid is periods × keys × bins, all BOUNDED (bins by
+    * declaration, periods by the calendar/watermark, keys by the schema),
+    * so the broadcast spine and total binds are dimension products, and
+    * the running sums are windows over ≤ bins rows per (period, keys…);
+    * nothing here rescans the data the cells summarized.
     */
-  def psiByPeriod(
+  def psiKsByPeriod(
       cells: DataFrame,
       periodCol: String,
       refCells: DataFrame,
@@ -59,40 +81,46 @@ object Drift {
       require(cells.columns.contains(c) && refCells.columns.contains(c),
         s"cell tables need (bin, cnt): ${cells.columns.toSeq} / ${refCells.columns.toSeq}")
     }
-    val working = Set("_tp", "_cp", "_cr", "_tr", "_ta")
-    val clash = working.intersect(
+    val clash = Reserved.intersect(
       cells.columns.toSet ++ refCells.columns.toSet + periodCol ++ keyCols)
     require(clash.isEmpty,
-      s"psiByPeriod's working columns clash with input columns: $clash — rename them first")
-    if (keyCols.nonEmpty) return psiKeyed(cells, periodCol, refCells, eps, keyCols)
-    val totals = cells.groupBy(col(periodCol)).agg(sum(col("cnt")).as("_tp"))
-    // `agg` on a frame with zero rows still yields one row with a NULL sum,
-    // so this 1-row filter sees exactly one tuple: assert_true throws on an
-    // empty/all-null reference, and the IsNull wrapper reads true otherwise
-    // (the filter can't be pruned — its child is non-foldable).
-    val refTot = refCells.agg(sum(col("cnt")).as("_tr"))
-      .where(assert_true(col("_tr").isNotNull && col("_tr") > 0,
-        lit("psiByPeriod: reference cells are empty (no rows or all-NULL counts) — " +
-          "a PSI against nothing is meaningless")).isNull)
-    val bins = cells.select(col("bin"))
-      .unionByName(refCells.select(col("bin"))).distinct()
+      s"Drift's working columns clash with input columns: $clash — rename them first")
+    val (kc, cellsK, refK) =
+      if (keyCols.nonEmpty) (keyCols, cells, refCells)
+      else (Seq("_one"),
+        cells.withColumn("_one", lit(1)), refCells.withColumn("_one", lit(1)))
+    val gridKeys = periodCol +: kc
+    val totals = cellsK.groupBy(gridKeys.map(col): _*).agg(sum(col("cnt")).as("_tp"))
+    val refTot = refK.groupBy(kc.map(col): _*).agg(sum(col("cnt")).as("_tr"))
+    val spine = cellsK.select((kc :+ "bin").map(col): _*)
+      .unionByName(refK.select((kc :+ "bin").map(col): _*)).distinct()
+    val w = Window.partitionBy(gridKeys.map(col): _*).orderBy(col("bin"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val cumP = sum(coalesce(col("_cp"), lit(0L))).over(w) / col("_tp")
+    val cumR = sum(coalesce(col("_cr"), lit(0L))).over(w) / col("_tr")
     val p = greatest(coalesce(col("_cp"), lit(0L)) / col("_tp"), lit(eps))
     val q = greatest(coalesce(col("_cr"), lit(0L)) / col("_tr"), lit(eps))
-    totals
-      .crossJoin(broadcast(bins)) // period × bin spine: bounded dimensions
-      .join(cells.select(col(periodCol), col("bin"), col("cnt").as("_cp")),
-        Seq(periodCol, "bin"), "left")
-      .join(broadcast(refCells.select(col("bin"), col("cnt").as("_cr"))),
-        Seq("bin"), "left")
-      .crossJoin(broadcast(refTot)) // 1-row total bind
-      .groupBy(col(periodCol))
-      .agg(sum((p - q) * log(p / q)).as("psi"))
+    val scored = totals
+      .join(broadcast(spine), kc) // per-key bin spine: bounded dimensions
+      .join(cellsK.select((gridKeys :+ "bin").map(col) :+ col("cnt").as("_cp"): _*),
+        gridKeys :+ "bin", "left")
+      .join(broadcast(refK.select((kc :+ "bin").map(col) :+ col("cnt").as("_cr"): _*)),
+        kc :+ "bin", "left")
+      .join(broadcast(refTot), kc, "left")
+      .where(assert_true(col("_tr").isNotNull && col("_tr") > 0, lit(UncoveredKey)).isNull)
+      .withColumn("_d", abs(cumP - cumR))
+      .groupBy(gridKeys.map(col): _*)
+      .agg(sum((p - q) * log(p / q)).as("psi"),
+        max(col("_d")).as("ks"),
+        first(col("_tp")).as("n_period"), first(col("_tr")).as("n_ref"))
+      .drop("_one")
+    withRefGuard(scored, refCells)
   }
 
-  /** Unconditional empty-reference guard for the KEYED paths: the per-key
-    * in-plan assert only fires on keys OBSERVED in `cells`, so a scheduled
-    * monitor fed two empty frames would read "no drift" instead of "broken
-    * feed". A join-side bind can't close that gap — AQE's empty-relation
+  /** Unconditional empty-reference guard: the per-row in-plan assert only
+    * fires on rows of keys OBSERVED in `cells`, so a scheduled monitor fed
+    * two empty frames would read "no drift" instead of "broken feed". A
+    * join-side bind can't close that gap — AQE's empty-relation
     * propagation prunes a join whose other side turns out empty, guard and
     * all — so the guard rides a UNION leg instead: both union children
     * always materialize. The leg aggregates `refCells` to one row, fails
@@ -104,64 +132,36 @@ object Drift {
     * when `_ta` is NULL — the case the guard exists for. Then projects
     * NULL-cast columns so it unions with any result schema.
     */
-  private def withRefGuard(result: DataFrame, refCells: DataFrame, msg: String): DataFrame = {
+  private def withRefGuard(result: DataFrame, refCells: DataFrame): DataFrame = {
     val guard = refCells.agg(sum(col("cnt")).as("_ta"))
-      .where(assert_true(col("_ta").isNotNull && col("_ta") > 0, lit(msg)).isNull &&
+      .where(assert_true(col("_ta").isNotNull && col("_ta") > 0, lit(EmptyReference)).isNull &&
         coalesce(col("_ta"), lit(-1L)) < 0)
       .select(result.schema.fields.toSeq.map(f =>
         lit(null).cast(f.dataType).as(f.name)): _*)
     result.unionByName(guard)
   }
 
-  /** The keyed grid behind `psiByPeriod(…, keyCols)` — kept as a separate
-    * path so the unkeyed monitors (q254/q260) keep their exact plan: the
-    * bounded binds become per-key JOINS (bin spine and reference totals
-    * join on the keys instead of cross-binding), and the empty-reference
-    * assert moves in-plan onto every scored row (a left-joined NULL `_tr`
-    * IS the keyed form of "reference is empty" — the 1-row agg trick can't
-    * see a single missing key).
+  /** Population Stability Index per period: [[psiKsByPeriod]] projected to
+    * (periodCol, keyCols…, psi), with its cell shapes and contracts. The
+    * conventional alarm levels on this statistic (Karakoulas 2004 /
+    * credit-scoring practice): < 0.1 stable, 0.1–0.2 watch, > 0.2 drifted.
+    *
+    * `keyCols` scores one PSI per (periodCol, keyCols…) with reference
+    * totals and bin spines PER KEY (the [[embeddingPsiByPeriod]]
+    * substrate: one score per embedding dimension).
     */
-  private def psiKeyed(
+  def psiByPeriod(
       cells: DataFrame,
       periodCol: String,
       refCells: DataFrame,
-      eps: Double,
-      keyCols: Seq[String]): DataFrame = {
-    val gridKeys = periodCol +: keyCols
-    val totals = cells.groupBy(gridKeys.map(col): _*).agg(sum(col("cnt")).as("_tp"))
-    val refTot = refCells.groupBy(keyCols.map(col): _*).agg(sum(col("cnt")).as("_tr"))
-    val bins = cells.select((keyCols :+ "bin").map(col): _*)
-      .unionByName(refCells.select((keyCols :+ "bin").map(col): _*)).distinct()
-    val p = greatest(coalesce(col("_cp"), lit(0L)) / col("_tp"), lit(eps))
-    val q = greatest(coalesce(col("_cr"), lit(0L)) / col("_tr"), lit(eps))
-    val scored = totals
-      .join(broadcast(bins), keyCols) // per-key bin spine: bounded dimensions
-      .join(cells.select((gridKeys :+ "bin").map(col) :+ col("cnt").as("_cp"): _*),
-        gridKeys :+ "bin", "left")
-      .join(broadcast(refCells.select((keyCols :+ "bin").map(col)
-        :+ col("cnt").as("_cr"): _*)), keyCols :+ "bin", "left")
-      .join(broadcast(refTot), keyCols, "left")
-      .where(assert_true(col("_tr").isNotNull && col("_tr") > 0,
-        lit("psiByPeriod: a key observed in cells has an empty reference (no rows " +
-          "or all-NULL counts) under keyCols — the keyed reference must cover " +
-          "every scored key")).isNull)
-      .groupBy(gridKeys.map(col): _*)
-      .agg(sum((p - q) * log(p / q)).as("psi"))
-    withRefGuard(scored, refCells,
-      "psiByPeriod: reference cells are empty (no rows or all-NULL counts) — " +
-        "a PSI against nothing is meaningless")
-  }
+      eps: Double = 1e-6,
+      keyCols: Seq[String] = Nil): DataFrame =
+    psiKsByPeriod(cells, periodCol, refCells, eps, keyCols)
+      .select((periodCol +: keyCols :+ "psi").map(col): _*)
 
-  /** Two-sample Kolmogorov–Smirnov distance per period from cell tables —
-    * the drift tier's SECOND statistic beside [[psiByPeriod]], same
-    * standing-monitor shape and contracts: `cells` =
-    * (periodCol, keyCols…, bin, cnt), `refCells` = (keyCols…, bin, cnt),
-    * both at one binning declaration. ks(period) = max over the union bin
-    * spine of |CDF_period − CDF_ref| where each CDF is a running sum of
-    * exact integer counts over bin order divided by its exact total —
-    * NO transcendental at all (PSI's one-ln-per-term discipline, improved
-    * on: the score is a max of |a/b − c/d| over longs, so a second engine
-    * re-derives every value bit-identically, not just per-term).
+  /** Two-sample Kolmogorov–Smirnov distance per period: [[psiKsByPeriod]]
+    * projected to (periodCol, keyCols…, ks, n_period, n_ref) — the totals
+    * ride along because the classical alarm needs them.
     *
     * Where the two monitors differ in practice: PSI weights by probability
     * mass and reacts to any redistribution (including tail mass the eps
@@ -172,138 +172,14 @@ object Drift {
     * instead of PSI's fixed 0.1/0.2 conventions. Binned KS understates
     * continuous KS by at most one bin's mass — the usual discretization
     * trade, same declaration contract as every cell table.
-    *
-    * `keyCols` scores one KS per (periodCol, keyCols…) with reference
-    * totals and bin spines per key (the [[psiByPeriod]] keyed contract,
-    * including the loud in-plan failure on a key the reference doesn't
-    * cover — and on an empty/all-NULL reference, which that same assert
-    * catches since every scored row left-joins the reference totals).
-    * Returns (periodCol, keyCols…, ks, n_period, n_ref) — the totals ride
-    * along because the classical alarm needs them. Scale shape: the grid
-    * is periods × keys × bins, the running sums are windows over ≤ bins
-    * rows per (period, keys…) partition — bounded by declaration, never
-    * input-sized.
     */
   def ksByPeriod(
       cells: DataFrame,
       periodCol: String,
       refCells: DataFrame,
-      keyCols: Seq[String] = Nil): DataFrame = {
-    Seq("bin", "cnt").foreach { c =>
-      require(cells.columns.contains(c) && refCells.columns.contains(c),
-        s"cell tables need (bin, cnt): ${cells.columns.toSeq} / ${refCells.columns.toSeq}")
-    }
-    val working = Set("_tp", "_cp", "_cr", "_tr", "_one", "_ta")
-    val clash = working.intersect(
-      cells.columns.toSet ++ refCells.columns.toSet + periodCol ++ keyCols)
-    require(clash.isEmpty,
-      s"ksByPeriod's working columns clash with input columns: $clash — rename them first")
-    // one generic keyed path: an unkeyed call rides a constant key
-    val (kc, cellsK, refK) =
-      if (keyCols.nonEmpty) (keyCols, cells, refCells)
-      else (Seq("_one"),
-        cells.withColumn("_one", lit(1)), refCells.withColumn("_one", lit(1)))
-    val gridKeys = periodCol +: kc
-    val totals = cellsK.groupBy(gridKeys.map(col): _*).agg(sum(col("cnt")).as("_tp"))
-    val refTot = refK.groupBy(kc.map(col): _*).agg(sum(col("cnt")).as("_tr"))
-    val spine = cellsK.select((kc :+ "bin").map(col): _*)
-      .unionByName(refK.select((kc :+ "bin").map(col): _*)).distinct()
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(gridKeys.map(col): _*).orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cumP = sum(coalesce(col("_cp"), lit(0L))).over(w) / col("_tp")
-    val cumR = sum(coalesce(col("_cr"), lit(0L))).over(w) / col("_tr")
-    val scored = totals
-      .join(broadcast(spine), kc) // per-key bin spine: bounded dimensions
-      .join(cellsK.select((gridKeys :+ "bin").map(col) :+ col("cnt").as("_cp"): _*),
-        gridKeys :+ "bin", "left")
-      .join(broadcast(refK.select((kc :+ "bin").map(col) :+ col("cnt").as("_cr"): _*)),
-        kc :+ "bin", "left")
-      .join(broadcast(refTot), kc, "left")
-      .where(assert_true(col("_tr").isNotNull && col("_tr") > 0,
-        lit("ksByPeriod: the reference is empty (no rows or all-NULL counts) for a " +
-          "scored key — a KS distance against nothing is meaningless")).isNull)
-      .withColumn("_d", abs(cumP - cumR))
-      .groupBy(gridKeys.map(col): _*)
-      .agg(max(col("_d")).as("ks"),
-        first(col("_tp")).as("n_period"), first(col("_tr")).as("n_ref"))
-      .drop("_one")
-    withRefGuard(scored, refCells,
-      "ksByPeriod: the reference is empty (no rows or all-NULL counts) — " +
-        "a KS distance against nothing is meaningless")
-  }
-
-  /** BOTH drift statistics in ONE grid pass — [[psiByPeriod]] and
-    * [[ksByPeriod]] build the same (period, bin) spine, the same count
-    * joins and the same total binds, and [[monitorTick]] then joined
-    * their outputs per chunk: the fused scorer computes the psi term and
-    * the CDF gap on one grid and aggregates both in one groupBy, so a
-    * monitor chunk pays one scoring subtree instead of two plus a join
-    * (r15; the scoring arithmetic is UNCHANGED — the same IEEE expressions
-    * over the same spine rows in the same accumulation order, DriftSpec
-    * pins BIT-identity against the composed psi ⋈ ks form). Returns
-    * (periodCol, psi, ks, n_period, n_ref) — exactly the composed join's
-    * columns. Contracts (cell shape, binning declaration, loud
-    * empty-reference failure) are the two scorers', unchanged.
-    *
-    * UNKEYED ONLY, deliberately: on the keyed grid the composed psi's
-    * spine join groups rows per key in a different physical order, so the
-    * float psi sum can differ in the last ulp from the composed form —
-    * keyed monitors keep the composed join (bit-stability outranks the
-    * saved subtree there).
-    */
-  def psiKsByPeriod(
-      cells: DataFrame,
-      periodCol: String,
-      refCells: DataFrame,
-      eps: Double = 1e-6): DataFrame = {
-    require(eps > 0.0 && eps < 1.0, s"eps must be in (0, 1): $eps")
-    Seq("bin", "cnt").foreach { c =>
-      require(cells.columns.contains(c) && refCells.columns.contains(c),
-        s"cell tables need (bin, cnt): ${cells.columns.toSeq} / ${refCells.columns.toSeq}")
-    }
-    val working = Set("_tp", "_cp", "_cr", "_tr", "_one", "_ta")
-    val clash = working.intersect(
-      cells.columns.toSet ++ refCells.columns.toSet + periodCol)
-    require(clash.isEmpty,
-      s"psiKsByPeriod's working columns clash with input columns: $clash — rename them first")
-    // the ksByPeriod constant-key grid, verbatim — the psi term is one
-    // extra projected expression on the same rows
-    val (kc, cellsK, refK) =
-      (Seq("_one"),
-        cells.withColumn("_one", lit(1)), refCells.withColumn("_one", lit(1)))
-    val gridKeys = periodCol +: kc
-    val totals = cellsK.groupBy(gridKeys.map(col): _*).agg(sum(col("cnt")).as("_tp"))
-    val refTot = refK.groupBy(kc.map(col): _*).agg(sum(col("cnt")).as("_tr"))
-    val spine = cellsK.select((kc :+ "bin").map(col): _*)
-      .unionByName(refK.select((kc :+ "bin").map(col): _*)).distinct()
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(gridKeys.map(col): _*).orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cumP = sum(coalesce(col("_cp"), lit(0L))).over(w) / col("_tp")
-    val cumR = sum(coalesce(col("_cr"), lit(0L))).over(w) / col("_tr")
-    val p = greatest(coalesce(col("_cp"), lit(0L)) / col("_tp"), lit(eps))
-    val q = greatest(coalesce(col("_cr"), lit(0L)) / col("_tr"), lit(eps))
-    val scored = totals
-      .join(broadcast(spine), kc) // per-key bin spine: bounded dimensions
-      .join(cellsK.select((gridKeys :+ "bin").map(col) :+ col("cnt").as("_cp"): _*),
-        gridKeys :+ "bin", "left")
-      .join(broadcast(refK.select((kc :+ "bin").map(col) :+ col("cnt").as("_cr"): _*)),
-        kc :+ "bin", "left")
-      .join(broadcast(refTot), kc, "left")
-      .where(assert_true(col("_tr").isNotNull && col("_tr") > 0,
-        lit("psiKsByPeriod: the reference is empty (no rows or all-NULL counts) for a " +
-          "scored key — a drift score against nothing is meaningless")).isNull)
-      .withColumn("_d", abs(cumP - cumR))
-      .groupBy(gridKeys.map(col): _*)
-      .agg(sum((p - q) * log(p / q)).as("psi"),
-        max(col("_d")).as("ks"),
-        first(col("_tp")).as("n_period"), first(col("_tr")).as("n_ref"))
-      .drop("_one")
-    withRefGuard(scored, refCells,
-      "psiKsByPeriod: reference cells are empty (no rows or all-NULL counts) — " +
-        "a drift score against nothing is meaningless")
-  }
+      keyCols: Seq[String] = Nil): DataFrame =
+    psiKsByPeriod(cells, periodCol, refCells, keyCols = keyCols)
+      .select(((periodCol +: keyCols) ++ Seq("ks", "n_period", "n_ref")).map(col): _*)
 
   /** Rotate a standing monitor's REFERENCE to the trailing `k` closed
     * periods of the SAME cell table it scores — the re-referencing verb a
@@ -553,21 +429,9 @@ object Drift {
     */
   def monitorTick(state: MonitorState, newCells: DataFrame): DataFrame = {
     val pCol = col(state.periodCol)
-    val joinKeys = state.periodCol +: state.keyCols
-    // ONE fused scoring subtree per chunk on the unkeyed path (r15): psi
-    // and ks ride the same grid, so the former psiByPeriod ⋈ ksByPeriod
-    // pair — two grid builds plus a join per chunk — collapses into one
-    // psiKsByPeriod call (BIT-identical; DriftSpec pins it against the
-    // composed form). Keyed monitors keep the composed join — see
-    // psiKsByPeriod's unkeyed-only note.
+    // one scoring grid per chunk: psi and ks, keyed or not
     def score(periodCells: DataFrame): DataFrame =
-      if (state.keyCols.isEmpty)
-        psiKsByPeriod(periodCells, state.periodCol, state.refCells)
-      else
-        psiByPeriod(periodCells, state.periodCol, state.refCells,
-            keyCols = state.keyCols)
-          .join(ksByPeriod(periodCells, state.periodCol, state.refCells,
-            keyCols = state.keyCols), joinKeys)
+      psiKsByPeriod(periodCells, state.periodCol, state.refCells, keyCols = state.keyCols)
     // bounded driver read: this batch's newly closed period spine, in order,
     // at most MaxBatchPeriods of it — a batch closing more periods than that
     // is a mis-declared period column, not a micro-batch, and fails loud
@@ -579,7 +443,7 @@ object Drift {
         "period column (a raw timestamp instead of a window start?) or split the batch")
     if (periods.isEmpty) return score(newCells) // empty, schema-correct
     // Periods sharing a reference-in-force score in ONE multi-period
-    // psi/ks call: the spine is chunked at the rotation boundaries
+    // scoring call: the spine is chunked at the rotation boundaries
     // (first chunk = cadence − sinceRotation periods, then cadence-sized),
     // so no rotation ever lands mid-chunk and every period still scores
     // against exactly the reference the one-at-a-time loop would use.

@@ -69,9 +69,9 @@ class PlanAuditSpec extends AnyFunSuite {
     // affected-cell find is a broadcast join against the bounded takedown
     // batch
     "q276_ivf_delete_probe",
-    // q277: the monitor loop's per-tick scoring grids — each period's
-    // bounded (bins ∪ ref-bins) spine and 1-row reference-total binds
-    // crossed against the period totals, the q254/q268 PSI/KS class;
+    // q277: the monitor loop's per-chunk scoring grids — each chunk's
+    // bounded (bins ∪ ref-bins) spine and constant-key reference-total
+    // binds joined onto the period totals, the q254/q268 PSI/KS class;
     // every frame is cell-table-bounded (bins × days), never event mass
     "q277_drift_monitor_loop",
     // q278: q277's scoring-grid class with a persist/restore seam — same
@@ -104,14 +104,15 @@ class PlanAuditSpec extends AnyFunSuite {
     // size); every downstream join/window runs on ≤ S²·k sketch cells
     "q244_kmv_overlap",
     // q254: Drift.psiByPeriod's score grid is days × bins (both bounded —
-    // bins by declaration, days by the calendar/watermark) plus the 1-row
-    // reference-total bind; it runs on drained sketch cells, never on the
-    // event stream
+    // bins by declaration, days by the calendar/watermark) plus the
+    // constant-key reference-total bind; it runs on drained sketch cells,
+    // never on the event stream
     "q254_stream_psi",
     // q260: q254's bounded grid (bins now ≤ maxBins by the adaptive
-    // buffer's construction) plus TWO 1-row binds — the target-scale
-    // aggregate psiByPeriodAdaptive broadcasts onto the ≤ days·maxBins
-    // cell rows, and psiByPeriod's reference total; all drained-cell work
+    // buffer's construction) plus the 1-row target-scale aggregate
+    // psiByPeriodAdaptive broadcasts onto the ≤ days·maxBins cell rows,
+    // and psiByPeriod's constant-key reference-total bind; all
+    // drained-cell work
     "q260_adaptive_psi")
 
   /** Queries that plan an unpartitioned WindowExec — DOCUMENTATION of why

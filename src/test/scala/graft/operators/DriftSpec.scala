@@ -27,6 +27,38 @@ class DriftSpec extends AnyFunSuite {
     }.sum
   }
 
+  /** Binned two-sample KS by hand: running integer sums over the sorted
+    * union of bins, each divided by its exact total; the largest gap. */
+  private def handKs(
+      post: Map[Long, Long], ref: Map[Long, Long]): Double = {
+    val tp = post.values.sum.toDouble
+    val tr = ref.values.sum.toDouble
+    var cp = 0L
+    var cr = 0L
+    (post.keySet ++ ref.keySet).toSeq.sorted.map { b =>
+      cp += post.getOrElse(b, 0L)
+      cr += ref.getOrElse(b, 0L)
+      math.abs(cp / tp - cr / tr)
+    }.max
+  }
+
+  /** The declared output surface: round(x + 1e-9, 6). */
+  private def rnd6(v: Double): Double = math.round((v + 1e-9) * 1e6) / 1e6
+
+  /** One hand-scored row (keys…, psi, ks, n_period, n_ref) at the declared
+    * surface — the shape of a psiKsByPeriod row. */
+  private def handRow(
+      keys: Seq[Any], post: Map[Long, Long], ref: Map[Long, Long]): Seq[Any] =
+    keys ++ Seq(rnd6(handPsi(post, ref)), rnd6(handKs(post, ref)),
+      post.values.sum, ref.values.sum)
+
+  /** Engine rows (keys…, psi, ks, n_period, n_ref) at the declared surface. */
+  private def declared(rows: Seq[Seq[Any]]): Set[Seq[Any]] = rows.map { r =>
+    val k = r.length - 4
+    r.take(k) ++ Seq(rnd6(r(k).asInstanceOf[Double]),
+      rnd6(r(k + 1).asInstanceOf[Double]), r(k + 2), r(k + 3))
+  }.toSet
+
   test("psi equals the hand-computed closed form per period") {
     val cells = Seq(
       ("d1", 0L, 10L), ("d1", 1L, 30L), ("d1", 2L, 60L),
@@ -65,6 +97,15 @@ class DriftSpec extends AnyFunSuite {
     }
     intercept[IllegalArgumentException] {
       Drift.psiByPeriod(ok.withColumnRenamed("day", "_tp"), "_tp", ref)
+    }
+    // the grid's CDF-gap column too: a period or key named _d would be
+    // overwritten by the gap and grouped on silently
+    intercept[IllegalArgumentException] {
+      Drift.ksByPeriod(ok.withColumnRenamed("day", "_d"), "_d", ref)
+    }
+    intercept[IllegalArgumentException] {
+      Drift.ksByPeriod(ok.withColumn("_d", lit("k")), "day",
+        ref.withColumn("_d", lit("k")), keyCols = Seq("_d"))
     }
     // the adaptive form's own working columns are reserved too
     val okAd = Seq(("d", 0, 0L, 1L)).toDF("day", "scale", "bin", "cnt")
@@ -296,42 +337,96 @@ class DriftSpec extends AnyFunSuite {
       Option(e2.getCause).exists(_.getMessage.contains("reference is empty")))
   }
 
-  test("psiKsByPeriod equals the composed psi-join-ks at the declared precision") {
-    // psi is a float SUM whose accumulation order differs between the two
-    // plans (fused grid vs crossJoin spine) by at most an ulp — the same
-    // order-sensitivity class the DuckDB oracle's own sums absorb — so the
-    // equality pin is the engine's DECLARED output surface, round(x+1e-9,6)
-    // (ks and the totals are exact integers/max and compare bitwise through
-    // the same rounding)
+  test("psiKsByPeriod equals the hand-computed psi and ks, keyed and unkeyed") {
+    // psi is a float SUM whose accumulation order is not fixed (the Drift
+    // rounding contract), so it is pinned at the declared surface
+    // round(x+1e-9, 6), and raw to within an ulp-scale tolerance ("same
+    // terms, different accumulation order", not "close"); ks and the
+    // totals are exact
     val rnd = new scala.util.Random(17)
-    val cells = (1 to 4).flatMap(d =>
+    val unkeyedRows = (1 to 4).flatMap(d =>
       (0L to 5L).map(b => (f"d$d%02d", b, (rnd.nextInt(90) + 1).toLong)))
-      .toDF("day", "bin", "cnt")
-    val ref = (0L to 5L).map(b => (b, (rnd.nextInt(90) + 1).toLong))
-      .toDF("bin", "cnt")
-    def declared(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
-      df.select(col("day"), round(col("psi") + 1e-9, 6).as("psi"),
-          round(col("ks") + 1e-9, 6).as("ks"), col("n_period"), col("n_ref"))
-        .collect().map(_.toSeq).toSet
-    val fused = Drift.psiKsByPeriod(cells, "day", ref)
-    val composed = Drift.psiByPeriod(cells, "day", ref)
-      .join(Drift.ksByPeriod(cells, "day", ref), Seq("day"))
-    assert(fused.columns.toSeq == composed.columns.toSeq)
-    assert(declared(fused) == declared(composed))
-    // the raw psi values agree to within an ulp-scale tolerance (the claim
-    // above is "same arithmetic, different accumulation order", not "close")
-    val fRaw = fused.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val cRaw = composed.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    fRaw.foreach { case (d, v) =>
-      assert(math.abs(v - cRaw(d)) <= math.ulp(v) * 4, s"$d: $v vs ${cRaw(d)}")
+    val refRows = (0L to 5L).map(b => (b, (rnd.nextInt(90) + 1).toLong))
+    // keyed: key b's periods each miss one bin, and its reference carries
+    // a bin (6) that no period has
+    val keyedRows = for {
+      d <- 1 to 4; k <- Seq("a", "b"); b <- 0L to 5L if !(k == "b" && b == d)
+    } yield (f"d$d%02d", k, b, (rnd.nextInt(90) + 1).toLong)
+    val keyedRef = for (k <- Seq("a", "b"); b <- 0L to (if (k == "a") 5L else 6L))
+      yield (k, b, (rnd.nextInt(90) + 1).toLong)
+    val unkeyedWant = unkeyedRows.groupBy(_._1).map { case (d, rs) =>
+      d -> (rs.map(r => r._2 -> r._3).toMap, refRows.toMap)
+    }
+    val keyedWant = keyedRows.groupBy(r => (r._1, r._2)).map { case ((d, k), rs) =>
+      (d, k) -> (rs.map(r => r._3 -> r._4).toMap,
+        keyedRef.filter(_._1 == k).map(r => r._2 -> r._3).toMap)
+    }
+    val cases = Seq(
+      (Drift.psiKsByPeriod(unkeyedRows.toDF("day", "bin", "cnt"), "day",
+        refRows.toDF("bin", "cnt")), unkeyedWant.map { case (d, v) => Seq[Any](d) -> v }),
+      (Drift.psiKsByPeriod(keyedRows.toDF("day", "key", "bin", "cnt"), "day",
+        keyedRef.toDF("key", "bin", "cnt"), keyCols = Seq("key")),
+        keyedWant.map { case ((d, k), v) => Seq[Any](d, k) -> v }))
+    for ((df, want) <- cases) {
+      val got = df.collect().map(_.toSeq).toSeq
+      assert(declared(got) ==
+        want.map { case (keys, (post, ref)) => handRow(keys, post, ref) }.toSet)
+      got.foreach { r =>
+        val k = r.length - 4
+        val (post, ref) = want(r.take(k))
+        val psi = r(k).asInstanceOf[Double]
+        val hand = handPsi(post, ref)
+        assert(math.abs(psi - hand) <= math.ulp(psi) * 4, s"${r.take(k)}: $psi vs $hand")
+        assert(r(k + 1) == handKs(post, ref), s"${r.take(k)}: ks ${r(k + 1)}")
+      }
     }
     // empty reference fails loud through the fused path too
     val e = intercept[Exception] {
-      Drift.psiKsByPeriod(cells, "day",
+      Drift.psiKsByPeriod(unkeyedRows.toDF("day", "bin", "cnt"), "day",
         Seq.empty[(Long, Long)].toDF("bin", "cnt")).collect()
     }
     assert(e.getMessage.contains("reference cells are empty") ||
       Option(e.getCause).exists(_.getMessage.contains("reference cells are empty")))
+  }
+
+  test("plan shape: psi-only calls prune ks away; a keyed monitor chunk scores on one grid") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Window => WindowNode}
+    val cells = Seq(
+      ("d1", "k1", 0L, 10L), ("d1", "k1", 1L, 90L), ("d1", "k2", 0L, 70L),
+      ("d2", "k1", 1L, 5L), ("d2", "k2", 0L, 7L))
+      .toDF("day", "key", "bin", "cnt")
+    val ref = Seq(("k1", 0L, 50L), ("k1", 1L, 50L), ("k2", 0L, 20L))
+      .toDF("key", "bin", "cnt")
+    def windows(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case w: WindowNode => w }
+    for ((c, r, keys) <- Seq(
+        (cells, ref, Seq("key")), (cells.drop("key"), ref.drop("key"), Nil))) {
+      val psiOnly = Drift.psiByPeriod(c, "day", r, keyCols = keys)
+      // a projection of the one scoring grid, not a second grid builder...
+      assert(psiOnly.sameSemantics(Drift.psiKsByPeriod(c, "day", r, keyCols = keys)
+        .select(("day" +: keys :+ "psi").map(col): _*)), s"keys $keys")
+      // ...and column pruning removes the ks running-sum window
+      assert(windows(psiOnly).isEmpty, s"keys $keys")
+      assert(windows(Drift.ksByPeriod(c, "day", r, keyCols = keys)).size == 1, s"keys $keys")
+    }
+    // a keyed monitor chunk: one scoring aggregate carrying both statistics,
+    // and no join of a psi output to a ks output
+    val state = Drift.monitorState(cells.filter(col("day") === "d1"), "day",
+      Seq("key"), cadence = 3, refK = 1)
+    val plan = Drift.monitorTick(state, cells.filter(col("day") === "d2"))
+      .queryExecution.optimizedPlan
+    val scoring = plan.collect {
+      case a: Aggregate if a.output.exists(o => o.name == "psi" || o.name == "ks") => a
+    }
+    assert(scoring.size == 1 &&
+      Set("psi", "ks").subsetOf(scoring.head.output.map(_.name).toSet), plan.toString)
+    def outputs(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =
+      p.output.exists(_.name == n)
+    val psiKsJoins = plan.collect {
+      case j: Join if (outputs(j.left, "psi") && outputs(j.right, "ks")) ||
+        (outputs(j.left, "ks") && outputs(j.right, "psi")) => j
+    }
+    assert(psiKsJoins.isEmpty, plan.toString)
   }
 
   test("keyed PSI equals the unkeyed score per key slice") {
@@ -438,24 +533,13 @@ class DriftSpec extends AnyFunSuite {
       3 -> Seq(1, 2), 4 -> Seq(1, 2), 5 -> Seq(1, 2),
       6 -> Seq(4, 5), 7 -> Seq(4, 5), 8 -> Seq(4, 5),
       9 -> Seq(7, 8), 10 -> Seq(7, 8))
-    // hand scores use the composed psi ⋈ ks; the loop's fused scorer agrees
-    // at the engine's declared 6-dp surface (psi's float-sum accumulation
-    // order differs between the two plans by at most an ulp — the
-    // psiKsByPeriod equality pin above), so the hand comparison rounds.
-    // BATCHING-invariance below stays EXACT: both loops run the same plan.
-    def declared(rows: Seq[Seq[Any]]): Set[Seq[Any]] = rows.map { r =>
-      def rnd6(v: Any): Any =
-        math.round((v.asInstanceOf[Double] + 1e-9) * 1e6) / 1e6
-      Seq(r(0), rnd6(r(1)), rnd6(r(2)), r(3), r(4))
-    }.toSet
-    def handScores(d: Int): Seq[Seq[Any]] = {
-      val ref = frame(refDays(d)).groupBy(col("bin")).agg(sum(col("cnt")).as("cnt"))
-      val slice = frame(Seq(d))
-      Drift.psiByPeriod(slice, "day", ref)
-        .join(Drift.ksByPeriod(slice, "day", ref), Seq("day"))
-        .collect().map(_.toSeq).toSeq
-    }
-    val want = declared((3 to 10).flatMap(handScores))
+    // hand scores (Scala, independent of the engine) at the declared 6-dp
+    // surface; BATCHING-invariance below stays EXACT: both loops run the
+    // same plan
+    def counts(rows: Seq[(String, Long, Long)]): Map[Long, Long] =
+      rows.groupMapReduce(_._2)(_._3)(_ + _)
+    val want = (3 to 10).map(d =>
+      handRow(Seq(f"d$d%02d"), counts(all(d)), counts(refDays(d).flatMap(all)))).toSet
     def runLoop(batches: Seq[Seq[Int]]): Seq[Seq[Any]] = {
       val state = Drift.monitorState(frame(Seq(1, 2)), "day",
         cadence = 3, refK = 2)
@@ -479,6 +563,49 @@ class DriftSpec extends AnyFunSuite {
     assert(empty.columns.toSeq ==
       Seq("day", "psi", "ks", "n_period", "n_ref") && empty.count() == 0)
     assert(state.sinceRotation == 0)
+  }
+
+  test("keyed monitorTick: two keys equal hand-rotated scores, batching- and restart-invariant") {
+    val rnd = new scala.util.Random(47)
+    // key b skips bin 3 on odd days, so the shared spine carries bins a
+    // period lacks
+    def dayCells(d: Int) = for {
+      k <- Seq("a", "b"); b <- 0L to 3L if !(k == "b" && b == 3L && d % 2 == 1)
+    } yield (f"d$d%02d", k, b, (rnd.nextInt(80) + 1).toLong)
+    val all = (1 to 10).map(d => d -> dayCells(d)).toMap
+    def frame(days: Seq[Int]) = days.flatMap(all).toDF("day", "key", "bin", "cnt")
+    // seed d01-d02, cadence 3, refK 2: rotations after d05 and d08
+    val refDays = Map(
+      3 -> Seq(1, 2), 4 -> Seq(1, 2), 5 -> Seq(1, 2),
+      6 -> Seq(4, 5), 7 -> Seq(4, 5), 8 -> Seq(4, 5),
+      9 -> Seq(7, 8), 10 -> Seq(7, 8))
+    def counts(rows: Seq[(String, String, Long, Long)], k: String): Map[Long, Long] =
+      rows.filter(_._2 == k).groupMapReduce(_._3)(_._4)(_ + _)
+    val want = (for (d <- 3 to 10; k <- Seq("a", "b")) yield
+      handRow(Seq(f"d$d%02d", k), counts(all(d), k), counts(refDays(d).flatMap(all), k))
+    ).toSet
+    def newState() = Drift.monitorState(frame(Seq(1, 2)), "day", Seq("key"),
+      cadence = 3, refK = 2)
+    def runLoop(state: Drift.MonitorState, batches: Seq[Seq[Int]]): Seq[Seq[Any]] =
+      batches.flatMap(b => Drift.monitorTick(state, frame(b)).collect().map(_.toSeq))
+    val perDay = runLoop(newState(), (3 to 10).map(Seq(_)))
+    assert(perDay.size == 16 && declared(perDay) == want,
+      "keyed per-day service loop diverged from hand-rotated scores")
+    // uneven batching, the d08 rotation inside the last batch: the same rows
+    val uneven = runLoop(newState(), Seq(Seq(3, 4, 5), Seq(6), Seq(7, 8, 9, 10)))
+    assert(uneven.toSet == perDay.toSet,
+      "keyed uneven batching moved a score across a rotation boundary")
+    // persist after d06 (one period past the d05 rotation) and resume
+    val state = newState()
+    val before = runLoop(state, (3 to 6).map(Seq(_)))
+    assert(state.sinceRotation == 1)
+    val dir = java.nio.file.Files.createTempDirectory("monitor-keyed").toString + "/st"
+    Drift.persistMonitorState(state, dir)
+    val restored = Drift.restoreMonitorState(spark, dir)
+    assert(restored.keyCols == Seq("key") && restored.sinceRotation == 1)
+    val after = runLoop(restored, (7 to 10).map(Seq(_)))
+    assert((before ++ after).toSet == perDay.toSet,
+      "keyed restart moved a score — the restored monitor did not resume the declared loop")
   }
 
   test("monitorTick fails loud, with the batch's period count, past MaxBatchPeriods") {
