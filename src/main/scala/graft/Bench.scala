@@ -11,7 +11,8 @@ package graft
   * Each query's `barSec` is a 32-core sf0.1 number (SPARK_GRAFT_CPUS=32).
   * The `vs_baseline` ratios and the retry check apply it unscaled at any
   * core count, so a flag from a smaller box reads against 32 cores, not
-  * as a regression by itself. Both output lines carry the run's `cores`.
+  * as a regression by itself. Both output lines carry the run's `cores`,
+  * and each query's BENCH_DETAIL.json entry carries its `bar`.
   */
 object Bench {
 
@@ -138,7 +139,7 @@ object Bench {
       .mkString("{", ",", "}")
     val detail = results
       .map { case (k, v, bar) =>
-        "\"" + k + "\":" + f"""{"sec":$v%.3f,"vs_baseline":${ratio(v, bar)}%.2f}"""
+        "\"" + k + "\":" + f"""{"sec":$v%.3f,"bar":$bar%.3f,"vs_baseline":${ratio(v, bar)}%.2f}"""
       }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum

@@ -1,7 +1,7 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
@@ -377,7 +377,7 @@ object CurationQueries extends Family {
     val sigs = t(s, dir, "documents")
       .select(col("doc_id"),
         graft.expressions.ShingleHashes.hashedCharShingles(
-          col("text"), 5, md5Slice = true).as("_h"))
+          col("text"), 5, hash = graft.expressions.ShingleHash.Md5Slice).as("_h"))
       .filter(size(col("_h")) > 0)
       // read 4× (stored freq + fresh freq + two postings builds)
       .localCheckpoint()
@@ -478,9 +478,9 @@ object CurationQueries extends Family {
     val b1 = docs.filter(col("doc_id") >= x80 && col("doc_id") < x90)
     val b2 = docs.filter(col("doc_id") >= x90)
     def q = TF.qualityScore(col("text"), Stopwords)
-    // the canonical portable 52-bit md5-slice convention — ONE definition
-    // (Kmv.hash) shared with every sketch oracle, not re-rolled here
-    val mdHash = (sh: Column) => graft.functions.Kmv.hash(sh)
+    // the portable 52-bit md5-slice convention (Kmv.hash's value, fused),
+    // so the oracle re-derives every element set
+    val mdHash = graft.expressions.ShingleHash.Md5Slice
     val (m, k) = (1 << 17, 4) // fixed for oracle replay; production sizes via Bloom.sizeFor
     // ---- the stored index tier, built once at service start ----
     val idx0 = Pin.LocalCheckpoint(
@@ -858,7 +858,7 @@ object CurationQueries extends Family {
     val corpus = docs.filter(col("doc_id") % 50 =!= 0 && col("doc_id") % 3 === 0)
     val idx = Pin.LocalCheckpoint(Curation.signatures(
       corpus, "doc_id", "text", "lang",
-      shingleHash = sh => graft.functions.Kmv.hash(sh)))
+      shingleHash = graft.expressions.ShingleHash.Md5Slice))
     val (freqRaw, postsRaw) = Curation.postingsIndex(idx, "doc_id", "lang")
     val freq = Pin.LocalCheckpoint(freqRaw)
     val posts = Pin.LocalCheckpoint(postsRaw)
@@ -1027,10 +1027,7 @@ object CurationQueries extends Family {
       // its symlink trick because the stream dir outlives two query runs,
       // so the copies are real files and a sweep's min-of-2 would leak
       // 2× the batch bytes per measurement otherwise
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
+      deleteTree(java.nio.file.Paths.get(root))
     }
     val audit = Curation.auditState(state.index, state.posts, state.frozenFreq,
       state.currentFreq, Some(state.benchIdx), "doc_id", "lang")

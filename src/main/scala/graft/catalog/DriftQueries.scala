@@ -829,8 +829,7 @@ object DriftQueries extends Family {
     val mid = days(math.min(14, days.length - 1))
     val t1 = graft.operators.Drift.monitorTick(
       state, byDay.filter(col("day") > lit(seedEnd) && col("day") <= lit(mid)))
-    val ckptDir = java.nio.file.Files.createTempDirectory("q278-monitor").toString +
-      "/state"
+    val ckptDir = exitScopedDir("q278-monitor") + "/state"
     graft.operators.Drift.persistMonitorState(state, ckptDir)
     val restored = graft.operators.Drift.restoreMonitorState(s, ckptDir)
     val t2 = graft.operators.Drift.monitorTick(

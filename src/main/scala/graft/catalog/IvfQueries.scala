@@ -67,7 +67,7 @@ object IvfQueries extends Family {
     val emb = t(s, dir, "embeddings")
     val centroids = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val idxDir = java.nio.file.Files.createTempDirectory("q271-ivf").toString + "/idx"
+    val idxDir = exitScopedDir("q271-ivf") + "/idx"
     val h = graft.functions.IvfIndex.build(emb, "vec_id", "embedding", centroids, idxDir)
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -137,7 +137,7 @@ object IvfQueries extends Family {
     val emb = t(s, dir, "embeddings")
     val centroids = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val idxDir = java.nio.file.Files.createTempDirectory("q273-ivf").toString + "/idx"
+    val idxDir = exitScopedDir("q273-ivf") + "/idx"
     val h0 = graft.functions.IvfIndex.build(
       emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", centroids, idxDir)
     val h = graft.functions.IvfIndex.append(h0, emb.filter(col("vec_id") % 2 === 1))
@@ -205,7 +205,7 @@ object IvfQueries extends Family {
     val emb = t(s, dir, "embeddings")
     val centroids = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val idxDir = java.nio.file.Files.createTempDirectory("q274-ivf").toString + "/idx"
+    val idxDir = exitScopedDir("q274-ivf") + "/idx"
     val h = graft.functions.IvfIndex.build(emb, "vec_id", "embedding", centroids, idxDir)
     graft.functions.IvfIndex.driftReport(h)
       .select(
@@ -266,7 +266,7 @@ object IvfQueries extends Family {
     val emb = t(s, dir, "embeddings")
     val centroids = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val idxDir = java.nio.file.Files.createTempDirectory("q275-ivf").toString + "/idx"
+    val idxDir = exitScopedDir("q275-ivf") + "/idx"
     val h = graft.functions.IvfIndex.buildQuantized(
       emb, "vec_id", "embedding", centroids, idxDir)
     val queries = emb.filter(col("vec_id") >= 20 && col("vec_id") < 30)
@@ -351,7 +351,7 @@ object IvfQueries extends Family {
     val emb = t(s, dir, "embeddings")
     val centroids = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val idxDir = java.nio.file.Files.createTempDirectory("q276-ivf").toString + "/idx"
+    val idxDir = exitScopedDir("q276-ivf") + "/idx"
     val h0 = graft.functions.IvfIndex.build(
       emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", centroids, idxDir)
     val h1 = graft.functions.IvfIndex.append(h0, emb.filter(col("vec_id") % 2 === 1))

@@ -139,10 +139,31 @@ object Shared {
       // deleteOnExit is a no-op on a non-empty directory — remove the
       // replay's parquet tree explicitly (the result is already
       // localCheckpoint-detached, so nothing references these files)
-      import java.nio.file.{Files => F}
-      import scala.jdk.CollectionConverters._
-      F.walk(dirTmp).iterator().asScala.toSeq.reverse.foreach(p => F.deleteIfExists(p))
+      deleteTree(dirTmp)
     }
+  }
+
+  /** Delete a file tree, children before parents. */
+  private[catalog] def deleteTree(root: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(root)
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+    finally walk.close()
+  }
+
+  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+  sys.addShutdownHook(exitDirs.forEach(d => if (java.nio.file.Files.exists(d)) deleteTree(d)))
+
+  /** A fresh directory under the system temp dir, deleted with its
+    * contents when the JVM exits — for queries whose returned frame still
+    * reads the directory lazily (a stored IVF index is read at action time;
+    * a restored monitor state pins lazily in its last stage), so it cannot
+    * go when the query's build function returns.
+    */
+  private[catalog] def exitScopedDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    exitDirs.add(d)
+    d.toString
   }
 
   /** Shared oracle fragment: the document quality score (q13's formula),

@@ -28,11 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - the window over code points [i, i+n) covers EXACTLY the bytes
   *     `substr(i+1, n)` returns (UTF8String.substringSQL slices on the
   *     same code-point boundaries this walk computes);
-  *   - `XxHash` hashes those bytes with seed 42 — the same
+  *   - [[ShingleHash.XxHash64]] hashes those bytes with seed 42 — the same
   *     `XXH64.hashUnsafeBytes` call `xxhash64(string)` performs;
-  *   - `Md5Slice` reproduces `conv(substring(md5(s), 1, 13), 16, 10)
-  *     .cast("long")` (graft.functions.Kmv.hash): the first 13 hex chars
-  *     of the MD5 are the digest's first 52 bits, read big-endian;
+  *   - [[ShingleHash.Md5Slice]] reproduces
+  *     `conv(substring(md5(s), 1, 13), 16, 10).cast("long")`
+  *     (graft.functions.Kmv.hash): the first 13 hex chars of the MD5 are
+  *     the digest's first 52 bits, read big-endian;
   *   - sort-then-dedupe over longs ≡ array_distinct-then-sort_array
   *     (both yield the ascending distinct multiset; with
   *     `distinct = false` the plain sorted multiset ≡ sort_array alone).
@@ -52,7 +53,7 @@ case class ShingleHashesExpr(
     child: Expression,
     n: Int,
     distinct: Boolean,
-    md5Slice: Boolean)
+    hash: ShingleHash)
     extends UnaryExpression {
 
   require(n > 0 && n <= 1024, s"shingle width out of range: $n")
@@ -93,43 +94,44 @@ case class ShingleHashesExpr(
     if (nChars < n) return new GenericArrayData(Array.emptyLongArray)
     val nOut = nChars - n + 1
     val out = new Array[Long](nOut)
-    if (md5Slice) {
-      // per-task (thread) digest instance: getInstance("MD5") per row was
-      // a provider lookup + digest allocation on every md5-slice row
-      // (guide §4.5 — initialise heavyweight state once, not per row)
-      val md = ShingleHashes.md5.get()
-      // widest window in bytes bounds the copy buffer (windows share it)
-      var maxLen = 0
-      var w = 0
-      while (w < nOut) {
-        val len = offs(w + n) - offs(w)
-        if (len > maxLen) maxLen = len
-        w += 1
-      }
-      val buf = new Array[Byte](maxLen)
-      w = 0
-      while (w < nOut) {
-        val start = offs(w)
-        val len = offs(w + n) - start
-        Platform.copyMemory(base, off + start, buf, Platform.BYTE_ARRAY_OFFSET, len)
-        md.reset()
-        md.update(buf, 0, len)
-        val d = md.digest()
-        // first 13 hex chars = bytes 0..5 plus the high nibble of byte 6,
-        // read big-endian — exactly conv(substring(hex, 1, 13), 16, 10)
-        var v = 0L
-        var b = 0
-        while (b < 6) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
-        out(w) = (v << 4) | ((d(6) & 0xf0L) >>> 4)
-        w += 1
-      }
-    } else {
-      var w = 0
-      while (w < nOut) {
-        val start = offs(w)
-        out(w) = XXH64.hashUnsafeBytes(base, off + start, offs(w + n) - start, 42L)
-        w += 1
-      }
+    hash match {
+      case ShingleHash.Md5Slice =>
+        // per-task (thread) digest instance: getInstance("MD5") per row was
+        // a provider lookup + digest allocation on every md5-slice row
+        // (guide §4.5 — initialise heavyweight state once, not per row)
+        val md = ShingleHashes.md5.get()
+        // widest window in bytes bounds the copy buffer (windows share it)
+        var maxLen = 0
+        var w = 0
+        while (w < nOut) {
+          val len = offs(w + n) - offs(w)
+          if (len > maxLen) maxLen = len
+          w += 1
+        }
+        val buf = new Array[Byte](maxLen)
+        w = 0
+        while (w < nOut) {
+          val start = offs(w)
+          val len = offs(w + n) - start
+          Platform.copyMemory(base, off + start, buf, Platform.BYTE_ARRAY_OFFSET, len)
+          md.reset()
+          md.update(buf, 0, len)
+          val d = md.digest()
+          // first 13 hex chars = bytes 0..5 plus the high nibble of byte 6,
+          // read big-endian — exactly conv(substring(hex, 1, 13), 16, 10)
+          var v = 0L
+          var b = 0
+          while (b < 6) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
+          out(w) = (v << 4) | ((d(6) & 0xf0L) >>> 4)
+          w += 1
+        }
+      case ShingleHash.XxHash64 =>
+        var w = 0
+        while (w < nOut) {
+          val start = offs(w)
+          out(w) = XXH64.hashUnsafeBytes(base, off + start, offs(w + n) - start, 42L)
+          w += 1
+        }
     }
     java.util.Arrays.sort(out)
     if (!distinct) return new GenericArrayData(out)
@@ -152,6 +154,35 @@ case class ShingleHashesExpr(
     copy(child = newChild)
 }
 
+/** The gram → 64-bit-hash convention of a shingle-hash array — part of any
+  * stored index's contract, like the shingle width (every slice and every
+  * probe of one index must use one convention). Two cases:
+  *
+  *   - [[ShingleHash.XxHash64]] — `xxhash64(shingle)` (seed 42), the
+  *     default and the fastest;
+  *   - [[ShingleHash.Md5Slice]] — the portable 52-bit md5 slice
+  *     `conv(substring(md5(shingle), 1, 13), 16, 10)` (graft.functions.Kmv
+  *     .hash), for element sets a second engine (the DuckDB oracle) must
+  *     re-derive.
+  *
+  * `name` is the stable form stored in persisted ledgers;
+  * [[ShingleHash.fromName]] reads it back and fails loud on anything else.
+  */
+sealed trait ShingleHash { def name: String }
+
+object ShingleHash {
+  case object XxHash64 extends ShingleHash { val name = "xxhash64" }
+  case object Md5Slice extends ShingleHash { val name = "md5_slice" }
+
+  private val all: Seq[ShingleHash] = Seq(XxHash64, Md5Slice)
+
+  def fromName(name: String): ShingleHash =
+    all.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+      s"unknown shingle hash convention '$name' — expected one of " +
+        s"${all.map(_.name).mkString(", ")}; a state persisted before the closed " +
+        "hash type stored expression text here and must be rebuilt"))
+}
+
 object ShingleHashes {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toColumn, expression => toExpr}
 
@@ -168,20 +199,19 @@ object ShingleHashes {
   /** Sorted (distinct) shingle-hash array straight from raw text — fuses
     * `TextFunctions.charShingles(text, n)` + per-element hash + distinct +
     * sort into one expression over the SAME normalization chain
-    * (trim → whitespace collapse → lower, stock codegen'd expressions).
-    * `md5Slice = false` = the xxhash64 convention; `true` = the portable
-    * 52-bit md5-slice (graft.functions.Kmv.hash). Null text → null, text
+    * (trim → whitespace collapse → lower, stock codegen'd expressions)
+    * under the [[ShingleHash]] convention `hash`. Null text → null, text
     * shorter than n → empty array — the charShingles contract.
     */
   def hashedCharShingles(
       text: Column, n: Int, distinct: Boolean = true,
-      md5Slice: Boolean = false): Column = {
+      hash: ShingleHash = ShingleHash.XxHash64): Column = {
     val norm = lower(regexp_replace(trim(text), "\\s+", " "))
     // null/short-text semantics match the composed idiom without a when()
     // wrapper (which would evaluate the regex chain twice per row): null
     // text → null via UnaryExpression null-intolerance (= transform(null)),
     // text shorter than n → empty array inside the eval (= the
     // charShingles length guard)
-    toColumn(ShingleHashesExpr(toExpr(norm), n, distinct, md5Slice))
+    toColumn(ShingleHashesExpr(toExpr(norm), n, distinct, hash))
   }
 }

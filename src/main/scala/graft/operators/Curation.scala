@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.expressions.{ShingleHash, ShingleHashes}
 
 /** Incremental corpus curation — the PRODUCTION shape of the batch
   * curation funnel (SparkEntry q230): a standing curated corpus absorbs
@@ -117,13 +117,14 @@ object Curation {
     * row-wise (`index.unionByName(signatures(accepted))`), so the index
     * stays exact under the tick loop by construction.
     *
-    * `shingleHash` is the gram → 64-bit-hash convention — PART OF THE
-    * INDEX CONTRACT like `shingleN` (all slices and all tick batches must
-    * use one). Default xxhash64 (codegen'd, fastest); pass the portable
-    * 52-bit md5-slice form when a second engine must re-derive the element
-    * sets (the q252 oracle convention). Distinct-set Jaccard is
-    * hash-invariant modulo collisions, so the accepted output does not
-    * depend on the choice.
+    * `shingleHash` is the gram → 64-bit-hash [[ShingleHash]] convention —
+    * PART OF THE INDEX CONTRACT like `shingleN` (all slices and all tick
+    * batches must use one). Default [[ShingleHash.XxHash64]] (fastest);
+    * pass [[ShingleHash.Md5Slice]] when a second engine must re-derive the
+    * element sets (the q252 oracle convention). Both run the fused
+    * single-pass kernel ([[ShingleHashes.hashedCharShingles]]).
+    * Distinct-set Jaccard is hash-invariant modulo collisions, so the
+    * accepted output does not depend on the choice.
     */
   def signatures(
       df: DataFrame,
@@ -131,36 +132,11 @@ object Curation {
       textCol: String,
       langCol: String,
       shingleN: Int = 5,
-      shingleHash: Column => Column = xxhash64(_)): DataFrame = {
-    // the two standard hash conventions take the fused single-pass
-    // expression (one tight loop per row instead of three interpreted
-    // higher-order passes — value-identical, ShingleHashesSpec); a custom
-    // convention keeps the composed form. Dispatch by the same expression
-    // fingerprint ServiceState carries for its build-convention guard.
-    val tag = ServiceState.hashTag(shingleHash)
-    val hashed =
-      if (tag == SignatureHashTags.xx)
-        graft.expressions.ShingleHashes.hashedCharShingles(col(textCol), shingleN)
-      else if (tag == SignatureHashTags.md5Slice)
-        graft.expressions.ShingleHashes.hashedCharShingles(
-          col(textCol), shingleN, md5Slice = true)
-      else
-        sort_array(array_distinct(
-          transform(TextFunctions.charShingles(col(textCol), shingleN),
-            shingleHash)))
+      shingleHash: ShingleHash = ShingleHash.XxHash64): DataFrame =
     df.select(
       col(idCol), col(langCol),
       sha2(col(textCol), 256).as("_dg"),
-      hashed.as("_h"))
-  }
-
-  /** Fingerprints of the two standard shingle-hash conventions (computed
-    * once — hashTag renders an expression tree per call).
-    */
-  private object SignatureHashTags {
-    val xx: String = ServiceState.hashTag(xxhash64(_))
-    val md5Slice: String = ServiceState.hashTag(graft.functions.Kmv.hash(_))
-  }
+      ShingleHashes.hashedCharShingles(col(textCol), shingleN, hash = shingleHash).as("_h"))
 
   /** The POSTINGS half of the persistable tick index — what stops the
     * similarity stage rebuilding document frequencies and corpus prefix
@@ -234,7 +210,8 @@ object Curation {
     *      docs' [[SimilarityJoin.dfCounts]].
     *
     * `shingleN`/`shingleHash`/`tau` must match the standing index's build
-    * (the usual index contracts). The appended signature/postings frames
+    * (the usual index contracts; [[serviceTick]] reads all three off its
+    * [[ServiceState]] handle). The appended signature/postings frames
     * are pinned through `pin` (they are read per subsequent tick; the
     * merged df frame is left lazy — it re-aggregates from pinned parts).
     * [[takedown]] of exactly the appended ids inverts this call half for
@@ -258,7 +235,7 @@ object Curation {
       frozenFreq: DataFrame,
       shingleN: Int = 5,
       tau: Double = 0.5,
-      shingleHash: Column => Column = xxhash64(_),
+      shingleHash: ShingleHash = ShingleHash.XxHash64,
       pin: Pin = Pin.LocalCheckpoint): (DataFrame, DataFrame, DataFrame) = {
     val app = pin(signatures(accepted, idCol, textCol, langCol, shingleN, shingleHash))
     (
@@ -500,25 +477,14 @@ object Curation {
       @volatile var benchIdx: Decontaminate.BenchIndex,
       @volatile var maxRank: Long,
       @volatile var lastBatchId: Long = Long.MinValue,
-      // build conventions, carried so ticks can check them (the BenchIndex.n
-      // pattern): postings built at one (tau, shingleN, hash) probed at
-      // another produce a WRONG accepted set with no error possible from
-      // the stored rows alone
+      // build conventions: [[serviceTick]] ticks under these (and the
+      // benchIdx's gram size n), never under caller-passed values —
+      // postings built at one (tau, shingleN, hash) probed at another
+      // produce a WRONG accepted set with no error possible from the stored
+      // rows alone
       val tau: Double = 0.5,
       val shingleN: Int = 5,
-      val hashTag: String = ServiceState.hashTag(xxhash64(_)))
-
-  object ServiceState {
-    /** Fingerprint of a shingle-hash convention: the expression text of the
-      * hash applied to a probe literal — no job, deterministic for a given
-      * Column function, and different conventions (xxhash64 vs md5-slice
-      * vs a salted variant) render different text. Carried on the handle so
-      * [[serviceTick]] can reject a probe under a different hash than the
-      * build (same seam class as [[Decontaminate.BenchIndex]]'s `n`).
-      */
-    def hashTag(shingleHash: Column => Column): String =
-      shingleHash(lit("graft-hash-convention-probe")).toString
-  }
+      val shingleHash: ShingleHash = ShingleHash.XxHash64)
 
   /** Build a [[ServiceState]] at service start — the q261 service-start
     * shape as one call: corpus [[signatures]] + frozen-order
@@ -539,7 +505,7 @@ object Curation {
       shingleN: Int = 5,
       tau: Double = 0.5,
       targetFpp: Double = 0.001,
-      shingleHash: Column => Column = xxhash64(_),
+      shingleHash: ShingleHash = ShingleHash.XxHash64,
       pin: Pin = Pin.LocalCheckpoint): ServiceState = {
     val idx = pin(signatures(corpus, idCol, textCol, langCol, shingleN, shingleHash))
     val (freqRaw, postsRaw) = postingsIndex(idx, idCol, langCol, tau)
@@ -563,7 +529,7 @@ object Curation {
     // corpus); appendState replaces rather than mutates, so one pinned
     // frame serves both roles
     new ServiceState(idx, posts, freq, freq, bi, maxRank,
-      tau = tau, shingleN = shingleN, hashTag = ServiceState.hashTag(shingleHash))
+      tau = tau, shingleN = shingleN, shingleHash = shingleHash)
   }
 
   /** REBUILD a [[ServiceState]] from persisted halves — the restart verb
@@ -605,7 +571,7 @@ object Curation {
       lastBatchId: Long = Long.MinValue,
       tau: Double = 0.5,
       shingleN: Int = 5,
-      shingleHash: Column => Column = xxhash64(_)): ServiceState = {
+      shingleHash: ShingleHash = ShingleHash.XxHash64): ServiceState = {
     // id/_dg/_h only — langCol varies by deployment and every downstream
     // verb re-validates what it reads
     Seq(idCol, "_dg", "_h").foreach(c => require(index.columns.contains(c),
@@ -621,21 +587,21 @@ object Curation {
       if (mr.getLong(0) == 0L) Long.MinValue else mr.getLong(2)
     }
     new ServiceState(index, posts, frozenFreq, currentFreq, benchIdx, mark, lastBatchId,
-      tau = tau, shingleN = shingleN, hashTag = ServiceState.hashTag(shingleHash))
+      tau = tau, shingleN = shingleN, shingleHash = shingleHash)
   }
 
   /** PERSIST a [[ServiceState]] to `dir` — the checkpoint half of the
     * restart verb pair ([[restoreServiceState]] is the other half, and its
-    * `(spark, dir, shingleHash)` overload reads this layout back). Each
+    * `(spark, dir, pin)` overload reads this layout back). Each
     * call writes a fresh GENERATION directory `dir/gen=<k>` holding the
     * six state frames as parquet (`index`, `posts`, `freq`, `cur`,
     * `bench_grams`, `bench_cells`) and — written LAST — a 1-row `ledger`
     * parquet carrying the two restart scalars (max_rank, last_batch_id)
-    * plus the build conventions (tau, shingle_n, hash_tag, id_col,
-    * bench_n, bench_m, bench_k). The ledger is the COMMIT RECORD: a crash
-    * mid-persist leaves a generation WITHOUT a committed ledger, which
-    * restore skips — the prior complete generation stays restorable, so
-    * no rename dance is needed (completeness = "the last-written artifact
+    * plus the build conventions (tau, shingle_n, hash_tag = the
+    * [[ShingleHash]] name, id_col, bench_n, bench_m, bench_k). The ledger
+    * is the COMMIT RECORD: a crash mid-persist leaves a generation WITHOUT
+    * a committed ledger, which restore skips — the prior complete
+    * generation stays restorable, so no rename dance is needed (completeness = "the last-written artifact
     * is readable", checked by reading the 1-row ledger back — NOT by the
     * `_SUCCESS` marker, which a deployment may disable via
     * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false`). Generations
@@ -694,7 +660,7 @@ object Curation {
     // ledger LAST — writing it is what commits the generation
     import spark.implicits._
     Seq((state.maxRank, state.lastBatchId, state.tau, state.shingleN,
-        state.hashTag, state.benchIdx.idCol, state.benchIdx.n,
+        state.shingleHash.name, state.benchIdx.idCol, state.benchIdx.n,
         state.benchIdx.m, state.benchIdx.k))
       .toDF("max_rank", "last_batch_id", "tau", "shingle_n", "hash_tag",
         "id_col", "bench_n", "bench_m", "bench_k")
@@ -709,12 +675,10 @@ object Curation {
     * (one whose ledger, written last, reads back as a row — marker-file
     * independent; a crash-truncated partial generation is skipped by
     * construction),
-    * reads the scalars and build conventions from the ledger, and loads
-    * the six frames. `shingleHash` must be passed because a Column
-    * function cannot be serialized — but its fingerprint IS validated
-    * against the persisted one, so a restore under a different hash
-    * convention than the build fails loud instead of silently mis-probing
-    * the stored postings (the [[ServiceState.hashTag]] seam).
+    * reads the scalars and build conventions from the ledger — the hash
+    * through [[ShingleHash.fromName]], which fails loud on a name it does
+    * not know (a ledger written before the closed type holds expression
+    * text there) — and loads the six frames.
     *
     * The loaded frames are PINNED (`pin`, explicit because Scala allows
     * default arguments on only one `restoreServiceState` overload — pass
@@ -727,7 +691,6 @@ object Curation {
   def restoreServiceState(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
-      shingleHash: Column => Column,
       pin: Pin): ServiceState = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -740,11 +703,7 @@ object Curation {
         "commits by its ledger (written last); only crash-truncated partials exist")
     val gdir = s"$dir/gen=${committed.max}"
     val led = spark.read.parquet(s"$gdir/ledger").head()
-    val tag = ServiceState.hashTag(shingleHash)
-    require(led.getAs[String]("hash_tag") == tag,
-      s"restoreServiceState: the persisted state was built under hash convention " +
-        s"'${led.getAs[String]("hash_tag")}' but the caller passed '$tag' — " +
-        "probing stored postings under a different hash silently mis-scores")
+    val hash = ShingleHash.fromName(led.getAs[String]("hash_tag"))
     def load(name: String) = pin(spark.read.parquet(s"$gdir/$name"))
     val bi = Decontaminate.BenchIndex(
       load("bench_grams"), load("bench_cells"), led.getAs[String]("id_col"),
@@ -753,7 +712,7 @@ object Curation {
       load("index"), load("posts"), load("freq"), load("cur"), bi,
       led.getAs[Long]("max_rank"), led.getAs[Long]("last_batch_id"),
       tau = led.getAs[Double]("tau"), shingleN = led.getAs[Int]("shingle_n"),
-      hashTag = tag)
+      shingleHash = hash)
   }
 
   /** One STREAMING service micro-batch — the `foreachBatch` body of a
@@ -763,7 +722,10 @@ object Curation {
     * bloom, stage 4 the stored postings — nothing corpus- or
     * bench-proportional rebuilt), [[appendState]] the accepted docs, and
     * advance the high-water rank. Returns the PINNED accepted rows for
-    * the caller's sink.
+    * the caller's sink. The tick runs under the handle's build conventions
+    * — `state.tau`, `state.shingleN`, `state.shingleHash` and the bench
+    * index's gram size `state.benchIdx.n` — so a probe can never disagree
+    * with the stored postings it reads.
     *
     * The monotone-rank guard is the tick contract made EXECUTABLE: greedy
     * composability (the object header) requires every batch's ranks to
@@ -796,12 +758,8 @@ object Curation {
       langCol: String,
       quality: Column,
       minQuality: Double = 0.5,
-      decontN: Int = 4,
       decontShared: Int = 5,
-      shingleN: Int = 5,
-      tau: Double = 0.5,
       strategy: SimilarityStrategy = SimilarityStrategy.Auto,
-      shingleHash: Column => Column = xxhash64(_),
       pin: Pin = Pin.LocalCheckpoint,
       batchId: Option[Long] = None): DataFrame = {
     // at-least-once idempotence (the canonical foreachBatch discipline):
@@ -810,17 +768,6 @@ object Curation {
     // an already-seen batchId SKIPS instead of wedging on the rank guard
     // below (which exists for true FEED replays, a different fault)
     if (batchId.exists(_ <= state.lastBatchId)) return batch.limit(0)
-    // build-convention guard (the BenchIndex.n seam, extended): probing
-    // postings built under a different prefix order (tau), shingle width,
-    // or hash than the tick's arguments produces a WRONG accepted set with
-    // no error possible from the stored rows alone
-    require(state.tau == tau && state.shingleN == shingleN &&
-        state.hashTag == ServiceState.hashTag(shingleHash),
-      s"serviceTick: tick conventions (tau=$tau, shingleN=$shingleN, " +
-        s"hash=${ServiceState.hashTag(shingleHash)}) do not match the state's build " +
-        s"conventions (tau=${state.tau}, shingleN=${state.shingleN}, " +
-        s"hash=${state.hashTag}) — the stored signature/postings index was built " +
-        "under those; probing it under different ones silently mis-scores")
     val mm = batch.agg(
       count(lit(1)).as("n"),
       count(col(idCol).cast("long")).as("nc"),
@@ -852,14 +799,15 @@ object Curation {
         "ranks, which breaks greedy tick composability (the tick contract)")
     val accepted = pin(tickIndexed(
       state.index, batch, batch.limit(0) /* ignored: benchIdx carries the set */,
-      idCol, textCol, langCol, quality, minQuality, decontN, decontShared,
-      shingleN, tau, pin, indexPinned = true,
+      idCol, textCol, langCol, quality, minQuality, state.benchIdx.n, decontShared,
+      state.shingleN, state.tau, pin, indexPinned = true,
       corpusPostings = Some((state.frozenFreq, state.posts)),
       strategy = strategy, benchIdx = Some(state.benchIdx),
-      shingleHash = shingleHash))
+      shingleHash = state.shingleHash))
     val (i2, p2, f2) = appendState(
       state.index, state.posts, state.currentFreq, accepted,
-      idCol, textCol, langCol, state.frozenFreq, shingleN, tau, shingleHash, pin)
+      idCol, textCol, langCol, state.frozenFreq, state.shingleN, state.tau,
+      state.shingleHash, pin)
     state.index = i2
     state.posts = p2
     state.currentFreq = f2
@@ -927,7 +875,7 @@ object Curation {
       tau: Double = 0.5,
       pin: Pin = Pin.LocalCheckpoint,
       strategy: SimilarityStrategy = SimilarityStrategy.Auto,
-      shingleHash: Column => Column = xxhash64(_)): DataFrame =
+      shingleHash: ShingleHash = ShingleHash.XxHash64): DataFrame =
     tickIndexed(
       signatures(corpus, idCol, textCol, langCol, shingleN, shingleHash),
       batch, bench, idCol, textCol, langCol, quality,
@@ -944,10 +892,11 @@ object Curation {
     * tick (CurationSpec proves the indexed loop ≡ the one-combined-tick
     * output, and SparkEntry q248 gates it against the q237 oracle).
     *
-    * `shingleN` must match the index's build parameter — a mismatch makes
-    * the batch and corpus shingle spaces incomparable (no error is
-    * possible from the hashes alone, so this is a CONTRACT, documented
-    * rather than checked).
+    * `shingleN` and `shingleHash` must match the index's build — a
+    * mismatch makes the batch and corpus shingle spaces incomparable (no
+    * error is possible from the hashes alone, so this is a CONTRACT,
+    * documented rather than checked; [[serviceTick]] reads both off its
+    * handle).
     *
     * `corpusPostings` — the persistable `(freq, posts)` from
     * [[postingsIndex]] (same idCol/langCol, tau ≤ this tick's): the
@@ -1005,7 +954,7 @@ object Curation {
       strategy: SimilarityStrategy = SimilarityStrategy.Auto,
       stageHook: (String, DataFrame) => DataFrame = (_, df) => df,
       benchIdx: Option[Decontaminate.BenchIndex] = None,
-      shingleHash: Column => Column = xxhash64(_)): DataFrame = {
+      shingleHash: ShingleHash = ShingleHash.XxHash64): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1]: $tau")
     require(minQuality >= 0.0, s"minQuality must be non-negative: $minQuality")
     require(idCol != "_cid", "idCol '_cid' clashes with the tick's working column")
@@ -1048,9 +997,8 @@ object Curation {
         dg === col("_ctext"), "left_anti")))
 
     // stage 4 — near-dup: shingle the batch survivors once (column pruning
-    // drops the signature digest — only `_h` is computed here). The hash
-    // convention must match the index build's (`shingleHash` — a contract
-    // like shingleN; no error is possible from the hashes alone)...
+    // drops the signature digest — only `_h` is computed here), under the
+    // index build's shingleN and shingleHash...
     val batchSh = stageHook("batch_signatures",
       pin(signatures(s3, idCol, textCol, langCol, shingleN, shingleHash).drop("_dg")))
     // ...reject any batch doc matching the standing corpus (corpus docs

@@ -79,7 +79,7 @@ object ExplainTickStages {
       graft.operators.Curation.signatures(batch, "doc_id", "text", "lang"))
     dump("signatures_md5slice",
       graft.operators.Curation.signatures(batch, "doc_id", "text", "lang",
-        shingleHash = sh => graft.functions.Kmv.hash(sh)))
+        shingleHash = graft.expressions.ShingleHash.Md5Slice))
 
     // generated-source dumps: a formatted plan cannot distinguish a
     // CodegenFallback expression (interpreted eval boundary) from a real

@@ -56,7 +56,7 @@ object PersistProbe {
     }
     println(s"PROBE   committed generation $gen at $pdir")
     val restored = tm("restoreServiceState (dir, pinned)") {
-      Curation.restoreServiceState(spark, pdir, xxhash64(_), Pin.LocalCheckpoint)
+      Curation.restoreServiceState(spark, pdir, Pin.LocalCheckpoint)
     }
     val acc2 = tm("serviceTick b2 on RESTORED handle") {
       val a = Curation.serviceTick(restored, b2, "doc_id", "text", "lang",

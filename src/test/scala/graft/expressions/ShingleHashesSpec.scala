@@ -62,7 +62,7 @@ class ShingleHashesSpec extends AnyFunSuite {
       val composed = collectArrays(sort_array(array_distinct(
         transform(TextFunctions.charShingles(col("text"), n), x => Kmv.hash(x)))))
       val fused = collectArrays(
-        ShingleHashes.hashedCharShingles(col("text"), n, md5Slice = true))
+        ShingleHashes.hashedCharShingles(col("text"), n, hash = ShingleHash.Md5Slice))
       assert(fused == composed, s"md5-slice mismatch at n=$n")
     }
   }

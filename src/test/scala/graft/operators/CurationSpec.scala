@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.expressions.ShingleHash
 
 /** Curation.tick: the incremental curation operator. The load-bearing
   * property is COMPOSABILITY — two sequential ticks must equal one combined
@@ -359,17 +360,24 @@ class CurationSpec extends AnyFunSuite {
     // portable md5-slice convention the oracle-replayable capstone uses
     // must accept exactly the docs the default xxhash64 index accepts
     val (corpus, batch) = mutationCorpus(83)
-    val mdHash = (sh: org.apache.spark.sql.Column) => graft.functions.Kmv.hash(sh)
-    def run(h: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+    val corpusDf = corpus.toDF("doc_id", "lang", "text")
+    def run(h: ShingleHash) =
       Curation.tickIndexed(
-        Curation.signatures(corpus.toDF("doc_id", "lang", "text"),
-          "doc_id", "text", "lang", shingleHash = h),
+        Curation.signatures(corpusDf, "doc_id", "text", "lang", shingleHash = h),
         batch.toDF("doc_id", "lang", "text"),
         Seq.empty[(Long, String, String)].toDF("doc_id", "lang", "text"),
         "doc_id", "text", "lang", quality = lit(1.0), minQuality = 0.0, tau = 0.5,
         shingleHash = h)
         .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(run(xxhash64(_)) == run(mdHash))
+    assert(run(ShingleHash.XxHash64) == run(ShingleHash.Md5Slice))
+    // the Md5Slice index holds exactly the composed Kmv.hash element sets —
+    // the reference form the DuckDB oracles re-derive
+    val md = Curation.signatures(corpusDf, "doc_id", "text", "lang",
+      shingleHash = ShingleHash.Md5Slice).select("doc_id", "_h")
+    val composed = corpusDf.select(col("doc_id"), sort_array(array_distinct(transform(
+      graft.functions.TextFunctions.charShingles(col("text"), 5),
+      x => graft.functions.Kmv.hash(x)))).as("_h"))
+    assert(md.exceptAll(composed).isEmpty && composed.exceptAll(md).isEmpty)
   }
 
   test("index delete contract: removing a corpus doc re-admits its blocked near-dup") {
@@ -999,11 +1007,11 @@ class CurationSpec extends AnyFunSuite {
     // parquet writes) — the dir restore must land on the combined output
     val gen0 = Curation.persistServiceState(state, dir)
     assert(gen0 == 0L)
-    val restored = Curation.restoreServiceState(spark, dir, xxhash64(_), Pin.LocalCheckpoint)
+    val restored = Curation.restoreServiceState(spark, dir, Pin.LocalCheckpoint)
     assert(restored.maxRank == state.maxRank &&
       restored.lastBatchId == state.lastBatchId &&
       restored.tau == state.tau && restored.shingleN == state.shingleN &&
-      restored.hashTag == state.hashTag,
+      restored.shingleHash == state.shingleHash,
       "restored scalars/conventions differ from the live handle's")
     val acc2 = Curation.serviceTick(restored, b2.toDF("doc_id", "lang", "text"),
       "doc_id", "text", "lang", quality = lit(1.0), minQuality = 0.0,
@@ -1037,7 +1045,7 @@ class CurationSpec extends AnyFunSuite {
     // still restores — simulate by deleting the marker from the committed gen
     assert(new java.io.File(s"$dir/gen=1/ledger/_SUCCESS").delete(),
       "_SUCCESS marker expected under the committed ledger")
-    val afterCrash = Curation.restoreServiceState(spark, dir, xxhash64(_), Pin.LocalCheckpoint)
+    val afterCrash = Curation.restoreServiceState(spark, dir, Pin.LocalCheckpoint)
     assert(afterCrash.maxRank == restored.maxRank &&
       afterCrash.lastBatchId == restored.lastBatchId,
       "crash-partial generation was not skipped")
@@ -1046,16 +1054,39 @@ class CurationSpec extends AnyFunSuite {
     // one above the crash-partial gen=2)
     val gen3 = Curation.persistServiceState(afterCrash, dir)
     assert(gen3 == 3L, s"stray gen names broke generation numbering: got $gen3")
-    // a restore under a DIFFERENT hash convention fails loud
+    // a ledger written before the closed hash type holds the hash's
+    // expression text in hash_tag: rewritten so by hand, it fails loud
+    val ledgerDir = s"$dir/gen=3/ledger"
+    val ledger = spark.read.parquet(ledgerDir)
+    val oldTag = xxhash64(lit("graft-hash-convention-probe")).toString
+    spark.createDataFrame(
+        java.util.Arrays.asList(ledger.withColumn("hash_tag", lit(oldTag)).collect(): _*),
+        ledger.schema)
+      .write.mode("overwrite").parquet(ledgerDir)
     val e = intercept[IllegalArgumentException] {
-      Curation.restoreServiceState(spark, dir, c => abs(xxhash64(c)), Pin.LocalCheckpoint)
+      Curation.restoreServiceState(spark, dir, Pin.LocalCheckpoint)
     }
     assert(e.getMessage.contains("hash convention"))
+    // an Md5Slice state persists and restores under its own convention,
+    // and the restored handle's next tick accepts what the live one does
+    val mdState = Curation.serviceState(corpus.toDF("doc_id", "lang", "text"), bench,
+      "doc_id", "text", "lang", shingleHash = ShingleHash.Md5Slice)
+    Curation.serviceTick(mdState, b1.toDF("doc_id", "lang", "text"),
+      "doc_id", "text", "lang", quality = lit(1.0), minQuality = 0.0, batchId = Some(0L))
+    val mdDir = Files.createTempDirectory("svc-persist-md5").toString
+    Curation.persistServiceState(mdState, mdDir)
+    val mdRestored = Curation.restoreServiceState(spark, mdDir, Pin.LocalCheckpoint)
+    assert(mdRestored.shingleHash == ShingleHash.Md5Slice)
+    def nextTick(st: Curation.ServiceState) =
+      Curation.serviceTick(st, b2.toDF("doc_id", "lang", "text"),
+        "doc_id", "text", "lang", quality = lit(1.0), minQuality = 0.0, batchId = Some(1L))
+        .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(nextTick(mdRestored) == nextTick(mdState))
     // a dir with ONLY partials fails loud instead of restoring nothing
     val dir2 = Files.createTempDirectory("svc-persist-partial").toString
     restored.index.write.mode("overwrite").parquet(s"$dir2/gen=0/index")
     val e2 = intercept[IllegalArgumentException] {
-      Curation.restoreServiceState(spark, dir2, xxhash64(_), Pin.LocalCheckpoint)
+      Curation.restoreServiceState(spark, dir2, Pin.LocalCheckpoint)
     }
     assert(e2.getMessage.contains("COMMITTED"))
   }
@@ -1093,33 +1124,31 @@ class CurationSpec extends AnyFunSuite {
     assert(e.getMessage.contains("duplicate ids"))
   }
 
-  test("serviceTick fails loud when tick conventions differ from the build's") {
-    val corpus = Seq((1L, "l0", "abcdefghijkl")).toDF("doc_id", "lang", "text")
-    val state = Curation.serviceState(
-      corpus, corpus.limit(0), "doc_id", "text", "lang", shingleN = 5, tau = 0.5)
-    val batch = Seq((7L, "l0", "mnopqrstuvwx")).toDF("doc_id", "lang", "text")
-    // a different tau, shingleN, or hash probes stored postings built under
-    // a different prefix order / hash convention — wrong accepted set with
-    // no error possible from the stored rows alone
-    val eTau = intercept[IllegalArgumentException] {
-      Curation.serviceTick(state, batch, "doc_id", "text", "lang",
-        quality = lit(1.0), minQuality = 0.0, tau = 0.7)
-    }
-    assert(eTau.getMessage.contains("build conventions"))
-    val eN = intercept[IllegalArgumentException] {
-      Curation.serviceTick(state, batch, "doc_id", "text", "lang",
-        quality = lit(1.0), minQuality = 0.0, shingleN = 3)
-    }
-    assert(eN.getMessage.contains("build conventions"))
-    val eHash = intercept[IllegalArgumentException] {
-      Curation.serviceTick(state, batch, "doc_id", "text", "lang",
-        quality = lit(1.0), minQuality = 0.0,
-        shingleHash = c => abs(xxhash64(c)))
-    }
-    assert(eHash.getMessage.contains("build conventions"))
-    // matching conventions still tick
-    assert(Curation.serviceTick(state, batch, "doc_id", "text", "lang",
-      quality = lit(1.0), minQuality = 0.0).count() == 1L)
+  test("serviceTick ticks under the handle's conventions") {
+    // the handle carries the tau, shingle width, hash and bench gram size
+    // it was built under, and a tick on it takes none of them as arguments:
+    // it must accept exactly what tickIndexed accepts at those conventions
+    val (corpus, batch) = mutationCorpus(257)
+    val corpusDf = corpus.toDF("doc_id", "lang", "text")
+    val batchDf = batch.toDF("doc_id", "lang", "text")
+    val bench = Seq((9000L, "lx", "north south east west up down left right"))
+      .toDF("doc_id", "lang", "text")
+    val state = Curation.serviceState(corpusDf, bench, "doc_id", "text", "lang",
+      decontN = 3, shingleN = 3, tau = 0.7, shingleHash = ShingleHash.Md5Slice)
+    assert(state.tau == 0.7 && state.shingleN == 3 &&
+      state.shingleHash == ShingleHash.Md5Slice && state.benchIdx.n == 3)
+    val viaHandle = Curation.serviceTick(state, batchDf, "doc_id", "text", "lang",
+        quality = lit(1.0), minQuality = 0.0)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    val byHand = Curation.tickIndexed(
+        Curation.signatures(corpusDf, "doc_id", "text", "lang",
+          shingleN = 3, shingleHash = ShingleHash.Md5Slice),
+        batchDf, bench, "doc_id", "text", "lang", quality = lit(1.0), minQuality = 0.0,
+        decontN = 3, shingleN = 3, tau = 0.7, shingleHash = ShingleHash.Md5Slice)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(viaHandle == byHand)
+    // not vacuous: the default conventions accept a different set here
+    assert(viaHandle != runTick(corpus, batch, 0.5))
   }
 
   test("serviceTick fails loud on ids the rank contract cannot order") {

@@ -1,29 +1,29 @@
 #!/usr/bin/env python3
 """Scale-validation analysis: BENCH_DETAIL_SF1.json (sf1 single-run sweep)
-vs the standing sf0.1 per-query baselines scaled by the data factor.
+vs each query's sf0.1 bar scaled by the data factor. graft.Bench writes
+every query's bar (its catalog.Query barSec, a 32-core sf0.1 number) into
+its detail entry as "bar"; a query without one is skipped, and the script
+exits non-zero when no query carries one.
 Usage: python3 tools/sf1_analysis.py [factor]"""
-import json, re, sys
+import json, sys
 
 factor = float(sys.argv[1]) if len(sys.argv) > 1 else 10.0
 sf1 = json.load(open("BENCH_DETAIL_SF1.json"))["queries"]
 
-# standing sf0.1 baselines from Bench.scala
-base = {}
-src = open("src/main/scala/graft/Bench.scala").read()
-for m in re.finditer(r'"(q\d+_\w+)"\s*->\s*([0-9.]+)', src):
-    base[m.group(1)] = float(m.group(2))
+base = {name: d["bar"] for name, d in sf1.items() if "bar" in d}
+if not base:
+    sys.exit("BENCH_DETAIL_SF1.json: no query entry carries a \"bar\" — "
+             "rerun the sweep with a graft.Bench that writes one")
 
 rows = []
-for name, d in sf1.items():
-    b = base.get(name)
-    if b is None:
-        continue
+for name, b in base.items():
+    sec = sf1[name]["sec"]
     # ratio vs linear scaling from a 0.3s-floored baseline (sub-0.3s
     # queries are pure job-submission latency, which doesn't scale with
     # data); the >5s absolute gate below is what keeps fixed-latency
     # queries from flagging spuriously
     lin = max(b, 0.3) * factor
-    rows.append((name, d["sec"], b, d["sec"] / lin))
+    rows.append((name, sec, b, sec / lin))
 
 rows.sort(key=lambda r: -r[1])
 total = sum(r[1] for r in rows)
