@@ -154,17 +154,22 @@ object Shared {
   private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
   sys.addShutdownHook(exitDirs.forEach(d => if (java.nio.file.Files.exists(d)) deleteTree(d)))
 
+  /** `d`, deleted with its contents when the JVM exits (a `deleteOnExit`
+    * on a directory is a no-op once it has contents).
+    */
+  private[graft] def deleteAtExit(d: java.nio.file.Path): java.nio.file.Path = {
+    exitDirs.add(d)
+    d
+  }
+
   /** A fresh directory under the system temp dir, deleted with its
     * contents when the JVM exits — for queries whose returned frame still
     * reads the directory lazily (a stored IVF index is read at action time;
     * a restored monitor state pins lazily in its last stage), so it cannot
     * go when the query's build function returns.
     */
-  private[catalog] def exitScopedDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    exitDirs.add(d)
-    d.toString
-  }
+  private[graft] def exitScopedDir(prefix: String): String =
+    deleteAtExit(java.nio.file.Files.createTempDirectory(prefix)).toString
 
   /** Shared oracle fragment: the document quality score (q13's formula),
     * guarded for empty/whitespace-only docs — DuckDB's bare formula

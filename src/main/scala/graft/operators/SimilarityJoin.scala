@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.expressions.VectorExpressions
+import graft.expressions.{HashExpressions, VectorExpressions}
 
 /** How [[SimilarityJoin]] generates its candidate pairs (both entry
   * points). All strategies are EXACT (identical output); they differ only
@@ -17,8 +17,9 @@ object SimilarityStrategy {
     * cheaper than building the prefix postings — or, on the self-join, when
     * a lower bound on each block's prefix candidate volume (from its
     * distinct element count) already exceeds the block's all-pairs volume;
-    * otherwise measure both candidate volumes on the prepared inputs and
-    * run the cheaper plan — two tiny aggregation jobs buy the decision.
+    * otherwise measure both candidate volumes per block on the prepared
+    * inputs and route each block to its cheaper plan — one aggregation job
+    * buys the decision (an unblocked call is one block).
     * Past the size check the verify is the join's dominant cost, so Auto
     * returns its verified pairs pinned through the call's `pin`: a caller
     * that reads the output twice (a stage count and a later filter) runs
@@ -171,24 +172,47 @@ object SimilarityJoin {
   private def indexLen(s: Column, threshold: Double): Column =
     (s - ceil(s.cast("double") * (2 * threshold / (1 + threshold)) - lit(1e-9)) + 1).cast("int")
 
-  /** Exact verify on candidate id pairs: join the set arrays back, apply the
-    * exact size prune (J ≤ min/max of the DISTINCT-set sizes; −0.5 slack
-    * keeps FP rounding of t·max from dropping boundary pairs), then the
-    * early-exit sorted-merge Jaccard kernel.
+  /** The exact verify every exact engine ends in, on paired set columns
+    * `_as`/`_bs`: the exact size prune (J ≤ min/max of the DISTINCT-set
+    * sizes; −0.5 slack keeps FP rounding of t·max from dropping boundary
+    * pairs), then the early-exit sorted-merge Jaccard kernel as `_j`, kept
+    * where `_j` ≥ t.
+    */
+  private def verified(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .filter(least(size(col("_as")), size(col("_bs")))
+        >= lit(threshold) * greatest(size(col("_as")), size(col("_bs"))) - lit(0.5))
+      .withColumn("_j",
+        VectorExpressions.jaccardSortedMin(col("_as"), col("_bs"), threshold))
+      .filter(col("_j") >= threshold)
+
+  /** Exact verify on candidate id pairs: join the set arrays back, then
+    * [[verified]].
     */
   private def verify(
       candidates: DataFrame,
       aSets: DataFrame, // (_aid, _as)
       bSets: DataFrame, // (_bid, _bs)
       threshold: Double): DataFrame =
-    candidates
-      .join(aSets, Seq("_aid"))
-      .join(bSets, Seq("_bid"))
-      .filter(least(size(col("_as")), size(col("_bs")))
-        >= lit(threshold) * greatest(size(col("_as")), size(col("_bs"))) - lit(0.5))
-      .withColumn("_j",
-        VectorExpressions.jaccardSortedMin(col("_as"), col("_bs"), threshold))
-      .filter(col("_j") >= threshold)
+    verified(candidates.join(aSets, Seq("_aid")).join(bSets, Seq("_bid")), threshold)
+
+  /** MinHash banding, the candidate key of [[SimilarityStrategy.MinHashLsh]]:
+    * one (keyCols…, _band, _bh) row per band of each set in `setCol`, `_bh`
+    * hashing the band's `rowsPerBand` signature slots. Empty sets are
+    * dropped BEFORE signing: an all-sentinel signature would cross-match
+    * every other empty set, and the exact engines pair them with nothing,
+    * since J(∅, X) < t for any t > 0.
+    */
+  private def banded(
+      df: DataFrame, keyCols: Seq[String], setCol: String,
+      bands: Int, rowsPerBand: Int): DataFrame =
+    df.filter(size(col(setCol)) > 0)
+      .withColumn("_mh", HashExpressions.minhashSignature(col(setCol), bands * rowsPerBand))
+      .select(keyCols.map(col) :+
+        posexplode(array((0 until bands).map { bd =>
+          hash((0 until rowsPerBand).map(r =>
+            element_at(col("_mh"), bd * rowsPerBand + r + 1)): _*)
+        }: _*)).as(Seq("_band", "_bh")): _*)
 
   /** Build the PERSISTABLE prefix-postings index over a standing frame —
     * the corpus-side half of [[jaccardJoin]]'s prefix engine, precomputed
@@ -239,9 +263,7 @@ object SimilarityJoin {
       s"idCol $idCol must not appear in blockCols: $blockCols")
     val base = df.select(
       (col(idCol) +: blockCols.map(col)) :+ col(setCol).as("_set"): _*)
-    val freq = frozenFreq.getOrElse(
-      base.select(explode(col("_set")).as("h"))
-        .groupBy(col("h")).agg(count(lit(1)).as("_df")))
+    val freq = frozenFreq.getOrElse(blockDocFreq(base, Nil))
     (freq, prefixPostings(base, idCol +: blockCols, freq, threshold))
   }
 
@@ -275,8 +297,9 @@ object SimilarityJoin {
     * path would post — both sides, or only the right one under
     * `leftIndex` — and runs the salted cross directly when W is within
     * [[PostCostSteps]] of them. Otherwise it builds the postings, measures
-    * Σ_h n_L(h)·n_R(h) against Σ_b |L_b|·|R_b| and runs the cheaper exact
-    * plan, per block when blocked. That plan's output — the verified
+    * Σ_h n_L(h)·n_R(h) against |L_b|·|R_b| in each block (an unblocked call
+    * is one block) and routes each block to its cheaper exact plan — see
+    * [[joinBlockVolumes]]. That plan's output — the verified
     * (id_l, id_r, jac) rows only — is pinned through `pin`, so later reads
     * scan the pairs instead of re-running the verify; the pin's action runs
     * the plan's map stages during the call. Below the size check, with a
@@ -326,10 +349,9 @@ object SimilarityJoin {
     // full-width copy of data that re-reads for free, so the projection is
     // left lazy over the caller's materialization instead — at index scale
     // (q248's corpus signatures) that redundant copy dominates tick cost.
-    val l = (if (leftPinned) Pin.Off else pin)(left.select(
-      (col(leftId).cast("long").as("_aid") +: blockCols.map(col)) :+ col(setCol).as("_as"): _*))
-    val r = (if (rightPinned) Pin.Off else pin)(right.select(
-      (col(rightId).cast("long").as("_bid") +: blockCols.map(col)) :+ col(setCol).as("_bs"): _*))
+    val (ls, rs) = joinSides(left, leftId, right, rightId, setCol, blockCols)
+    val l = (if (leftPinned) Pin.Off else pin)(ls)
+    val r = (if (rightPinned) Pin.Off else pin)(rs)
 
     def buildPosts(pinPosts: Boolean): (DataFrame, DataFrame) = {
       // pin the postings ONLY when they'll be read twice (Auto: cost probe
@@ -349,22 +371,13 @@ object SimilarityJoin {
           (idxPosts.select(
             (col(leftId).cast("long").as("_aid") +: blockCols.map(col)) ++
               Seq(col("_sz"), col("_pos"), col("h")): _*),
-            pp(prefixPostings(
-              r.withColumnRenamed("_bs", "_set"), "_bid" +: blockCols, idxFreq, threshold)))
+            pp(sidePostings(r, blockCols, idxFreq, threshold)))
         case None =>
-          // global rarest-first order: document frequency over BOTH frames.
-          // Pinned too — it feeds both prefixPostings calls, and recomputing
-          // it would re-read both (already pinned) sides and re-aggregate.
-          // One GLOBAL order even under blockCols: the lossless-prefix proof
-          // only needs SOME consistent element order, and a shared one keeps
-          // the frequency pass a single aggregation.
-          val freq = pin(l.select(explode(col("_as")).as("h"))
-            .unionAll(r.select(explode(col("_bs")).as("h")))
-            .groupBy(col("h")).agg(count(lit(1)).as("_df")))
-          (pp(prefixPostings(
-              l.withColumnRenamed("_as", "_set"), "_aid" +: blockCols, freq, threshold)),
-            pp(prefixPostings(
-              r.withColumnRenamed("_bs", "_set"), "_bid" +: blockCols, freq, threshold)))
+          // pinned: the order feeds both sides' postings, and recomputing it
+          // would re-read both (already pinned) sides and re-aggregate
+          val freq = pin(joinFreq(l, r))
+          (pp(sidePostings(l, blockCols, freq, threshold)),
+            pp(sidePostings(r, blockCols, freq, threshold)))
       }
     }
 
@@ -389,30 +402,15 @@ object SimilarityJoin {
       val rb = rf.withColumn("_g", pmod(xxhash64(col("_bid")), lit(buckets)).cast("int"))
       val lb = lf.withColumn("_g",
         explode(sequence(lit(0), lit(buckets - 1)).cast("array<int>")))
-      lb.join(rb, "_g" +: blockCols)
-        .filter(least(size(col("_as")), size(col("_bs")))
-          >= lit(threshold) * greatest(size(col("_as")), size(col("_bs"))) - lit(0.5))
-        .withColumn("_j",
-          VectorExpressions.jaccardSortedMin(col("_as"), col("_bs"), threshold))
-        .filter(col("_j") >= threshold)
+      verified(lb.join(rb, "_g" +: blockCols), threshold)
     }
 
     // the approximate tier (see SimilarityStrategy.MinHashLsh): band-bucket
-    // candidates across the two frames + the same exact verify. Empty sets
-    // sign as all-sentinel and would cross-match — excluded up front.
+    // candidates across the two frames + the same exact verify
     def minHashPath(bands: Int, rowsPerBand: Int): DataFrame = {
-      val k = bands * rowsPerBand
-      def banded(df: DataFrame, id: String, setC: String) = df
-        .filter(size(col(setC)) > 0)
-        .withColumn("_mh",
-          graft.expressions.HashExpressions.minhashSignature(col(setC), k))
-        .select((col(id) +: blockCols.map(col)) :+
-          posexplode(array((0 until bands).map { bd =>
-            hash((0 until rowsPerBand).map(rr =>
-              element_at(col("_mh"), bd * rowsPerBand + rr + 1)): _*)
-          }: _*)).as(Seq("_band", "_bh")): _*)
-      val candidates = banded(l, "_aid", "_as")
-        .join(banded(r, "_bid", "_bs"), Seq("_band", "_bh") ++ blockCols)
+      val candidates = banded(l, "_aid" +: blockCols, "_as", bands, rowsPerBand)
+        .join(banded(r, "_bid" +: blockCols, "_bs", bands, rowsPerBand),
+          Seq("_band", "_bh") ++ blockCols)
         .select(col("_aid"), col("_bid"))
         .distinct()
       verify(candidates, l.drop(blockCols: _*), r.drop(blockCols: _*), threshold)
@@ -434,54 +432,73 @@ object SimilarityJoin {
         named(crossPath(l, r))
       // above the size check the verify dominates the join, so every route
       // from here pins its verified pairs: later reads scan them instead of
-      // re-running the verify
-      case SimilarityStrategy.Auto if blockCols.isEmpty =>
-        // one block — one regime: global volume comparison. Σ_h nL·nR is
-        // computed as Σ over LEFT POSTING ROWS of nR(h) (exact integer
-        // arithmetic — same value): only the small probe side is
-        // aggregated per element, so the corpus-sized left postings stream
-        // through a runtime-broadcast join with NO left-side exchange —
-        // the former per-call left groupBy was corpus-proportional on the
-        // indexed-tick path (r15; guide §2.4)
-        val posts = buildPosts(pinPosts = true)
-        val nr = posts._2.groupBy(col("h")).count().withColumnRenamed("count", "_nr")
-        // three independent bounded probes — overlap them (guide §2.6)
-        val (cPrefix, cCross) = SimilarityJoin.par2(
-          posts._1.select(col("h")).join(nr, Seq("h"))
-            .agg(coalesce(sum(col("_nr").cast("double")), lit(0.0)))
-            .head().getDouble(0),
-          { val (cl, cr) = SimilarityJoin.par2(l.count(), r.count())
-            cl.toDouble * cr.toDouble })
-        pin(named(if (cPrefix <= cCross) prefixPath(posts) else crossPath(l, r)))
+      // re-running the verify. PER-BLOCK routing, mirroring
+      // [[jaccardSelfJoin]]: the regime is a property of each block.
       case SimilarityStrategy.Auto =>
-        // PER-BLOCK routing, mirroring [[jaccardSelfJoin]]: the regime is a
-        // property of each block — route each to its cheaper exact engine
-        // and union the outputs (identical pairs either way)
         val posts = buildPosts(pinPosts = true)
-        val regimes = crossBlockVolumes(l, r, posts, blockCols)
-          .select(blockCols.map(col) :+ (col("_cp") <= col("_cb")).as("_pr"): _*)
-        val Seq(nPrefix, nBlocks) = regimes
-          .agg(sum(col("_pr").cast("long")), count(lit(1)))
-          .head().toSeq.map(v => if (v == null) 0L else v.asInstanceOf[Long])
-        pin(named(if (nPrefix == nBlocks) prefixPath(posts)
-        else if (nPrefix == 0L) crossPath(l, r)
-        else {
-          // mixed: split by the regime flag. Postings restricted to
-          // prefix-regime blocks stay lossless (one global order; filters,
-          // not rebuilds); cross-regime blocks run the salted cross on the
-          // filtered frames. prefixPath/crossPath address columns by NAME,
-          // so the regime join needs no column re-ordering.
-          val pr = regimes.filter(col("_pr")).drop("_pr")
-          val cr = regimes.filter(!col("_pr")).drop("_pr")
-          val keep = Seq(col("_aid"), col("_bid"), col("_j"))
-          prefixPath((posts._1.join(pr, blockCols.toSeq), posts._2.join(pr, blockCols.toSeq)))
-            .select(keep: _*)
-            .unionAll(
-              crossPath(l.join(cr, blockCols.toSeq), r.join(cr, blockCols.toSeq))
-                .select(keep: _*))
-        }))
+        pin(routeBlocks(crossBlockVolumes(l, r, posts, blockCols), blockCols,
+          b => named(prefixPath((inBlocks(posts._1, blockCols, b), inBlocks(posts._2, blockCols, b)))),
+          b => named(crossPath(inBlocks(l, blockCols, b), inBlocks(r, blockCols, b)))))
     }
   }
+
+  /** [[jaccardJoin]]'s two side projections, (_aid, blockCols…, _as) and
+    * (_bid, blockCols…, _bs).
+    */
+  private def joinSides(
+      left: DataFrame, leftId: String, right: DataFrame, rightId: String,
+      setCol: String, blockCols: Seq[String]): (DataFrame, DataFrame) = {
+    def side(df: DataFrame, id: String, idAs: String, setAs: String) = df.select(
+      (col(id).cast("long").as(idAs) +: blockCols.map(col)) :+ col(setCol).as(setAs): _*)
+    (side(left, leftId, "_aid", "_as"), side(right, rightId, "_bid", "_bs"))
+  }
+
+  /** [[jaccardJoin]]'s global rarest-first order: document frequency over
+    * BOTH sides' sets. One GLOBAL order even under blockCols: the
+    * lossless-prefix proof only needs SOME consistent element order, and a
+    * shared one keeps the frequency pass a single aggregation.
+    */
+  private def joinFreq(l: DataFrame, r: DataFrame): DataFrame =
+    blockDocFreq(l.select(col("_as").as("_set")).unionAll(r.select(col("_bs").as("_set"))), Nil)
+
+  /** Prefix postings (id, blockCols…, _sz, _pos, h) of one [[joinSides]]
+    * side under the order `freq`.
+    */
+  private def sidePostings(
+      side: DataFrame, blockCols: Seq[String], freq: DataFrame, threshold: Double): DataFrame =
+    prefixPostings(side.withColumnRenamed(side.columns.last, "_set"),
+      side.columns.head +: blockCols, freq, threshold)
+
+  /** Auto's per-block router, the only one in either join. `volumes` holds
+    * one row per block (blockCols…, _cp, _cb): the prefix engine's
+    * candidate volume and the other exact engine's. One action counts the
+    * blocks where prefix is no dearer. When every block is in one regime —
+    * always so unblocked, where the frame is one block — that engine runs
+    * alone; otherwise each runs on its regime's blocks (`prefix`/`other`
+    * take the regime filter, None for every block) and the outputs union,
+    * the same pairs either way. AQE plans the regime joins.
+    */
+  private def routeBlocks(
+      volumes: DataFrame, blockCols: Seq[String],
+      prefix: Option[DataFrame] => DataFrame,
+      other: Option[DataFrame] => DataFrame): DataFrame = {
+    val regimes = volumes
+      .select(blockCols.map(col) :+ (col("_cp") <= col("_cb")).as("_pr"): _*)
+    val Seq(nPrefix, nBlocks) = regimes
+      .agg(sum(col("_pr").cast("long")), count(lit(1)))
+      .head().toSeq.map(v => if (v == null) 0L else v.asInstanceOf[Long])
+    if (nPrefix == nBlocks) prefix(None)
+    else if (nPrefix == 0L) other(None)
+    else prefix(Some(regimes.filter(col("_pr")).drop("_pr")))
+      .unionAll(other(Some(regimes.filter(!col("_pr")).drop("_pr"))))
+  }
+
+  /** `df` on the blocks of a regime filter (None: every block), in its own
+    * column order: the self-join's engines address columns by position. On
+    * postings built under one global order it is a filter, not a rebuild.
+    */
+  private def inBlocks(df: DataFrame, blockCols: Seq[String], blocks: Option[DataFrame]): DataFrame =
+    blocks.fold(df)(b => df.join(b, blockCols).select(df.columns.map(col): _*))
 
   /** Per-block cross-frame candidate volumes: `_cp` (prefix postings join
     * volume Σ_h nL·nR within the block) and `_cb` (salted full cross
@@ -492,10 +509,9 @@ object SimilarityJoin {
     *
     * `_cp` is computed as Σ over LEFT POSTING ROWS of nR(h) — the same
     * exact integer quantity as Σ_h nL·nR, with only the (small) probe side
-    * aggregated per element: the corpus-sized left postings stream through
-    * a runtime-broadcast join with NO left-side exchange, where the former
-    * left groupBy was corpus-proportional per call on the indexed-tick
-    * path (r15; guide §2.4).
+    * aggregated per element: the corpus-sized left postings of the indexed
+    * tick stream through a runtime-broadcast join with NO left-side
+    * exchange.
     */
   private def crossBlockVolumes(
       l: DataFrame, r: DataFrame,
@@ -564,11 +580,12 @@ object SimilarityJoin {
     row.getDouble(0) <= PostCostSteps * row.getDouble(1)
   }
 
-  /** Per-(block, element) document frequencies (blockCols…, h, _df) of the
-    * self-join frame: the block's distinct element count D_b for
-    * [[prefixBounds]], and, summed over blocks ([[overBlocks]]), the global
-    * rarest-first order of the postings build. With no block columns it is
-    * that global order itself.
+  /** Per-(block, element) document frequencies (blockCols…, h, _df) over
+    * the sets `_set` of `base` — the one frequency pass: the block's
+    * distinct element count D_b for [[prefixBounds]], and, summed over
+    * blocks ([[overBlocks]]), the global rarest-first order of the postings
+    * build. With no block columns it is that global order itself — the
+    * order of [[prefixIndex]] and both joins, and [[dfCounts]].
     */
   private def blockDocFreq(base: DataFrame, blockCols: Seq[String]): DataFrame =
     base.select(blockCols.map(col) :+ explode(col("_set")).as("h"): _*)
@@ -674,9 +691,10 @@ object SimilarityJoin {
     * directly — the low-diversity shape of a corpus whose blocks share a
     * few thousand distinct shingles. Otherwise Auto builds the postings
     * under the global order summed from the same frequencies, measures both
-    * volumes (two 1-row aggregation jobs — see [[selfJoinVolumes]]) and
-    * runs the cheaper plan; the routing is the same as without the bound
-    * in every case. The measured per-unit costs of the two engines agree
+    * volumes per block (one aggregation job — see [[selfJoinBlockVolumes]];
+    * an unblocked call is one block) and routes each block to its cheaper
+    * plan; the routing is the same as without the bound in every case. The
+    * measured per-unit costs of the two engines agree
     * within ~10% (sf1 calibration: 250 M block-pairs ≈ 49 s, 2.28 G
     * candidates ≈ 500 s), so the volumes compare directly. Both engines
     * produce identical output (spec-proved), so the choice is invisible to
@@ -745,56 +763,36 @@ object SimilarityJoin {
         .select(least(col("_aid"), col("_bid")).as("_aid"),
           greatest(col("_aid"), col("_bid")).as("_bid"))
         .distinct()
-      verify(
-          candidates,
-          base.select(col("_id").as("_aid"), col("_set").as("_as")),
-          base.select(col("_id").as("_bid"), col("_set").as("_bs")),
-          threshold)
-        .select(col("_aid").as("id_a"), col("_bid").as("id_b"), col("_j").as("jac"))
+      verifyCandidates(candidates)
     }
 
+    def named(df: DataFrame): DataFrame =
+      df.select(col("_aid").as("id_a"), col("_bid").as("id_b"), col("_j").as("jac"))
+
+    // candidate id pairs, verified against the sets joined back from base
+    def verifyCandidates(candidates: DataFrame): DataFrame = named(verify(candidates,
+      base.select(col("_id").as("_aid"), col("_set").as("_as")),
+      base.select(col("_id").as("_bid"), col("_set").as("_bs")), threshold))
+
     def allPairsPath(pairsBase: DataFrame): DataFrame =
-      Pairs.allPairs(pairsBase, "_id", blockCols, buckets)
+      named(verified(Pairs.allPairs(pairsBase, "_id", blockCols, buckets)
         .select(col("a._id").as("_aid"), col("b._id").as("_bid"),
-          col("a._set").as("_as"), col("b._set").as("_bs"))
-        .filter(least(size(col("_as")), size(col("_bs")))
-          >= lit(threshold) * greatest(size(col("_as")), size(col("_bs"))) - lit(0.5))
-        .withColumn("_j",
-          VectorExpressions.jaccardSortedMin(col("_as"), col("_bs"), threshold))
-        .filter(col("_j") >= threshold)
-        .select(col("_aid").as("id_a"), col("_bid").as("id_b"), col("_j").as("jac"))
+          col("a._set").as("_as"), col("b._set").as("_bs")), threshold))
 
     // the approximate tier: band-bucket candidates + the same exact verify
-    // — see SimilarityStrategy.MinHashLsh for the recall contract. Empty
-    // sets are excluded BEFORE signing (an all-sentinel signature would
-    // cross-match every empty doc; the exact engines pair them with
-    // nothing, since J(∅, X) < t for any t > 0).
+    // — see SimilarityStrategy.MinHashLsh for the recall contract
     def minHashPath(bands: Int, rowsPerBand: Int): DataFrame = {
-      val k = bands * rowsPerBand
       // pinned: the banded table is BOTH sides of the candidate join, and
       // the signature pass (k XXH64 probes per element) is the expensive bit
-      val banded = pin(base
-        .filter(size(col("_set")) > 0)
-        .withColumn("_mh",
-          graft.expressions.HashExpressions.minhashSignature(col("_set"), k))
-        .select((col("_id") +: blockCols.map(col)) :+
-          posexplode(array((0 until bands).map { bd =>
-            hash((0 until rowsPerBand).map(r =>
-              element_at(col("_mh"), bd * rowsPerBand + r + 1)): _*)
-          }: _*)).as(Seq("_band", "_bh")): _*))
-      val candidates = banded
+      val bandRows = pin(banded(base, "_id" +: blockCols, "_set", bands, rowsPerBand))
+      val candidates = bandRows
         .toDF(("_aid" +: blockCols) ++ Seq("_band", "_bh"): _*)
-        .join(banded.toDF(("_bid" +: blockCols) ++ Seq("_band", "_bh"): _*),
+        .join(bandRows.toDF(("_bid" +: blockCols) ++ Seq("_band", "_bh"): _*),
           Seq("_band", "_bh") ++ blockCols)
         .filter(col("_aid") < col("_bid"))
         .select(col("_aid"), col("_bid"))
         .distinct()
-      verify(
-          candidates,
-          base.select(col("_id").as("_aid"), col("_set").as("_as")),
-          base.select(col("_id").as("_bid"), col("_set").as("_bs")),
-          threshold)
-        .select(col("_aid").as("id_a"), col("_bid").as("id_b"), col("_j").as("jac"))
+      verifyCandidates(candidates)
     }
 
     // the volume bound's frequencies: built only once Auto's size check has
@@ -817,49 +815,15 @@ object SimilarityJoin {
       case SimilarityStrategy.Auto if boundRoutesAllPairs(
           prefixBounds(base, blockFreq, blockCols, threshold)) =>
         pin(allPairsPath(base))
-      case SimilarityStrategy.Auto if blockCols.isEmpty =>
-        // one block — one regime: the global comparison IS the per-block one
-        val post = buildPost(overBlocks(blockFreq, blockCols))
-        val (cPrefix, cBlocks) = selfVolumes(base, post, blockCols, threshold)
-        pin(if (cPrefix <= cBlocks) prefixPath(post) else allPairsPath(base))
       case SimilarityStrategy.Auto =>
         // PER-BLOCK routing: the regime is a property of each block, not of
         // the corpus — a realistic mixed corpus (one replica-dense language
         // from scraper echo, the rest sparse) would pay the worse engine on
-        // half its blocks under a single global choice. Both volumes are
-        // already per-block aggregations; route each block to its cheaper
-        // exact engine and union the outputs (identical pairs either way,
-        // so routing is invisible in the result).
+        // half its blocks under a single global choice
         val post = buildPost(overBlocks(blockFreq, blockCols))
-        val regimes = blockVolumes(base, post, blockCols, threshold)
-          .select(blockCols.map(col) :+ (col("_cp") <= col("_cb")).as("_pr"): _*)
-        // one tiny agg decides degenerate corpora: all-one-regime runs the
-        // single engine with no routing join at all
-        val Seq(nPrefix, nBlocks) = regimes
-          .agg(sum(col("_pr").cast("long")), count(lit(1)))
-          .head().toSeq.map(v => if (v == null) 0L else v.asInstanceOf[Long])
-        pin(if (nPrefix == nBlocks) prefixPath(post)
-        else if (nPrefix == 0L) allPairsPath(base)
-        else {
-          // mixed: split by the regime flag. The postings were built over
-          // the FULL corpus (one global rarest-first order — any consistent
-          // order keeps the prefix filter lossless, per the header proof),
-          // so restricting them to prefix-regime blocks is a filter, not a
-          // rebuild; candidates never crossed blocks to begin with. The
-          // regime table is one row per distinct block value — leave the
-          // join to AQE (broadcast when small, shuffle when a high-
-          // cardinality block column makes it big).
-          // re-select the canonical column ORDER after each routing join
-          // (equi-joins move the key columns first, and prefixPath /
-          // Pairs.allPairs address the frame positionally via toDF)
-          val prefixPost = post
-            .join(regimes.filter(col("_pr")).drop("_pr"), blockCols.toSeq)
-            .select(("_id" +: blockCols).map(col) ++ Seq(col("_sz"), col("_pos"), col("h")): _*)
-          val denseBase = base
-            .join(regimes.filter(!col("_pr")).drop("_pr"), blockCols.toSeq)
-            .select(("_id" +: blockCols).map(col) :+ col("_set"): _*)
-          prefixPath(prefixPost).unionAll(allPairsPath(denseBase))
-        })
+        pin(routeBlocks(blockVolumes(base, post, blockCols, threshold), blockCols,
+          b => prefixPath(inBlocks(post, blockCols, b)),
+          b => allPairsPath(inBlocks(base, blockCols, b))))
     }
   }
 
@@ -902,9 +866,9 @@ object SimilarityJoin {
     * several jobs at once; actions are only sequential because the driver
     * calls them sequentially). `fb` runs on a pool thread while `fa` runs
     * on the caller's; results are identical to the sequential form, only
-    * the wall time changes. Used for the cost-model probe pairs, which are
-    * bounded 1-row aggregates with no ordering dependency, and for the
-    * curation tick's two similarity stages.
+    * the wall time changes. Used for [[indexDriftReport]]'s two volume
+    * measurements, bounded 1-row aggregates with no ordering dependency, and
+    * for the curation tick's two similarity stages.
     *
     * `fb` runs under a copy of the caller's Spark local properties (job
     * group, description, scheduler pool, …): a pool thread otherwise keeps
@@ -925,25 +889,14 @@ object SimilarityJoin {
     (a, Await.result(f, Duration.Inf))
   }
 
-  /** The two candidate volumes Auto compares — shared with the public
-    * [[selfJoinVolumes]] probe so the planner and the probe can't drift.
-    * The two probes are independent bounded aggregates and run overlapped
-    * (par2).
-    */
-  private def selfVolumes(
-      base: DataFrame, post: DataFrame, blockCols: Seq[String],
-      threshold: Double): (Double, Double) =
-    par2(
-      prefixVolumeCells(post, blockCols, threshold)
-        .agg(coalesce(sum(col("_cp1")), lit(0.0))).head().getDouble(0),
-      pairVolume(base.groupBy(blockCols.map(col): _*).count()))
-
   /** PER-BLOCK candidate volumes: one row per distinct `blockCols` value
-    * with `_cp` (prefix-filter candidate volume within the block) and `_cb`
-    * (blocked all-pairs volume). The same two aggregations as
-    * [[selfVolumes]], just not collapsed across blocks — what Auto's
-    * per-block routing compares. A block whose rows emitted no postings
-    * (every set empty) reads `_cp` = 0 via the left join.
+    * (exactly one with no block columns) with `_cp` (prefix-filter
+    * candidate volume within the block) and `_cb` (blocked all-pairs
+    * volume m(m−1)/2, a double to stay overflow-safe at any corpus size) —
+    * what Auto's per-block routing compares, and what the public probes
+    * report. A block whose rows emitted no postings (every set empty, or a
+    * NULL block value, whose postings join nothing) reads `_cp` = 0 via the
+    * left join.
     */
   private def blockVolumes(
       base: DataFrame, post: DataFrame, blockCols: Seq[String],
@@ -957,23 +910,17 @@ object SimilarityJoin {
       .select(blockCols.map(col) :+ coalesce(col("_cp"), lit(0.0)).as("_cp") :+ col("_cb"): _*)
   }
 
-  /** Σ over groups of n·(n−1)/2 from a grouped `.count()` frame — the
-    * candidate-volume estimate behind [[SimilarityStrategy.Auto]]. Double to
-    * stay overflow-safe at any corpus size (it's an estimate, not a count).
-    */
-  private def pairVolume(counts: DataFrame): Double =
-    counts
-      .agg(coalesce(
-        sum(col("count").cast("double") * (col("count") - 1) / 2), lit(0.0)))
-      .head().getDouble(0)
-
   /** Planning probe for [[jaccardSelfJoin]]: (prefix-filter candidate
-    * volume, blocked all-pairs volume) on this corpus. When neither Auto's
-    * size check nor its volume bound already settles on all-pairs, Auto
-    * runs whichever is smaller; exposed so capacity planning (and the spec)
-    * can see the regime a corpus is in without running either join. The
-    * probe itself skips the size check and the bound: it always builds the
-    * postings.
+    * volume, blocked all-pairs volume) on this corpus — the column sums of
+    * [[selfJoinBlockVolumes]]' `prefix_volume` and `allpairs_volume`, in
+    * one action. Auto compares the two per block, not summed; unblocked,
+    * the frame is one block, so when neither Auto's size check nor its
+    * volume bound already settles on all-pairs, Auto runs whichever is
+    * smaller. Exposed so capacity planning (and the spec) can see the
+    * regime a corpus is in without running either join. The probe itself
+    * skips the size check and the bound: it always builds the postings.
+    * The volumes are sums of integer halves, exact in double, so the sums
+    * do not depend on the order they are taken in.
     */
   def selfJoinVolumes(
       df: DataFrame,
@@ -983,7 +930,10 @@ object SimilarityJoin {
       blockCols: Seq[String] = Nil): (Double, Double) = {
     val base = selfBase(df, idCol, setCol, blockCols, Pin.Off)
     val post = selfPost(base, blockCols, blockDocFreq(base, Nil), threshold, Pin.Off)
-    selfVolumes(base, post, blockCols, threshold)
+    val row = blockVolumes(base, post, blockCols, threshold)
+      .agg(coalesce(sum(col("_cp")), lit(0.0)), coalesce(sum(col("_cb")), lit(0.0)))
+      .head()
+    (row.getDouble(0), row.getDouble(1))
   }
 
   /** Per-block planning probe: one row per distinct `blockCols` value with
@@ -1036,8 +986,7 @@ object SimilarityJoin {
     * postings-volume measurement itself.
     */
   def dfCounts(df: DataFrame, setCol: String): DataFrame =
-    df.select(explode(col(setCol)).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("_df"))
+    blockDocFreq(df.select(col(setCol).as("_set")), Nil)
 
   /** Sum two (h, _df) frames element-wise — see [[dfCounts]]. */
   def mergeDfCounts(a: DataFrame, b: DataFrame): DataFrame =
@@ -1127,13 +1076,10 @@ object SimilarityJoin {
     require(storedFreq.columns.contains("h") && storedFreq.columns.contains("_df"),
       s"storedFreq needs (h, _df) — the prefixIndex freq half: ${storedFreq.columns.toSeq}")
     val spark = df.sparkSession
-    val base = pin(df.select(
-      (col(idCol).cast("long").as("_id") +: blockCols.map(col)) :+ col(setCol).as("_set"): _*))
-    val fresh = currentFreq.getOrElse(dfCounts(base, "_set"))
+    val base = selfBase(df, idCol, setCol, blockCols, pin)
+    val fresh = currentFreq.getOrElse(blockDocFreq(base, Nil))
     def volume(freq: DataFrame): Double =
-      prefixVolumeCells(
-        prefixPostings(base, "_id" +: blockCols, freq, threshold),
-        blockCols, threshold)
+      prefixVolumeCells(selfPost(base, blockCols, freq, threshold, Pin.Off), blockCols, threshold)
         .agg(coalesce(sum(col("_cp1")), lit(0.0))).head().getDouble(0)
     // the two volume measurements are independent single-row aggregates
     // over the same pinned/stored base — overlap them (guide §2.6); each is
@@ -1166,17 +1112,11 @@ object SimilarityJoin {
       blockCols: Seq[String]): DataFrame = {
     require(blockCols.nonEmpty,
       "joinBlockVolumes needs block columns — the unblocked comparison is global by definition")
-    val l = left.select(
-      (col(leftId).cast("long").as("_aid") +: blockCols.map(col)) :+ col(setCol).as("_as"): _*)
-    val r = right.select(
-      (col(rightId).cast("long").as("_bid") +: blockCols.map(col)) :+ col(setCol).as("_bs"): _*)
-    val freq = l.select(explode(col("_as")).as("h"))
-      .unionAll(r.select(explode(col("_bs")).as("h")))
-      .groupBy(col("h")).agg(count(lit(1)).as("_df"))
-    val posts = (
-      prefixPostings(l.withColumnRenamed("_as", "_set"), "_aid" +: blockCols, freq, threshold),
-      prefixPostings(r.withColumnRenamed("_bs", "_set"), "_bid" +: blockCols, freq, threshold))
-    crossBlockVolumes(l, r, posts, blockCols)
+    val (l, r) = joinSides(left, leftId, right, rightId, setCol, blockCols)
+    val freq = joinFreq(l, r)
+    crossBlockVolumes(l, r,
+      (sidePostings(l, blockCols, freq, threshold), sidePostings(r, blockCols, freq, threshold)),
+      blockCols)
       .select(blockCols.map(col)
         :+ col("_cp").as("prefix_volume")
         :+ col("_cb").as("cross_volume")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.Shared.exitScopedDir
 
 /** The two runtime scan-pruning mechanisms a 100-TB fact join lives on,
   * asserted at the plan level (thresholds lowered so the tiny test inputs
@@ -51,7 +52,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
   }
 
   test("dynamic partition pruning limits a partitioned scan to joined days") {
-    val dir = java.nio.file.Files.createTempDirectory("dpp").toString
+    val dir = exitScopedDir("dpp")
     try {
       val ev = Engine.table(spark, sf, "events")
         .withColumn("day", to_date(col("ts")))

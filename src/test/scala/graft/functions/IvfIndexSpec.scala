@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{Engine, TestSpark}
 import graft.functions.{VectorFunctions => VF}
+import graft.catalog.Shared.exitScopedDir
 
 class IvfIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def emb = Engine.table(spark, TestSpark.Sf, "embeddings")
-  private def tmp(tag: String) = Files.createTempDirectory(tag).toString + "/idx"
+  private def tmp(tag: String) = exitScopedDir(tag) + "/idx"
 
   test("buildKMeans + probe equals the inline ivfTopK for the same (seed, k, nProbe)") {
     val dir = tmp("ivf-parity")

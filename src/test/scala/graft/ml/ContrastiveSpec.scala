@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.operators.SemDedup
+import graft.catalog.Shared.exitScopedDir
 
 class ContrastiveSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -63,7 +64,7 @@ class ContrastiveSpec extends AnyFunSuite {
   test("mineTripletsIndexed over the stored IVF index equals the inline miner at nProbe == nCells") {
     import java.nio.file.Files
     val emb = graft.Engine.table(spark, TestSpark.Sf, "embeddings")
-    val dir = Files.createTempDirectory("ivf-triplets").toString + "/idx"
+    val dir = exitScopedDir("ivf-triplets") + "/idx"
     val h = graft.functions.IvfIndex.buildKMeans(emb, "vec_id", "embedding",
       nCells = 8, dir)
     val bucket = SemDedup.signBucket(col("embedding"), 6)

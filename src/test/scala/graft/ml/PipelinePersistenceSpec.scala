@@ -8,6 +8,7 @@ import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.catalog.Shared.exitScopedDir
 
 /** S10 — model checkpoint sink/source: a fitted Pipeline must round-trip
   * through save/load with identical predictions (the spark.ml analog of the
@@ -31,7 +32,7 @@ class PipelinePersistenceSpec extends AnyFunSuite {
       new LogisticRegression().setMaxIter(50)))
     val model = pipeline.fit(df)
 
-    val dir = Files.createTempDirectory("pipeline-ckpt").toString + "/model"
+    val dir = exitScopedDir("pipeline-ckpt") + "/model"
     model.write.overwrite().save(dir)
     val restored = PipelineModel.load(dir)
 

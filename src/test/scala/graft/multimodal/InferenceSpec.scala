@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sources.Sources
+import graft.catalog.Shared.deleteAtExit
 
 class InferenceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -64,8 +65,7 @@ class InferenceSpec extends AnyFunSuite {
   }
 
   test("scoreWithModel classifies real decoded images by dominant color") {
-    val d = Files.createTempDirectory("inf")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("inf"))
     def solid(rgb: Int): java.awt.image.BufferedImage = {
       val img = new java.awt.image.BufferedImage(8, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
       for (y <- 0 until 8; x <- 0 until 8) img.setRGB(x, y, rgb)
@@ -84,8 +84,7 @@ class InferenceSpec extends AnyFunSuite {
     // ARTIFACT serialized by a separate process, loaded as opaque bytes,
     // shipped by broadcast, deserialized per partition. Simulate the
     // artifact handoff through a real file (no in-memory object sharing).
-    val f = Files.createTempFile("mlp-model", ".gmlp")
-    f.toFile.deleteOnExit()
+    val f = deleteAtExit(Files.createTempFile("mlp-model", ".gmlp"))
     Files.write(f, model.toBytes)
     val fromDisk = Files.readAllBytes(f) // what a deploy job would hand us
     assert(!(fromDisk eq model.toBytes)) // genuinely file-sourced bytes

@@ -6,14 +6,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sources.Sources
+import graft.catalog.Shared.deleteAtExit
 
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("media")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("media"))
     (1 to 6).foreach { i =>
       val label = if (i % 2 == 0) "dog" else "cat"
       Files.write(Paths.get(d.toString, s"$label.$i.jpg"), Array.fill[Byte](32 + i)(i.toByte))
@@ -72,8 +72,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   private lazy val imgDir: String = {
-    val d = Files.createTempDirectory("realimg")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("realimg"))
     javax.imageio.ImageIO.write(halfRedBlue(), "png", new java.io.File(d.toFile, "rb.png"))
     javax.imageio.ImageIO.write(halfRedBlue(64, 48), "jpg", new java.io.File(d.toFile, "rb.jpg"))
     // a non-image payload in the same directory exercises the stub fallback

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.expressions.ShingleHash
+import graft.catalog.Shared.exitScopedDir
 
 /** Curation.tick: the incremental curation operator. The load-bearing
   * property is COMPOSABILITY — two sequential ticks must equal one combined
@@ -249,7 +250,7 @@ class CurationSpec extends AnyFunSuite {
     val bench = spark.emptyDataset[(Long, String, String)].toDF("doc_id", "lang", "text")
     val idx = Curation.signatures(
       corpus.toDF("doc_id", "lang", "text"), "doc_id", "text", "lang")
-    val dir = java.nio.file.Files.createTempDirectory("sig_idx").toString
+    val dir = exitScopedDir("sig_idx")
     idx.write.mode("overwrite").parquet(dir)
     val fromDisk = spark.read.parquet(dir)
     val live = Curation.tickIndexed(idx, batch.toDF("doc_id", "lang", "text"),
@@ -272,7 +273,7 @@ class CurationSpec extends AnyFunSuite {
     val idx = Curation.signatures(
       corpus.toDF("doc_id", "lang", "text"), "doc_id", "text", "lang").localCheckpoint()
     val (freq, posts) = Curation.postingsIndex(idx, "doc_id", "lang")
-    val dir = java.nio.file.Files.createTempDirectory("post_idx").toString
+    val dir = exitScopedDir("post_idx")
     freq.write.mode("overwrite").parquet(s"$dir/freq")
     posts.write.mode("overwrite").parquet(s"$dir/posts")
     val stored = Some((
@@ -333,7 +334,7 @@ class CurationSpec extends AnyFunSuite {
     // target fpp through Bloom.sizeFor (VERDICT r9 item 7 migration)
     val (m, k) = graft.functions.Bloom.sizeFor(64L, 0.01)
     val built = Decontaminate.benchIndex(bench, "doc_id", "text", n = 4, m = m, k = k)
-    val dir = java.nio.file.Files.createTempDirectory("bench_idx").toString
+    val dir = exitScopedDir("bench_idx")
     built.grams.write.mode("overwrite").parquet(s"$dir/grams")
     built.bloomCells.write.mode("overwrite").parquet(s"$dir/cells")
     val bi = Decontaminate.BenchIndex(
@@ -865,8 +866,8 @@ class CurationSpec extends AnyFunSuite {
 
     // the established file-source replay pattern: one bounded query run per
     // arrival batch, shared checkpoint — foreachBatch IS the service loop
-    val streamDir = Files.createTempDirectory("svc-stream").toString
-    val stage = Files.createTempDirectory("svc-stage").toString
+    val streamDir = exitScopedDir("svc-stream")
+    val stage = exitScopedDir("svc-stage")
     def addBatch(docs: Seq[(Long, String, String)], n: Int): Unit = {
       val sub = stage + s"/b$n"
       docs.toDF("doc_id", "lang", "text").write.mode("overwrite").parquet(sub)
@@ -878,7 +879,7 @@ class CurationSpec extends AnyFunSuite {
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         }
     }
-    val ckpt = Files.createTempDirectory("svc-ckpt").toString
+    val ckpt = exitScopedDir("svc-ckpt")
     val schema = corpus.toDF("doc_id", "lang", "text").schema
     val acceptedIds = new scala.collection.mutable.TreeSet[Long]()
     def runArrival(): Unit = {
@@ -949,7 +950,7 @@ class CurationSpec extends AnyFunSuite {
     val ids1 = acc1.select("doc_id").as[Long].collect().toSet
     // crash here: persist EVERY half (each is its tier's persistable
     // artifact) plus the two ledger scalars, then rebuild a fresh handle
-    val root = Files.createTempDirectory("svc-restart").toString
+    val root = exitScopedDir("svc-restart")
     def save(df: org.apache.spark.sql.DataFrame, name: String) =
       df.write.mode("overwrite").parquet(s"$root/$name")
     save(state.index, "index"); save(state.posts, "posts")
@@ -1002,7 +1003,7 @@ class CurationSpec extends AnyFunSuite {
       "doc_id", "text", "lang", quality = lit(1.0), minQuality = 0.0,
       batchId = Some(0L))
     val ids1 = acc1.select("doc_id").as[Long].collect().toSet
-    val dir = Files.createTempDirectory("svc-persist").toString
+    val dir = exitScopedDir("svc-persist")
     // checkpoint mid-loop, through the VERB this time (not hand-rolled
     // parquet writes) — the dir restore must land on the combined output
     val gen0 = Curation.persistServiceState(state, dir)
@@ -1073,7 +1074,7 @@ class CurationSpec extends AnyFunSuite {
       "doc_id", "text", "lang", shingleHash = ShingleHash.Md5Slice)
     Curation.serviceTick(mdState, b1.toDF("doc_id", "lang", "text"),
       "doc_id", "text", "lang", quality = lit(1.0), minQuality = 0.0, batchId = Some(0L))
-    val mdDir = Files.createTempDirectory("svc-persist-md5").toString
+    val mdDir = exitScopedDir("svc-persist-md5")
     Curation.persistServiceState(mdState, mdDir)
     val mdRestored = Curation.restoreServiceState(spark, mdDir, Pin.LocalCheckpoint)
     assert(mdRestored.shingleHash == ShingleHash.Md5Slice)
@@ -1083,7 +1084,7 @@ class CurationSpec extends AnyFunSuite {
         .select("doc_id").as[Long].collect().sorted.toSeq
     assert(nextTick(mdRestored) == nextTick(mdState))
     // a dir with ONLY partials fails loud instead of restoring nothing
-    val dir2 = Files.createTempDirectory("svc-persist-partial").toString
+    val dir2 = exitScopedDir("svc-persist-partial")
     restored.index.write.mode("overwrite").parquet(s"$dir2/gen=0/index")
     val e2 = intercept[IllegalArgumentException] {
       Curation.restoreServiceState(spark, dir2, Pin.LocalCheckpoint)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.catalog.Shared.exitScopedDir
 
 class DecontaminateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -36,7 +37,7 @@ class DecontaminateSpec extends AnyFunSuite {
   test("indexed path (stored bloom cells + gram table) equals the inline paths") {
     val bi = Decontaminate.benchIndex(bench, "doc_id", "text", n = 3, m = 1 << 12, k = 4)
     // parquet round-trip: the index is a STORED artifact between calls
-    val dir = java.nio.file.Files.createTempDirectory("bloom_idx").toString
+    val dir = exitScopedDir("bloom_idx")
     bi.grams.write.mode("overwrite").parquet(s"$dir/grams")
     bi.bloomCells.write.mode("overwrite").parquet(s"$dir/cells")
     val indexed = Decontaminate
@@ -147,7 +148,7 @@ class DecontaminateSpec extends AnyFunSuite {
     val (m, k) = (1 << 12, 4)
     val bi1 = Decontaminate.benchIndex(bench, "doc_id", "text", n = 3, m = m, k = k)
     val bench2 = Seq((200L, "p q r s t"), (201L, "u v w x y")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bench_growth").toString
+    val dir = exitScopedDir("bench_growth")
     bench2.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(bench2.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)

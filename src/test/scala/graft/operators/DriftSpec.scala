@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.catalog.Shared.exitScopedDir
 
 /** Drift.psiByPeriod: the load-bearing properties are the closed form
   * (each psi equals the hand-computed Σ (p−q)·ln(p/q) with the eps floor),
@@ -599,7 +600,7 @@ class DriftSpec extends AnyFunSuite {
     val state = newState()
     val before = runLoop(state, (3 to 6).map(Seq(_)))
     assert(state.sinceRotation == 1)
-    val dir = java.nio.file.Files.createTempDirectory("monitor-keyed").toString + "/st"
+    val dir = exitScopedDir("monitor-keyed") + "/st"
     Drift.persistMonitorState(state, dir)
     val restored = Drift.restoreMonitorState(spark, dir)
     assert(restored.keyCols == Seq("key") && restored.sinceRotation == 1)
@@ -641,7 +642,7 @@ class DriftSpec extends AnyFunSuite {
     val before = (3 to 6).flatMap(d =>
       Drift.monitorTick(state, frame(Seq(d))).collect().map(_.toSeq))
     assert(state.sinceRotation == 1)
-    val dir = java.nio.file.Files.createTempDirectory("monitor-ckpt").toString + "/st"
+    val dir = exitScopedDir("monitor-ckpt") + "/st"
     val gen0 = Drift.persistMonitorState(state, dir)
     assert(gen0 == 0L)
     val restored = Drift.restoreMonitorState(spark, dir)
@@ -661,7 +662,7 @@ class DriftSpec extends AnyFunSuite {
     assert(skipped.sinceRotation == restored.sinceRotation &&
       skipped.cells.count() == restored.cells.count())
     // ...and with ONLY partials on disk, restore fails loud
-    val dir2 = java.nio.file.Files.createTempDirectory("monitor-ckpt2").toString + "/st"
+    val dir2 = exitScopedDir("monitor-ckpt2") + "/st"
     restored.cells.write.mode("overwrite").parquet(s"$dir2/gen=0/cells")
     val e = intercept[IllegalArgumentException] {
       Drift.restoreMonitorState(spark, dir2)

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.expressions.VectorExpressions
+import graft.catalog.Shared.exitScopedDir
 
 class SimilarityJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -220,9 +221,12 @@ class SimilarityJoinSpec extends AnyFunSuite {
   test("cost probes overlapped on a pool thread carry the caller's job group") {
     val sc = spark.sparkContext
     val sets = randomSets(41, 60).toDF("id", "s")
+    // the drift report's two volume measurements run overlapped (par2)
+    val storedFreq = SimilarityJoin.dfCounts(randomSets(42, 60).toDF("id", "s"), "s")
+    def report() = SimilarityJoin.indexDriftReport(sets, "id", "s", 0.5, storedFreq)
     // the first calls leave idle pool threads behind, created under the
     // properties of that moment (no job group)
-    (1 to 3).foreach(_ => SimilarityJoin.selfJoinVolumes(sets, "id", "s", 0.5))
+    (1 to 3).foreach(_ => report())
     import scala.jdk.CollectionConverters._
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -235,7 +239,7 @@ class SimilarityJoinSpec extends AnyFunSuite {
     try {
       (1 to 3).foreach { i =>
         sc.setJobGroup(s"probe-group-$i", s"probe pair $i")
-        try SimilarityJoin.selfJoinVolumes(sets, "id", "s", 0.5)
+        try report()
         finally sc.clearJobGroup()
         org.apache.spark.ListenerBusDrain(sc)
         val seen = jobs.asScala.toSeq
@@ -445,7 +449,7 @@ class SimilarityJoinSpec extends AnyFunSuite {
     // index built at the LOWEST threshold it will serve (the contract)
     val (freq, posts) = SimilarityJoin.prefixIndex(l, "lid", "s", 0.25)
     // parquet round-trip: the index is a STORED artifact between ticks
-    val dir = java.nio.file.Files.createTempDirectory("pfx_idx").toString
+    val dir = exitScopedDir("pfx_idx")
     freq.write.mode("overwrite").parquet(s"$dir/freq")
     posts.write.mode("overwrite").parquet(s"$dir/posts")
     val idx = Some((
@@ -993,6 +997,7 @@ class SimilarityJoinSpec extends AnyFunSuite {
       report.foreach { case (g, (cp, lb, _, _)) =>
         assert(lb <= cp * (1 + 1e-12), s"fixture $k block $g: bound $lb above prefix volume $cp")
       }
+      if (k % 6 == 5) assertVolumeSums(s"fixture $k (a NULL block value)", withNullElement, t)
       if (report.values.forall { case (_, lb, cb, _) => lb > cb }) {
         fired += 1
         assert(report.values.forall(_._4 == "allpairs"),
@@ -1000,6 +1005,18 @@ class SimilarityJoinSpec extends AnyFunSuite {
       } else held += 1
     }
     assert(fired > 0 && held > 0, s"fixtures fired $fired, held $held")
+    assertVolumeSums("mixed fixture", mixedSelfFixture()._1, 0.5)
+    assertVolumeSums("empty frame", Seq.empty[(Long, String, Seq[Long])].toDF("id", "g", "s"), 0.5)
+  }
+
+  /** The probe's contract: `selfJoinVolumes` is, exactly, the column sums of
+    * `selfJoinBlockVolumes` (sums of integer halves are exact in double). */
+  private def assertVolumeSums(label: String, df: org.apache.spark.sql.DataFrame, t: Double): Unit = {
+    val blocks = SimilarityJoin.selfJoinBlockVolumes(df, "id", "s", t, Seq("g"))
+      .select("prefix_volume", "allpairs_volume").as[(Double, Double)].collect()
+    val sums = (blocks.map(_._1).sum, blocks.map(_._2).sum)
+    val probe = SimilarityJoin.selfJoinVolumes(df, "id", "s", t, Seq("g"))
+    assert(probe == sums, s"$label: selfJoinVolumes $probe, block sums $sums")
   }
 
   /** True when a plan (a returned frame's, or an executed one's) holds the
@@ -1023,19 +1040,36 @@ class SimilarityJoinSpec extends AnyFunSuite {
     assert(SimilarityJoin.selfJoinVolumes(sparse, "id", "s", t) match { case (p, b) => p < b },
       "the sparse fixture should route to prefix")
     val (l, r, crossWant) = mixedCrossFixture()
+    // the unblocked cross-frame routes (q233's shape), each read off the
+    // per-block probe over one constant block
+    def crossRoute(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      SimilarityJoin.joinBlockVolumes(a.withColumn("k", lit(0)), "lid", b.withColumn("k", lit(0)),
+        "rid", "s", t, Seq("k")).select("engine").as[String].collect().toSeq
+    val (sparseL, sparseR) = (l.filter(col("g") === "s").drop("g"), r.filter(col("g") === "s").drop("g"))
+    assert(crossRoute(sparseL, sparseR) == Seq("prefix"), "the sparse cross fixture should route to prefix")
+    val lowL = lowDf.drop("g").withColumnRenamed("id", "lid")
+    val lowR = lowDf.drop("g").select((col("id") + 100000L).as("rid"), col("s"))
+    assert(crossRoute(lowL, lowR) == Seq("cross"), "the low-diversity cross should route to the salted cross")
+    // J is symmetric and every set meets its own copy at J = 1
+    val lowSelf = bruteForceBlocked(low.map { case (i, _, s) => (i, Option("all"), s) }, t)
+    val lowCrossWant = lowSelf.flatMap { case (a, b) => Seq((a, b + 100000L), (b, a + 100000L)) } ++
+      low.map { case (i, _, _) => (i, i + 100000L) }
     type Run = (SimilarityStrategy, Pin) => org.apache.spark.sql.DataFrame
+    def cross(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame,
+        blockCols: Seq[String]): Run = (st, p) =>
+      SimilarityJoin.jaccardJoin(a, "lid", b, "rid", "s", t, pin = p, strategy = st,
+        blockCols = blockCols)
     def self(df: org.apache.spark.sql.DataFrame, blockCols: Seq[String]): Run = (st, p) =>
       SimilarityJoin.jaccardSelfJoin(df, "id", "s", t, blockCols = blockCols, strategy = st, pin = p)
     val cases: Seq[(String, Set[(Long, Long)], Run)] = Seq(
       ("volume bound, blocked", bruteForceBlocked(low, t), self(lowDf, Seq("g"))),
-      ("volume bound, unblocked",
-        bruteForceBlocked(low.map { case (i, _, s) => (i, Option("all"), s) }, t),
-        self(lowDf.drop("g"), Nil)),
+      ("volume bound, unblocked", lowSelf, self(lowDf.drop("g"), Nil)),
       ("probe-routed prefix", sparseWant, self(sparse, Nil)),
       ("mixed per-block self-join", mixedWant, self(mixed, Seq("g"))),
-      ("cross-frame mixed", crossWant, (st, p) =>
-        SimilarityJoin.jaccardJoin(l, "lid", r, "rid", "s", t, pin = p, strategy = st,
-          blockCols = Seq("g"))))
+      ("cross-frame mixed", crossWant, cross(l, r, Seq("g"))),
+      ("cross-frame unblocked, routed to prefix", crossWant.filter(_._1 >= 1000L),
+        cross(sparseL, sparseR, Nil)),
+      ("cross-frame unblocked, routed to the salted cross", lowCrossWant, cross(lowL, lowR, Nil)))
     cases.foreach { case (label, want, run) =>
       assert(want.nonEmpty, s"$label: the fixture has no true pairs")
       val auto = run(SimilarityStrategy.Auto, Pin.LocalCheckpoint)

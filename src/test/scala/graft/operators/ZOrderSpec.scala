@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.catalog.Shared.exitScopedDir
 
 class ZOrderSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -78,7 +79,7 @@ class ZOrderSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(11)
     val pts = Seq.fill(100000)((rnd.nextInt(1024).toLong, rnd.nextInt(1024).toLong))
       .toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val dir = exitScopedDir("graft-zorder")
     try {
       // z-clustered vs linear-sorted (leading column x), same file count
       ZOrder.writeClustered(pts, Seq(col("x"), col("y")), bits = 10, s"$dir/z", files = 128)

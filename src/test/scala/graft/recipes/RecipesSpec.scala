@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.catalog.Shared.exitScopedDir
 
 /** Each reference workload runs end-to-end on TESTDATA and produces the
   * result tables the reference prints/saves (SURVEY.md §3).
@@ -86,7 +87,7 @@ class RecipesSpec extends AnyFunSuite {
     import graft.sources.Sources
     val out = Recipes.classifierBakeOff(spark, sf)
     val scored = out("scored")
-    val dir = Files.createTempDirectory("golden").toString
+    val dir = exitScopedDir("golden")
     Sources.writeCsvSingle(scored, dir, sortBy = Seq("sample_id"))
     val files = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".csv"))
     assert(files.length == 1, "contract is ONE deliverable csv file")
@@ -102,7 +103,7 @@ class RecipesSpec extends AnyFunSuite {
   }
 
   test("CATDOG recipe: submission sorted by id with binary predictions") {
-    val dir = Files.createTempDirectory("catdog").toString
+    val dir = exitScopedDir("catdog")
     (1 to 8).foreach { i =>
       val label = if (i % 2 == 0) "dog" else "cat"
       Files.write(Paths.get(dir, s"$label.$i.jpg"), Array.fill[Byte](16 + i)(i.toByte))

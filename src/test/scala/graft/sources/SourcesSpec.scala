@@ -6,16 +6,13 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.catalog.Shared.{deleteAtExit, exitScopedDir}
 
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(name)
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmpDir(name: String): String = exitScopedDir(name)
 
   test("csv reads GBK-encoded files with headers and inferred types") {
     val dir = tmpDir("gbkcsv")
@@ -95,8 +92,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("jsonLines parses valid rows and quarantines corrupt ones instead of dropping them") {
     import org.apache.spark.sql.types._
-    val d = java.nio.file.Files.createTempDirectory("json-src")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(java.nio.file.Files.createTempDirectory("json-src"))
     java.nio.file.Files.write(
       d.resolve("part.jsonl"),
       java.util.Arrays.asList(
@@ -114,8 +110,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("orc round-trip preserves data and pushes filters into the scan") {
-    val d = java.nio.file.Files.createTempDirectory("orc-src")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(java.nio.file.Files.createTempDirectory("orc-src"))
     val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     Sources.writeOrc(df, d.toString)
     val back = Sources.readOrc(spark, d.toString)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{Engine, TestSpark}
+import graft.catalog.Shared.{deleteAtExit, exitScopedDir}
 
 /** Feasibility + correctness of CHAINED stateful streaming operators
   * (supported since Spark 3.5 for dedup→time-window-agg in append mode):
@@ -17,12 +18,10 @@ class ChainedStatefulSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val streamDir: String = {
-    val d = Files.createTempDirectory("events-chain")
-    // deleteOnExit on dir + contents: a full parquet copy per run would
+    val d = deleteAtExit(Files.createTempDirectory("events-chain"))
+    // deleted with its contents at exit: a full parquet copy per run would
     // otherwise accumulate in /tmp (same concern as replayStream's cleanup)
-    d.toFile.deleteOnExit()
     Engine.table(spark, TestSpark.Sf, "events").write.mode("overwrite").parquet(d.toString)
-    d.toFile.listFiles().foreach(_.deleteOnExit())
     d.toString
   }
   private lazy val batch = spark.read.parquet(streamDir)
@@ -66,8 +65,8 @@ class ChainedStatefulSpec extends AnyFunSuite {
     // the 2-day watermark horizon, so the dedup state is still live)
     val dupTail = b1.filter(to_date(col("ts")) === lit(cutD))
 
-    val arrivals = java.nio.file.Files.createTempDirectory("chain-restart").toString
-    val streamDir = java.nio.file.Files.createTempDirectory("chain-restart-stream").toString
+    val arrivals = exitScopedDir("chain-restart")
+    val streamDir = exitScopedDir("chain-restart-stream")
     val tmpDirs = scala.collection.mutable.ArrayBuffer(arrivals, streamDir)
     try {
     def addBatch(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
@@ -83,7 +82,7 @@ class ChainedStatefulSpec extends AnyFunSuite {
     }
 
     val stream = spark.readStream.schema(all.schema).parquet(streamDir)
-    val ckpt = java.nio.file.Files.createTempDirectory("chain-restart-ckpt").toString
+    val ckpt = exitScopedDir("chain-restart-ckpt")
     tmpDirs += ckpt
     val appended = scala.collection.mutable.ArrayBuffer[(java.sql.Date, String, Long)]()
     def runBatch(): Unit = {

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{Engine, SparkEntry, TestSpark}
+import graft.catalog.Shared.deleteAtExit
 
 /** Regression pin for the replay harness's input handling: the streaming
   * file source lists LEAF files and does not recurse, and a symlink target
@@ -21,8 +22,7 @@ class ReplayInputSpec extends AnyFunSuite {
     */
   private lazy val dirStyle: java.nio.file.Path = {
     Files.createDirectories(Paths.get("tmp"))
-    val d = Files.createTempDirectory(Paths.get("tmp"), "replay-dirstyle")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory(Paths.get("tmp"), "replay-dirstyle"))
     Engine.table(spark, TestSpark.Sf, "events")
       .repartition(3)
       .write.mode("overwrite").parquet(d.resolve("events.parquet").toString)

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.catalog.Shared.deleteAtExit
 
 /** StreamOps.sessionizeEventTtl: append-mode closed-session rows with
   * per-user state evicted one gap after the last event — the production
@@ -36,8 +37,7 @@ class SessionizeTtlSpec extends AnyFunSuite {
       .sorted.toSeq
 
   test("sessions close across micro-batches: gap rule in-fold, timeout flushes the quiet tail") {
-    val d = Files.createTempDirectory("sess-ttl")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("sess-ttl"))
     // batch 1 — user 1: events at 0, 10 (one open session); user 2: at 5
     Seq(
       StreamOps.Event(1L, ts(0), 1L),
@@ -79,8 +79,7 @@ class SessionizeTtlSpec extends AnyFunSuite {
   }
 
   test("output equals batch sessionization on closed sessions (multi-batch replay)") {
-    val d = Files.createTempDirectory("sess-ttl-eq")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("sess-ttl-eq"))
     // two batches of interleaved users; final event at 500 sets the
     // watermark to 490 with a 10-minute delay, so every session whose
     // lastTs + 30 < 490 must flush — here, all of them
@@ -112,8 +111,7 @@ class SessionizeTtlSpec extends AnyFunSuite {
   }
 
   test("a cross-batch out-of-order straggler neither emits nor regresses the open session") {
-    val d = Files.createTempDirectory("sess-ooo")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("sess-ooo"))
     // batch 1 — user 1 at 60 (state at 60)
     Seq(StreamOps.Event(1L, ts(60), 1L))
       .toDF().write.mode("overwrite").parquet(d.toString)
@@ -146,8 +144,7 @@ class SessionizeTtlSpec extends AnyFunSuite {
   }
 
   test("late events beyond the watermark are dropped by the engine, not sessionized") {
-    val d = Files.createTempDirectory("sess-late")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("sess-late"))
     Seq(StreamOps.Event(1L, ts(1000), 1L))
       .toDF().write.mode("overwrite").parquet(d.toString)
     val q = start(d, "sess_late", gapMin = 30, wmDelay = "10 minutes")

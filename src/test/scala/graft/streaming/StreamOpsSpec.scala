@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{Engine, TestSpark}
+import graft.catalog.Shared.exitScopedDir
 
 /** Streaming operators must agree with their batch counterparts when the
   * whole table is replayed through the stream (SURVEY.md §2.10).
@@ -18,7 +19,7 @@ class StreamOpsSpec extends AnyFunSuite {
     * as a long column).
     */
   private lazy val streamDir: String = {
-    val d = Files.createTempDirectory("events-stream").toString
+    val d = exitScopedDir("events-stream")
     Engine.table(spark, TestSpark.Sf, "events").write.mode("overwrite").parquet(d)
     d
   }
@@ -155,7 +156,7 @@ class StreamOpsSpec extends AnyFunSuite {
   test("windowed embedding cells: append mode emits exactly the batch marginals of each closed day") {
     // a synthetic embedding stream: deterministic hourly timestamps over
     // the embeddings table (embeddings carry no event time of their own)
-    val embDir = Files.createTempDirectory("emb-stream").toString
+    val embDir = exitScopedDir("emb-stream")
     Engine.table(spark, TestSpark.Sf, "embeddings")
       .withColumn("ts", expr(
         "timestampadd(HOUR, CAST(vec_id % 72 AS INT), TIMESTAMP '2024-01-01 00:00:00')"))
@@ -236,7 +237,7 @@ class StreamOpsSpec extends AnyFunSuite {
     // day 1 spans [0, 8) — fits 16 bins at scale 0; day 2 spans [0, 4096) —
     // needs scale 8 (4096/16 = 256 = 2^8). The RUNNING form would hold both
     // days at the lifetime scale; the windowed form must keep day 1 fine.
-    val d = Files.createTempDirectory("ahist-scales").toString
+    val d = exitScopedDir("ahist-scales")
     val rows = (0 until 64).map { i =>
       (java.sql.Timestamp.valueOf(f"2024-01-01 10:00:${i % 60}%02d"), (i % 8).toDouble)
     } ++ (0 until 64).map { i =>
@@ -446,7 +447,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .select(col("event_type"), col("day"), col("avg_value"))
     // replay the day stats as a memory stream source is overkill; feed them
     // through the stateful function via a single-batch stream over parquet
-    val d = Files.createTempDirectory("daystats").toString
+    val d = exitScopedDir("daystats")
     dayStats.write.mode("overwrite").parquet(d)
     val stream = spark.readStream.schema(dayStats.schema).parquet(d)
       .as[StreamOps.DayStat]
@@ -482,10 +483,10 @@ class StreamIncrementalSpec extends AnyFunSuite {
     val half1 = all.filter(col("ts") < lit(cut))
     val half2 = all.filter(col("ts") >= lit(cut))
 
-    val dir = Files.createTempDirectory("events-incr").toString
+    val dir = exitScopedDir("events-incr")
     half1.write.mode("overwrite").parquet(dir + "/b1")
     // stream over a parent dir that gains a second batch mid-run
-    val streamDir = Files.createTempDirectory("events-incr-stream").toString
+    val streamDir = exitScopedDir("events-incr-stream")
     def addBatch(src: String, n: Int): Unit = {
       val files = new java.io.File(dir + "/" + src).listFiles()
         .filter(_.getName.endsWith(".parquet"))
@@ -510,7 +511,7 @@ class StreamIncrementalSpec extends AnyFunSuite {
     // feeding the stateful operator out-of-order events — the operator's
     // contract is in-order batch arrival. Stopping between batches pins the
     // batch boundary AND exercises state recovery across query restarts.
-    val ckpt = Files.createTempDirectory("events-incr-ckpt").toString
+    val ckpt = exitScopedDir("events-incr-ckpt")
     // user -> (n_sessions, n_events); update-mode emits the latest state per
     // user per micro-batch, so last-write-wins per user is the final state
     // (memory sink cannot recover from a checkpoint; foreachBatch can)
@@ -552,8 +553,8 @@ class StreamIncrementalSpec extends AnyFunSuite {
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("props"))
     // b1 = a subset; b2 = EVERYTHING (so every b1 row is a cross-batch dup)
     val b1 = all.filter(col("event_id") % 3 === 0)
-    val dir = Files.createTempDirectory("events-dedup").toString
-    val streamDir = Files.createTempDirectory("events-dedup-stream").toString
+    val dir = exitScopedDir("events-dedup")
+    val streamDir = exitScopedDir("events-dedup-stream")
     def addBatch(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
       val sub = dir + s"/b$n"
       df.write.mode("overwrite").parquet(sub)
@@ -566,7 +567,7 @@ class StreamIncrementalSpec extends AnyFunSuite {
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         }
     }
-    val ckpt = Files.createTempDirectory("events-dedup-ckpt").toString
+    val ckpt = exitScopedDir("events-dedup-ckpt")
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
     def runBatch(): Unit = {
       val stream = spark.readStream.schema(all.schema).parquet(streamDir)
@@ -609,8 +610,8 @@ class StreamIncrementalSpec extends AnyFunSuite {
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 hour") &&
           col("c_ts") < col("p_ts"))
       .agg(min(col("p_ts"))).head().getTimestamp(0)
-    val dir = Files.createTempDirectory("events-join").toString
-    val streamDir = Files.createTempDirectory("events-join-stream").toString
+    val dir = exitScopedDir("events-join")
+    val streamDir = exitScopedDir("events-join-stream")
     def addBatch(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
       val sub = dir + s"/b$n"
       df.write.mode("overwrite").parquet(sub)
@@ -623,7 +624,7 @@ class StreamIncrementalSpec extends AnyFunSuite {
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         }
     }
-    val ckpt = Files.createTempDirectory("events-join-ckpt").toString
+    val ckpt = exitScopedDir("events-join-ckpt")
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     def runBatch(): Unit = {
       val stream = spark.readStream.schema(all.schema).parquet(streamDir)

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.catalog.Shared.deleteAtExit
 
 /** StreamOps.transitions: per-user event-type transitions with O(1) state
   * per user, equal to the batch lead() window — including when the
@@ -18,8 +19,7 @@ class TransitionsSpec extends AnyFunSuite {
   private def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
 
   test("transitions carry state across micro-batches and match the batch window") {
-    val d = Files.createTempDirectory("trans-stream")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("trans-stream"))
     // batch 1: user 1 -> a, b ; user 2 -> x
     Seq(
       StreamOps.TypedEvent(1L, ts(0), 1L, "a"),
@@ -55,8 +55,7 @@ class TransitionsSpec extends AnyFunSuite {
     // fire without new data, so processAllAvailable hangs and AvailableNow
     // never terminates. Poll the sink for the expected rows instead.
     import org.apache.spark.sql.streaming.Trigger
-    val d = Files.createTempDirectory("trans-ttl")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("trans-ttl"))
     Seq(
       StreamOps.TypedEvent(1L, ts(0), 1L, "a"),
       StreamOps.TypedEvent(1L, ts(1), 2L, "b"))
@@ -91,8 +90,7 @@ class TransitionsSpec extends AnyFunSuite {
 
   test("event-time TTL: gap rule filters output, quiet state evicts, late data drops") {
     import scala.concurrent.duration._
-    val d = Files.createTempDirectory("trans-evttl")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("trans-evttl"))
     // batch 1 — user 1: a@0 -> b@10 (gap 10 m <= TTL 30 m, emits); user 2: x@0
     Seq(
       StreamOps.TypedEvent(1L, ts(0), 1L, "a"),
@@ -145,8 +143,7 @@ class TransitionsSpec extends AnyFunSuite {
 
   test("event-time TTL: a cross-batch out-of-order straggler neither emits nor regresses state") {
     import scala.concurrent.duration._
-    val d = Files.createTempDirectory("trans-ooo")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("trans-ooo"))
     // batch 1 — user 1: a@60 (state now at 60)
     Seq(StreamOps.TypedEvent(1L, ts(60), 1L, "a"))
       .toDF().write.mode("overwrite").parquet(d.toString)
@@ -182,8 +179,7 @@ class TransitionsSpec extends AnyFunSuite {
   }
 
   test("within-batch events fold in (ts, event_id) order, not arrival order") {
-    val d = Files.createTempDirectory("trans-order")
-    d.toFile.deleteOnExit()
+    val d = deleteAtExit(Files.createTempDirectory("trans-order"))
     // same timestamp: event_id breaks the tie; rows written out of order
     Seq(
       StreamOps.TypedEvent(7L, ts(1), 12L, "late"),
