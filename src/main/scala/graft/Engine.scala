@@ -95,7 +95,7 @@ object Engine {
     * continuously — thread-dump sampling during q261 put ~11% of RUNNABLE
     * executor samples inside CodeGenerator.doCompile, and raising the cache
     * cut the query's executor CPU from ~50 s to ~18 s and its wall from
-    * ~15.6 s to ~8.6 s (JobProfile, 3 runs). Per-JVM working-set tuning —
+    * ~15.6 s to ~8.6 s (3 runs each). Per-JVM working-set tuning —
     * compiled classes live in metaspace regardless of data scale, so the
     * value carries to any cluster size unchanged.
     */

@@ -10,8 +10,7 @@ object Shared {
   private[catalog] def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Engine.table(spark, dir, name)
 
-  /** Stopword list shared by the text-quality operators and their oracles
-    * (and the diagnostic mains under `tools/`). */
+  /** Stopword list shared by the text-quality operators and their oracles. */
   private[graft] val Stopwords =
     Seq("the", "a", "and", "of", "to", "in", "is", "for", "on", "with")
 

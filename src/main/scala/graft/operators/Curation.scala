@@ -199,8 +199,7 @@ object Curation {
     * [[tickIndexed]], named (it was three hand-rolled statements in each
     * such caller — q261/q264 — and its inverse [[takedown]] was already
     * one call; loops that deliberately carry no feed, like q248's
-    * pre-feed shape and the ProfileTick per-stage profiler, stay
-    * hand-rolled and say so):
+    * pre-feed shape, stay hand-rolled and say so):
     *
     *   1. signature index: row-append the accepted docs' [[signatures]];
     *   2. stored postings: row-append the accepted docs' postings built
@@ -923,17 +922,6 @@ object Curation {
     * ticks: strictly FEWER near-dup rejections (missed pairs admit docs an
     * exact tick would reject), never a wrongly-rejected doc, since every
     * candidate still passes the exact Jaccard verify.
-    *
-    * `stageHook` — observation seam for profilers (tools/ProfileTick): each
-    * stage's frame passes through it (after its pin, for the pinned "s3"
-    * and "batch_signatures"; the later frames are lazy) under a stable name
-    * ("s3", "batch_signatures", "corpus_matched", "self_pairs",
-    * "dominated" — every near-dup rejection, corpus-matched docs included —
-    * and "accepted") and the RETURNED frame flows on, so a hook that
-    * counts/times sees the real pipeline rather than a copy that can
-    * drift. "corpus_matched" and "self_pairs" are built concurrently but
-    * handed to the hook afterwards, in that order, on the calling thread.
-    * Identity by default.
     */
   def tickIndexed(
       index: DataFrame,
@@ -952,7 +940,6 @@ object Curation {
       indexPinned: Boolean = false,
       corpusPostings: Option[(DataFrame, DataFrame)] = None,
       strategy: SimilarityStrategy = SimilarityStrategy.Auto,
-      stageHook: (String, DataFrame) => DataFrame = (_, df) => df,
       benchIdx: Option[Decontaminate.BenchIndex] = None,
       shingleHash: ShingleHash = ShingleHash.XxHash64): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1]: $tau")
@@ -990,17 +977,16 @@ object Curation {
     // no distinct() on the anti-join's right side: EXISTS semantics ignore
     // duplicate digests, and the distinct cost a corpus-sized exchange +
     // aggregation PER TICK for nothing (r15; output provably identical)
-    val s3 = stageHook("s3", pin(s2
+    val s3 = pin(s2
       .join(keepMin, dg <=> col("_ctext"))
       .filter(col(idCol) === col("_keep")).drop("_ctext", "_keep")
       .join(index.select(col("_dg").as("_ctext")),
-        dg === col("_ctext"), "left_anti")))
+        dg === col("_ctext"), "left_anti"))
 
     // stage 4 — near-dup: shingle the batch survivors once (column pruning
     // drops the signature digest — only `_h` is computed here), under the
     // index build's shingleN and shingleHash...
-    val batchSh = stageHook("batch_signatures",
-      pin(signatures(s3, idCol, textCol, langCol, shingleN, shingleHash).drop("_dg")))
+    val batchSh = pin(signatures(s3, idCol, textCol, langCol, shingleN, shingleHash).drop("_dg"))
     // ...reject any batch doc matching the standing corpus (corpus docs
     // outrank every batch doc — cost-based cross-frame join, lang-blocked,
     // corpus side straight from the index, postings straight from the
@@ -1014,7 +1000,7 @@ object Curation {
     // batchSh skip the joins' internal re-pins — the prep projections stay
     // lazy over the existing materializations instead of writing full-width
     // copies (at sf1 the corpus signature copy alone is GBs per tick).
-    val (matched, pairs) = SimilarityJoin.par2(
+    val (corpusMatched, selfPairs) = SimilarityJoin.par2(
       SimilarityJoin
         .jaccardJoin(
           index.select(col(idCol).as("_cid"), col(langCol), col("_h")), "_cid",
@@ -1026,17 +1012,14 @@ object Curation {
         .select(col(idCol)),
       SimilarityJoin.jaccardSelfJoin(batchSh, idCol, "_h", tau, blockCols = Seq(langCol),
         pin = pin, strategy = strategy, inputPinned = true))
-    val corpusMatched = stageHook("corpus_matched", matched)
-    val selfPairs = stageHook("self_pairs", pairs)
     // ...then greedily resolve the within-batch pair graph with the
     // corpus-matched docs pre-rejected. Rejected docs never block (that is
     // what makes ticks compose), so edges touching a corpus-matched doc
     // change no decision: the result equals resolving only the docs that
     // survived the corpus check. Both frames are read once, by this scan.
-    val rejected = stageHook("dominated",
-      greedyDominated(selfPairs, "id_a", "id_b",
-        preRejected = Some(corpusMatched.withColumnRenamed(idCol, "id")))
-        .withColumnRenamed("id", idCol))
-    stageHook("accepted", s3.join(broadcast(rejected), Seq(idCol), "left_anti"))
+    val rejected = greedyDominated(selfPairs, "id_a", "id_b",
+      preRejected = Some(corpusMatched.withColumnRenamed(idCol, "id")))
+      .withColumnRenamed("id", idCol)
+    s3.join(broadcast(rejected), Seq(idCol), "left_anti")
   }
 }

@@ -56,7 +56,7 @@ object Pin {
     * number and wall seconds to `report`. Lets a profiler attribute
     * construction-time materialization (AQE runs a plan's exchange stages
     * inside the localCheckpoint call itself) without copying an operator's
-    * pipeline (tools/TickCost). Never used by a declared query.
+    * pipeline (perfbench's pin timer). Never used by a declared query.
     */
   final case class Timed(inner: Pin, report: (Int, Double) => Unit) extends Pin {
     private val seq = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -1,6 +1,8 @@
-package org.apache.spark
+package org.apache.spark.graftbridge
 
-/** Test access to the listener bus, which Spark keeps package-private. */
+import org.apache.spark.SparkContext
+
+/** Bridge into the `private[spark]` listener bus. */
 object ListenerBusDrain {
   /** Blocks until every posted listener event has been delivered. */
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

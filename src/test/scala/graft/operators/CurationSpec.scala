@@ -723,23 +723,11 @@ class CurationSpec extends AnyFunSuite {
     val state = Curation.serviceState(
       corpus.toDF("doc_id", "lang", "text"), bench, "doc_id", "text", "lang")
     val batchDf = batch.toDF("doc_id", "lang", "text")
-    val sc = spark.sparkContext
-    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          executions.incrementAndGet()
-        case _ =>
-      }
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val (_, rec) = graft.tools.Profile.record(spark)(
       Curation.serviceTick(state, batchDf, "doc_id", "text", "lang",
-        quality = lit(1.0), minQuality = 0.0)
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(executions.get == 8, s"SQL executions during one serviceTick: ${executions.get}")
+        quality = lit(1.0), minQuality = 0.0))
+    val executions = rec.plans.size
+    assert(executions == 8, s"SQL executions during one serviceTick: $executions")
   }
 
   private def auditMap(df: org.apache.spark.sql.DataFrame): Map[String, (Long, Boolean)] =

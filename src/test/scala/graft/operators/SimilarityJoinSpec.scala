@@ -3,9 +3,12 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.graftbridge.ListenerBusDrain
+
 import graft.TestSpark
 import graft.expressions.VectorExpressions
 import graft.catalog.Shared.exitScopedDir
+import graft.tools.Profile
 
 class SimilarityJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -234,14 +237,14 @@ class SimilarityJoinSpec extends AnyFunSuite {
         jobs.add((e.properties.getProperty("spark.jobGroup.id"),
           e.properties.getProperty("spark.job.description")))
     }
-    org.apache.spark.ListenerBusDrain(sc)
+    ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try {
       (1 to 3).foreach { i =>
         sc.setJobGroup(s"probe-group-$i", s"probe pair $i")
         try report()
         finally sc.clearJobGroup()
-        org.apache.spark.ListenerBusDrain(sc)
+        ListenerBusDrain(sc)
         val seen = jobs.asScala.toSeq
         jobs.clear()
         assert(seen.size >= 2, s"expected both probes' jobs, saw $seen")
@@ -631,32 +634,12 @@ class SimilarityJoinSpec extends AnyFunSuite {
     }
   }
 
-  /** SQL executions that `f` starts — the construction-time actions of a
-    * join call (its size check, postings pins and cost probes). */
-  private def executionsDuring[T](f: => T): (T, Int) = {
-    val (out, plans) = executionPlansDuring(f)
-    (out, plans.size)
-  }
-
-  /** The physical plan of each SQL execution that `f` starts, in order. */
+  /** The physical plan of each SQL execution that `f` starts, in order —
+    * for a join call, its construction-time actions (the size check,
+    * postings pins and cost probes). */
   private def executionPlansDuring[T](f: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          plans.add(s.physicalPlanDescription)
-        case _ =>
-      }
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      org.apache.spark.ListenerBusDrain(sc)
-      import scala.jdk.CollectionConverters._
-      (out, plans.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
+    val (out, rec) = Profile.record(spark)(f)
+    (out, rec.plans)
   }
 
   /** `n` rows (id, block, set) of 4-8 element sets over a 3n-element
@@ -716,7 +699,8 @@ class SimilarityJoinSpec extends AnyFunSuite {
       def check(label: String, want: Set[(Long, Long)],
           run: SimilarityStrategy => org.apache.spark.sql.DataFrame): Unit = {
         assert(want.nonEmpty, s"$label: the fixture has no true pairs")
-        val (auto, executions) = executionsDuring(run(SimilarityStrategy.Auto))
+        val (auto, plans) = executionPlansDuring(run(SimilarityStrategy.Auto))
+        val executions = plans.size
         if (below) assert(executions == 1,
           s"$label: below the rule only the size check may run, saw $executions SQL executions")
         else assert(executions > 1,
