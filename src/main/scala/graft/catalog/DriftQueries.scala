@@ -137,9 +137,19 @@ object DriftQueries extends Family {
         |FROM e""".stripMargin,
     barSec = 0.860)
 
+  /** The per-closed-day `value` histogram q254, q268, q270, q277 and q278
+    * score: QuantileSketch.cells at (0, 512, 16) per tumbling day under
+    * StreamOps.windowed over the replayed events, as (day, bin, cnt).
+    */
+  private def valueCellsByDay(s: SparkSession, dir: String): DataFrame =
+    replayStream(s, dir, "append") { ev =>
+      graft.streaming.StreamOps.windowed(ev)((df, g) => graft.functions.QuantileSketch.cells(
+        df, col("value"), lo = 0.0, hi = 512.0, bins = 16, g))
+    }.select(to_date(col("ws")).as("day"), col("bin"), col("cnt"))
+
   // q254 — STREAMING distribution-drift monitor: per-day value histograms
-  // maintained as WINDOWED streaming cells (StreamOps.windowedHistCells —
-  // the histogram × event-time-window composition, watermark-closed in
+  // maintained as WINDOWED streaming cells (valueCellsByDay — the
+  // histogram × event-time-window composition, watermark-closed in
   // append mode, state = open windows × 16 bins), then the PSI of each
   // post-cutoff day against the first week's reference distribution
   // (Drift.psiByPeriod over the drained cells — the score grid is
@@ -148,11 +158,7 @@ object DriftQueries extends Family {
   // every psi exactly (one ln per term, the q245 single-transcendental
   // discipline); drifted = psi > 0.2, the standard alarm level.
   private def streamPsi(s: SparkSession, dir: String): DataFrame = {
-    val cells = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedHistCells(
-        ev, col("value"), lo = 0.0, hi = 512.0, bins = 16)
-    }
-    val byDay = cells.select(to_date(col("ws")).as("day"), col("bin"), col("cnt"))
+    val byDay = valueCellsByDay(s, dir)
     val cutoff = lit("2024-01-07").cast("date")
     val ref = byDay.filter(col("day") <= cutoff)
       .groupBy(col("bin")).agg(sum(col("cnt")).as("cnt"))
@@ -222,8 +228,8 @@ object DriftQueries extends Family {
   // (p − q)·ln(p/q) term.
   private def streamAdaptivePsi(s: SparkSession, dir: String): DataFrame = {
     val bufs = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedAdaptiveHistBufs(
-        ev, col("value"), maxBins = 16)
+      graft.streaming.StreamOps.windowed(ev)((df, g) =>
+        graft.functions.AdaptiveHist.bufs(df, col("value"), maxBins = 16, g))
     }
     val cells = graft.functions.AdaptiveHist.explodeBufs(
       bufs.select(to_date(col("ws")).as("day"), col("_ah")), Seq("day"))
@@ -386,11 +392,7 @@ object DriftQueries extends Family {
   // 0.1/0.2 conventions are fixed, so the oracle value-checks the
   // threshold arithmetic too, not just the statistic.
   private def streamKs(s: SparkSession, dir: String): DataFrame = {
-    val cells = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedHistCells(
-        ev, col("value"), lo = 0.0, hi = 512.0, bins = 16)
-    }
-    val byDay = cells.select(to_date(col("ws")).as("day"), col("bin"), col("cnt"))
+    val byDay = valueCellsByDay(s, dir)
     val cutoff = lit("2024-01-07").cast("date")
     val ref = byDay.filter(col("day") <= cutoff)
       .groupBy(col("bin")).agg(sum(col("cnt")).as("cnt"))
@@ -460,8 +462,8 @@ object DriftQueries extends Family {
         |FROM scored ORDER BY day""".stripMargin,
     barSec = 2.603)
 
-  // q269 — the STANDING embedding-drift deployment (StreamOps
-  // .windowedEmbeddingCells → Drift.psiKsByPeriod keyed by dim): q265's
+  // q269 — the STANDING embedding-drift deployment (Drift.embeddingCells
+  // under StreamOps.windowed → Drift.psiKsByPeriod keyed by dim): q265's
   // per-dimension marginal monitor as it actually runs in production —
   // component marginals drained per CLOSED day from a watermarked stream
   // (state bounded at open-windows × dims × bins), then BOTH drift
@@ -479,8 +481,8 @@ object DriftQueries extends Family {
     val emb = t(s, dir, "embeddings").withColumn("ts", expr(
       "timestampadd(HOUR, CAST(vec_id % 336 AS INT), TIMESTAMP '2024-01-01 00:00:00')"))
     val cells = replayFrame(s, emb, "append") { (_, stream) =>
-      graft.streaming.StreamOps.windowedEmbeddingCells(
-        stream, "embedding", lo = -0.75, hi = 0.75, bins = 12)
+      graft.streaming.StreamOps.windowed(stream)((df, g) => graft.operators.Drift.embeddingCells(
+        df, "embedding", lo = -0.75, hi = 0.75, bins = 12, g))
     }
     val byDay = cells.select(
       to_date(col("ws")).as("day"), col("dim"), col("bin"), col("cnt"))
@@ -593,11 +595,7 @@ object DriftQueries extends Family {
   // rotated reference's cell-wise sums, and every PSI term, KS CDF step,
   // and critical value.
   private def rotatedDrift(s: SparkSession, dir: String): DataFrame = {
-    val cells = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedHistCells(
-        ev, col("value"), lo = 0.0, hi = 512.0, bins = 16)
-    }
-    val byDay = cells.select(to_date(col("ws")).as("day"), col("bin"), col("cnt"))
+    val byDay = valueCellsByDay(s, dir)
     // scoring block = trailing 3 closed days (bounded day spine read)
     val cut = byDay.select(col("day")).distinct()
       .orderBy(col("day").desc).limit(3)
@@ -701,11 +699,7 @@ object DriftQueries extends Family {
   // [3·⌊(r−5)/3⌋+1, 3·⌊(r−5)/3⌋+4]), each rotated reference's cell-wise
   // sums, and every eps-floored PSI term and integer-running-sum KS gap.
   private def driftMonitorLoop(s: SparkSession, dir: String): DataFrame = {
-    val cells = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedHistCells(
-        ev, col("value"), lo = 0.0, hi = 512.0, bins = 16)
-    }
-    val byDay = cells.select(to_date(col("ws")).as("day"), col("bin"), col("cnt"))
+    val byDay = valueCellsByDay(s, dir)
     // bounded closed-day spine read (the q264 1-row-bind class)
     val days = byDay.select(col("day")).distinct().orderBy(col("day"))
       .collect().map(_.getDate(0))
@@ -815,11 +809,7 @@ object DriftQueries extends Family {
   // [4·⌊(r−6)/4⌋+3, 4·⌊(r−6)/4⌋+5]) with no seam — equality IS the
   // restart-transparency proof.
   private def monitorRestart(s: SparkSession, dir: String): DataFrame = {
-    val cells = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedHistCells(
-        ev, col("value"), lo = 0.0, hi = 512.0, bins = 16)
-    }
-    val byDay = cells.select(to_date(col("ws")).as("day"), col("bin"), col("cnt"))
+    val byDay = valueCellsByDay(s, dir)
     val days = byDay.select(col("day")).distinct().orderBy(col("day"))
       .collect().map(_.getDate(0))
     require(days.length >= 7, s"monitor restart needs >6 closed days, got ${days.length}")

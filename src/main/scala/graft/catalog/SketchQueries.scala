@@ -95,8 +95,7 @@ object SketchQueries extends Family {
   // the oracle recomputes from the same md5-slice buckets.
   private def streamCms(s: SparkSession, dir: String): DataFrame =
     replayStream(s, dir, "complete") { ev =>
-      graft.streaming.StreamOps
-        .cmsCells(ev, col("user_id").cast("string"), depth = 4, width = 64)
+      graft.functions.CountMin.sketch(ev, col("user_id").cast("string"), depth = 4, width = 64)
     }
       .select(col("d").cast("long").as("d"), col("bucket"), col("cnt"))
       .orderBy(col("d"), col("bucket"))
@@ -178,7 +177,7 @@ object SketchQueries extends Family {
   // slices.
   private def streamHll(s: SparkSession, dir: String): DataFrame =
     replayStream(s, dir, "complete") { ev =>
-      graft.streaming.StreamOps.hllCells(ev, col("user_id").cast("string"), p = 9)
+      graft.functions.HyperLogLog.cells(ev, col("user_id").cast("string"), p = 9)
     }
       .select(col("bucket"), col("r").cast("long").as("r"))
       .orderBy(col("bucket"))
@@ -282,7 +281,7 @@ object SketchQueries extends Family {
   // QuantileSketch.quantiles over it answers "p99 of value right now".
   private def streamHist(s: SparkSession, dir: String): DataFrame =
     replayStream(s, dir, "complete") { ev =>
-      graft.streaming.StreamOps.histCells(ev, col("value"), lo = 0.0, hi = 512.0, bins = 256)
+      graft.functions.QuantileSketch.cells(ev, col("value"), lo = 0.0, hi = 512.0, bins = 256)
     }
       .select(col("bin"), col("cnt").cast("long").as("cnt"))
       .orderBy(col("bin"))
@@ -305,8 +304,8 @@ object SketchQueries extends Family {
   // (day end ≤ final watermark = max ts − 1 h).
   private def streamWindowedHll(s: SparkSession, dir: String): DataFrame = {
     val cells = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps
-        .windowedHllCells(ev, col("user_id").cast("string"), p = 9)
+      graft.streaming.StreamOps.windowed(ev)((df, g) =>
+        graft.functions.HyperLogLog.cells(df, col("user_id").cast("string"), p = 9, g))
     }
     graft.functions.HyperLogLog.estimate(
         cells.select(to_date(col("ws")).as("day"), col("bucket"), col("r")),
@@ -541,7 +540,7 @@ object SketchQueries extends Family {
   private def streamKmv(s: SparkSession, dir: String): DataFrame = {
     val k = 16
     val bufs = replayStream(s, dir, "complete") { ev =>
-      graft.streaming.StreamOps.kmvBufs(
+      graft.functions.Kmv.bufs(
         ev.filter(col("user_id").isNotNull),
         col("user_id").cast("string"), k, Seq("event_type"))
     }
@@ -680,8 +679,8 @@ object SketchQueries extends Family {
   private def streamWeightedSample(s: SparkSession, dir: String): DataFrame = {
     val k = 16
     val bufs = replayStream(s, dir, "complete") { ev =>
-      graft.streaming.StreamOps.esBufs(
-        ev, "event_type", "event_id", floor(col("value")).cast("long"), k)
+      graft.operators.WeightedSample.bufs(
+        ev, Seq("event_type"), "event_id", floor(col("value")).cast("long"), k)
     }
     graft.operators.WeightedSample.explodeBufs(bufs, "event_type")
       .select(col("event_type"), col("rank"), col("id").as("event_id"),
@@ -721,7 +720,7 @@ object SketchQueries extends Family {
   // of each type's value range). State = one ≤2·64-entry buffer per type.
   private def streamAdaptiveHist(s: SparkSession, dir: String): DataFrame = {
     val bufs = replayStream(s, dir, "complete") { ev =>
-      graft.streaming.StreamOps.adaptiveHistBufs(
+      graft.functions.AdaptiveHist.bufs(
         ev.filter(col("value").isNotNull), col("value"),
         maxBins = 64, Seq("event_type"))
     }
@@ -812,11 +811,8 @@ object SketchQueries extends Family {
       docs.filter(col("doc_id") % 50 === 0), "doc_id", "text", n = 4, m = m, k = k)
     val cells = bi.bloomCells
     val benchGrams = bi.grams.select(col("g")).distinct()
-    val corpusGrams = docs.filter(col("doc_id") % 50 =!= 0)
-      .filter(trim(col("text")) =!= "")
-      .select(col("doc_id"),
-        explode(graft.expressions.WordShingles
-          .wordShingles(lower(col("text")), 4, distinct = true)).as("g"))
+    val corpusGrams = Decontaminate.wordGrams(
+      docs.filter(col("doc_id") % 50 =!= 0), "doc_id", "text", 4)
     val cands = corpusGrams.join(
       broadcast(Bloom.positiveItems(cells, corpusGrams, "g", m, k)),
       Seq("g"), "left_semi")
@@ -887,8 +883,8 @@ object SketchQueries extends Family {
   // day's cells from the same md5 slices and the q241 closure predicate.
   private def streamWindowedCms(s: SparkSession, dir: String): DataFrame = {
     val cells = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedCmsCells(
-        ev, col("user_id").cast("string"), depth = 4, width = 64)
+      graft.streaming.StreamOps.windowed(ev)((df, g) => graft.functions.CountMin.sketch(
+        df, col("user_id").cast("string"), depth = 4, width = 64, g))
     }
     cells
       .select(to_date(col("ws")).as("day"), col("d").cast("long").as("d"),
@@ -922,9 +918,8 @@ object SketchQueries extends Family {
   // q242's cell shape and take q242's (k−1)/U_(k) estimate unchanged.
   private def streamWindowedKmv(s: SparkSession, dir: String): DataFrame = {
     val bufs = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedKmvBufs(
-        ev.filter(col("user_id").isNotNull),
-        col("user_id").cast("string"), k = 16)
+      graft.streaming.StreamOps.windowed(ev.filter(col("user_id").isNotNull))((df, g) =>
+        graft.functions.Kmv.bufs(df, col("user_id").cast("string"), k = 16, g))
     }
     val cells = graft.functions.Kmv.explodeBufs(
       bufs.select(to_date(col("ws")).as("day"), col("_buf")), Seq("day"))
@@ -972,8 +967,8 @@ object SketchQueries extends Family {
   // in append mode; q250's ranking read-off applies per day.
   private def streamWindowedEs(s: SparkSession, dir: String): DataFrame = {
     val bufs = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedEsBufs(
-        ev, "event_type", "event_id", floor(col("value")).cast("long"), k = 8)
+      graft.streaming.StreamOps.windowed(ev)((df, g) => graft.operators.WeightedSample.bufs(
+        df, g :+ "event_type", "event_id", floor(col("value")).cast("long"), k = 8))
     }
     graft.functions.TopK.explodeBufs(
         bufs.select(to_date(col("ws")).as("day"), col("event_type"), col("_tk")),
@@ -1089,8 +1084,8 @@ object SketchQueries extends Family {
   // floor(value/2^scale) cells under the q241 closure predicate.
   private def streamWindowedAhist(s: SparkSession, dir: String): DataFrame = {
     val bufs = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedAdaptiveHistBufs(
-        ev, col("value"), maxBins = 16, Seq("event_type"))
+      graft.streaming.StreamOps.windowed(ev)((df, g) =>
+        graft.functions.AdaptiveHist.bufs(df, col("value"), maxBins = 16, g :+ "event_type"))
     }
     graft.functions.AdaptiveHist.explodeBufs(
         bufs.select(to_date(col("ws")).as("day"), col("event_type"), col("_ah")),
@@ -1142,9 +1137,8 @@ object SketchQueries extends Family {
   // the q241 closure predicate.
   private def streamWindowedBloom(s: SparkSession, dir: String): DataFrame = {
     val cells = replayStream(s, dir, "append") { ev =>
-      graft.streaming.StreamOps.windowedBloomCells(
-        ev.filter(col("user_id").isNotNull),
-        col("user_id").cast("string"), m = 1 << 12, k = 4)
+      graft.streaming.StreamOps.windowed(ev.filter(col("user_id").isNotNull))((df, g) =>
+        graft.functions.Bloom.cells(df, col("user_id").cast("string"), m = 1 << 12, k = 4, g))
     }
     cells.select(to_date(col("ws")).as("day"), col("word"), col("bits"))
       .orderBy(col("day"), col("word"))

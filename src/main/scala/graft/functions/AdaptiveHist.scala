@@ -33,7 +33,7 @@ case class AdaptiveHistBuf(
   * cells = floor(x/2^scale) counts. Mergeable by construction (align to
   * the coarser requirement, sum counts); streaming-safe (complete-mode
   * running aggregation, ≤ 2·maxBins entries per group per partition —
-  * `StreamOps.adaptiveHistBufs`).
+  * `AdaptiveHist.bufs` on a stream).
   *
   * The trade vs the fixed-range [[QuantileSketch]]: resolution is a
   * posteriori (one bin = 2^scale wide, scale set by the observed range)
@@ -171,19 +171,13 @@ class AdaptiveHistAgg(maxBins: Int, minScale: Int)
   */
 object AdaptiveHist {
 
-  /** The raw buffer aggregate as a column expression — for callers
-    * grouping by their OWN keys (the windowed streaming form groups by an
-    * event-time window — the Kmv.aggExpr discipline). `value` should be a
-    * double column; callers own the null filtering [[bufs]] applies (the
-    * aggregator itself also skips NULLs, per SQL aggregate semantics).
-    */
-  def aggExpr(maxBins: Int, value: Column, minScale: Int = 0): Column =
-    udaf(new AdaptiveHistAgg(maxBins, minScale),
-      Encoders.DOUBLE.asInstanceOf[Encoder[java.lang.Double]])(value)
-
   /** The aggregation core: (groupCols..., _ah) — one bounded buffer per
-    * group (the Kmv.bufs discipline; streaming-safe as a running
-    * aggregation). NULL values are skipped (no rank information).
+    * group (the Kmv.bufs discipline). NULL values are skipped (no rank
+    * information). Runs unchanged on a streaming frame (a running
+    * aggregation, complete mode) and under `StreamOps.windowed` (per
+    * event-time window, append mode). Under a window each window's scale
+    * escalates on its own span: a wide-range day coarsens while a narrow
+    * day keeps fine bins (q259).
     */
   def bufs(
       df: DataFrame,
@@ -196,7 +190,9 @@ object AdaptiveHist {
     val grouped =
       if (groupCols.isEmpty) prepped.groupBy()
       else prepped.groupBy(groupCols.map(col): _*)
-    grouped.agg(aggExpr(maxBins, col("_v"), minScale).as("_ah"))
+    val fn = udaf(new AdaptiveHistAgg(maxBins, minScale),
+      Encoders.DOUBLE.asInstanceOf[Encoder[java.lang.Double]])
+    grouped.agg(fn(col("_v")).as("_ah"))
   }
 
   /** Explode a [[bufs]] table to cells (groupCols..., scale, bin, cnt) —

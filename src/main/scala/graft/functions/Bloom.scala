@@ -37,9 +37,8 @@ import org.apache.spark.sql.functions._
   * the usual rule m ≈ 1.44·k·n bits for target fpr 2^−k — [[sizeFor]]
   * computes (m, k) from (n, target fpr) so callers never hand-roll it.
   * State is ≤ ⌈m/32⌉ cell rows per group BY CONSTRUCTION — which is what
-  * makes the streaming form (`StreamOps.bloomCells`) a bounded running
-  * aggregation. As OR-merges grow a stored filter past its sizing, the
-  * fill ratio degrades the effective fpr — [[saturationReport]] is the
+  * makes [[cells]] on a stream a bounded running aggregation. As OR-merges
+  * grow a stored filter past its sizing, the fill ratio degrades the effective fpr — [[saturationReport]] is the
   * rebuild trigger (the lifecycle analog of the postings index's
   * `indexDriftReport`).
   */
@@ -158,12 +157,11 @@ object Bloom {
       }
     }
 
-  /** Shared (m, k) validation — private[graft] so every entry point that
-    * hashes positions (including the windowed streaming form in
-    * StreamOps) fails loud on the same contract: an unguarded k = 0 turns
+  /** Shared (m, k) validation — every entry point that hashes positions
+    * fails loud on the same contract: an unguarded k = 0 turns
     * `sequence(0, -1)` into [0, -1] and emits silently corrupt cells.
     */
-  private[graft] def checkParams(m: Int, k: Int): Unit = {
+  private def checkParams(m: Int, k: Int): Unit = {
     require(m >= 32, s"m must be at least one 32-bit word: $m")
     require(k >= 1 && k <= 64, s"k out of range: $k")
   }
@@ -171,6 +169,12 @@ object Bloom {
   /** Build the cell table (groupCols…, word, bits) over `item` — one
     * bounded bit-set per group. NULL items are skipped (membership of
     * nothing). Persist as parquet; merge growth slices with [[merge]].
+    * Runs unchanged on a streaming frame (a running aggregation, complete
+    * mode) and under `StreamOps.windowed` (per event-time window, append
+    * mode). A running build's drained cells are a pure function of the
+    * item SET seen (OR is idempotent, so micro-batch boundaries and
+    * replays cannot move a bit), and per-window filters probe with `ws`
+    * in groupCols and OR-merge into coarser periods.
     */
   def cells(
       df: DataFrame,

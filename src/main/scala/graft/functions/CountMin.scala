@@ -36,10 +36,18 @@ object CountMin {
   def bucket(item: Column, d: Int, width: Int): Column =
     conv(substring(md5(item), 1 + 8 * d, 8), 16, 10).cast("long") % width
 
-  /** Build the sketch table (d, bucket, cnt) over every row's `item` —
-    * depth·width rows at most, the whole summary.
+  /** Build the sketch table (groupCols..., d, bucket, cnt) over every
+    * row's `item` — depth·width rows at most per group, the whole summary.
+    * Runs unchanged on a streaming frame (a running aggregation, complete
+    * mode) and under `StreamOps.windowed` (per event-time window, append
+    * mode).
     */
-  def sketch(df: DataFrame, item: Column, depth: Int, width: Int): DataFrame = {
+  def sketch(
+      df: DataFrame,
+      item: Column,
+      depth: Int,
+      width: Int,
+      groupCols: Seq[String] = Nil): DataFrame = {
     checkParams(depth, width)
     val hashed = TextFunctions.bindOnce(item) { it =>
       array((0 until depth).map(d => bucket(it, d, width)): _*)
@@ -47,8 +55,8 @@ object CountMin {
     // a NULL item would otherwise emit depth (d, NULL-bucket) junk cells
     // (the array's ELEMENTS go null, not the array, so posexplode keeps them)
     df.where(item.isNotNull)
-      .select(posexplode(hashed).as(Seq("d", "bucket")))
-      .groupBy(col("d"), col("bucket"))
+      .select(groupCols.map(col) :+ posexplode(hashed).as(Seq("d", "bucket")): _*)
+      .groupBy((groupCols ++ Seq("d", "bucket")).map(col): _*)
       .agg(count(lit(1)).as("cnt"))
   }
 

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * deployment. THIS variant exists where the sketch itself must be a plain
   * relational table: cross-engine reproducible (the DuckDB oracle
   * re-derives cells and estimate — q234), maintainable as a streaming
-  * aggregation (`StreamOps.hllCells`, q235), and mergeable with ordinary
+  * aggregation ([[cells]] on a stream, q235), and mergeable with ordinary
   * SQL (groupBy-max) by engines that can't read DataSketches blobs.
   */
 object HyperLogLog {
@@ -59,6 +59,9 @@ object HyperLogLog {
   /** Build the sketch cell table (groupCols..., bucket, r) — at most
     * m = 2^p rows per group, the whole summary. NULL items are skipped
     * (they don't count toward distinct, matching `count(distinct x)`).
+    * Runs unchanged on a streaming frame (a running aggregation, complete
+    * mode) and under `StreamOps.windowed` (per event-time window, append
+    * mode).
     */
   def cells(
       df: DataFrame,

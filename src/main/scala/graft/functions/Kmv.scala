@@ -109,18 +109,13 @@ object Kmv {
 
   private val HashSpace = 4503599627370496.0 // 2^52
 
-  /** The raw bottom-k aggregate as a column expression — for callers
-    * grouping by their OWN keys (the windowed streaming forms group by an
-    * event-time window). Callers own the null filtering [[bufs]] applies.
-    */
-  def aggExpr(k: Int, h: Column, item: Column): Column =
-    udaf(new BottomKByHash(k), Encoders.product[KmvEntry])(h, item)
-
   /** The aggregation core alone: (groupCols..., _buf) — one bounded
     * bottom-k buffer per group. This is the STREAMING-SAFE half of
     * [[cells]]: as a streaming aggregation the state store holds exactly
     * one ≤ 2k-entry buffer per group (bounded by construction), and the
-    * drained buffers explode to cells with [[explodeBufs]].
+    * drained buffers explode to cells with [[explodeBufs]]. Runs
+    * unchanged on a streaming frame (a running aggregation, complete mode)
+    * and under `StreamOps.windowed` (per event-time window, append mode).
     */
   def bufs(
       df: DataFrame,

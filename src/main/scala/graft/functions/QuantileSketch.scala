@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * interpolation) exact integer/double closed-form that a second engine —
   * the DuckDB oracle (q238) — reproduces bit-for-bit, and what makes the
   * cell table maintainable as a streaming aggregation
-  * (`StreamOps.histCells`, q239) with state bounded by construction.
+  * ([[cells]] on a stream, q239) with state bounded by construction.
   *
   * Numeric portability: choose (lo, hi, bins) so the bin width is a dyadic
   * rational (e.g. 110000/2048 = 53.7109375 = 6875/128) — then
@@ -89,8 +89,9 @@ object QuantileSketch {
   }
 
   /** Build the cell table (groupCols..., bin, cnt) — at most `bins` rows
-    * per group, the whole summary. Works identically as a streaming
-    * aggregation (a running groupBy-count).
+    * per group, the whole summary. Runs unchanged on a streaming frame (a
+    * running aggregation, complete mode) and under `StreamOps.windowed`
+    * (per event-time window, append mode).
     */
   def cells(
       df: DataFrame,

@@ -106,17 +106,17 @@ object TopK {
       id: Column,
       tag: Column,
       k: Int): DataFrame =
-    explodeBufs(bufsPerKey(scored, keyCol, sim, id, tag, k), keyCol)
+    explodeBufs(bufsPerKey(scored, Seq(keyCol), sim, id, tag, k), keyCol)
 
-  /** The aggregation core alone: (keyCol, _tk) — one bounded top-k buffer
-    * per key. This is the STREAMING-SAFE half of [[topKPerKey]] (the
-    * Kmv.bufs discipline): as a streaming aggregation the state store holds
-    * exactly one ≤ 2k-entry buffer per key — bounded by construction — and
-    * drained buffers explode to ranked rows with [[explodeBufs]].
+  /** The aggregation core alone: (keyCols…, _tk) — one bounded top-k
+    * buffer per key. This is the STREAMING-SAFE half of [[topKPerKey]]
+    * (the Kmv.bufs discipline): as a streaming aggregation the state store
+    * holds exactly one ≤ 2k-entry buffer per key — bounded by construction
+    * — and drained buffers explode to ranked rows with [[explodeBufs]].
     */
   def bufsPerKey(
       scored: DataFrame,
-      keyCol: String,
+      keyCols: Seq[String],
       sim: Column,
       id: Column,
       tag: Column,
@@ -128,23 +128,14 @@ object TopK {
       // null field (sim, id, or tag) — match the old window ranking, where
       // nulls sorted last; null-tag rows are likewise unrepresentable
       .filter(sim.isNotNull && id.isNotNull && tag.isNotNull)
-      .groupBy(col(keyCol))
+      .groupBy(keyCols.map(col): _*)
       .agg(fn(sim, id, tag).as("_tk"))
   }
 
-  /** The raw top-k aggregate as a column expression — for callers grouping
-    * by their OWN keys (the windowed streaming forms group by
-    * (event-time window, group)). Callers own the null filtering
-    * [[bufsPerKey]] applies (the non-nullable ScoredEntry encoder throws
-    * on any null field).
-    */
-  def aggExpr(k: Int, sim: Column, id: Column, tag: Column): Column =
-    udaf(new TopKBySim(k), Encoders.product[ScoredEntry])(sim, id, tag)
-
   /** Explode a [[bufsPerKey]] table to rank-ordered rows, carrying any
-    * number of key columns (e.g. (ws, group) from a windowed streaming
-    * aggregation) — finish truncated the arrays to the live size in
-    * (sim desc, id asc) order, so rank = position + 1. Output columns:
+    * number of key columns (e.g. (ws, group) from `StreamOps.windowed`) —
+    * finish truncated the arrays to the live size in (sim desc, id asc)
+    * order, so rank = position + 1. Output columns:
     * (keyCols…, rank, id, sim, tag).
     */
   def explodeBufs(bufsDf: DataFrame, keyCols: Seq[String]): DataFrame =

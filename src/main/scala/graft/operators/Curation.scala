@@ -515,20 +515,29 @@ object Curation {
     // the benchmark text twice and drift if the gram recipe changed)
     val bi = Decontaminate.benchIndexSized(
       bench, idCol, textCol, decontN, targetFpp, pin)
-    val mr = idx.agg(
-      count(lit(1)).as("n"),
-      count(col(idCol).cast("long")).as("nc"),
-      max(col(idCol).cast("long")).as("mx")).head()
-    require(mr.getLong(0) == mr.getLong(1),
-      s"serviceState: ${mr.getLong(0) - mr.getLong(1)} of ${mr.getLong(0)} corpus ids " +
-        s"in '$idCol' are NULL or not castable to long — the service rank contract " +
-        "needs long-castable, unique, monotone ingest ids")
-    val maxRank = if (mr.getLong(0) == 0L) Long.MinValue else mr.getLong(2)
+    val maxRank = maxIdRank(idx, idCol, "serviceState")
     // the df feed starts AS the frozen build's freq (it is dfCounts of the
     // corpus); appendState replaces rather than mutates, so one pinned
     // frame serves both roles
     new ServiceState(idx, posts, freq, freq, bi, maxRank,
       tau = tau, shingleN = shingleN, shingleHash = shingleHash)
+  }
+
+  /** The max ingest rank of a signature index: the max of `idCol` as a
+    * long, or Long.MinValue for an empty index. One bounded driver
+    * aggregate, which also fails loud when any id is NULL or not castable
+    * to long.
+    */
+  private def maxIdRank(index: DataFrame, idCol: String, caller: String): Long = {
+    val mr = index.agg(
+      count(lit(1)).as("n"),
+      count(col(idCol).cast("long")).as("nc"),
+      max(col(idCol).cast("long")).as("mx")).head()
+    require(mr.getLong(0) == mr.getLong(1),
+      s"$caller: ${mr.getLong(0) - mr.getLong(1)} of ${mr.getLong(0)} ids " +
+        s"in '$idCol' are NULL or not castable to long — the service rank contract " +
+        "needs long-castable, unique, monotone ingest ids")
+    if (mr.getLong(0) == 0L) Long.MinValue else mr.getLong(2)
   }
 
   /** REBUILD a [[ServiceState]] from persisted halves — the restart verb
@@ -575,16 +584,7 @@ object Curation {
     // verb re-validates what it reads
     Seq(idCol, "_dg", "_h").foreach(c => require(index.columns.contains(c),
       s"index is missing column '$c' — persist Curation.signatures output"))
-    val mark = maxRank.getOrElse {
-      val mr = index.agg(
-        count(lit(1)).as("n"),
-        count(col(idCol).cast("long")).as("nc"),
-        max(col(idCol).cast("long")).as("mx")).head()
-      require(mr.getLong(0) == mr.getLong(1),
-        s"restoreServiceState: ${mr.getLong(0) - mr.getLong(1)} of ${mr.getLong(0)} " +
-          s"restored ids in '$idCol' are NULL or not castable to long")
-      if (mr.getLong(0) == 0L) Long.MinValue else mr.getLong(2)
-    }
+    val mark = maxRank.getOrElse(maxIdRank(index, idCol, "restoreServiceState"))
     new ServiceState(index, posts, frozenFreq, currentFreq, benchIdx, mark, lastBatchId,
       tau = tau, shingleN = shingleN, shingleHash = shingleHash)
   }
@@ -958,8 +958,7 @@ object Curation {
       s"benchIdx was built at gram size n=${bi.n} but this tick's decontN=$decontN — " +
         "a mismatch silently underreports shared grams; rebuild the index at decontN"))
     val contaminated = (benchIdx match {
-      case Some(bi) => Decontaminate.sharedGramCountsIndexed(
-        s1, bi.grams, bi.bloomCells, idCol, textCol, decontN, bi.m, bi.k)
+      case Some(bi) => Decontaminate.sharedGramCountsIndexed(s1, bi, idCol, textCol)
       case None => Decontaminate.sharedGramCounts(s1, bench, idCol, textCol, decontN)
     })
       .filter(col("shared_grams") >= decontShared)

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
-
 /** Benchmark decontamination — flag corpus documents that share word
   * n-grams with an evaluation/benchmark set so they can be removed before
   * training (the q63 overlap report's corpus-side dual: q63 counts
@@ -20,11 +18,23 @@ import graft.functions.TextFunctions
   */
 object Decontaminate {
 
+  /** The word n-gram recipe every decontamination path shares: (idCol, g),
+    * one row per document × DISTINCT lowercase whitespace n-gram, blank
+    * texts skipped. Tokenization mirrors the oracle's
+    * `regexp_split_to_array(trim(lower(text)), '\s+')`. Build and probe
+    * must gram alike, so this is the one place the recipe lives.
+    */
+  private[graft] def wordGrams(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+    require(n >= 1, s"n must be positive: $n")
+    df.filter(trim(col(textCol)) =!= "")
+      .select(col(idCol), explode(graft.expressions.WordShingles
+        .wordShingles(lower(col(textCol)), n, distinct = true)).as("g"))
+  }
+
   /** Distinct shared-n-gram counts per corpus document.
     *
-    * Tokenization is lowercase + whitespace (mirrors the oracle's
-    * `regexp_split_to_array(trim(lower(text)), '\s+')`). Returns
-    * (idCol, shared_grams) for corpus docs with at least one shared gram.
+    * Grams are [[wordGrams]]. Returns (idCol, shared_grams) for corpus
+    * docs with at least one shared gram.
     *
     * `useBloom=false` skips the prefilter (exact join only) — the
     * equivalence of the two paths is the operator's correctness test.
@@ -37,15 +47,8 @@ object Decontaminate {
       n: Int,
       useBloom: Boolean = true,
       fpp: Double = 0.001): DataFrame = {
-    require(n >= 1, s"n must be positive: $n")
-    def grams(df: DataFrame): DataFrame = df
-      .filter(trim(col(textCol)) =!= "")
-      .select(
-        col(idCol),
-        explode(graft.expressions.WordShingles
-          .wordShingles(lower(col(textCol)), n, distinct = true)).as("g"))
-    val corpusGrams = grams(corpus)
-    val benchGrams = grams(bench).select(col("g")).distinct()
+    val corpusGrams = wordGrams(corpus, idCol, textCol, n)
+    val benchGrams = wordGrams(bench, idCol, textCol, n).select(col("g")).distinct()
     val candidates =
       if (useBloom) {
         // two driver-visible jobs over the SMALL side only (count sizes the
@@ -103,7 +106,7 @@ object Decontaminate {
     *   - RESIZE: [[benchIndexResize]] when the monitor trips — (m, k)
     *     re-sized to the grown gram count and the cells rebuilt from the
     *     stored gram table, no benchmark text re-read.
-    * The same lowercase + whitespace word n-grams as [[sharedGramCounts]]
+    * The grams are [[wordGrams]], as in [[sharedGramCounts]]
     * (`n` is a contract across build and probe, like shingleN on the
     * signature index — the handle carries it so ticks can check).
     */
@@ -114,12 +117,7 @@ object Decontaminate {
       n: Int,
       m: Int,
       k: Int): BenchIndex = {
-    require(n >= 1, s"n must be positive: $n")
-    val grams = bench
-      .filter(trim(col(textCol)) =!= "")
-      .select(col(idCol), explode(graft.expressions.WordShingles
-        .wordShingles(lower(col(textCol)), n, distinct = true)).as("g"))
-      .distinct()
+    val grams = wordGrams(bench, idCol, textCol, n).distinct()
     BenchIndex(
       grams,
       graft.functions.Bloom.cells(grams.select(col("g")).distinct(), col("g"), m, k),
@@ -155,12 +153,7 @@ object Decontaminate {
       n: Int,
       targetFpp: Double = 0.001,
       pin: Pin = Pin.LocalCheckpoint): BenchIndex = {
-    require(n >= 1, s"n must be positive: $n")
-    val grams = pin(bench
-      .filter(trim(col(textCol)) =!= "")
-      .select(col(idCol), explode(graft.expressions.WordShingles
-        .wordShingles(lower(col(textCol)), n, distinct = true)).as("g"))
-      .distinct())
+    val grams = pin(wordGrams(bench, idCol, textCol, n).distinct())
     val nGrams = grams.select(col("g")).distinct().count()
     val (m, k) = graft.functions.Bloom.sizeFor(math.max(1L, nGrams), targetFpp)
     BenchIndex(
@@ -186,9 +179,9 @@ object Decontaminate {
     * (first write wins); a revised benchmark doc is [[benchIndexDelete]]
     * then grow, exactly like any other mutation in the tier. Growth
     * degrades the effective fpp over time — [[saturationReport]] watches,
-    * [[benchIndexResize]] responds. The drained streaming form
-    * (`StreamOps.bloomCells` over the gram feed) merges the same way when
-    * additions arrive as a stream.
+    * [[benchIndexResize]] responds. When additions arrive as a stream,
+    * `Bloom.cells` running over the gram feed drains cells that merge the
+    * same way.
     */
   def benchIndexGrow(bi: BenchIndex, newBench: DataFrame, textCol: String): BenchIndex = {
     Seq(bi.idCol, textCol).foreach(c => require(newBench.columns.contains(c),
@@ -264,27 +257,18 @@ object Decontaminate {
     * no benchmark re-gram), then the stored gram table removes the false
     * positives exactly. Output is IDENTICAL to [[sharedGramCounts]]
     * (one-sidedness: the bloom never drops a true member), for any m/k —
-    * `fpp` tunes probe cost, not correctness. `n`, `m`, `k` must match the
-    * index build.
+    * `fpp` tunes probe cost, not correctness. The corpus grams at the
+    * handle's `n` and the probe at its (m, k), so they cannot drift from
+    * the build; `idCol` and `textCol` name the corpus columns.
     */
   def sharedGramCountsIndexed(
       corpus: DataFrame,
-      benchGrams: DataFrame,
-      bloomCells: DataFrame,
+      bi: BenchIndex,
       idCol: String,
-      textCol: String,
-      n: Int,
-      m: Int,
-      k: Int): DataFrame = {
-    require(n >= 1, s"n must be positive: $n")
-    val corpusGrams = corpus
-      .filter(trim(col(textCol)) =!= "")
-      .select(
-        col(idCol),
-        explode(graft.expressions.WordShingles
-          .wordShingles(lower(col(textCol)), n, distinct = true)).as("g"))
+      textCol: String): DataFrame = {
+    val corpusGrams = wordGrams(corpus, idCol, textCol, bi.n)
     val candidates = graft.functions.Bloom
-      .positiveItems(bloomCells, corpusGrams, "g", m, k)
+      .positiveItems(bi.bloomCells, corpusGrams, "g", bi.m, bi.k)
     corpusGrams
       .join(broadcast(candidates), Seq("g"), "left_semi")
       // exact verify as a SEMI join: membership only — no distinct pass
@@ -292,7 +276,7 @@ object Decontaminate {
       // docs can't multiply candidate rows (count_distinct would absorb
       // duplicates, but a standing service shouldn't re-aggregate the
       // bench side every tick to begin with)
-      .join(benchGrams.select(col("g")), Seq("g"), "left_semi")
+      .join(bi.grams.select(col("g")), Seq("g"), "left_semi")
       .groupBy(col(idCol))
       .agg(count_distinct(col("g")).as("shared_grams"))
   }

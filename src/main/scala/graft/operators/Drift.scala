@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Distribution-drift read-offs over histogram CELL TABLES — the
   * monitoring layer on top of the sketch tier: the cells
-  * ([[graft.functions.QuantileSketch.cells]] /
-  * `StreamOps.windowedHistCells`) summarize the data once; drift scoring
+  * ([[graft.functions.QuantileSketch.cells]], per closed window under
+  * `StreamOps.windowed`) summarize the data once; drift scoring
   * then runs on the summaries only (periods × bins rows), never on the
   * data. Complements the batch two-sample forms (q116's decile PSI,
   * q125's KS) with the STANDING-MONITOR shape: one reference window, a
@@ -233,6 +233,11 @@ object Drift {
     * function of raw component values and literals — a second engine
     * re-derives the cells exactly (the q240/q243 discipline: never feed an
     * engine-summed float into a discrete decision).
+    *
+    * Runs unchanged on a streaming frame (a running aggregation, complete
+    * mode) and under `StreamOps.windowed` (per event-time window, append
+    * mode; q269). NULL components drop like NULL values do in
+    * QuantileSketch.cells, so they never mint a bin=NULL cell.
     */
   def embeddingCells(
       df: DataFrame,
@@ -295,9 +300,8 @@ object Drift {
 
   /** [[psiByPeriod]] over ADAPTIVE histogram cells — the align step that
     * lets the standing monitor ride the unknown-range sketch
-    * ([[graft.functions.AdaptiveHist]] /
-    * `StreamOps.windowedAdaptiveHistBufs`) instead of requiring a declared
-    * (lo, hi, bins). Inputs carry a `scale` column: `cells` =
+    * ([[graft.functions.AdaptiveHist.bufs]] under `StreamOps.windowed`)
+    * instead of requiring a declared (lo, hi, bins). Inputs carry a `scale` column: `cells` =
     * (periodCol, scale, bin, cnt), `refCells` = (scale, bin, cnt) — each
     * row's bin is floor(value / 2^scale), and different periods (or a
     * grown reference) legitimately sit at different scales.
@@ -361,7 +365,8 @@ object Drift {
     * sized lives on the driver). Deployment shape:
     *
     * {{{
-    *   val cells  = StreamOps.windowedHistCells(stream, col("value"), lo, hi, bins)
+    *   val cells  = StreamOps.windowed(stream)((df, g) =>
+    *     QuantileSketch.cells(df, col("value"), lo, hi, bins, g))
     *   val state  = Drift.monitorState(seedCells, "ws", Nil, cadence = 7, refK = 4)
     *   cells.writeStream.outputMode("append").foreachBatch { (batch, _) =>
     *     sink(Drift.monitorTick(state, batch))   // (ws, keys…, psi, ks, n_period, n_ref)

@@ -42,10 +42,9 @@ object WeightedSample {
     * fractional weight rather than silently truncating the echoed column
     * while ranking by the untruncated value. assert_true returns null on
     * pass, so the `when` both forces its evaluation per row and yields the
-    * checked long weight. Shared by [[bufs]] and the windowed streaming
-    * form (StreamOps.windowedEsBufs).
+    * checked long weight.
     */
-  def checkedWeight(weight: Column): Column = {
+  private def checkedWeight(weight: Column): Column = {
     val wLong = weight.cast("long")
     when(
       assert_true(weight.cast("double") === wLong.cast("double"),
@@ -72,30 +71,33 @@ object WeightedSample {
       idCol: String,
       weight: Column,
       k: Int): DataFrame =
-    explodeBufs(bufs(df, groupCol, idCol, weight, k), groupCol)
+    explodeBufs(bufs(df, Seq(groupCol), idCol, weight, k), groupCol)
 
-  /** The aggregation core alone: (groupCol, _tk) — one bounded ES top-k
+  /** The aggregation core alone: (groupCols…, _tk) — one bounded ES top-k
     * buffer per group (TopK.bufsPerKey over the ln(u)/w keys). This is the
     * STREAMING-SAFE half of [[sample]] (the Kmv.bufs discipline): as a
     * streaming aggregation the state store holds exactly one ≤ 2k-entry
     * buffer per group, bounded by construction, and per-micro-batch merges
     * are the aggregator's own re-top-k — so the drained sample equals the
-    * batch sample over the same rows (StreamOps.esBufs, q250).
+    * batch sample over the same rows (q250). Runs unchanged on a streaming
+    * frame (a running aggregation, complete mode) and under
+    * `StreamOps.windowed` (per event-time window, append mode). Explode
+    * with `TopK.explodeBufs(df, groupCols)`: sim/id/tag are the
+    * es_key/id/weight columns.
     */
   def bufs(
       df: DataFrame,
-      groupCol: String,
+      groupCols: Seq[String],
       idCol: String,
       weight: Column,
       k: Int): DataFrame = {
     val scored = df
       .where(col(idCol).isNotNull && weight.isNotNull && weight > 0)
-      .select(
-        col(groupCol),
+      .select(groupCols.map(col) ++ Seq(
         col(idCol).cast("long").as("_id"),
         esKey(col(idCol), weight).as("_ek"),
-        checkedWeight(weight).as("_w"))
-    TopK.bufsPerKey(scored, groupCol, col("_ek"), col("_id"), col("_w"), k)
+        checkedWeight(weight).as("_w")): _*)
+    TopK.bufsPerKey(scored, groupCols, col("_ek"), col("_id"), col("_w"), k)
   }
 
   /** Explode a [[bufs]] table to the [[sample]] output shape

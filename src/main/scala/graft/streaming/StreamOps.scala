@@ -9,6 +9,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Structured Streaming re-expressions of the engine's window operators
   * (SURVEY.md §2.10 / §7.2 phase E): the same computations the batch queries
   * declare, over an unbounded `events` stream.
+  *
+  * The sketch tier has no streaming copies: each sketch's batch builder
+  * (`CountMin.sketch`, `HyperLogLog.cells`, `QuantileSketch.cells`,
+  * `Kmv.bufs`, `WeightedSample.bufs`, `AdaptiveHist.bufs`, `Bloom.cells`,
+  * `Drift.embeddingCells`) is one DataFrame plan that runs as a running
+  * aggregation on a stream (complete mode) and per event-time window under
+  * [[windowed]] (append mode).
   */
 object StreamOps {
 
@@ -364,391 +371,35 @@ object StreamOps {
       }
   }
 
-  /** Streaming Count-Min maintenance: the identical declarative sketch
-    * graft.functions.CountMin.sketch builds in batch, maintained
-    * incrementally over an unbounded stream (same expression tree — the
-    * streaming planner turns the groupBy into a stateful agg). The state is
-    * BOUNDED BY CONSTRUCTION: at most depth·width keys regardless of stream
-    * length or item cardinality, which is what makes an unwatermarked
-    * running aggregation safe here — contrast per-key aggregations over
-    * unbounded key spaces, which need watermark eviction. This is the
-    * streaming answer to "frequency profile of an unbounded ingest feed":
-    * heavy-hitter estimates at any moment via CountMin.estimate on the
-    * current cell table.
+  /** The sketch × event-time-window composition: `cells` is any sketch's
+    * batch builder, and this runs it per tumbling window over a watermarked
+    * stream in append mode. The stream gets `withWatermark("ts", watermark)`
+    * and a reserved group column `_win = window(ts, window_)`; `cells`
+    * receives it as `Seq("_win")` and must group by it on top of its own
+    * groups. The window column carries the watermark into the aggregate, so
+    * a window closes once the watermark passes its end and its state is
+    * evicted: state is (open windows) × the builder's own bound. The output
+    * is the builder's, with `_win` replaced by a leading `ws` = window
+    * start. The builder's hashing, binning and parameter checks are the
+    * batch ones, and a drained window equals the batch build over that
+    * window's rows, so every batch read-off (estimate, quantiles,
+    * explodeBufs, positiveItems, the Drift scores) applies per `ws`:
+    * {{{
+    *   StreamOps.windowed(events)((df, g) =>
+    *     HyperLogLog.cells(df, col("user_id").cast("string"), p = 9, g))
+    * }}}
+    * A running sketch (one state per group that lives as long as the
+    * stream, complete mode) needs no combinator: the batch builder runs
+    * unchanged on the stream.
     */
-  def cmsCells(
-      stream: DataFrame,
-      item: org.apache.spark.sql.Column,
-      depth: Int,
-      width: Int): DataFrame =
-    graft.functions.CountMin.sketch(stream, item, depth, width)
-
-  /** WINDOWED streaming Count-Min — the frequency member of the
-    * sketch × event-time-window matrix (HLL: [[windowedHllCells]],
-    * histogram: [[windowedHistCells]], THIS: frequency): per tumbling
-    * window the same depth·width cell table as [[cmsCells]],
-    * watermark-CLOSED in append mode — state is bounded at
-    * (open windows)·depth·width cells and old windows evict, unlike the
-    * running [[cmsCells]] whose single sketch lives forever by design.
-    * Returns (ws = window start, d, bucket, cnt); per-window frequency
-    * estimates via CountMin.estimate over any one window's drained cells.
-    */
-  def windowedCmsCells(
-      stream: DataFrame,
-      item: org.apache.spark.sql.Column,
-      depth: Int,
-      width: Int,
-      window_ : String = "1 day",
-      watermark: String = "1 hour"): DataFrame = {
-    val hashed = graft.functions.TextFunctions.bindOnce(item) { it =>
-      org.apache.spark.sql.functions.array(
-        (0 until depth).map(d => graft.functions.CountMin.bucket(it, d, width)): _*)
-    }
-    stream.where(item.isNotNull)
-      .withWatermark("ts", watermark)
-      .select(col("ts"), posexplode(hashed).as(Seq("d", "bucket")))
-      .groupBy(window(col("ts"), window_), col("d"), col("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("ws"), col("d"), col("bucket"), col("cnt"))
-  }
-
-  /** Streaming HyperLogLog maintenance — the distinct-count dual of
-    * [[cmsCells]]: the same declarative cell table
-    * graft.functions.HyperLogLog.cells builds in batch, maintained as a
-    * running streaming aggregation (the planner turns the groupBy-max into
-    * a stateful agg). State is BOUNDED BY CONSTRUCTION at 2^p cells
-    * regardless of stream length or key cardinality — "how many distinct
-    * users/tokens has this unbounded feed seen" at any moment via
-    * HyperLogLog.estimate over the current cells.
-    */
-  def hllCells(stream: DataFrame, item: org.apache.spark.sql.Column, p: Int): DataFrame =
-    graft.functions.HyperLogLog.cells(stream, item, p)
-
-  /** WINDOWED streaming HyperLogLog — the sketch × event-time-window
-    * composition ("distinct users per day" on an unbounded feed): per
-    * tumbling window the same ≤ 2^p cell table as [[hllCells]], with the
-    * watermark CLOSING windows in append mode — state is bounded at
-    * (open windows)·2^p cells and old windows are evicted, unlike the
-    * running [[hllCells]] whose single sketch lives forever by design.
-    * Returns (ws = window start, bucket, r); estimate per window via
-    * HyperLogLog.estimate over the drained cells (q241).
-    */
-  def windowedHllCells(
-      stream: DataFrame,
-      item: org.apache.spark.sql.Column,
-      p: Int,
-      window_ : String = "1 day",
-      watermark: String = "1 hour"): DataFrame =
-    stream.where(item.isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(
-        window(col("ts"), window_),
-        graft.functions.HyperLogLog.bucket(item, p).as("bucket"))
-      .agg(max(graft.functions.HyperLogLog.rho(item)).as("r"))
-      .select(col("window.start").as("ws"), col("bucket"), col("r"))
-
-  /** Streaming fixed-bin histogram maintenance — the order-statistics third
-    * of the sketch tier ([[cmsCells]] = frequency, [[hllCells]] = distinct):
-    * the same cell table graft.functions.QuantileSketch.cells builds in
-    * batch, maintained as a running streaming groupBy-count. State is
-    * BOUNDED BY CONSTRUCTION at `bins` cells regardless of stream length —
-    * "what is the p99 of this unbounded feed right now" at any moment via
-    * QuantileSketch.quantiles over the current cells.
-    */
-  def histCells(
-      stream: DataFrame,
-      value: org.apache.spark.sql.Column,
-      lo: Double,
-      hi: Double,
-      bins: Int): DataFrame =
-    graft.functions.QuantileSketch.cells(stream, value, lo, hi, bins)
-
-  /** WINDOWED streaming fixed-bin histogram — the sketch × event-time
-    * window composition for ORDER STATISTICS ("this hour's value
-    * distribution", the [[windowedHllCells]] dual): per tumbling window
-    * the same dyadic-width bin cells as [[histCells]], watermark-CLOSED in
-    * append mode — state is bounded at (open windows)·bins cells and old
-    * windows evict, unlike the running [[histCells]] whose single
-    * histogram lives forever by design. Returns (ws = window start, bin,
-    * cnt); read quantiles per window via QuantileSketch.quantiles over the
-    * drained cells, or score distribution drift per window against a
-    * reference with [[graft.operators.Drift.psiByPeriod]] (q254).
-    */
-  def windowedHistCells(
-      stream: DataFrame,
-      value: org.apache.spark.sql.Column,
-      lo: Double,
-      hi: Double,
-      bins: Int,
-      window_ : String = "1 day",
-      watermark: String = "1 hour"): DataFrame =
-    stream.where(value.isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(
-        window(col("ts"), window_),
-        graft.functions.QuantileSketch.bin(value, lo, hi, bins).as("bin"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("ws"), col("bin"), col("cnt"))
-
-  /** WINDOWED streaming EMBEDDING-marginal cells — the drift tier's
-    * embedding substrate ([[graft.operators.Drift.embeddingCells]]) as a
-    * watermark-closed per-window form, so a standing deployment drains
-    * per-day per-dimension component marginals and schedules
-    * `Drift.embeddingPsiByPeriod` / `Drift.ksByPeriod(keyCols = Seq("dim"))`
-    * over them (one posexplode pass, two alarm semantics — the q254/q268
-    * pattern extended to the embedding column type): posexplode the vector,
-    * bin each component at the declared (lo, hi, bins) (the
-    * QuantileSketch dyadic-width clamp — identical bins to the batch
-    * build), count per (window, keyCols…, dim, bin). State is bounded at
-    * (open windows) × keys × dims × bins cells and old windows evict in
-    * append mode. Returns (ws = window start, keyCols…, dim, bin, cnt) —
-    * cells from different drains merge like any fixed-range cell table
-    * (same declaration, QuantileSketch.merge with `keyCols :+ "dim"`).
-    * Deliberately centroid-free, like the batch form: every bin decision
-    * is a pure function of raw component values and literals, so a second
-    * engine re-derives the drained cells exactly.
-    */
-  def windowedEmbeddingCells(
-      stream: DataFrame,
-      embCol: String,
-      lo: Double,
-      hi: Double,
-      bins: Int,
-      window_ : String = "1 day",
-      watermark: String = "1 hour",
-      keyCols: Seq[String] = Nil): DataFrame = {
-    val clash = Set("dim", "pos", "col").intersect(keyCols.toSet)
-    require(clash.isEmpty,
-      s"windowedEmbeddingCells reserves (dim, pos, col) as working columns: " +
-        s"$clash — rename them")
-    stream.where(col(embCol).isNotNull)
-      .withWatermark("ts", watermark)
-      .select((col("ts") +: keyCols.map(col)) :+ posexplode(col(embCol)): _*)
-      .withColumnRenamed("pos", "dim")
-      // drop null COMPONENTS, not just null arrays — the batch build
-      // (QuantileSketch.cells) drops null values before binning, and the
-      // "identical bins to the batch build" contract needs this side to
-      // match; without it a null component would land in a bin=NULL cell
-      // and inflate the per-(window, dim) totals
-      .where(col("col").isNotNull)
-      .groupBy((window(col("ts"), window_) +: keyCols.map(col)) ++ Seq(col("dim"),
-        graft.functions.QuantileSketch.bin(col("col").cast("double"), lo, hi, bins)
-          .as("bin")): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .select((col("window.start").as("ws") +: keyCols.map(col)) ++
-        Seq(col("dim"), col("bin"), col("cnt")): _*)
-  }
-
-  /** Streaming KMV maintenance — the distinct-SAMPLE fourth of the running
-    * sketch tier ([[cmsCells]] = frequency, [[hllCells]] = count,
-    * [[histCells]] = order statistics): per-group bottom-k buffers
-    * maintained as a running streaming aggregation (complete mode). State
-    * is BOUNDED BY CONSTRUCTION at one ≤ 2k-entry (hash, item) buffer per
-    * group — "show me k representative distinct users of this unbounded
-    * feed, and how many there are" at any moment via
-    * graft.functions.Kmv.explodeBufs + Kmv.estimate over the drained
-    * buffers (the batch estimator applies unchanged, q242/q246).
-    */
-  def kmvBufs(
-      stream: DataFrame,
-      item: org.apache.spark.sql.Column,
-      k: Int,
-      groupCols: Seq[String] = Nil): DataFrame =
-    graft.functions.Kmv.bufs(stream, item, k, groupCols)
-
-  /** WINDOWED streaming KMV — the distinct-SAMPLE member of the
-    * sketch × event-time-window matrix ("k representative distinct users
-    * per day, plus how many there were"): per tumbling window one bounded
-    * bottom-k buffer, watermark-closed in append mode — state =
-    * (open windows) · ≤ 2k entries, old windows evict, unlike the running
-    * [[kmvBufs]] whose buffers live forever by design. Returns
-    * (ws = window start, _buf); explode with
-    * `Kmv.explodeBufs(df, Seq("ws"))` and estimate per window with
-    * `Kmv.estimate` — the batch read-offs apply unchanged (q256).
-    */
-  def windowedKmvBufs(
-      stream: DataFrame,
-      item: org.apache.spark.sql.Column,
-      k: Int,
-      window_ : String = "1 day",
-      watermark: String = "1 hour"): DataFrame =
-    stream.where(item.isNotNull)
-      .withWatermark("ts", watermark)
-      .select(col("ts"), graft.functions.Kmv.hash(item).as("h"),
-        item.cast("string").as("item"))
-      .groupBy(window(col("ts"), window_))
-      .agg(graft.functions.Kmv.aggExpr(k, col("h"), col("item")).as("_buf"))
-      .select(col("window.start").as("ws"), col("_buf"))
-
-  /** WINDOWED streaming ES weighted sample — the weighted-SAMPLE member of
-    * the sketch × event-time-window matrix ("this day's weight-proportional
-    * k-item sample per group"): per (tumbling window, `groupCol`) one
-    * bounded top-k buffer over the ES keys, watermark-closed in append
-    * mode — state = (open windows · groups) · ≤ 2k entries. Returns
-    * (ws, groupCol, _tk); explode with
-    * `TopK.explodeBufs(df, Seq("ws", groupCol))` — sim/id/tag are the
-    * es_key/id/weight columns, exactly the [[esBufs]] read-off (q257).
-    */
-  def windowedEsBufs(
-      stream: DataFrame,
-      groupCol: String,
-      idCol: String,
-      weight: org.apache.spark.sql.Column,
-      k: Int,
-      window_ : String = "1 day",
-      watermark: String = "1 hour"): DataFrame = {
-    import graft.operators.WeightedSample
-    stream
-      .where(col(idCol).isNotNull && weight.isNotNull && weight > 0)
-      .select(col("ts"), col(groupCol),
-        WeightedSample.esKey(col(idCol), weight).as("_ek"),
-        col(idCol).cast("long").as("_id"),
-        WeightedSample.checkedWeight(weight).as("_w"))
-      .withWatermark("ts", watermark)
-      // the TopK null contract (bufsPerKey's filter, owned here)
-      .filter(col("_ek").isNotNull && col("_id").isNotNull && col("_w").isNotNull)
-      .groupBy(window(col("ts"), window_), col(groupCol))
-      .agg(graft.functions.TopK.aggExpr(k, col("_ek"), col("_id"), col("_w")).as("_tk"))
-      .select(col("window.start").as("ws"), col(groupCol), col("_tk"))
-  }
-
-  /** Streaming Efraimidis–Spirakis weighted sample — the weighted-SAMPLE
-    * fifth of the running sketch tier ([[cmsCells]] = frequency,
-    * [[hllCells]] = distinct count, [[histCells]] = order statistics,
-    * [[kmvBufs]] = uniform distinct sample): per-group bounded top-k
-    * buffers over the ln(u)/w ES keys (operators/WeightedSample) maintained
-    * as a running streaming aggregation (complete mode, the kmvBufs
-    * discipline verbatim). State is BOUNDED BY CONSTRUCTION at one
-    * ≤ 2k-entry buffer per group, and the aggregator's merge is re-top-k,
-    * so the drained sample is a pure function of the rows seen — "give me
-    * a weight-proportional k-doc sample of this unbounded feed per group,
-    * right now" with batch-identical membership
-    * (WeightedSample.explodeBufs over the drained buffers, q250).
-    */
-  def esBufs(
-      stream: DataFrame,
-      groupCol: String,
-      idCol: String,
-      weight: org.apache.spark.sql.Column,
-      k: Int): DataFrame =
-    graft.operators.WeightedSample.bufs(stream, groupCol, idCol, weight, k)
-
-  /** Streaming ADAPTIVE dyadic histogram — the unknown-range order-statistics
-    * leg ([[histCells]] needs a declared (lo, hi); a stream of an unseen
-    * column has neither a declared range nor a second pass for
-    * QuantileSketch.probeRange): per-group bounded buffers whose dyadic bin
-    * width 2^scale escalates as the observed span grows
-    * (functions/AdaptiveHist — deterministic q-digest-style escalation, so
-    * the drained cells are a pure function of the values seen and a batch
-    * oracle re-derives scale and cells exactly). State is BOUNDED BY
-    * CONSTRUCTION at one ≤ 2·maxBins-entry buffer per group; merge aligns
-    * scales (floorDiv) and sums — the running-aggregation contract of the
-    * rest of the sketch tier (q251).
-    */
-  def adaptiveHistBufs(
-      stream: DataFrame,
-      value: org.apache.spark.sql.Column,
-      maxBins: Int,
-      groupCols: Seq[String] = Nil,
-      minScale: Int = 0): DataFrame =
-    graft.functions.AdaptiveHist.bufs(stream, value, maxBins, groupCols, minScale)
-
-  /** WINDOWED streaming ADAPTIVE histogram — the sixth and last cell of
-    * the sketch × event-time-window matrix (CMS/HLL/fixed-histogram/KMV/ES
-    * all have watermark-closed per-window forms; this adds the
-    * unknown-range order-statistics member): per (tumbling window,
-    * `groupCols`) one bounded [[graft.functions.AdaptiveHistAgg]] buffer,
-    * watermark-closed in append mode — state = (open windows · groups) ·
-    * ≤ 2·maxBins entries, old windows evict.
-    *
-    * The windowed subtlety vs the running [[adaptiveHistBufs]]: each
-    * window's scale escalates INDEPENDENTLY, driven by its own observed
-    * span — a wide-range Monday lands at a coarse 2^s while a narrow
-    * Tuesday keeps fine bins, exactly what "this day's value
-    * distribution" wants (the running form would hold every day at the
-    * lifetime-span scale). Each drained window equals
-    * `AdaptiveHist.cells` of that window's batch slice by the aggregator's
-    * determinism contract (scale = the smallest span-fitting s — a pure
-    * function of the window's value multiset, independent of micro-batch
-    * boundaries and merge shape). Returns (ws = window start,
-    * groupCols..., _ah); explode with
-    * `AdaptiveHist.explodeBufs(df, "ws" +: groupCols)` and read quantiles
-    * with `AdaptiveHist.quantiles` — the batch read-offs apply unchanged
-    * (q259).
-    */
-  def windowedAdaptiveHistBufs(
-      stream: DataFrame,
-      value: org.apache.spark.sql.Column,
-      maxBins: Int,
-      groupCols: Seq[String] = Nil,
-      minScale: Int = 0,
-      window_ : String = "1 day",
-      watermark: String = "1 hour"): DataFrame =
-    stream.where(value.isNotNull)
-      .select(col("ts") +: groupCols.map(col) :+ value.cast("double").as("_v"): _*)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_) +: groupCols.map(col): _*)
-      .agg(graft.functions.AdaptiveHist.aggExpr(maxBins, col("_v"), minScale).as("_ah"))
-      .select(col("window.start").as("ws") +: groupCols.map(col) :+ col("_ah"): _*)
-
-  /** Streaming Bloom-filter cells — the membership sketch as a running
-    * aggregation (an unbounded item feed folds into a FIXED bit budget):
-    * per-group (word, bits) rows maintained by `bit_or`, state BOUNDED BY
-    * CONSTRUCTION at ≤ ⌈m/32⌉ rows per group regardless of stream length.
-    * OR is associative/commutative/idempotent, so the drained cells are a
-    * pure function of the item SET seen — micro-batch boundaries, replays,
-    * and merge shape cannot move a bit (the batch oracle re-derives every
-    * word exactly; no other member of the sketch tier has idempotence, so
-    * this is the one sketch that is also replay-tolerant). Probe the
-    * drained cells with [[graft.functions.Bloom.positiveItems]]; the
-    * standing-service use is the decontamination index
-    * ([[graft.operators.Decontaminate.benchIndex]]) absorbing benchmark
-    * additions as they arrive.
-    */
-  def bloomCells(
-      stream: DataFrame,
-      item: org.apache.spark.sql.Column,
-      m: Int,
-      k: Int,
-      groupCols: Seq[String] = Nil): DataFrame =
-    graft.functions.Bloom.cells(stream, item, m, k, groupCols)
-
-  /** WINDOWED streaming Bloom cells — the membership sketch joins the
-    * event-time-window matrix (its seventh member, after the six
-    * frequency/distinct/order-statistics/sample cells): per tumbling
-    * window one ≤ ⌈m/32⌉-row (word, bits) filter over the window's item
-    * set, watermark-closed in append mode — state = (open windows) ·
-    * ⌈m/32⌉ cells, old windows evict, unlike the running [[bloomCells]]
-    * whose single filter absorbs forever by design. The ask it answers:
-    * "give me each day's membership filter as a stored artifact" —
-    * per-day filters probe independently
-    * ([[graft.functions.Bloom.positiveItems]] with `ws` in groupCols),
-    * OR-merge into coarser periods losslessly (merge ≡ whole-data build),
-    * and inherit the one-sidedness contract per window. Returns
-    * (ws = window start, word, bits).
-    */
-  def windowedBloomCells(
-      stream: DataFrame,
-      item: org.apache.spark.sql.Column,
-      m: Int,
-      k: Int,
-      window_ : String = "1 day",
-      watermark: String = "1 hour"): DataFrame = {
-    // same fail-loud contract as every batch Bloom entry point — an
-    // unguarded (m, k) would emit silently corrupt cells (negative
-    // positions truncate to the wrong word and wrap the shift)
-    graft.functions.Bloom.checkParams(m, k)
-    // the word/mask packing mirrors Bloom.cells (the window() grouping
-    // expression is why this can't delegate to it directly)
-    stream.where(item.isNotNull)
-      .withWatermark("ts", watermark)
-      .select(col("ts"), explode(graft.functions.Bloom.positions(item, m, k)).as("_pos"))
-      .select(col("ts"),
-        (col("_pos") / 32).cast("int").as("word"),
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(_pos % 32 AS INT))").as("_mask"))
-      .groupBy(window(col("ts"), window_), col("word"))
-      .agg(expr("bit_or(_mask)").as("bits"))
-      .select(col("window.start").as("ws"), col("word"), col("bits"))
+  def windowed(stream: DataFrame, window_ : String = "1 day", watermark: String = "1 hour")(
+      cells: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+    require(!stream.columns.contains("_win"),
+      "windowed reserves the column _win as its window key: rename it")
+    val out = cells(
+      stream.withWatermark("ts", watermark).withColumn("_win", window(col("ts"), window_)),
+      Seq("_win"))
+    out.select(col("_win.start").as("ws") +: out.columns.filter(_ != "_win").map(col): _*)
   }
 
   /** Streaming trend detection (the VEG adjacent-period comparison as a

@@ -28,8 +28,12 @@ import graft.catalog.Query
   * catalog), the data dir from SPARK_GRAFT_SF_DIR and the core count from
   * SPARK_GRAFT_CPUS. Like `Bench` it first warms every selected query up on
   * the sibling `sf0.001` dir. Then each query runs twice in this JVM, forced
-  * by a noop write as in `Bench`: once untraced, then once under a
-  * [[Recorder]]. The traced run fills the query's entry in
+  * by a noop write as in `Bench`: once untraced and once under a
+  * [[Recorder]]. The order alternates with the query's position in the
+  * name-sorted list (untraced first at even positions, traced first at odd
+  * ones), so the second run's warmth falls on each side for half the
+  * queries and the median `overhead_ratio` is not biased by it. The traced
+  * run fills the query's entry in
   * `BENCH_LAYERS.json` and its `BENCH_PLANS/<query>.txt` (the physical plan
   * of each SQL execution, in start order), both in the working directory.
   * An entry holds:
@@ -195,10 +199,18 @@ object Profile {
     ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
   }
 
-  /** One query's `BENCH_LAYERS.json` entry and its SQL executions' plans. */
-  def profile(spark: SparkSession, q: Query, dir: String): (ListMap[String, Any], Seq[String]) = {
-    val (untracedC, untracedE) = runOnce(spark, q, dir)
+  /** One query's `BENCH_LAYERS.json` entry and its SQL executions' plans;
+    * `tracedFirst` picks which of the two runs goes first.
+    */
+  def profile(
+      spark: SparkSession,
+      q: Query,
+      dir: String,
+      tracedFirst: Boolean): (ListMap[String, Any], Seq[String]) = {
+    def untraced() = runOnce(spark, q, dir)
+    val before = if (tracedFirst) None else Some(untraced())
     val ((c, e), rec) = record(spark)(runOnce(spark, q, dir))
+    val (untracedC, untracedE) = before.getOrElse(untraced())
     (ListMap[String, Any]("construct_s" -> c, "execute_s" -> e) ++ rec.layers +
       ("overhead_ratio" -> (c + e) / math.max(untracedC + untracedE, 1e-9)), rec.plans)
   }
@@ -213,9 +225,9 @@ object Profile {
     spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(blocking = false))
 
     val plansDir = Files.createDirectories(out.resolve("BENCH_PLANS"))
-    val entries = queries.sortBy(_.name).map { q =>
+    val entries = queries.sortBy(_.name).zipWithIndex.map { case (q, i) =>
       val (entry, plans) =
-        try profile(spark, q, dir)
+        try profile(spark, q, dir, tracedFirst = i % 2 == 1)
         catch { case NonFatal(e) => (ListMap[String, Any]("error" -> String.valueOf(e.getMessage)), Nil) }
       val numbered = plans.zipWithIndex.map { case (p, i) => s"== SQL execution ${i + 1} ==\n$p" }
       Files.write(plansDir.resolve(s"${q.name}.txt"), numbered.mkString("\n").getBytes(UTF_8))

@@ -419,7 +419,7 @@ class Round8PlanSpec extends AnyFunSuite with PlanFixture {
   test("streaming ES sample core plans as a partial bounded-heap aggregate") {
     val ev = Engine.table(spark, sf, "events")
     val p = plan(graft.operators.WeightedSample.bufs(
-      ev, "event_type", "event_id", floor(col("value")).cast("long"), 16))
+      ev, Seq("event_type"), "event_id", floor(col("value")).cast("long"), 16))
     assert(p.contains("ObjectHashAggregate"), s"no bounded-heap aggregate:\n$p")
     assert(!p.contains("Window"), s"ES bufs must never window-sort the stream:\n$p")
   }

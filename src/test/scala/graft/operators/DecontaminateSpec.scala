@@ -42,8 +42,9 @@ class DecontaminateSpec extends AnyFunSuite {
     bi.bloomCells.write.mode("overwrite").parquet(s"$dir/cells")
     val indexed = Decontaminate
       .sharedGramCountsIndexed(corpus,
-        spark.read.parquet(s"$dir/grams"), spark.read.parquet(s"$dir/cells"),
-        "doc_id", "text", n = 3, m = 1 << 12, k = 4)
+        bi.copy(grams = spark.read.parquet(s"$dir/grams"),
+          bloomCells = spark.read.parquet(s"$dir/cells")),
+        "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val inline = Decontaminate
       .sharedGramCounts(corpus, bench, "doc_id", "text", n = 3)
@@ -59,9 +60,9 @@ class DecontaminateSpec extends AnyFunSuite {
     val corpus2 = corpus.unionByName(Seq((5L, "p q r s zz")).toDF("doc_id", "text"))
     val merged = Decontaminate
       .sharedGramCountsIndexed(corpus2,
-        bi1.grams.unionByName(bi2.grams).distinct(),
-        graft.functions.Bloom.merge(bi1.bloomCells, bi2.bloomCells),
-        "doc_id", "text", 3, 1 << 12, 4)
+        bi1.copy(grams = bi1.grams.unionByName(bi2.grams).distinct(),
+          bloomCells = graft.functions.Bloom.merge(bi1.bloomCells, bi2.bloomCells)),
+        "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val whole = Decontaminate
       .sharedGramCounts(corpus2, benchBoth, "doc_id", "text", 3)
@@ -95,8 +96,7 @@ class DecontaminateSpec extends AnyFunSuite {
     assert(eCol.getMessage.contains("doc_id"))
     // and the grown index probes exactly like the inline path over the union
     val corpus2 = corpus.unionByName(Seq((5L, "p q r s zz")).toDF("doc_id", "text"))
-    val indexed = Decontaminate.sharedGramCountsIndexed(
-        corpus2, grown.grams, grown.bloomCells, "doc_id", "text", 3, grown.m, grown.k)
+    val indexed = Decontaminate.sharedGramCountsIndexed(corpus2, grown, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val inline = Decontaminate.sharedGramCounts(
         corpus2, bench.unionByName(bench2), "doc_id", "text", 3)
@@ -112,8 +112,7 @@ class DecontaminateSpec extends AnyFunSuite {
     val bi = Decontaminate.benchIndex(b2, "doc_id", "text", n = 3, m = 1 << 12, k = 4)
     val after = Decontaminate.benchIndexDelete(bi, Seq(100L).toDF("doc_id"))
     def counts(i: Decontaminate.BenchIndex) = Decontaminate
-      .sharedGramCountsIndexed(corpus, i.grams, i.bloomCells,
-        "doc_id", "text", i.n, i.m, i.k)
+      .sharedGramCountsIndexed(corpus, i, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // corpus doc 1 ("a b c d x"): shares {"a b c","b c d"} before, only the
     // retained doc's "a b c" after
@@ -137,10 +136,10 @@ class DecontaminateSpec extends AnyFunSuite {
   }
 
   test("streaming-drained bloom cells ARE the BenchIndex growth feed (merge ≡ fresh build)") {
-    // the StreamOps.bloomCells doc claims drained slices feed a stored
+    // the Bloom.cells doc claims drained slices feed a stored
     // decontamination index as benchmark additions arrive — prove it: a
     // growth slice arrives as a STREAM, its gram feed drains through the
-    // running streaming form at the index's (m, k), and Bloom.merge of the
+    // running Bloom.cells at the index's (m, k), and Bloom.merge of the
     // drained cells into the stored cells equals a fresh BATCH benchIndex
     // over the union benchmark set, probe-identical (the indexed≡inline
     // pattern, joining the streaming tier to the index tier)
@@ -156,7 +155,7 @@ class DecontaminateSpec extends AnyFunSuite {
     val gramStream = stream.filter(trim(col("text")) =!= "")
       .select(explode(array_distinct(
         TextFunctions.wordShingles(lower(col("text")), 3))).as("g"))
-    val q = graft.streaming.StreamOps.bloomCells(gramStream, col("g"), m, k)
+    val q = Bloom.cells(gramStream, col("g"), m, k)
       .writeStream.outputMode("complete").format("memory")
       .queryName("growth_cells").start()
     q.processAllAvailable(); q.stop()
@@ -173,8 +172,7 @@ class DecontaminateSpec extends AnyFunSuite {
       "streaming-drained growth cells diverge from the whole-data build")
     // probe-identity on a corpus touching old, new, and no benchmark docs
     val corpus2 = corpus.unionByName(Seq((5L, "p q r s zz")).toDF("doc_id", "text"))
-    val viaGrown = Decontaminate.sharedGramCountsIndexed(
-        corpus2, grown.grams, grown.bloomCells, "doc_id", "text", 3, m, k)
+    val viaGrown = Decontaminate.sharedGramCountsIndexed(corpus2, grown, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val inline = Decontaminate.sharedGramCounts(corpus2, benchBoth, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -211,8 +209,7 @@ class DecontaminateSpec extends AnyFunSuite {
     val probe = Seq(
       (1L, "w1 x1 y1 z1 tail"), // shares trigrams with benchBig doc 1
       (2L, "nothing shared here at all")).toDF("doc_id", "text")
-    val viaResized = Decontaminate.sharedGramCountsIndexed(
-        probe, resized.grams, resized.bloomCells, "doc_id", "text", 3, resized.m, resized.k)
+    val viaResized = Decontaminate.sharedGramCountsIndexed(probe, resized, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val inline = Decontaminate.sharedGramCounts(probe, benchBig, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

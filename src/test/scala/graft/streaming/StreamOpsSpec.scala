@@ -70,9 +70,15 @@ class StreamOpsSpec extends AnyFunSuite {
 
   test("windowed HLL cells: append mode emits exactly the batch sketch of each closed day") {
     val stream = spark.readStream.schema(batch.schema).parquet(streamDir)
-    val got = runStream(
-        StreamOps.windowedHllCells(stream, col("user_id").cast("string"), p = 7),
-        "win_hll", "append")
+    def hll(p: Int) = StreamOps.windowed(stream)((df, g) =>
+      graft.functions.HyperLogLog.cells(df, col("user_id").cast("string"), p, g))
+    // the windowed form fails loud on the batch builder's p range
+    Seq(6, 17).foreach(p => intercept[IllegalArgumentException](hll(p)))
+    // and on an input column that its window key would overwrite
+    intercept[IllegalArgumentException] {
+      StreamOps.windowed(stream.withColumn("_win", lit(1)))((df, _) => df)
+    }
+    val got = runStream(hll(7), "win_hll", "append")
       .select(to_date(col("ws")).as("d"), col("bucket"), col("r"))
       .collect().map(x => (x.getDate(0).toString, x.getLong(1), x.getInt(2)))
     assert(got.nonEmpty, "no closed windows emitted")
@@ -93,7 +99,8 @@ class StreamOpsSpec extends AnyFunSuite {
   test("windowed hist cells: append mode emits exactly the batch histogram of each closed day") {
     val stream = spark.readStream.schema(batch.schema).parquet(streamDir)
     val got = runStream(
-        StreamOps.windowedHistCells(stream, col("value"), 0.0, 512.0, 16),
+        StreamOps.windowed(stream)((df, g) =>
+          graft.functions.QuantileSketch.cells(df, col("value"), 0.0, 512.0, 16, g)),
         "win_hist", "append")
       .select(to_date(col("ws")).as("d"), col("bin"), col("cnt"))
       .collect().map(x => (x.getDate(0).toString, x.getLong(1), x.getLong(2)))
@@ -111,9 +118,15 @@ class StreamOpsSpec extends AnyFunSuite {
 
   test("windowed CMS cells: append mode emits exactly the batch sketch of each closed day") {
     val stream = spark.readStream.schema(batch.schema).parquet(streamDir)
-    val got = runStream(
-        StreamOps.windowedCmsCells(stream, col("user_id").cast("string"), 2, 32),
-        "win_cms", "append")
+    def cms(depth: Int, width: Int) = StreamOps.windowed(stream)((df, g) =>
+      graft.functions.CountMin.sketch(df, col("user_id").cast("string"), depth, width, g))
+    // the windowed form fails loud on the batch builder's (depth, width)
+    // contract: depth 5 would slice past md5's 32 hex chars into null
+    // buckets, width 0 would bucket by % 0
+    Seq((5, 32), (0, 32), (2, 0)).foreach { case (d, w) =>
+      intercept[IllegalArgumentException](cms(d, w))
+    }
+    val got = runStream(cms(2, 32), "win_cms", "append")
       .select(to_date(col("ws")).as("d"), col("d").as("dd"), col("bucket"), col("cnt"))
       .collect().map(x => (x.getDate(0).toString, x.getInt(1), x.getLong(2), x.getLong(3)))
     assert(got.nonEmpty, "no closed windows emitted")
@@ -134,9 +147,8 @@ class StreamOpsSpec extends AnyFunSuite {
   test("windowed KMV bufs: append mode emits exactly the batch sketch of each closed day") {
     val stream = spark.readStream.schema(batch.schema).parquet(streamDir)
     val bufs = runStream(
-      StreamOps.windowedKmvBufs(
-        stream.filter(col("user_id").isNotNull),
-        col("user_id").cast("string"), k = 16),
+      StreamOps.windowed(stream.filter(col("user_id").isNotNull))((df, g) =>
+        graft.functions.Kmv.bufs(df, col("user_id").cast("string"), k = 16, g)),
       "win_kmv", "append")
     val got = graft.functions.Kmv.explodeBufs(
         bufs.select(to_date(col("ws")).as("d"), col("_buf")), Seq("d"))
@@ -170,8 +182,8 @@ class StreamOpsSpec extends AnyFunSuite {
     val embBatch = spark.read.parquet(embDir)
     val stream = spark.readStream.schema(embBatch.schema).parquet(embDir)
     val got = runStream(
-        StreamOps.windowedEmbeddingCells(
-          stream, "embedding", lo = -0.75, hi = 0.75, bins = 12),
+        StreamOps.windowed(stream)((df, g) => graft.operators.Drift.embeddingCells(
+          df, "embedding", lo = -0.75, hi = 0.75, bins = 12, g)),
         "win_emb", "append")
       .select(to_date(col("ws")).as("d"), col("dim"), col("bin"), col("cnt"))
       .collect().map(r => (r.getDate(0).toString, r.getInt(1), r.getLong(2), r.getLong(3)))
@@ -187,9 +199,8 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(!gotDays(maxDay), s"unclosed day $maxDay emitted in append mode")
     // keyed form: per-label cells drain identically to the batch build
     val gotK = runStream(
-        StreamOps.windowedEmbeddingCells(
-          stream, "embedding", lo = -0.75, hi = 0.75, bins = 12,
-          keyCols = Seq("label")),
+        StreamOps.windowed(stream)((df, g) => graft.operators.Drift.embeddingCells(
+          df, "embedding", lo = -0.75, hi = 0.75, bins = 12, g :+ "label")),
         "win_emb_k", "append")
       .select(to_date(col("ws")).as("d"), col("label"), col("dim"),
         col("bin"), col("cnt"))
@@ -212,8 +223,8 @@ class StreamOpsSpec extends AnyFunSuite {
   test("windowed adaptive-hist bufs: append mode emits exactly the batch cells of each closed day") {
     val stream = spark.readStream.schema(batch.schema).parquet(streamDir)
     val bufs = runStream(
-      StreamOps.windowedAdaptiveHistBufs(
-        stream, col("value"), maxBins = 16, Seq("event_type")),
+      StreamOps.windowed(stream)((df, g) => graft.functions.AdaptiveHist.bufs(
+        df, col("value"), maxBins = 16, g :+ "event_type")),
       "win_ahist", "append")
     val got = graft.functions.AdaptiveHist.explodeBufs(
         bufs.select(to_date(col("ws")).as("d"), col("event_type"), col("_ah")),
@@ -247,7 +258,8 @@ class StreamOpsSpec extends AnyFunSuite {
     val stream = spark.readStream
       .schema(spark.read.parquet(d).schema).parquet(d)
     val bufs = runStream(
-      StreamOps.windowedAdaptiveHistBufs(stream, col("value"), maxBins = 16),
+      StreamOps.windowed(stream)((df, g) =>
+        graft.functions.AdaptiveHist.bufs(df, col("value"), maxBins = 16, g)),
       "win_ahist_sc", "append")
     val scales = bufs
       .select(to_date(col("ws")).cast("string"), col("_ah.scale"))
@@ -259,18 +271,19 @@ class StreamOpsSpec extends AnyFunSuite {
   test("windowed bloom cells: append mode emits exactly the batch filter of each closed day") {
     val m = 1 << 11
     val stream = spark.readStream.schema(batch.schema).parquet(streamDir)
+    def bloom(src: org.apache.spark.sql.DataFrame, m: Int, k: Int) =
+      StreamOps.windowed(src)((df, g) =>
+        graft.functions.Bloom.cells(df, col("user_id").cast("string"), m, k, g))
     // the streaming form fails loud on the same (m, k) contract as every
     // batch Bloom entry point — an unguarded k = 0 would corrupt silently
     intercept[IllegalArgumentException] {
-      StreamOps.windowedBloomCells(stream, col("user_id").cast("string"), m, 0)
+      bloom(stream, m, 0)
     }
     intercept[IllegalArgumentException] {
-      StreamOps.windowedBloomCells(stream, col("user_id").cast("string"), 16, 4)
+      bloom(stream, 16, 4)
     }
     val got = runStream(
-        StreamOps.windowedBloomCells(
-          stream.filter(col("user_id").isNotNull),
-          col("user_id").cast("string"), m, 4),
+        bloom(stream.filter(col("user_id").isNotNull), m, 4),
         "win_bloom", "append")
       .select(to_date(col("ws")).as("d"), col("word"), col("bits"))
       .collect().map(r => (r.getDate(0).toString, r.getInt(1), r.getLong(2)))
@@ -308,8 +321,8 @@ class StreamOpsSpec extends AnyFunSuite {
   test("windowed ES bufs: append mode emits exactly the batch sample of each closed day") {
     val stream = spark.readStream.schema(batch.schema).parquet(streamDir)
     val bufs = runStream(
-      StreamOps.windowedEsBufs(
-        stream, "event_type", "event_id", floor(col("value")).cast("long"), k = 8),
+      StreamOps.windowed(stream)((df, g) => graft.operators.WeightedSample.bufs(
+        df, g :+ "event_type", "event_id", floor(col("value")).cast("long"), k = 8)),
       "win_es", "append")
     val got = graft.functions.TopK.explodeBufs(
         bufs.select(to_date(col("ws")).as("d"), col("event_type"), col("_tk")),
@@ -341,7 +354,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", "3").parquet(streamDir)
     val bufs = runStream(
-      StreamOps.kmvBufs(stream.filter(col("user_id").isNotNull),
+      graft.functions.Kmv.bufs(stream.filter(col("user_id").isNotNull),
         col("user_id").cast("string"), k = 16, Seq("event_type")),
       "kmv_bufs", "complete")
     val got = graft.functions.Kmv.explodeBufs(bufs, Seq("event_type"))
@@ -363,7 +376,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", "3").parquet(streamDir)
     val bufs = runStream(
-      StreamOps.esBufs(stream, "event_type", "event_id",
+      graft.operators.WeightedSample.bufs(stream, Seq("event_type"), "event_id",
         floor(col("value")).cast("long"), k = 16),
       "es_bufs", "complete")
     val got = graft.operators.WeightedSample.explodeBufs(bufs, "event_type")
@@ -383,7 +396,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", "3").parquet(streamDir)
     val bufs = runStream(
-      StreamOps.adaptiveHistBufs(
+      graft.functions.AdaptiveHist.bufs(
         stream.filter(col("value").isNotNull), col("value"), 64, Seq("event_type")),
       "ah_bufs", "complete")
     val got = graft.functions.AdaptiveHist.explodeBufs(bufs, Seq("event_type"))
@@ -404,7 +417,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "3").parquet(streamDir)
     val m = 1 << 12
     val got = runStream(
-      StreamOps.bloomCells(stream.filter(col("user_id").isNotNull),
+      graft.functions.Bloom.cells(stream.filter(col("user_id").isNotNull),
         col("user_id").cast("string"), m, 4, Seq("event_type")),
       "bloom_cells", "complete")
       .select("event_type", "word", "bits")
